@@ -307,44 +307,6 @@ def test_fused_pipeline_matches_composed(spark):
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_fused_tile_stats_matches_plain_agg(spark):
-    """fused_image_tile_knn_tile_stats partials, summed per tile, ≡
-    the plain fused chain's filter(rank==1).groupBy(tile_id) agg:
-    counts exact, 6-dp averages equal (per-task float reassociation
-    only — the same reassociation Spark's partial agg performs)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from xutil_spark.operators.fused import (
-        fused_image_tile_knn, fused_image_tile_knn_tile_stats,
-    )
-
-    images = synth.images_table(spark, 5000, skew=True).cache()
-    tiles = synth.tiles_table(spark, zoom=10).cache()
-    refs = synth.ref_points_table(spark, 300).cache()
-
-    plain = (
-        fused_image_tile_knn(images, tiles, refs, k=3)
-        .filter(F.col("rank") == 1).groupBy("tile_id")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.avg("mean_r"), 6).alias("ar"),
-             F.round(F.avg("dist_m"), 6).alias("ad"))
-        .toPandas().sort_values("tile_id").reset_index(drop=True)
-    )
-    agg = (
-        fused_image_tile_knn_tile_stats(images, tiles, refs, k=3)
-        .groupBy("tile_id")
-        .agg(F.sum("n_images").alias("n"),
-             F.round(F.sum("sum_mean_r") / F.sum("n_images"), 6).alias("ar"),
-             F.round(F.sum("sum_dist_m") / F.sum("n_images"), 6).alias("ad"))
-        .toPandas().sort_values("tile_id").reset_index(drop=True)
-    )
-    assert list(plain["tile_id"]) == list(agg["tile_id"])
-    assert (plain["n"].values == agg["n"].values).all()
-    assert np.allclose(plain["ar"], agg["ar"], atol=1e-6)
-    assert np.allclose(plain["ad"], agg["ad"], atol=1e-6)
-
-
 def test_ring_guarantee_expr_polar_points_never_exceed_true_distance(spark):
     """Regression: the linear span·cos(φ_far) bound with φ_far capped at
     85° INFLATED above the true unsearched-region distance for points

@@ -15,8 +15,9 @@ Scope:
   decoding externally-produced baseline JPEGs does not depend on any
   table constants in this file.
 * **encoder** — baseline sequential, 4:4:4, single uniform
-  quantization step (default 4 ⇒ ~46 dB on typical content; the
-  input_hint lossy gate is PSNR ≥ 40), interleaved Y/Cb/Cr MCUs.
+  quantization step (the default qstep=4 keeps PSNR ≥ 40 dB, the
+  input_hint lossy gate, pytest-pinned on gradients and uniform
+  noise), interleaved Y/Cb/Cr MCUs.
   Huffman tables are SELF-BUILT canonical codes (all 12 DC size
   categories at 4 bits, all 256 AC symbols at 9 bits — Kraft sums
   0.75 and 0.5, both valid) and are emitted in DHT: T.81 permits any
@@ -26,7 +27,8 @@ Scope:
 
 The zigzag order is generated from its defining diagonal traversal,
 not transcribed.  Like the other codecs this runs inside mapInPandas
-batches (one Python call per Arrow batch, never per row).
+batches (one Python call per Arrow batch); ``codec.decode_batch``
+decodes jpg rows one image at a time.
 """
 
 from __future__ import annotations
@@ -170,7 +172,7 @@ def _encode_block(bw: _BitWriter, coef: np.ndarray, pred: int) -> int:
 
 def encode_jpeg(pixels: np.ndarray, qstep: int = 4) -> bytes:
     """(h, w, 3) uint8 → baseline JPEG bytes (4:4:4, uniform ``qstep``
-    quantization; qstep=4 keeps PSNR ≈ 46 dB ≥ the 40 dB gate)."""
+    quantization; the default qstep=4 keeps PSNR ≥ the 40 dB gate)."""
     if pixels.dtype != np.uint8 or pixels.ndim != 3 or pixels.shape[2] != 3:
         raise ValueError("expect (h, w, 3) uint8")
     if not 1 <= qstep <= 255:
@@ -236,6 +238,9 @@ class _BitReader:
                 nxt = d[self.pos + 1] if self.pos + 1 < len(d) else 0xD9
                 if nxt == 0x00:
                     self.pos += 2
+                elif nxt == 0xFF:  # fill byte before a marker code
+                    self.pos += 1
+                    continue
                 else:
                     self.marker = 0xFF00 | nxt
                     continue  # pad from here on
@@ -263,6 +268,10 @@ class _BitReader:
         self.acc = 0
         self.n = 0
         d = self.data
+        if self.marker is None:
+            while (self.pos + 1 < len(d) and d[self.pos] == 0xFF
+                   and d[self.pos + 1] == 0xFF):
+                self.pos += 1  # fill bytes before the RSTn code
         if (self.marker is None and self.pos + 1 < len(d)
                 and d[self.pos] == 0xFF
                 and 0xD0 <= d[self.pos + 1] <= 0xD7):
@@ -318,6 +327,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     while pos < len(data):
         if data[pos] != 0xFF:
             raise ValueError(f"marker expected at {pos}")
+        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
+            pos += 1  # fill bytes before the marker code (T.81 B.1.1.2)
         marker = 0xFF00 | data[pos + 1]
         if marker == 0xFFD9:  # EOI
             break
@@ -370,6 +381,13 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             for i in range(ns):
                 cid, tdta = payload[1 + 2 * i:3 + 2 * i]
                 specs.append((cid, tdta >> 4, tdta & 0x0F))
+            if len(specs) != len(comps):
+                # one interleaved scan is all this decoder reads; a scan
+                # over a subset of the frame's components would leave
+                # the rest zero
+                raise ValueError(
+                    f"unsupported JPEG: scan has {len(specs)} of "
+                    f"{len(comps)} components (multi-scan)")
             return _decode_scan(data, pos, qts, huff, comps, specs,
                                 H, W, restart)
     raise ValueError("no SOS marker found")

@@ -24,6 +24,9 @@ from pyspark.sql import types as T
 
 from xutil_spark.kernels import codec as K_codec
 
+# integer luma weights of the fingerprints: gray = px @ _LUMA // 1000
+_LUMA = np.array([299, 587, 114], dtype=np.int64)
+
 _STAT_FIELDS = [
     T.StructField("mean_r", T.DoubleType(), False),
     T.StructField("mean_g", T.DoubleType(), False),
@@ -44,17 +47,12 @@ def decode_stats(images: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            stats = {k: [] for k in ("mean_r", "mean_g", "mean_b", "px_sum")}
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-                m = px.reshape(-1, 3).mean(axis=0)
-                stats["mean_r"].append(round(float(m[0]), 6))
-                stats["mean_g"].append(round(float(m[1]), 6))
-                stats["mean_b"].append(round(float(m[2]), 6))
-                stats["px_sum"].append(int(px.astype(np.int64).sum()))
+            mean, px_sum = K_codec.decode_stats_batch(b["bytes"], b["w"], b["h"], b["fmt"])
             out = b[keep_names].reset_index(drop=True)
-            for k, v in stats.items():
-                out[k] = v
+            out["mean_r"] = mean[:, 0]
+            out["mean_g"] = mean[:, 1]
+            out["mean_b"] = mean[:, 2]
+            out["px_sum"] = px_sum
             yield out
 
     return images.mapInPandas(run, schema=schema)
@@ -112,24 +110,23 @@ def dhash(images: DataFrame, id_col: str = "image_id") -> DataFrame:
     ``operators.dedup.hamming_near_dup_pairs`` over the result — the
     image side of the text SimHash pipeline.
 
-    The decode is per row (inherent for variable-size blobs); the
-    gray/resample/bit steps are vectorized numpy per image."""
+    Decode, resample, gray and bits run per shape group of the batch
+    (``kernels.codec.decode_batch``) as stacked integer numpy; the
+    resample is taken before the gray, which is per pixel, so only the
+    72 sampled pixels of each image are weighted."""
 
     bitw = np.int64(1) << np.arange(64, dtype=np.int64).reshape(8, 8)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            ids, fps = [], []
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-                g = (px.astype(np.int64) @ np.array([299, 587, 114])) // 1000
-                yi = np.arange(8) * int(r.h) // 8
-                xi = np.arange(9) * int(r.w) // 9
-                G = g[yi][:, xi]
-                bits = G[:, :-1] > G[:, 1:]
-                ids.append(getattr(r, id_col))
-                fps.append(int((bitw * bits).sum()))
-            yield pd.DataFrame({"image_id": ids, "dhash": np.array(fps, dtype=np.int64)})
+            fps = np.zeros(len(b), dtype=np.int64)
+            for pos, px in K_codec.decode_batch(b["bytes"], b["w"], b["h"], b["fmt"]):
+                h, w = px.shape[1:3]
+                sub = px[:, np.arange(8) * h // 8][:, :, np.arange(9) * w // 9]
+                G = (sub.astype(np.int64) @ _LUMA) // 1000     # (m, 8, 9)
+                bits = G[:, :, :-1] > G[:, :, 1:]
+                fps[pos] = (bitw * bits).sum(axis=(1, 2))
+            yield pd.DataFrame({"image_id": b[id_col].to_numpy(), "dhash": fps})
 
     return images.mapInPandas(run, schema=DHASH_SCHEMA)
 
@@ -169,11 +166,11 @@ def phash_dct(images: DataFrame, id_col: str = "image_id") -> DataFrame:
     .5 averaging) → bit 0 is always 0 (DC excluded, standard pHash
     practice), bit j (j ≥ 1) set iff ``vals[j] > median``.
 
-    The decode is per row (inherent for variable-size blobs); resample
-    gathers + the DCT run BATCHED — one stacked (B,32,32) int64 tensor,
-    two broadcast matmuls per Arrow batch.  Near-dup image pairs come
-    from ``operators.dedup.hamming_near_dup_pairs`` over the result,
-    same as dHash/SimHash."""
+    Decode, resample and gray run per shape group of the batch
+    (``kernels.codec.decode_batch``); the DCT runs over one stacked
+    (B,32,32) int64 tensor, two broadcast matmuls per Arrow batch.
+    Near-dup image pairs come from ``operators.dedup.hamming_near_dup_pairs``
+    over the result, same as dHash/SimHash."""
 
     C = _dct_basis()
     CT = C.T.copy()
@@ -182,24 +179,20 @@ def phash_dct(images: DataFrame, id_col: str = "image_id") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            ids, grays = [], []
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-                g = (px.astype(np.int64) @ np.array([299, 587, 114])) // 1000
-                grays.append(g[yi32 * int(r.h) // 32][:, yi32 * int(r.w) // 32])
-                ids.append(getattr(r, id_col))
-            if not ids:
-                yield pd.DataFrame({"image_id": [], "phash64": []})
-                continue
-            G = np.stack(grays)                     # (B, 32, 32) int64
+            n = len(b)
+            G = np.zeros((n, 32, 32), dtype=np.int64)
+            for pos, px in K_codec.decode_batch(b["bytes"], b["w"], b["h"], b["fmt"]):
+                h, w = px.shape[1:3]
+                sub = px[:, yi32 * h // 32][:, :, yi32 * w // 32]
+                G[pos] = (sub.astype(np.int64) @ _LUMA) // 1000
             D = C @ G @ CT                          # batched, |D| < 2^47
-            vals = D[:, :8, :8].reshape(len(ids), 64)
+            vals = D[:, :8, :8].reshape(n, 64)
             med = np.sort(vals[:, 1:], axis=1)[:, 31]
             bits = vals > med[:, None]
             bits[:, 0] = False
             fp = (bits.astype(np.uint64) * bitw).sum(axis=1, dtype=np.uint64)
             yield pd.DataFrame(
-                {"image_id": ids, "phash64": fp.view(np.int64)})
+                {"image_id": b[id_col].to_numpy(), "phash64": fp.view(np.int64)})
 
     return images.mapInPandas(run, schema=PHASH_SCHEMA)
 
