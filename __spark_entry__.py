@@ -1,11 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Contract entry points (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` runs at
+sf=0.01 and must match the DuckDB result of ``oracle_sql()[name]``
+(row count + column set + order-insensitive value hash;
+tests/test_contract.py runs that gate over every name).
 
-Implementation lives in ``xutil_spark.entry_queries`` (one callable +
+Implementation lives in ``xutil_spark.contract`` (one callable +
 oracle SQL pair per operator from SURVEY.md §2, plus the training-data
 pipeline ops); this file is the thin contract wrapper.
 """
@@ -30,12 +30,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from xutil_spark.entry_queries import QUERIES
+    from xutil_spark.contract import QUERIES
 
     return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    from xutil_spark.entry_queries import ORACLES
+    from xutil_spark.contract import CONTRACT
 
-    return dict(ORACLES)
+    return {name: o() for name, (_q, o) in CONTRACT.items()}

@@ -382,7 +382,7 @@ def run_skew(master: str) -> dict:
 
 
 def run_queries() -> dict:
-    from xutil_spark.entry_queries import QUERIES
+    from xutil_spark.contract import QUERIES
     from xutil_spark.session import get_session
 
     spark = get_session(master=f"local[{CPUS}]", app_name="bench_queries")

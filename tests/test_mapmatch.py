@@ -61,7 +61,6 @@ def test_gap_bridging_drops_uncovered_points(spark):
 
 
 def test_matches_scalar_replay(spark):
-    import xutil_spark.entry_queries  # noqa: F401 (registry wiring first)
     from xutil_spark.entry_queries19 import _scalar_hmm
 
     out = _match(spark, _PTS, _SEGS, sigma_m=1_000.0, beta_m=500.0, k=2)

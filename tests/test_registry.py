@@ -1,203 +1,55 @@
-"""Contract-registry invariants.
+"""Contract-registry invariants: every ``entry_queries*`` module imports
+on its own, and loading the registry builds no oracle SQL."""
 
-The external driver evaluates only the first 50 entries of
-``queries()`` (empirically: CORRECTNESS_r02.json == registry[:50]), so
-the registry ORDER is itself part of the contract: every query that
-needs a hard-gate row must sit inside that window.
-
-Rotation policy (round 4 onwards): the committed CORRECTNESS_r*.json
-files ARE the evidence ledger — a query's "last green round" is the
-newest file whose row for it has rows/schema/hash all matching.  The
-staleness rule below requires every query that was NOT green in the
-most recent round (including never-evaluated ones) to sit inside the
-next window, so no query's evidence ever goes stale beyond two rounds.
-Queries whose code changed in the current round are front-loaded by
-hand (see the window comments in entry_queries.py).
-"""
-
-import glob
-import json
 import os
-import re
+import subprocess
+import sys
 
-from xutil_spark.entry_queries import _DRIVER_WINDOW, ORACLES, QUERIES
+import pytest
+
+from xutil_spark.contract import MODULES
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _last_green() -> tuple[dict, int]:
-    """query -> newest round with a fully-green row; plus the newest
-    round number on disk."""
-    last: dict = {}
-    latest = 0
-    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        latest = max(latest, rnd)
-        with open(path) as fh:
-            for q, rec in json.load(fh).items():
-                if (rec.get("rows_match") and rec.get("schema_match")
-                        and rec.get("hash_match") and not rec.get("err")):
-                    last[q] = max(last.get(q, 0), rnd)
-    return last, latest
+def _run(code: str) -> subprocess.CompletedProcess:
+    return subprocess.run([sys.executable, "-c", code], cwd=_REPO,
+                          capture_output=True, text=True, timeout=120)
 
 
-def test_driver_window_is_first_50_and_oracle_paired():
-    names = list(QUERIES)
-    assert names[:50] == _DRIVER_WINDOW
-    missing = [n for n in _DRIVER_WINDOW if n not in ORACLES]
-    assert not missing, f"window entries without an oracle: {missing}"
+@pytest.mark.parametrize("mod", MODULES)
+def test_module_imports_on_its_own(mod):
+    res = _run(f"import xutil_spark.{mod}")
+    assert res.returncode == 0, res.stderr[-2000:]
 
 
-# Queries registered mid-round AFTER the window filled: they cannot
-# have evidence at or before the latest recorded round, and every r04
-# slot is taken by the staleness ledger + the code-touched set.  The
-# exemption below expires automatically: once CORRECTNESS_r{REG}.json
-# lands (latest == REG), the staleness rule forces them into the next
-# window.
-REGISTERED_ROUND = {
-    "decontaminate_13gram": 4,
-    "bm25_search": 4,
-    "bigram_pmi": 4,
-    "pricing_percentiles": 4,
-    "token_kl_drift": 4,
-    "tile_hull_z8": 4,
-    "zonal_stats": 4,
-    "snap_nearest_segment": 4,
-    "tile_pyramid_sums": 4,
-    "kde_heatmap": 4,
-    "hotspot_gistar": 4,
-    "od_flows_z5": 4,
-    "emerging_cells_mk": 4,
-    "contour_segments_z7": 4,
-    "idw_surface_z6": 4,
-    "track_resample_4h": 4,
-    "image_augment": 4,
-    "track_speed_stats": 4,
-    "trip_segments": 4,
-    "stay_points": 4,
-    "terrain_horn_z7": 4,
-    "morans_i_z6": 4,
-    "local_moran_z6": 4,
-    "focal_stats_z7": 4,
-    "track_bearing_stats": 4,
-    "bilinear_up_z6": 4,
-    "dev_ellipse_users": 4,
-    "quadkey_cells_z9": 4,
-    "hilbert_layout_z8": 4,
-    "rhumb_nav": 4,
-    "gravity_flows_z5": 4,
-    "nn_index_z8": 4,
-    "encounters_z6": 4,
-    "flow_watershed_z8": 4,
-    "crossmodal_dups": 4,
-    "st_clusters_z7": 4,
-    "image_patches": 4,
-    "image_sharpness": 4,
-    "seq_packing": 4,
-    "video_scene_cuts": 4,
-    "hmm_match_tracks": 4,
-    "image_color_hist": 4,
-    "traj_hausdorff": 4,
-    "traj_frechet": 4,
-    "traj_dtw": 4,
-    "seg_crossings": 4,
-    "caption_bigram_lm": 4,
-    "image_entropy": 4,
-    "poly_overlay_z6": 4,
-    "fp_containment": 4,
-    "route_points_500km": 4,
-    "dup_spans_20": 4,
-    "dup_coverage_20": 4,
-    "zone_interp": 4,
-    "cost_distance_grid": 4,
-    "audio_match_fp": 4,
-    "pagerank_od_z5": 4,
-    "least_cost_paths": 4,
-    "hll_users_z6": 4,
-    "clean_docs": 4,
-    "pq_top5": 4,
-    "streaming_hll_z6": 4,
-    "image_blobs": 4,
-    "route_points_gc_500km": 4,
-}
+def test_queries_builds_no_oracle_sql():
+    """``import xutil_spark.contract`` + ``queries()`` must not enter any
+    ``o_*`` builder: a profile hook fails the run on the first one."""
+    res = _run(
+        "import sys\n"
+        "def hook(frame, event, arg):\n"
+        "    code = frame.f_code\n"
+        "    if (event == 'call' and code.co_name.startswith('o_')\n"
+        "            and 'entry_queries' in code.co_filename):\n"
+        "        raise SystemExit('oracle builder called: ' + code.co_name)\n"
+        "sys.setprofile(hook)\n"
+        "import xutil_spark.contract\n"
+        "import __spark_entry__ as E\n"
+        "n = len(E.queries())\n"
+        "sys.setprofile(None)\n"
+        "print(n)\n"
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.split() == ["156"]
 
 
-# The local evidence ledger (CORRECTNESS_LOCAL_r*.json) is the
-# driver-gate stand-in run by tools/check_oracle.py at the recorded
-# HEAD.  Round 4 registered 103 new queries — more than two 50-row
-# driver windows can ever hold — so never-driver-evaluated queries
-# are covered by this ledger until their driver slot arrives.  Window
-# priority (tools/build_window.py implements it): (1) never-green
-# queries without local evidence, (2) code-touched queries, (3)
-# locally-green never-DRIVER-green queries in registration order — a
-# first-ever driver row beats refreshing an untouched long-green
-# query — then (4) stale once-green queries, oldest evidence first.
+def test_duplicate_contract_name_raises(monkeypatch):
+    from xutil_spark import contract
 
-
-def test_no_query_evidence_stale_beyond_last_round():
-    """Two-tier evidence guarantee (round-5 form):
-
-    1. Every query that HAS been driver-green at some point and is
-       stale (not green in the most recent recorded round) must sit
-       inside the next 50-row window, up to the bounded three-round
-       overflow (at most ``len(QUERIES) - 100`` queries, each green in
-       the immediately-previous round) — UNLESS it carries a green row
-       in the newest committed local evidence ledger, which is the
-       same checker run at the committed HEAD and therefore FRESHER
-       evidence than a stale driver row.
-    2. Every query with NO driver row yet (the REGISTERED_ROUND
-       cohort) must either be inside the next window or carry a green
-       row in the committed local evidence ledger.
-
-    Net: no contract query is ever evidence-free, and staleness is
-    bounded by the newest ledger of either kind.  Why the ledger
-    substitution in rule 1: with 156 contract queries and a 50-row
-    driver window, a full driver refresh takes >3 rounds, so the
-    original driver-only cap is unsatisfiable simultaneously with
-    giving never-evaluated queries their first driver rows — and a
-    first-ever driver row is strictly more information than a refresh
-    of an untouched long-green query (the r4 VERDICT's top ask).
-
-    The substitution is NOT unconditional (that would make the cap
-    vacuous): the local ledger only counts while it is at least as
-    fresh as the newest driver round.  The moment a new
-    CORRECTNESS_r*.json lands, this test fails until the session
-    regenerates the full-contract local ledger at its HEAD (or
-    rotates the stale queries back into the window) — so each round
-    is forced to re-prove the whole contract one way or the other."""
-    from tools.build_window import local_ledger
-
-    last, latest = _last_green()
-    local, local_round = local_ledger(_REPO)
-    if local_round < latest:
-        local = set()  # stale ledger ⇒ strict driver-only invariants
-    stale_old = {
-        q for q in QUERIES
-        if 0 < last.get(q, 0) < latest
-    }
-    out = sorted(stale_old - set(_DRIVER_WINDOW))
-    hard_out = [q for q in out if q not in local]
-    budget = max(0, len(QUERIES) - 2 * len(_DRIVER_WINDOW))
-    assert len(hard_out) <= budget, (
-        f"{len(hard_out)} stale-evidence queries outside the window "
-        f"with no local-ledger row (budget {budget}): {hard_out}")
-    too_stale = [q for q in hard_out if last.get(q, 0) < latest - 1]
-    assert not too_stale, (
-        f"overflow queries stale beyond the three-round cap with no "
-        f"local-ledger row: {too_stale}")
-
-    never = {q for q in QUERIES if last.get(q, 0) == 0}
-    uncovered = sorted(never - set(_DRIVER_WINDOW) - local)
-    assert not uncovered, (
-        f"never-driver-evaluated queries with no local-ledger evidence "
-        f"either: {uncovered}")
-
-
-def test_every_oracle_has_a_query():
-    assert set(ORACLES) <= set(QUERIES)
+    monkeypatch.setattr(contract, "MODULES", ["entry_queries", "entry_queries"])
+    with pytest.raises(ValueError, match="registered twice"):
+        contract._merge()
 
 
 def test_xxh64_matches_published_vectors():

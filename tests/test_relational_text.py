@@ -707,29 +707,6 @@ def test_line_repetition_features_known_values(spark):
     assert out[3]["dup_line_char_frac"] == 0.0
 
 
-def test_rep_filter_matches_oracle(spark):
-    """Engine vs DuckDB oracle at sf0.001 (the driver runs sf0.01; this
-    pins the same comparison in-repo on the smaller input)."""
-    import duckdb
-
-    from xutil_spark.entry_queries5 import o_rep_filter, q_rep_filter
-
-    s = q_rep_filter(spark, "/root/testdata/sf0.001").toPandas()
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    o = con.execute(o_rep_filter()).df()
-    s = s.sort_values("doc_id").reset_index(drop=True)
-    o = o.sort_values("doc_id").reset_index(drop=True)
-    assert len(s) == len(o)
-    assert list(s["top_bigram"]) == list(o["top_bigram"])
-    assert (s["dup_trigram_frac"] - o["dup_trigram_frac"]).abs().max() == 0
-    assert (s["top_bigram_char_frac"] - o["top_bigram_char_frac"]).abs().max() == 0
-    assert list(s["keep"]) == list(o["keep"])
-
-
 def test_pii_scrub_known_values(spark):
     from xutil_spark.operators.textops import pii_scrub
 
@@ -751,26 +728,6 @@ def test_pii_scrub_known_values(spark):
     assert out[2]["scrubbed"] == "no pii here"
     assert out[3]["n_email"] == 2
     assert out[3]["scrubbed"] == "two mails <EMAIL> and <EMAIL>"
-
-
-def test_pii_scrub_matches_oracle(spark):
-    import duckdb
-
-    from xutil_spark.entry_queries5 import o_pii_scrub, q_pii_scrub
-
-    s = (
-        q_pii_scrub(spark, "/root/testdata/sf0.001")
-        .toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    o = con.execute(o_pii_scrub()).df().sort_values("doc_id").reset_index(drop=True)
-    assert len(s) == len(o)
-    for c in ("n_email", "n_phone", "n_ipv4", "scrubbed"):
-        assert list(s[c]) == list(o[c]), c
 
 
 # ------------------------------------------------------------- sampling

@@ -90,7 +90,7 @@ def audit(name: str, formatted: str, simple: str) -> dict:
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import __spark_entry__ as E
+    from xutil_spark.contract import QUERIES
     from xutil_spark.session import get_session
 
     spark = get_session(master="local[8]", app_name="plan_audit")
@@ -98,7 +98,6 @@ def main() -> None:
     # codegen span ids; the audit inspects the static plan, so turn it
     # off here (runtime keeps AQE on everywhere else)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    Q = E.queries()
     lines = [
         "# PLANS — physical-plan audit of the headline queries",
         "",
@@ -113,7 +112,7 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|",
     ]
     for name in AUDITED:
-        df = Q[name](spark, sf)
+        df = QUERIES[name](spark, sf)
         a = audit(name, *plan_text(df))
         cols = ",".join(a["read_schema_cols"]) or "—"
         if len(cols) > 48:

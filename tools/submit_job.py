@@ -20,7 +20,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:] or ["tile_assign_z15"]
 
-    from xutil_spark.entry_queries import QUERIES
+    from xutil_spark.contract import QUERIES
     from xutil_spark.session import get_session
 
     # on a real cluster spark-submit's --master wins; get_session only

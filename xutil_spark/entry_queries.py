@@ -1,8 +1,11 @@
-"""Driver-contract queries: each ``QUERIES[name]`` is a callable
-(spark, sf_dir) -> DataFrame, each ``ORACLES[name]`` the equivalent
-DuckDB SQL over the same parquet tables (pre-registered views).
+"""Contract queries: each ``CONTRACT[name]`` pairs a callable
+``q_*(spark, sf_dir) -> DataFrame`` with ``o_*() -> str``, the
+equivalent DuckDB SQL over the same parquet tables (pre-registered
+views).  ``xutil_spark.contract`` merges the tables of every
+``entry_queries*`` module.
 
-Design rules for oracle parity (the driver hash-compares values):
+Design rules for oracle parity (tests/test_contract.py hash-compares
+values):
 
 * every computed column is aliased IDENTICALLY on both sides;
 * float outputs are rounded (6 dp scores / 3 dp meters) on both sides;
@@ -935,200 +938,27 @@ def q_knn_images_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("image_id", "ref_id", "rank", F.round("dist_m", 3).alias("dist_m"))
 
 
-QUERIES = {
-    "tile_assign_z15": q_tile_assign_z15,
-    "tile_rollup_z10": q_tile_rollup_z10,
-    "tile_pixel_z12": q_tile_pixel_z12,
-    "knn_k3": q_knn_k3,
-    "range_count_50km": q_range_count_50km,
-    "pip_city_tiles": q_pip_city_tiles,
-    "wgs2gcj": q_wgs2gcj,
-    "pricing_summary": q_pricing_summary,
-    "top3_orders_per_cust": q_top3_orders_per_cust,
-    "events_weekly_sunday": q_events_weekly_sunday,
-    "set_minus_users": q_set_minus_users,
-    "ip_roundtrip": q_ip_roundtrip,
-    "time_parse_ladder": q_time_parse_ladder,
-    "dedup_exact": q_dedup_exact,
-    "minhash_sigs": q_minhash_sigs,
-    "lsh_dup_pairs": q_lsh_dup_pairs,
-    "lang_id": q_lang_id,
-    "token_counts": q_token_counts,
-    "quality": q_quality,
-    "cosine_top5": q_cosine_top5,
-    "simhash_docs": q_simhash_docs,
-    "fingerprints": q_fingerprints,
-    "images_decode_stats": q_images_decode_stats,
-    "knn_images_refs": q_knn_images_refs,
-}
-
-from xutil_spark.entry_queries2 import ORACLES2, QUERIES2  # noqa: E402
-from xutil_spark.entry_queries3 import ORACLES3, QUERIES3  # noqa: E402
-from xutil_spark.entry_queries4 import ORACLES4, QUERIES4  # noqa: E402
-from xutil_spark.entry_queries5 import ORACLES5, QUERIES5  # noqa: E402
-from xutil_spark.entry_queries6 import ORACLES6, QUERIES6  # noqa: E402
-from xutil_spark.entry_queries7 import ORACLES7, QUERIES7  # noqa: E402
-from xutil_spark.entry_queries8 import ORACLES8, QUERIES8  # noqa: E402
-from xutil_spark.entry_queries9 import ORACLES9, QUERIES9  # noqa: E402
-from xutil_spark.entry_queries10 import ORACLES10, QUERIES10  # noqa: E402
-from xutil_spark.entry_queries11 import ORACLES11, QUERIES11  # noqa: E402
-from xutil_spark.entry_queries12 import ORACLES12, QUERIES12  # noqa: E402
-from xutil_spark.entry_queries13 import ORACLES13, QUERIES13  # noqa: E402
-from xutil_spark.entry_queries14 import ORACLES14, QUERIES14  # noqa: E402
-from xutil_spark.entry_queries15 import ORACLES15, QUERIES15  # noqa: E402
-from xutil_spark.entry_queries16 import ORACLES16, QUERIES16  # noqa: E402
-from xutil_spark.entry_queries17 import ORACLES17, QUERIES17  # noqa: E402
-from xutil_spark.entry_queries18 import ORACLES18, QUERIES18  # noqa: E402
-from xutil_spark.entry_queries19 import ORACLES19, QUERIES19  # noqa: E402
-from xutil_spark.entry_queries20 import ORACLES20, QUERIES20  # noqa: E402
-from xutil_spark.entry_queries21 import ORACLES21, QUERIES21  # noqa: E402
-
-QUERIES.update(QUERIES2)
-QUERIES.update(QUERIES3)
-QUERIES.update(QUERIES4)
-QUERIES.update(QUERIES5)
-QUERIES.update(QUERIES6)
-QUERIES.update(QUERIES7)
-QUERIES.update(QUERIES8)
-QUERIES.update(QUERIES9)
-QUERIES.update(QUERIES10)
-QUERIES.update(QUERIES11)
-QUERIES.update(QUERIES12)
-QUERIES.update(QUERIES13)
-QUERIES.update(QUERIES14)
-QUERIES.update(QUERIES15)
-QUERIES.update(QUERIES16)
-QUERIES.update(QUERIES17)
-QUERIES.update(QUERIES18)
-QUERIES.update(QUERIES19)
-QUERIES.update(QUERIES20)
-QUERIES.update(QUERIES21)
-
-ORACLES = {
-    "tile_assign_z15": o_tile_assign_z15(),
-    "tile_rollup_z10": o_tile_rollup_z10(),
-    "tile_pixel_z12": o_tile_pixel_z12(),
-    "knn_k3": o_knn_k3(),
-    "range_count_50km": o_range_count_50km(),
-    "pip_city_tiles": o_pip_city_tiles(),
-    "wgs2gcj": o_wgs2gcj(),
-    "pricing_summary": o_pricing_summary(),
-    "top3_orders_per_cust": o_top3_orders_per_cust(),
-    "events_weekly_sunday": o_events_weekly_sunday(),
-    "set_minus_users": o_set_minus_users(),
-    "ip_roundtrip": o_ip_roundtrip(),
-    "time_parse_ladder": o_time_parse_ladder(),
-    "dedup_exact": o_dedup_exact(),
-    "minhash_sigs": o_minhash_sigs(),
-    "lsh_dup_pairs": o_lsh_dup_pairs(),
-    "lang_id": o_lang_id(),
-    "token_counts": o_token_counts(),
-    "quality": o_quality(),
-    "cosine_top5": o_cosine_top5(),
-    "simhash_docs": o_simhash_docs(),
-    "fingerprints": o_fingerprints(),
-}
-ORACLES.update(ORACLES2)
-ORACLES.update(ORACLES3)
-ORACLES.update(ORACLES4)
-ORACLES.update(ORACLES5)
-ORACLES.update(ORACLES6)
-ORACLES.update(ORACLES7)
-ORACLES.update(ORACLES8)
-ORACLES.update(ORACLES9)
-ORACLES.update(ORACLES10)
-ORACLES.update(ORACLES11)
-ORACLES.update(ORACLES12)
-ORACLES.update(ORACLES13)
-ORACLES.update(ORACLES14)
-ORACLES.update(ORACLES15)
-ORACLES.update(ORACLES16)
-ORACLES.update(ORACLES17)
-ORACLES.update(ORACLES18)
-ORACLES.update(ORACLES19)
-ORACLES.update(ORACLES20)
-ORACLES.update(ORACLES21)
-
-# ------------------------------------------------------------ registry order
-#
-# The external driver evaluates only the FIRST 50 entries of queries()
-# (CORRECTNESS_r02.json == registry[:50] exactly), so insertion order
-# decides which queries get hard-gate evidence.  Front-load, in order:
-#   1. every oracle-paired query that has never had a driver row
-#      (the 21 round-2 additions invisible in r02),
-#   2. queries whose code or oracle changed this round
-#      (hash_digests +sha1, ngram_jaccard byte-gate, asof_join NULL
-#      semantics, the two reworked streaming ops — already in #1 —
-#      plus the newly oracle-paired wkt_roundtrip / snapshot_lineage
-#      and the round-3 computed-VALUES pairs simhash_docs /
-#      fingerprints / s2_cells),
-#   3. the flagship spatial/dedup/agg queries.
-# Long-green kernel-only transforms (wgs2gcj, dist_compare, …) and the
-# remaining rows-only queries sit past index 49: their evidence is
-# r01/r02 green rows + pytest, and none of their code changed
-# (time_parse_ladder / set_minus_users / string_funcs / col_float64 /
-# embedding_near_dup, then minhash_sigs / pricing_summary /
-# rollup_pricing / top3_orders_per_cust / events_weekly_sunday /
-# token_counts / quality rotated out to make room for the round-3
-# media goldens + dhash/geohash — all r01+r02 green, code untouched
-# since they last went green).
-#
-# r05 WINDOW (built by `python tools/build_window.py` against the
-# r01-r04 ledger; CORRECTNESS_r04.json came back 50/50 green): all 50
-# slots go to REGISTERED_ROUND=4 queries that have never had a driver
-# row — 64 exist, 50 fit, so the 14 listed below wait under tier-2
-# local-ledger coverage (CORRECTNESS_LOCAL_r05.json, regenerated at
-# this HEAD).  Overflow arithmetic at build time: 42 stale-green
-# queries ride the bounded overflow (budget len(QUERIES)-100 = 56),
-# every one green in r04 or r03 (none beyond the three-round cap).
-# Newcomers-first is the deliberate final-round choice: a first-ever
-# driver row is strictly more evidence than a refresh of a query whose
-# code hasn't changed since it last went green (tests/test_registry.py
-# and tools/build_window.py encode this same priority).
-#
-# r06 WINDOW PLAN (for whoever sees CORRECTNESS_r05): front-load the
-# 14 still-never-driver-green queries — route_points_500km,
-# dup_spans_20, dup_coverage_20, zone_interp, cost_distance_grid,
-# audio_match_fp, pagerank_od_z5, least_cost_paths, hll_users_z6,
-# clean_docs, pq_top5, streaming_hll_z6, image_blobs,
-# route_points_gc_500km — then fill the remaining 36 slots with the
-# stale greens whose last green row is r03 (build_window.py orders
-# them oldest-first automatically).  Do not register new queries
-# before that window lands.
-#
-# r05 CODE-TOUCHED note: streaming_hll_z6 (HALF_UP rounding parity
-# with batch), pq_top5 (exact evenly-spaced seed ids over ALL rows +
-# gated query collect), and audio_match_fp (fan_out>7 guard) changed
-# this round; all three are in the 14-waiting set above and were
-# re-verified green in CORRECTNESS_LOCAL_r05.json at the new HEAD, so
-# they still meet tier-2 coverage and get driver rows first in r06.
-_DRIVER_WINDOW = [
-    # --- text/IR stack (decontamination, BM25, PMI, KL, bigram LM) ---
-    "decontaminate_13gram", "bm25_search", "bigram_pmi",
-    "pricing_percentiles", "token_kl_drift", "caption_bigram_lm",
-    # --- spatial-stats / raster suite ---
-    "tile_hull_z8", "zonal_stats", "tile_pyramid_sums", "kde_heatmap",
-    "hotspot_gistar", "morans_i_z6", "local_moran_z6", "focal_stats_z7",
-    "bilinear_up_z6", "terrain_horn_z7", "contour_segments_z7",
-    "idw_surface_z6", "flow_watershed_z8",
-    # --- trajectory / mobility suite ---
-    "snap_nearest_segment", "od_flows_z5", "emerging_cells_mk",
-    "track_resample_4h", "track_speed_stats", "trip_segments",
-    "stay_points", "track_bearing_stats", "dev_ellipse_users",
-    "hmm_match_tracks", "traj_hausdorff", "traj_frechet", "traj_dtw",
-    "seg_crossings", "encounters_z6", "st_clusters_z7",
-    # --- layout / navigation / flows ---
-    "quadkey_cells_z9", "hilbert_layout_z8", "rhumb_nav",
-    "gravity_flows_z5", "nn_index_z8",
-    # --- image / video / cross-modal ---
-    "image_augment", "image_patches", "image_sharpness",
-    "image_color_hist", "image_entropy", "video_scene_cuts",
-    "crossmodal_dups",
-    # --- packing / overlay / containment ---
-    "seq_packing", "poly_overlay_z6", "fp_containment",
-]
-assert len(_DRIVER_WINDOW) == 50 and len(set(_DRIVER_WINDOW)) == 50
-QUERIES = {
-    **{n: QUERIES[n] for n in _DRIVER_WINDOW},
-    **{n: q for n, q in QUERIES.items() if n not in set(_DRIVER_WINDOW)},
+CONTRACT = {
+    "tile_assign_z15": (q_tile_assign_z15, o_tile_assign_z15),
+    "tile_rollup_z10": (q_tile_rollup_z10, o_tile_rollup_z10),
+    "tile_pixel_z12": (q_tile_pixel_z12, o_tile_pixel_z12),
+    "knn_k3": (q_knn_k3, o_knn_k3),
+    "range_count_50km": (q_range_count_50km, o_range_count_50km),
+    "pip_city_tiles": (q_pip_city_tiles, o_pip_city_tiles),
+    "wgs2gcj": (q_wgs2gcj, o_wgs2gcj),
+    "pricing_summary": (q_pricing_summary, o_pricing_summary),
+    "top3_orders_per_cust": (q_top3_orders_per_cust, o_top3_orders_per_cust),
+    "events_weekly_sunday": (q_events_weekly_sunday, o_events_weekly_sunday),
+    "set_minus_users": (q_set_minus_users, o_set_minus_users),
+    "ip_roundtrip": (q_ip_roundtrip, o_ip_roundtrip),
+    "time_parse_ladder": (q_time_parse_ladder, o_time_parse_ladder),
+    "dedup_exact": (q_dedup_exact, o_dedup_exact),
+    "minhash_sigs": (q_minhash_sigs, o_minhash_sigs),
+    "lsh_dup_pairs": (q_lsh_dup_pairs, o_lsh_dup_pairs),
+    "lang_id": (q_lang_id, o_lang_id),
+    "token_counts": (q_token_counts, o_token_counts),
+    "quality": (q_quality, o_quality),
+    "cosine_top5": (q_cosine_top5, o_cosine_top5),
+    "simhash_docs": (q_simhash_docs, o_simhash_docs),
+    "fingerprints": (q_fingerprints, o_fingerprints),
 }

@@ -4,9 +4,7 @@ segment, the engine's trajectory/road primitive.
 
 Same conventions as entry_queries*.py: q_* takes (spark, sf_dir) and
 returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-inputs.  Registered BEHIND the 50-row driver window (r04's slots are
-taken by the staleness ledger); tests/test_registry.py's
-registration-round ledger forces it into the round-5 window.
+inputs.
 
 The synthetic "road network": supplier refs chained into polylines of 8
 vertices (consecutive s_suppkey within the same (ref_id-1) div 8
@@ -20,7 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xutil_spark.entry_queries import _PTS_SQL, _REFS_SQL, _points, _refs, _utc
+from xutil_spark.entry_queries import (
+    _PTS_SQL, _REFS_SQL, _cell_sql, _points, _refs, _utc,
+)
 
 _SNAP_RADIUS_M = 50000.0
 _SNAP_ZOOM = 8
@@ -303,7 +303,6 @@ def q_kde_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def o_kde_heatmap() -> str:
     from xutil_spark.entry_queries import _PTS_SQL as pts_sql
-    from xutil_spark.entry_queries import _cell_sql
     from xutil_spark.operators.heatmap import gaussian_kernel_int
 
     kern = gaussian_kernel_int(_KDE_RADIUS, _KDE_SIGMA)
@@ -329,14 +328,8 @@ SELECT cell, CAST(SUM(m) AS BIGINT) AS density FROM contrib GROUP BY 1
 """
 
 
-QUERIES10 = {
-    "snap_nearest_segment": q_snap_nearest_segment,
-    "tile_pyramid_sums": q_tile_pyramid,
-    "kde_heatmap": q_kde_heatmap,
-}
-
-ORACLES10 = {
-    "snap_nearest_segment": o_snap_nearest_segment(),
-    "tile_pyramid_sums": o_tile_pyramid(),
-    "kde_heatmap": o_kde_heatmap(),
+CONTRACT = {
+    "snap_nearest_segment": (q_snap_nearest_segment, o_snap_nearest_segment),
+    "tile_pyramid_sums": (q_tile_pyramid, o_tile_pyramid),
+    "kde_heatmap": (q_kde_heatmap, o_kde_heatmap),
 }

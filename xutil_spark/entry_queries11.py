@@ -4,9 +4,7 @@ KDE heatmap.
 
 Same conventions as entry_queries*.py: q_* takes (spark, sf_dir) and
 returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-inputs.  Registered BEHIND the 50-row driver window (r04's slots are
-taken by the staleness ledger); tests/test_registry.py's
-registration-round ledger forces it into the round-5 window.
+inputs.
 
 Oracle parity note: the z-score's float expression tree is written
 IDENTICALLY on both sides (one fixed sequence of float64 ops over
@@ -87,10 +85,6 @@ FROM scored
 """
 
 
-QUERIES11 = {
-    "hotspot_gistar": q_hotspot_gistar,
-}
-
-ORACLES11 = {
-    "hotspot_gistar": o_hotspot_gistar(),
+CONTRACT = {
+    "hotspot_gistar": (q_hotspot_gistar, o_hotspot_gistar),
 }

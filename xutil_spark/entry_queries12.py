@@ -5,9 +5,7 @@ table's deterministic locations.
 
 Same conventions as entry_queries*.py: q_* takes (spark, sf_dir) and
 returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-inputs.  Registered BEHIND the 50-row driver window (r04's slots are
-taken by the staleness ledger); tests/test_registry.py's
-registration-round ledger forces both into the round-5 window.
+inputs.
 
 Oracle parity notes:
 - OD flows are pure integer aggregates over a lag window — the oracle
@@ -297,8 +295,6 @@ SELECT user_id, n_fixes, n_segs,
        END AS avg_speed_mps
 FROM agg
 """
-
-
 
 
 # ===================================================== trips & stays
@@ -682,24 +678,13 @@ FROM rot
 """
 
 
-QUERIES12 = {
-    "od_flows_z5": q_od_flows,
-    "emerging_cells_mk": q_emerging_cells,
-    "track_resample_4h": q_track_resample,
-    "track_speed_stats": q_track_speed,
-    "trip_segments": q_trip_segments,
-    "stay_points": q_stay_points,
-    "track_bearing_stats": q_track_bearings,
-    "dev_ellipse_users": q_dev_ellipse,
-}
-
-ORACLES12 = {
-    "od_flows_z5": o_od_flows(),
-    "emerging_cells_mk": o_emerging_cells(),
-    "track_resample_4h": o_track_resample(),
-    "track_speed_stats": o_track_speed(),
-    "trip_segments": o_trip_segments(),
-    "stay_points": o_stay_points(),
-    "track_bearing_stats": o_track_bearings(),
-    "dev_ellipse_users": o_dev_ellipse(),
+CONTRACT = {
+    "od_flows_z5": (q_od_flows, o_od_flows),
+    "emerging_cells_mk": (q_emerging_cells, o_emerging_cells),
+    "track_resample_4h": (q_track_resample, o_track_resample),
+    "track_speed_stats": (q_track_speed, o_track_speed),
+    "trip_segments": (q_trip_segments, o_trip_segments),
+    "stay_points": (q_stay_points, o_stay_points),
+    "track_bearing_stats": (q_track_bearings, o_track_bearings),
+    "dev_ellipse_users": (q_dev_ellipse, o_dev_ellipse),
 }

@@ -4,9 +4,7 @@ z7 cell-count surface of the derived lineitem points.
 
 Same conventions as entry_queries*.py: q_* takes (spark, sf_dir) and
 returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-inputs.  Registered BEHIND the 50-row driver window; the
-registration-round ledger in tests/test_registry.py forces it into the
-round-5 window.
+inputs.
 
 Oracle parity: corner values and the case index are exact integers;
 each endpoint is ONE linear interpolation t = (T−v₁)/(v₂−v₁) and each
@@ -21,7 +19,9 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
-from xutil_spark.entry_queries import _PTS_SQL, _cell_sql, _points, _utc
+from xutil_spark.entry_queries import (
+    _PTS_SQL, _cell_sql, _points, _read, _tile_sql, _utc,
+)
 from xutil_spark.operators.contours import _CASE_SEGMENTS
 
 _CT_ZOOM = 7
@@ -143,7 +143,6 @@ def q_idw_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.interpolate import idw_surface
 
     ev = _read(spark, sf_dir, "events").select(
@@ -158,7 +157,6 @@ def q_idw_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_idw_surface() -> str:
-    from xutil_spark.entry_queries import _tile_sql
     from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
 
     z, n = _IDW_ZOOM, 2 ** _IDW_ZOOM
@@ -216,12 +214,7 @@ FROM agg
 """
 
 
-QUERIES13 = {
-    "contour_segments_z7": q_contour_segments,
-    "idw_surface_z6": q_idw_surface,
-}
-
-ORACLES13 = {
-    "contour_segments_z7": o_contour_segments(),
-    "idw_surface_z6": o_idw_surface(),
+CONTRACT = {
+    "contour_segments_z7": (q_contour_segments, o_contour_segments),
+    "idw_surface_z6": (q_idw_surface, o_idw_surface),
 }

@@ -3,8 +3,7 @@ augmentation (raster/images.py ``augment``) — the training-data
 transform stage for the image payload (flip / rotate / crop-zoom
 selected per image by an id hash).
 
-Same conventions as entry_queries*.py; registered BEHIND the 50-row
-driver window (REGISTERED_ROUND ledger → round-5 window).
+Same conventions as entry_queries*.py.
 
 Oracle: computed VALUES in the entry_queries6 convention — an
 independent scalar replay (plain-int FNV-1a op selection, closed-form
@@ -153,10 +152,6 @@ FROM (VALUES {vals})
 """
 
 
-QUERIES14 = {
-    "image_augment": q_image_augment,
-}
-
-ORACLES14 = {
-    "image_augment": o_image_augment(),
+CONTRACT = {
+    "image_augment": (q_image_augment, o_image_augment),
 }

@@ -6,9 +6,7 @@ derived event points.
 
 Same conventions as entry_queries*.py: q_* takes (spark, sf_dir) and
 returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-inputs.  Registered BEHIND the 50-row driver window; the
-registration-round ledger in tests/test_registry.py forces both into
-the round-5 window.
+inputs.
 
 Oracle parity notes:
 - Horn gradients gx/gy are exact integers (weighted neighbor sums with
@@ -29,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from xutil_spark.entry_queries import _points, _tile_sql, _utc
+from xutil_spark.entry_queries import _PTS_SQL, _points, _read, _tile_sql, _utc
 from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
 from xutil_spark.operators.terrain import _SUN_UP_8
 
@@ -56,8 +54,6 @@ def q_terrain_horn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_terrain_horn() -> str:
-    from xutil_spark.entry_queries import _PTS_SQL
-
     z, n = _HORN_ZOOM, 2 ** _HORN_ZOOM
     sun = repr(_SUN_UP_8)
     tx, ty = _tile_sql("lon", "lat", z)
@@ -113,7 +109,6 @@ def q_morans_i(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.heatmap import cell_counts
     from xutil_spark.operators.terrain import spatial_autocorr
 
@@ -224,7 +219,6 @@ def q_local_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.heatmap import cell_counts
     from xutil_spark.operators.terrain import local_moran
 
@@ -305,8 +299,6 @@ def q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_focal_stats() -> str:
-    from xutil_spark.entry_queries import _PTS_SQL
-
     z, n = _FOCAL_ZOOM, 2 ** _FOCAL_ZOOM
     tx, ty = _tile_sql("lon", "lat", z)
     return f"""
@@ -348,7 +340,6 @@ def q_bilinear_up(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.heatmap import cell_counts
     from xutil_spark.operators.interpolate import bilinear_upsample
 
@@ -385,18 +376,10 @@ JOIN cells p ON p.x = ct.cx // 2 AND p.y = ct.cy // 2
 """
 
 
-QUERIES15 = {
-    "terrain_horn_z7": q_terrain_horn,
-    "morans_i_z6": q_morans_i,
-    "local_moran_z6": q_local_moran,
-    "focal_stats_z7": q_focal_stats,
-    "bilinear_up_z6": q_bilinear_up,
-}
-
-ORACLES15 = {
-    "terrain_horn_z7": o_terrain_horn(),
-    "morans_i_z6": o_morans_i(),
-    "local_moran_z6": o_local_moran(),
-    "focal_stats_z7": o_focal_stats(),
-    "bilinear_up_z6": o_bilinear_up(),
+CONTRACT = {
+    "terrain_horn_z7": (q_terrain_horn, o_terrain_horn),
+    "morans_i_z6": (q_morans_i, o_morans_i),
+    "local_moran_z6": (q_local_moran, o_local_moran),
+    "focal_stats_z7": (q_focal_stats, o_focal_stats),
+    "bilinear_up_z6": (q_bilinear_up, o_bilinear_up),
 }

@@ -7,9 +7,7 @@ nearest-neighbor statistics (operators/pointstats.py).
 
 Same conventions as every entry_queries*.py: q_* takes (spark, sf_dir)
 and returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-parquet inputs.  Registered BEHIND the frozen 50-row r04 driver window;
-the registration-round ledger (tests/test_registry.py) forces all five
-into the round-5 window.
+parquet inputs.
 
 Oracle parity notes:
 - quadkey: the oracle re-derives tile x/y from lon/lat and builds the
@@ -436,18 +434,10 @@ FROM calc
 """
 
 
-QUERIES16 = {
-    "quadkey_cells_z9": q_quadkey_cells,
-    "hilbert_layout_z8": q_hilbert_layout,
-    "rhumb_nav": q_rhumb_nav,
-    "gravity_flows_z5": q_gravity_flows,
-    "nn_index_z8": q_nn_index,
-}
-
-ORACLES16 = {
-    "quadkey_cells_z9": o_quadkey_cells(),
-    "hilbert_layout_z8": o_hilbert_layout(),
-    "rhumb_nav": o_rhumb_nav(),
-    "gravity_flows_z5": o_gravity_flows(),
-    "nn_index_z8": o_nn_index(),
+CONTRACT = {
+    "quadkey_cells_z9": (q_quadkey_cells, o_quadkey_cells),
+    "hilbert_layout_z8": (q_hilbert_layout, o_hilbert_layout),
+    "rhumb_nav": (q_rhumb_nav, o_rhumb_nav),
+    "gravity_flows_z5": (q_gravity_flows, o_gravity_flows),
+    "nn_index_z8": (q_nn_index, o_nn_index),
 }

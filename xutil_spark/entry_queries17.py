@@ -6,9 +6,7 @@ primitive over event trails — and D8 flow routing + watershed labeling
 
 Same conventions as every entry_queries*.py: q_* takes (spark, sf_dir)
 and returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-parquet inputs.  Registered BEHIND the frozen 50-row r04 driver window;
-the registration-round ledger (tests/test_registry.py) forces it into
-the round-5 window.
+parquet inputs.
 
 Oracle parity notes: the oracle joins on the SAME floor-epoch time
 buckets (an equi-join DuckDB can hash — the naive cross join is 10⁸
@@ -22,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from xutil_spark.entry_queries import _HAV_SQL, _utc
+from xutil_spark.entry_queries import _HAV_SQL, _simhash_py, _tile_sql, _utc
 from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
 from xutil_spark.entry_queries12 import _located_events
 
@@ -102,8 +100,6 @@ def q_flow_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_flow_watershed() -> str:
-    from xutil_spark.entry_queries import _tile_sql
-
     z = _FLOW_ZOOM
     n = 2 ** z
     xs, ys = _tile_sql("lon", "lat", z)
@@ -210,7 +206,6 @@ def o_crossmodal_dups() -> str:
     the generator formula; entry_queries._simhash_py pinned to Spark
     xxhash64 by tests/test_registry.py)."""
     from xutil_spark.data.synth import caption_for
-    from xutil_spark.entry_queries import _simhash_py
     from xutil_spark.entry_queries6 import _dhash_py
 
     dh, sh = {}, {}
@@ -256,8 +251,6 @@ def q_st_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_st_clusters() -> str:
-    from xutil_spark.entry_queries import _tile_sql
-
     z, w, m = _ST_ZOOM, _ST_WINDOW_S, _ST_MIN
     n = 2 ** z
     xs, ys = _tile_sql("lon", "lat", z)
@@ -302,15 +295,9 @@ FROM dense d LEFT JOIN comp c ON d.vid = c.src
 """
 
 
-QUERIES17 = {
-    "encounters_z6": q_encounters,
-    "flow_watershed_z8": q_flow_watershed,
-    "crossmodal_dups": q_crossmodal_dups,
-    "st_clusters_z7": q_st_clusters,
-}
-ORACLES17 = {
-    "encounters_z6": o_encounters(),
-    "flow_watershed_z8": o_flow_watershed(),
-    "crossmodal_dups": o_crossmodal_dups(),
-    "st_clusters_z7": o_st_clusters(),
+CONTRACT = {
+    "encounters_z6": (q_encounters, o_encounters),
+    "flow_watershed_z8": (q_flow_watershed, o_flow_watershed),
+    "crossmodal_dups": (q_crossmodal_dups, o_crossmodal_dups),
+    "st_clusters_z7": (q_st_clusters, o_st_clusters),
 }

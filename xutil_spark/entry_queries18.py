@@ -6,9 +6,7 @@ operators — ViT patch extraction + Laplacian sharpness scoring
 
 Same conventions as every entry_queries*.py: q_* takes (spark, sf_dir)
 and returns a DataFrame; o_* returns ANSI SQL DuckDB runs on the same
-inputs.  Registered BEHIND the frozen 50-row r04 driver window; the
-registration-round ledger (tests/test_registry.py) forces them into
-the round-5 window.
+inputs.
 
 Oracle strategy: the media queries use the computed-VALUES pattern of
 entry_queries6 — every expected patch digest / Laplacian sum / frame
@@ -254,16 +252,9 @@ FROM (VALUES {vals}) AS s(video_id, frame_idx, diff_sum, is_cut)
 """
 
 
-QUERIES18 = {
-    "image_patches": q_image_patches,
-    "image_sharpness": q_image_sharpness,
-    "seq_packing": q_seq_packing,
-    "video_scene_cuts": q_video_scene_cuts,
-}
-
-ORACLES18 = {
-    "image_patches": o_image_patches(),
-    "image_sharpness": o_image_sharpness(),
-    "seq_packing": o_seq_packing(),
-    "video_scene_cuts": o_video_scene_cuts(),
+CONTRACT = {
+    "image_patches": (q_image_patches, o_image_patches),
+    "image_sharpness": (q_image_sharpness, o_image_sharpness),
+    "seq_packing": (q_seq_packing, o_seq_packing),
+    "video_scene_cuts": (q_video_scene_cuts, o_video_scene_cuts),
 }

@@ -2,9 +2,7 @@
 (operators/mapmatch.py) — per-track Viterbi decode over top-K snap
 candidates — plus exact per-image color histograms (raster side).
 
-Same conventions as every entry_queries*.py.  Registered BEHIND the
-frozen 50-row r04 driver window; the REGISTERED_ROUND ledger forces
-them into the round-5 window.
+Same conventions as every entry_queries*.py.
 
 Oracle strategy: `hmm_match_tracks` gets a computed-VALUES golden from
 ``_scalar_hmm`` — an independent pure-Python (math.*, no numpy, no
@@ -243,12 +241,7 @@ FROM (VALUES {vals}) AS s(image_id, bin, n_px)
 """
 
 
-QUERIES19 = {
-    "hmm_match_tracks": q_hmm_match_tracks,
-    "image_color_hist": q_image_color_hist,
-}
-
-ORACLES19 = {
-    "hmm_match_tracks": o_hmm_match_tracks(),
-    "image_color_hist": o_image_color_hist(),
+CONTRACT = {
+    "hmm_match_tracks": (q_hmm_match_tracks, o_hmm_match_tracks),
+    "image_color_hist": (q_image_color_hist, o_image_color_hist),
 }

@@ -358,20 +358,6 @@ def q_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES2 = {
-    "col_float64": q_col_float64,
-    "string_funcs": q_string_funcs,
-    "base_conv": q_base_conv,
-    "time_rule": q_time_rule,
-    "set_intersect_users": q_set_intersect_users,
-    "rollup_pricing": q_rollup_pricing,
-    "azimuth_mid": q_azimuth_mid,
-    "dist_compare": q_dist_compare,
-    "minus_arrays": q_minus_arrays,
-    "knn_category_pivot": q_knn_category_pivot,
-    "wkt_roundtrip": q_wkt_roundtrip,
-}
-
 def o_wkt_roundtrip() -> str:
     """Literal VALUES oracle (the corpus is fixed and sf-independent).
     Expected GeoJSON/WKT strings match the pytest goldens in
@@ -409,16 +395,16 @@ def o_wkt_roundtrip() -> str:
     )
 
 
-ORACLES2 = {
-    "col_float64": o_col_float64(),
-    "wkt_roundtrip": o_wkt_roundtrip(),
-    "string_funcs": o_string_funcs(),
-    "base_conv": o_base_conv(),
-    "time_rule": o_time_rule(),
-    "set_intersect_users": o_set_intersect_users(),
-    "rollup_pricing": o_rollup_pricing(),
-    "azimuth_mid": o_azimuth_mid(),
-    "dist_compare": o_dist_compare(),
-    "minus_arrays": o_minus_arrays(),
-    "knn_category_pivot": o_knn_category_pivot(),
+CONTRACT = {
+    "col_float64": (q_col_float64, o_col_float64),
+    "string_funcs": (q_string_funcs, o_string_funcs),
+    "base_conv": (q_base_conv, o_base_conv),
+    "time_rule": (q_time_rule, o_time_rule),
+    "set_intersect_users": (q_set_intersect_users, o_set_intersect_users),
+    "rollup_pricing": (q_rollup_pricing, o_rollup_pricing),
+    "azimuth_mid": (q_azimuth_mid, o_azimuth_mid),
+    "dist_compare": (q_dist_compare, o_dist_compare),
+    "minus_arrays": (q_minus_arrays, o_minus_arrays),
+    "knn_category_pivot": (q_knn_category_pivot, o_knn_category_pivot),
+    "wkt_roundtrip": (q_wkt_roundtrip, o_wkt_roundtrip),
 }

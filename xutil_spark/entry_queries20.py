@@ -4,9 +4,7 @@ candidate pairs), per-document bigram language-model quality scores
 (operators/textops.py bigram_lm_scores), and per-image color entropy
 (raster/patches.py color_entropy).
 
-Same conventions as every entry_queries*.py.  Registered BEHIND the
-frozen 50-row r04 driver window; the REGISTERED_ROUND ledger forces
-them into the round-5 window.
+Same conventions as every entry_queries*.py.
 
 Oracle strategy:
 
@@ -42,7 +40,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xutil_spark.entry_queries import _utc
+from xutil_spark.entry_queries import _read, _utc
 from xutil_spark.entry_queries6 import _fmt_f
 
 _TAU_M = 800_000.0
@@ -354,7 +352,6 @@ def q_caption_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization makes the per-doc sum order-independent).  Two
     map-side-combined counts + broadcast model joins."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.textops import bigram_lm_scores
 
     docs = _read(spark, sf_dir, "documents")
@@ -449,20 +446,11 @@ FROM (VALUES {vals}) AS s(image_id, n_bins, n_px, entropy_bits)
 """
 
 
-QUERIES20 = {
-    "traj_hausdorff": q_traj_hausdorff,
-    "traj_frechet": q_traj_frechet,
-    "traj_dtw": q_traj_dtw,
-    "seg_crossings": q_seg_crossings,
-    "caption_bigram_lm": q_caption_bigram_lm,
-    "image_entropy": q_image_entropy,
-}
-
-ORACLES20 = {
-    "traj_hausdorff": o_traj_hausdorff(),
-    "traj_frechet": o_traj_frechet(),
-    "traj_dtw": o_traj_dtw(),
-    "seg_crossings": o_seg_crossings(),
-    "caption_bigram_lm": o_caption_bigram_lm(),
-    "image_entropy": o_image_entropy(),
+CONTRACT = {
+    "traj_hausdorff": (q_traj_hausdorff, o_traj_hausdorff),
+    "traj_frechet": (q_traj_frechet, o_traj_frechet),
+    "traj_dtw": (q_traj_dtw, o_traj_dtw),
+    "seg_crossings": (q_seg_crossings, o_seg_crossings),
+    "caption_bigram_lm": (q_caption_bigram_lm, o_caption_bigram_lm),
+    "image_entropy": (q_image_entropy, o_image_entropy),
 }

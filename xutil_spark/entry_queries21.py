@@ -2,9 +2,7 @@
 overlay-area join (operators/overlay.py — the vector×vector primitive
 that completes the spatial-join matrix).
 
-Same conventions as every entry_queries*.py.  Registered BEHIND the
-frozen 50-row r04 driver window; the REGISTERED_ROUND ledger forces
-them into the round-5 window.
+Same conventions as every entry_queries*.py.
 
 Oracle strategy — ``poly_overlay_z6``: computed-VALUES golden from an
 independent pure-Python (math.*, no numpy, no engine imports) replay of
@@ -25,7 +23,10 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xutil_spark.entry_queries import _H1_LIN, _MASK20, _refs, _utc
+from xutil_spark.entry_queries import (
+    _H1_LIN, _H1_MUL, _H2_MUL, _HAV_SQL, _MASK20, _await_stream, _cell_sql,
+    _read, _refs, _utc, _winnow_py, _xxh64,
+)
 from xutil_spark.entry_queries6 import _fmt_f
 
 # unit rings (CCW), 4 hexagon + 3 octagon rotation variants — computed
@@ -185,8 +186,6 @@ def _sc_ring_area_q(ring: list) -> int:
 def o_poly_overlay_z6() -> str:
     import duckdb as _dd
 
-    from xutil_spark.entry_queries import _H1_MUL, _H2_MUL
-
     con = _dd.connect()
     keys = [r[0] for r in con.execute(
         "SELECT s_suppkey FROM "
@@ -250,7 +249,6 @@ def q_fp_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimators on the winnowing sketches, shared-print equi-join
     candidates, pure-JVM array estimators."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.dedup import fingerprint_containment
 
     docs = _read(spark, sf_dir, "documents")
@@ -262,8 +260,6 @@ def o_fp_containment() -> str:
     (the _winnow_py reimplementation), exact integer set estimators,
     float division + 9-dp round only at the end."""
     import duckdb as _dd
-
-    from xutil_spark.entry_queries import _winnow_py
 
     docs = _dd.sql(
         "SELECT doc_id, text FROM "
@@ -333,7 +329,6 @@ def q_route_points_500km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_route_points_500km() -> str:
-    from xutil_spark.entry_queries import _HAV_SQL
     from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
 
     step = int(round(_RD_STEP_M * 1000.0))
@@ -409,7 +404,6 @@ def q_route_points_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_route_points_gc() -> str:
-    from xutil_spark.entry_queries import _HAV_SQL
     from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
 
     step = int(round(_RD_STEP_M * 1000.0))
@@ -520,7 +514,6 @@ def q_dup_spans_20(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textops.py dup_token_spans) — the exact-substring dedup
     signal; md5 span hashes make the oracle pure SQL."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.textops import dup_token_spans
 
     return dup_token_spans(_read(spark, sf_dir, "documents"), n=_DS_N)
@@ -540,7 +533,6 @@ def q_dup_coverage_20(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_span_coverage): integer interval-union of corpus-duplicated
     20-token spans per doc — the curation-threshold signal."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.textops import dup_span_coverage
 
     return dup_span_coverage(_read(spark, sf_dir, "documents"), n=_DS_N)
@@ -594,7 +586,6 @@ def q_zone_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-units before the sum (order-independent, VALUES-oracle-able);
     the weight dim joins broadcast."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.overlay import overlay_area_join
 
     ov = overlay_area_join(
@@ -621,8 +612,6 @@ def o_zone_interp() -> str:
     micro-unit aggregation (HALF-AWAY rounding mirrors Spark's
     ROUND(x, 0) on doubles for either sign)."""
     import duckdb as _dd
-
-    from xutil_spark.entry_queries import _H1_MUL, _H2_MUL
 
     con = _dd.connect()
     sup = con.execute(
@@ -701,7 +690,6 @@ def o_pagerank_od() -> str:
     import duckdb as _dd
 
     from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
-    from xutil_spark.entry_queries12 import _cell_sql
 
     cell = _cell_sql("lon", "lat", _PR_ZOOM)
     con = _dd.connect()
@@ -856,7 +844,6 @@ def q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     = supplier cells; exact integer distances, oracle = independent
     scalar Dijkstra."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.costdist import cost_distance
 
     ev = _read(spark, sf_dir, "events")
@@ -1043,7 +1030,6 @@ def q_pq_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression path of the similarity stack, digit-for-digit
     replayable."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.pq import pq_topk, pq_train
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -1128,7 +1114,6 @@ def q_clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL) — tags stripped, entities neutralized, whitespace collapsed,
     markup accounting per doc."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.textops import clean_text
 
     d = _read(spark, sf_dir, "documents")
@@ -1221,7 +1206,6 @@ def _hll_replay() -> dict:
 
     import duckdb as _dd
 
-    from xutil_spark.entry_queries import _cell_sql, _xxh64
     from xutil_spark.entry_queries3 import _EV_LAT, _EV_LON
 
     cell = _cell_sql("lon", "lat", _HLL_ZOOM)
@@ -1292,7 +1276,6 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from xutil_spark.entry_queries import _await_stream
     from xutil_spark.functions import native
     from xutil_spark.streaming.stateful import streaming_hll
 
@@ -1343,7 +1326,6 @@ def q_least_cost_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     source, exact-integer backtracking over the same raster as
     `cost_distance_grid`."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.costdist import least_cost_paths
 
     ev = _read(spark, sf_dir, "events")
@@ -1455,40 +1437,21 @@ FROM (VALUES {vals}) AS s(target_x, target_y, step, gx, gy, dist)
 """
 
 
-QUERIES21 = {
-    "poly_overlay_z6": q_poly_overlay_z6,
-    "fp_containment": q_fp_containment,
-    "route_points_500km": q_route_points_500km,
-    "dup_spans_20": q_dup_spans_20,
-    "dup_coverage_20": q_dup_coverage_20,
-    "zone_interp": q_zone_interp,
-    "cost_distance_grid": q_cost_distance,
-    "audio_match_fp": q_audio_match,
-    "pagerank_od_z5": q_pagerank_od,
-    "least_cost_paths": q_least_cost_paths,
-    "hll_users_z6": q_hll_users,
-    "clean_docs": q_clean_docs,
-    "pq_top5": q_pq_top5,
-    "streaming_hll_z6": q_streaming_hll,
-    "image_blobs": q_image_blobs,
-    "route_points_gc_500km": q_route_points_gc,
-}
-
-ORACLES21 = {
-    "poly_overlay_z6": o_poly_overlay_z6(),
-    "fp_containment": o_fp_containment(),
-    "route_points_500km": o_route_points_500km(),
-    "dup_spans_20": o_dup_spans_20(),
-    "dup_coverage_20": o_dup_coverage_20(),
-    "zone_interp": o_zone_interp(),
-    "cost_distance_grid": o_cost_distance(),
-    "audio_match_fp": o_audio_match(),
-    "pagerank_od_z5": o_pagerank_od(),
-    "least_cost_paths": o_least_cost_paths(),
-    "hll_users_z6": o_hll_users(),
-    "clean_docs": o_clean_docs(),
-    "pq_top5": o_pq_top5(),
-    "streaming_hll_z6": o_streaming_hll(),
-    "image_blobs": o_image_blobs(),
-    "route_points_gc_500km": o_route_points_gc(),
+CONTRACT = {
+    "poly_overlay_z6": (q_poly_overlay_z6, o_poly_overlay_z6),
+    "fp_containment": (q_fp_containment, o_fp_containment),
+    "route_points_500km": (q_route_points_500km, o_route_points_500km),
+    "dup_spans_20": (q_dup_spans_20, o_dup_spans_20),
+    "dup_coverage_20": (q_dup_coverage_20, o_dup_coverage_20),
+    "zone_interp": (q_zone_interp, o_zone_interp),
+    "cost_distance_grid": (q_cost_distance, o_cost_distance),
+    "audio_match_fp": (q_audio_match, o_audio_match),
+    "pagerank_od_z5": (q_pagerank_od, o_pagerank_od),
+    "least_cost_paths": (q_least_cost_paths, o_least_cost_paths),
+    "hll_users_z6": (q_hll_users, o_hll_users),
+    "clean_docs": (q_clean_docs, o_clean_docs),
+    "pq_top5": (q_pq_top5, o_pq_top5),
+    "streaming_hll_z6": (q_streaming_hll, o_streaming_hll),
+    "image_blobs": (q_image_blobs, o_image_blobs),
+    "route_points_gc_500km": (q_route_points_gc, o_route_points_gc),
 }

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xutil_spark.entry_queries import (
-    _PTS_SQL, _await_stream, _points, _read, _utc, o_lsh_dup_pairs,
+    _PTS_SQL, _await_stream, _points, _read, _utc, o_lsh_dup_pairs, o_wgs2gcj,
 )
 from xutil_spark.functions import native
 
@@ -723,8 +723,6 @@ def q_wgs2bd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_wgs2bd() -> str:
-    from xutil_spark.entry_queries import o_wgs2gcj
-
     xpi = "(pi() * 3000.0 / 180.0)"
     return f"""
 WITH gcj AS ({o_wgs2gcj()}),
@@ -859,45 +857,25 @@ GROUP BY 1, 2
 """
 
 
-QUERIES3 = {
-    "ngram_jaccard": q_ngram_jaccard,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-    "cosine_top5_lsh": q_cosine_top5_lsh,
-    "idcard_pipeline": q_idcard_pipeline,
-    "baidu_mercator": q_baidu_mercator,
-    "time_split_hourly": q_time_split_hourly,
-    "union_names": q_union_names,
-    "uniq_first_event": q_uniq_first_event,
-    "image_resize": q_image_resize,
-    "hash_digests": q_hash_digests,
-    "day_last_range": q_day_last_range,
-    "time_trunc_units": q_time_trunc_units,
-    "salted_tile_join": q_salted_tile_join,
-    "point_at_dest": q_point_at_dest,
-    "snapshot_resume": q_snapshot_resume,
-    "snapshot_lineage": q_snapshot_lineage,
-    "wgs2bd": q_wgs2bd,
-    "streaming_cell_counts": q_streaming_cell_counts,
-}
-
-ORACLES3 = {
-    "ngram_jaccard": o_ngram_jaccard(),
-    "embedding_near_dup": o_embedding_near_dup(),
-    "embedding_near_dup_lsh": o_embedding_near_dup_lsh(),
-    "cosine_top5_lsh": o_cosine_top5_lsh(),
-    "idcard_pipeline": o_idcard_pipeline(),
-    "baidu_mercator": o_baidu_mercator(),
-    "time_split_hourly": o_time_split_hourly(),
-    "union_names": o_union_names(),
-    "uniq_first_event": o_uniq_first_event(),
-    "hash_digests": o_hash_digests(),
-    "day_last_range": o_day_last_range(),
-    "time_trunc_units": o_time_trunc_units(),
-    "salted_tile_join": o_salted_tile_join(),
-    "point_at_dest": o_point_at_dest(),
-    "wgs2bd": o_wgs2bd(),
-    "streaming_cell_counts": o_streaming_cell_counts(),
-    "snapshot_lineage": o_snapshot_lineage(),
-    "snapshot_resume": o_snapshot_resume(),
+CONTRACT = {
+    "ngram_jaccard": (q_ngram_jaccard, o_ngram_jaccard),
+    "embedding_near_dup": (q_embedding_near_dup, o_embedding_near_dup),
+    "embedding_near_dup_lsh":
+        (q_embedding_near_dup_lsh, o_embedding_near_dup_lsh),
+    "cosine_top5_lsh": (q_cosine_top5_lsh, o_cosine_top5_lsh),
+    "idcard_pipeline": (q_idcard_pipeline, o_idcard_pipeline),
+    "baidu_mercator": (q_baidu_mercator, o_baidu_mercator),
+    "time_split_hourly": (q_time_split_hourly, o_time_split_hourly),
+    "union_names": (q_union_names, o_union_names),
+    "uniq_first_event": (q_uniq_first_event, o_uniq_first_event),
+    "hash_digests": (q_hash_digests, o_hash_digests),
+    "day_last_range": (q_day_last_range, o_day_last_range),
+    "time_trunc_units": (q_time_trunc_units, o_time_trunc_units),
+    "salted_tile_join": (q_salted_tile_join, o_salted_tile_join),
+    "point_at_dest": (q_point_at_dest, o_point_at_dest),
+    "snapshot_resume": (q_snapshot_resume, o_snapshot_resume),
+    "snapshot_lineage": (q_snapshot_lineage, o_snapshot_lineage),
+    "wgs2bd": (q_wgs2bd, o_wgs2bd),
+    "streaming_cell_counts":
+        (q_streaming_cell_counts, o_streaming_cell_counts),
 }

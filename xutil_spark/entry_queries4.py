@@ -20,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xutil_spark.entry_queries import _PTS_SQL, _await_stream, _points, _utc
+from xutil_spark.entry_queries import (
+    _PTS_SQL, _await_stream, _points, _read, _utc, o_cosine_top5,
+)
 
 # ------------------------------------------------------------ shared SQL
 
@@ -258,7 +260,6 @@ def q_row_kv_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing output columns filled with '' — the reference's main
     column-mapping surface as one declarative select."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.sources.archives import row_kv_select
 
     ev = _read(spark, sf_dir, "events")
@@ -280,7 +281,6 @@ def q_strings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """StringsIndex/IntsIndex (strings.go:9-26): 0-based first-match
     index in the token array, -1 when absent."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.relational import strings_index
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -309,7 +309,6 @@ def q_time_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-open run of s steps — forward s=3 and backward s=-2, exploded
     to one row per step."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.relational import time_extend
 
     ev = _read(spark, sf_dir, "events").filter(F.col("event_id") % 97 == 0)
@@ -348,7 +347,6 @@ def q_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     AES+ECB+PKCS5) and CBC/PKCS.  The oracle pins the decrypted
     plaintext — a broken cipher chain yields non-matching rows."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.functions import crypto
 
     key = "0123456789abcdef"  # 16-byte AES-128 key
@@ -382,7 +380,6 @@ def q_des_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins to the published FIPS-81-lineage value 85E813540F0AB405
     (a round-trip alone would pass for any self-inverse bug)."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.functions import crypto
 
     key = "deskey12"  # 8-byte DES key (IV = key, crypto.go:77)
@@ -432,7 +429,6 @@ def q_bmap_mocator(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar MercatorToBd09 + formatting; Go %g itself is additionally
     pinned by pytest goldens vs map.go vectors)."""
     _utc(spark)
-    from xutil_spark.entry_queries import _points
     from xutil_spark.functions import geo_udfs
 
     pts = _points(spark, sf_dir).select("pid").dropDuplicates(["pid"]).filter(
@@ -608,7 +604,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges through a recursive reachability CTE — the iterative-
     algorithm class, SQL-checked."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.dedup import (
         connected_components, minhash_lsh_pairs, ngram_jaccard_pairs,
     )
@@ -645,7 +640,6 @@ def q_cosine_top5_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize → bucket-join → re-score plumbing loses nothing.  The
     approximate tier (nprobe < n_lists) is recall-pinned in pytest."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.similarity import cosine_topk_ivf
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -654,8 +648,6 @@ def q_cosine_top5_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_cosine_top5_ivf() -> str:
-    from xutil_spark.entry_queries import o_cosine_top5
-
     return o_cosine_top5()
 
 
@@ -664,7 +656,6 @@ def q_value_processor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trim + upper here) applied to every string column of the parsed
     table in one projection."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.sources.archives import apply_value_processor
 
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 9 == 2)
@@ -767,7 +758,6 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from xutil_spark.entry_queries import _read
     from xutil_spark.streaming.stateful import streaming_sessionize
 
     ev = _read(spark, sf_dir, "events")
@@ -856,7 +846,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Updates derive deterministically from user ids: 10 updates per user,
     every 3 days from Jan 1 + (uid % 7) hours."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.relational import as_of_join
 
     ev = _read(spark, sf_dir, "events").filter(F.col("event_id") % 5 == 0)
@@ -911,7 +900,6 @@ def q_geocode_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows broadcast-join the Poi dim.  Deterministic offline resolver
     (md5-derived coords + fixed region tables)."""
     _utc(spark)
-    from xutil_spark.entry_queries import _read
     from xutil_spark.operators.geocode import geocode_enrich
 
     cust = _read(spark, sf_dir, "customer").filter(F.col("c_custkey") % 4 == 1)
@@ -947,52 +935,26 @@ FROM n
 """
 
 
-QUERIES4 = {
-    "gcj2wgs": q_gcj2wgs,
-    "bd2gcj": q_bd2gcj,
-    "bd2wgs": q_bd2wgs,
-    "mercator_to_bd09": q_mercator_to_bd09,
-    "tile2wgs": q_tile2wgs,
-    "row_kv_reorder": q_row_kv_reorder,
-    "strings_index": q_strings_index,
-    "time_extend": q_time_extend,
-    "aes_roundtrip": q_aes_roundtrip,
-    "des_roundtrip": q_des_roundtrip,
-    "bmap_mocator": q_bmap_mocator,
-    "parse_zip_xml": q_parse_zip_xml,
-    "file_lines_count": q_file_lines_count,
-    "file_list_pattern": q_file_list_pattern,
-    "geocode_enrich": q_geocode_enrich,
-    "streaming_dedup": q_streaming_dedup,
-    "streaming_sessions": q_streaming_sessions,
-    "audio_features": q_audio_features,
-    "video_frames": q_video_frames,
-    "value_processor": q_value_processor,
-    "dup_clusters": q_dup_clusters,
-    "cosine_top5_ivf": q_cosine_top5_ivf,
-    "asof_join": q_asof_join,
-}
-
-ORACLES4 = {
-    "gcj2wgs": o_gcj2wgs(),
-    "bd2gcj": o_bd2gcj(),
-    "bd2wgs": o_bd2wgs(),
-    "mercator_to_bd09": o_mercator_to_bd09(),
-    "tile2wgs": o_tile2wgs(),
-    "row_kv_reorder": o_row_kv_reorder(),
-    "strings_index": o_strings_index(),
-    "time_extend": o_time_extend(),
-    "aes_roundtrip": o_aes_roundtrip(),
-    "des_roundtrip": o_des_roundtrip(),
-    "bmap_mocator": o_bmap_mocator(),
-    "parse_zip_xml": o_parse_zip_xml(),
-    "file_lines_count": o_file_lines_count(),
-    "file_list_pattern": o_file_list_pattern(),
-    "geocode_enrich": o_geocode_enrich(),
-    "streaming_dedup": o_streaming_dedup(),
-    "streaming_sessions": o_streaming_sessions(),
-    "value_processor": o_value_processor(),
-    "dup_clusters": o_dup_clusters(),
-    "cosine_top5_ivf": o_cosine_top5_ivf(),
-    "asof_join": o_asof_join(),
+CONTRACT = {
+    "gcj2wgs": (q_gcj2wgs, o_gcj2wgs),
+    "bd2gcj": (q_bd2gcj, o_bd2gcj),
+    "bd2wgs": (q_bd2wgs, o_bd2wgs),
+    "mercator_to_bd09": (q_mercator_to_bd09, o_mercator_to_bd09),
+    "tile2wgs": (q_tile2wgs, o_tile2wgs),
+    "row_kv_reorder": (q_row_kv_reorder, o_row_kv_reorder),
+    "strings_index": (q_strings_index, o_strings_index),
+    "time_extend": (q_time_extend, o_time_extend),
+    "aes_roundtrip": (q_aes_roundtrip, o_aes_roundtrip),
+    "des_roundtrip": (q_des_roundtrip, o_des_roundtrip),
+    "bmap_mocator": (q_bmap_mocator, o_bmap_mocator),
+    "parse_zip_xml": (q_parse_zip_xml, o_parse_zip_xml),
+    "file_lines_count": (q_file_lines_count, o_file_lines_count),
+    "file_list_pattern": (q_file_list_pattern, o_file_list_pattern),
+    "geocode_enrich": (q_geocode_enrich, o_geocode_enrich),
+    "streaming_dedup": (q_streaming_dedup, o_streaming_dedup),
+    "streaming_sessions": (q_streaming_sessions, o_streaming_sessions),
+    "value_processor": (q_value_processor, o_value_processor),
+    "dup_clusters": (q_dup_clusters, o_dup_clusters),
+    "cosine_top5_ivf": (q_cosine_top5_ivf, o_cosine_top5_ivf),
+    "asof_join": (q_asof_join, o_asof_join),
 }

@@ -22,14 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xutil_spark.entry_queries import _points, _read, _utc
+
 def q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled points -> leaf S2 encode (one vectorized UDF) -> level-16
     and level-12 keys derived JVM-side by the bit-mask parent (no
     re-encode), plus the canonical hex token."""
-    # function-local to avoid a circular import when this batch module
-    # is imported before xutil_spark.entry_queries (same pattern as
-    # entry_queries4)
-    from xutil_spark.entry_queries import _points, _utc
     from xutil_spark.operators.s2cells import cell_encode_s2, s2_parent, s2_token
 
     _utc(spark)
@@ -58,9 +56,8 @@ def o_s2_cells() -> str:
     from xutil_spark.kernels.s2 import cell_id_py, token_py
 
     # inlined copy of entry_queries._PTS_SQL over the sf0.01 parquet
-    # (kept local so this module imports standalone without a circular
-    # init-time dependency; any drift from the Spark-side _points shows
-    # up immediately as a driver hash mismatch)
+    # (the VALUES are computed here, before any view exists); any drift
+    # from the Spark-side _points shows up as a hash mismatch
     pts_sql = """
 SELECT l_orderkey * 10 + l_linenumber AS pid,
        73.5 + ((l_orderkey * 2654435761 + l_linenumber * 40503) % 1048576) / 1048576.0 * 61.0 AS lon,
@@ -83,10 +80,6 @@ FROM (VALUES {vals}) AS s(pid, s2_16, s2_12, tok_12)
 """
 
 
-QUERIES5 = {"s2_cells": q_s2_cells}
-ORACLES5 = {"s2_cells": o_s2_cells()}
-
-
 def q_rep_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style n-gram repetition filter over the documents table:
     per-doc duplicate-trigram fraction, top word-bigram + the char
@@ -94,7 +87,6 @@ def q_rep_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds.  The line-based half (`line_repetition_features`) is
     pinned by pytest on a multi-line corpus (this corpus is
     single-line, so its metrics are degenerate here)."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.textops import repetition_features
 
     _utc(spark)
@@ -155,17 +147,12 @@ FROM tris t LEFT JOIN top p USING (doc_id)
 """
 
 
-QUERIES5["rep_filter"] = q_rep_filter
-ORACLES5["rep_filter"] = o_rep_filter()
-
-
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style PII scrubbing.  The corpus itself carries no PII, so the
     query first injects one deterministic email / phone / IPv4 literal
     per doc (pure string building from doc_id+lang, reproduced verbatim
     in the oracle SQL) — the regexes are then exercised on real
     matches, not vacuously."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.textops import pii_scrub
 
     _utc(spark)
@@ -209,5 +196,8 @@ FROM seeded
 """
 
 
-QUERIES5["pii_scrub"] = q_pii_scrub
-ORACLES5["pii_scrub"] = o_pii_scrub()
+CONTRACT = {
+    "s2_cells": (q_s2_cells, o_s2_cells),
+    "rep_filter": (q_rep_filter, o_rep_filter),
+    "pii_scrub": (q_pii_scrub, o_pii_scrub),
+}

@@ -34,6 +34,13 @@ from __future__ import annotations
 import hashlib
 import math
 
+from xutil_spark.entry_queries import (
+    _PTS_SQL, _await_stream, _cell_sql, _points, _read, _utc,
+    q_images_decode_stats, q_knn_images_refs,
+)
+from xutil_spark.entry_queries3 import q_image_resize
+from xutil_spark.entry_queries4 import q_audio_features, q_video_frames
+
 _M64 = (1 << 64) - 1
 
 # independent literal copies of the generator's parameter cycles
@@ -373,7 +380,6 @@ def q_geohash_cells(spark, sf_dir):
     substrings, never re-encodes)."""
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _points, _utc
     from xutil_spark.functions.geohash import geohash
 
     _utc(spark)
@@ -503,7 +509,6 @@ def q_traj_polyline(spark, sf_dir):
     vectorized delta/zigzag encode per group."""
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _points, _utc
     from xutil_spark.operators.trajectory import polyline_encode
 
     _utc(spark)
@@ -538,7 +543,6 @@ def q_traj_simplify(spark, sf_dir):
     are hash-jagged, so DP prunes aggressively)."""
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _points, _utc
     from xutil_spark.operators.trajectory import douglas_peucker
 
     _utc(spark)
@@ -591,7 +595,6 @@ def q_streaming_geofence(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from xutil_spark.entry_queries import _utc
     from xutil_spark.operators.geofence import fence_assign
     from xutil_spark.streaming.stateful import streaming_geofence
 
@@ -618,7 +621,6 @@ def q_streaming_geofence(spark, sf_dir):
         .option("checkpointLocation", chk)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    from xutil_spark.entry_queries import _await_stream
 
     _await_stream(q, work)
     res = (
@@ -732,7 +734,6 @@ def q_heavy_hitters_users(spark, sf_dir):
     (capacity ≥ distinct keys per partition → no evictions → bounds
     collapse to true counts; same verification trick as IVF at full
     probe).  The approximate regime's bounds are pinned in pytest."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.sketches import heavy_hitters
 
     _utc(spark)
@@ -760,7 +761,6 @@ def q_grid_clusters(spark, sf_dir):
     Everything after the first aggregation runs at CELL cardinality —
     the scale reduction that makes density clustering feasible at
     10^12 points."""
-    from xutil_spark.entry_queries import _points, _utc
     from xutil_spark.operators.clustering import grid_density_clusters
 
     _utc(spark)
@@ -769,24 +769,9 @@ def q_grid_clusters(spark, sf_dir):
 
 
 def o_grid_clusters() -> str:
-    # _PTS_SQL / _cell_sql from entry_queries, inlined: this runs at
-    # module-import time and importing entry_queries here would be
-    # circular (entry_queries imports ORACLES6 from this module).
-    pts_sql = """
-SELECT l_orderkey * 10 + l_linenumber AS pid,
-       73.5 + ((l_orderkey * 2654435761 + l_linenumber * 40503) % 1048576) / 1048576.0 * 61.0 AS lon,
-       18.2 + ((l_orderkey * 1597334677 + l_linenumber * 69697) % 1048576) / 1048576.0 * 35.3 AS lat,
-       l_quantity, l_extendedprice
-FROM lineitem
-"""
-    x = "CAST(floor((lon + 180.0) / 360.0 * 1024.0) AS BIGINT)"
-    y = (
-        "CAST(floor((1.0 - ln(tan(lat * pi() / 180.0) + 1.0 /"
-        " cos(lat * pi() / 180.0)) / pi()) / 2.0 * 1024.0) AS BIGINT)"
-    )
-    cell = f"(10 * 288230376151711744 + {x} * 536870912 + {y})"
+    cell = _cell_sql("lon", "lat", 10)
     return f"""
-WITH RECURSIVE pts AS ({pts_sql}),
+WITH RECURSIVE pts AS ({_PTS_SQL}),
 cells AS (SELECT {cell} AS cell, COUNT(*) AS n_points FROM pts GROUP BY 1),
 dense AS (SELECT * FROM cells WHERE n_points >= 8),
 pairs AS (
@@ -813,28 +798,18 @@ FROM dense d LEFT JOIN comp c ON d.cell = c.src
 """
 
 
-QUERIES6: dict = {
-    "image_dhash_pairs": q_image_dhash_pairs,
-    "geohash_cells": q_geohash_cells,
-    "traj_polyline": q_traj_polyline,
-    "traj_simplify": q_traj_simplify,
-    "streaming_geofence": q_streaming_geofence,
-    "image_dedup": q_image_dedup,
-    "heavy_hitters_users": q_heavy_hitters_users,
-    "grid_clusters": q_grid_clusters,
-}
-ORACLES6 = {
-    "images_decode_stats": o_images_decode_stats(),
-    "image_resize": o_image_resize(),
-    "audio_features": o_audio_features(),
-    "video_frames": o_video_frames(),
-    "knn_images_refs": o_knn_images_refs(),
-    "image_dhash_pairs": o_image_dhash_pairs(),
-    "geohash_cells": o_geohash_cells(),
-    "traj_polyline": o_traj_polyline(),
-    "traj_simplify": o_traj_simplify(),
-    "streaming_geofence": o_streaming_geofence(),
-    "image_dedup": o_image_dedup(),
-    "heavy_hitters_users": o_heavy_hitters_users(),
-    "grid_clusters": o_grid_clusters(),
+CONTRACT = {
+    "image_dhash_pairs": (q_image_dhash_pairs, o_image_dhash_pairs),
+    "geohash_cells": (q_geohash_cells, o_geohash_cells),
+    "traj_polyline": (q_traj_polyline, o_traj_polyline),
+    "traj_simplify": (q_traj_simplify, o_traj_simplify),
+    "streaming_geofence": (q_streaming_geofence, o_streaming_geofence),
+    "image_dedup": (q_image_dedup, o_image_dedup),
+    "heavy_hitters_users": (q_heavy_hitters_users, o_heavy_hitters_users),
+    "grid_clusters": (q_grid_clusters, o_grid_clusters),
+    "images_decode_stats": (q_images_decode_stats, o_images_decode_stats),
+    "image_resize": (q_image_resize, o_image_resize),
+    "audio_features": (q_audio_features, o_audio_features),
+    "video_frames": (q_video_frames, o_video_frames),
+    "knn_images_refs": (q_knn_images_refs, o_knn_images_refs),
 }

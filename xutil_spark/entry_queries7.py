@@ -72,9 +72,6 @@ FROM (VALUES {rows}) AS t(image_id, phash64)
 """
 
 
-QUERIES7: dict = {
-    "image_phash": q_image_phash,
-}
-ORACLES7 = {
-    "image_phash": o_image_phash(),
+CONTRACT = {
+    "image_phash": (q_image_phash, o_image_phash),
 }

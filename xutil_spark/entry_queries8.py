@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xutil_spark.entry_queries import _read, _utc
+
 _RANK_SQL = (
     "('0x' || substr(md5(concat_ws('|', doc_id, '{salt}')), 1, 15))::BIGINT"
 )
@@ -23,7 +25,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly min(20, |stratum|) docs per language, smallest hash
     ranks first — deterministic stratified top-n (one window over the
     stratum shuffle; retries/speculation cannot change the pick)."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.sampling import sample_stratified_n
 
     _utc(spark)
@@ -46,7 +47,6 @@ def q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else default ×1): copies = floor(w) + [rank < frac(w)·
     2^60], rows explode by copies with a 1-based copy_id — the exact
     deterministic realization of the expected mixture."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.sampling import mixture_resample
 
     _utc(spark)
@@ -80,7 +80,6 @@ def q_sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stratum hash-threshold sampling (en 50%, zh 10%, default
     25%) — the shuffle-free 10^12-row mixing path: broadcast threshold
     dim + one stateless codegen'd filter."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.sampling import sample_stratified_fraction
 
     _utc(spark)
@@ -104,14 +103,8 @@ WHERE {rank} < (CASE lang WHEN 'en' THEN {thr_en} WHEN 'zh' THEN {thr_zh}
 """
 
 
-QUERIES8 = {
-    "sample_stratified": q_sample_stratified,
-    "sample_mixture": q_sample_mixture,
-    "sample_fraction": q_sample_fraction,
-}
-
-ORACLES8 = {
-    "sample_stratified": o_sample_stratified(),
-    "sample_mixture": o_sample_mixture(),
-    "sample_fraction": o_sample_fraction(),
+CONTRACT = {
+    "sample_stratified": (q_sample_stratified, o_sample_stratified),
+    "sample_mixture": (q_sample_mixture, o_sample_mixture),
+    "sample_fraction": (q_sample_fraction, o_sample_fraction),
 }

@@ -5,17 +5,17 @@ pipeline.
 
 Same conventions as entry_queries*.py: every q_* takes (spark, sf_dir)
 and returns a DataFrame; every o_* returns ANSI SQL DuckDB runs on the
-same inputs.  Both queries are registered BEHIND the 50-row driver
-window this round (every slot is taken by the staleness ledger + the
-code-touched set — see _DRIVER_WINDOW in entry_queries.py); the
-registration-round ledger in tests/test_registry.py forces them into
-the round-5 window.
+same inputs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xutil_spark.entry_queries import (
+    _H1_LIN, _H1_MUL, _H2_LIN, _H2_MUL, _MASK20, _points, _read, _utc,
+)
 
 # DuckDB mirror of operators.textops.tokens(): split lower(trim(text))
 # on runs of whitespace, drop empties (same pattern as o_minus_arrays)
@@ -31,7 +31,6 @@ def q_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Engine joins on xxhash64 of the n-gram (8-byte keys, broadcast
     benchmark dim); the oracle joins on the n-gram strings — identical
     output absent 64-bit collisions."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.textops import decontaminate
 
     _utc(spark)
@@ -67,7 +66,6 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k1=1.2, b=0.75, +1-smoothed idf); docs scoring > 0 after 4-dp
     rounding.  Formula text mirrors the oracle token-for-token so the
     float64 op order is identical on both sides."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.textops import bm25_scores
 
     _utc(spark)
@@ -108,7 +106,6 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide adjacent-bigram PMI (Church & Hanks collocation
     statistic), pairs seen ≥ 5×.  Two dim-cardinality counts + a
     broadcast unigram join — no fact-sized shuffle."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.textops import bigram_pmi
 
     _utc(spark)
@@ -147,7 +144,6 @@ def q_pricing_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     linestatus) — 6 dim-cardinality groups, so the exact aggregate's
     per-group value map is safe; group_percentiles(exact=False) is the
     documented 10^12-row path (Greenwald-Khanna sketch)."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.relational import group_percentiles
 
     _utc(spark)
@@ -190,7 +186,6 @@ FROM g
 def q_token_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token-distribution KL divergence vs the corpus — the
     data-mixing drift diagnostic.  One row per source."""
-    from xutil_spark.entry_queries import _read, _utc
     from xutil_spark.operators.textops import token_kl_drift
 
     _utc(spark)
@@ -222,7 +217,6 @@ def q_tile_hull_z8(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Python re-derivation (points from the integer-hash formula,
     slippy tile transcription, monotone chain with identical float op
     order — same convention as the simhash / s2_cells goldens)."""
-    from xutil_spark.entry_queries import _points, _utc
     from xutil_spark.operators.hulls import tile_hull_stats
 
     _utc(spark)
@@ -277,10 +271,6 @@ def o_tile_hull_z8() -> str:
     import math
 
     import duckdb as _dd
-
-    from xutil_spark.entry_queries import (
-        _H1_LIN, _H1_MUL, _H2_LIN, _H2_MUL, _MASK20,
-    )
 
     rows = _dd.sql(
         "SELECT l_orderkey, l_linenumber FROM "
@@ -346,7 +336,6 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from xutil_spark.data.synth import images_table, with_location
-    from xutil_spark.entry_queries import _utc
     from xutil_spark.raster.zonal import zonal_pixel_stats
 
     _utc(spark)
@@ -419,22 +408,12 @@ GROUP BY zone_id
 """
 
 
-QUERIES9 = {
-    "decontaminate_13gram": q_decontaminate_13gram,
-    "bm25_search": q_bm25_search,
-    "bigram_pmi": q_bigram_pmi,
-    "pricing_percentiles": q_pricing_percentiles,
-    "token_kl_drift": q_token_kl_drift,
-    "tile_hull_z8": q_tile_hull_z8,
-    "zonal_stats": q_zonal_stats,
-}
-
-ORACLES9 = {
-    "decontaminate_13gram": o_decontaminate_13gram(),
-    "bm25_search": o_bm25_search(),
-    "bigram_pmi": o_bigram_pmi(),
-    "pricing_percentiles": o_pricing_percentiles(),
-    "token_kl_drift": o_token_kl_drift(),
-    "tile_hull_z8": o_tile_hull_z8(),
-    "zonal_stats": o_zonal_stats(),
+CONTRACT = {
+    "decontaminate_13gram": (q_decontaminate_13gram, o_decontaminate_13gram),
+    "bm25_search": (q_bm25_search, o_bm25_search),
+    "bigram_pmi": (q_bigram_pmi, o_bigram_pmi),
+    "pricing_percentiles": (q_pricing_percentiles, o_pricing_percentiles),
+    "token_kl_drift": (q_token_kl_drift, o_token_kl_drift),
+    "tile_hull_z8": (q_tile_hull_z8, o_tile_hull_z8),
+    "zonal_stats": (q_zonal_stats, o_zonal_stats),
 }
