@@ -2,8 +2,8 @@
 """Benchmark harness.
 
 Default run (what the driver invokes):
-  1. times the headline queries at local[$SPARK_GRAFT_CPUS] on
-     $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1);
+  1. times the headline queries at local[$SPARK_GRAFT_CPUS] (default:
+     nproc) on $SPARK_GRAFT_SF_DIR (default: ``SF_DIR``, the sf0.1 data);
   2. runs the e2e image pipeline (FUSED decode → location → tile join
      → cell encode → exact kNN, operators/fused.py, then per-tile agg)
      on IDENTICAL input bytes at local[2], local[8] and local[32], each
@@ -31,6 +31,10 @@ Default run (what the driver invokes):
 
 ``python bench.py --stage pipeline --master local[8]`` runs only the
 pipeline and prints its JSON (used by the subprocess fan-out).
+
+Any ``local[N]`` level with N above nproc is refused up front with an
+error naming the level, so the default run needs a host with at least
+32 CPUs.
 """
 
 from __future__ import annotations
@@ -43,7 +47,9 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# nproc: the CPUs this process may run on (its affinity mask)
+NPROC = len(os.sched_getaffinity(0))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(NPROC))
 BENCH_IMAGES = int(os.environ.get("XUTIL_BENCH_IMAGES", "800000"))
 BENCH_TRIALS = int(os.environ.get("XUTIL_BENCH_TRIALS", "2"))
 BENCH_REFS = int(os.environ.get("XUTIL_BENCH_REFS", "2000"))
@@ -596,12 +602,27 @@ def write_bench_md(timings, p2, p8, p32, eff, pooled_eff, pooled_n, pooled,
         fh.write("\n".join(lines) + "\n")
 
 
+def check_level(master: str) -> None:
+    """Refuse a ``local[N]`` level wider than this host: Spark local[N]
+    caps task slots, not cores, so N > nproc would time-slice N threads
+    over fewer CPUs and report it as that level."""
+    n = master[len("local["):-1] if master.startswith("local[") else ""
+    if n.isdigit() and int(n) > NPROC:
+        raise SystemExit(f"bench level {master} exceeds nproc={NPROC} on this host")
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--stage", choices=["all", "pipeline", "skew"],
                     default="all")
     ap.add_argument("--master", default=f"local[{CPUS}]")
     args = ap.parse_args()
+    # every level this run would start, refused before any work
+    levels = {f"local[{CPUS}]", args.master}
+    if args.stage == "all":
+        levels |= {"local[2]", "local[8]", "local[32]"}
+    for level in sorted(levels):
+        check_level(level)
 
     if args.stage == "pipeline":
         ensure_bench_images()

@@ -40,10 +40,12 @@ def norm_cell(v):
 
 
 def value_hash(pdf: pd.DataFrame) -> str:
-    cols = sorted(pdf.columns)
+    # typed columns, not iterrows: a row Series of an all-numeric frame
+    # with any float column upcasts its int64 cells to float64, which
+    # merges z-order cell ids above 2**53
     rows = [
-        "|".join(norm_cell(r[c]) for c in cols)
-        for _, r in pdf.iterrows()
+        "|".join(norm_cell(v) for v in r)
+        for r in pdf[sorted(pdf.columns)].itertuples(index=False, name=None)
     ]
     rows.sort()
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
@@ -116,3 +118,6 @@ def test_value_hash_sees_one_ulp():
     assert value_hash(pdf) != value_hash(bumped)
     bumped.loc[1, "v"] = 2.5
     assert value_hash(pdf) == value_hash(bumped)
+    # int64 cells above 2**53 next to a float column stay exact
+    cells = pd.DataFrame({"cell": [2**61 + 1], "v": [0.5]})
+    assert value_hash(cells) != value_hash(cells.assign(cell=[2**61 + 2]))

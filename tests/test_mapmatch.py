@@ -97,7 +97,7 @@ def test_candidates_np_matches_cells_path(spark):
     values, ranks, and row set — on a multi-track point cloud against
     a spread-out segment table (incl. radius drops and degenerate
     zero-length segments)."""
-    from xutil_spark.operators.mapmatch import candidate_segments_np
+    from xutil_spark.operators.spatial_join import _snap_candidates_np
 
     segs = pd.DataFrame({
         "seg_id": [1, 2, 3, 4, 5],
@@ -111,28 +111,33 @@ def test_candidates_np_matches_cells_path(spark):
         "lon": [0.004 * i - 0.05 for i in range(40)],
         "lat": [0.002 * ((i * 7) % 11) - 0.01 for i in range(40)],
     })
-    kw = dict(radius_m=4_000.0, k=3, point_id="pid")
     a = candidate_segments(
         spark.createDataFrame(pts), spark.createDataFrame(segs),
-        zoom=10, **kw).toPandas()
-    b = candidate_segments_np(
-        spark.createDataFrame(pts), spark.createDataFrame(segs),
-        **kw).toPandas()
+        radius_m=4_000.0, k=3, point_id="pid", zoom=10).toPandas()
+    b = _snap_candidates_np(
+        spark.createDataFrame(pts), spark.createDataFrame(segs), segs,
+        4_000.0, 3, "pid", "seg_id", "lon", "lat").toPandas()
     cols = ["pid", "rank", "seg_id", "dist_m", "t", "snap_lon", "snap_lat"]
     a = a[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
     b = b[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_hmm_strategies_agree(spark):
-    out_np = _match(spark, _PTS, _SEGS, strategy="np")
-    out_cells = _match(spark, _PTS, _SEGS, strategy="cells")
+def test_hmm_strategies_agree(spark, monkeypatch):
+    from xutil_spark.operators import mapmatch
+
+    out_np = _match(spark, _PTS, _SEGS)
+    monkeypatch.setattr(mapmatch, "_HMM_NP_MAX_SEGS", 0)  # the cell path
+    out_cells = _match(spark, _PTS, _SEGS)
     pd.testing.assert_frame_equal(out_np, out_cells)
 
 
-def test_candidate_segments_shuffle_join_path_matches_broadcast(spark):
-    """broadcast_segs=False (the >500k-segment network route) must
-    produce the identical candidate set via the shuffle join."""
+def test_candidate_segments_shuffle_join_path_matches_broadcast(
+        spark, monkeypatch):
+    """The shuffle join (the route of a network over _BCAST_MAX_SEGS
+    segments) must produce the identical candidate set."""
+    from xutil_spark.operators import spatial_join as SJ
+
     segs = pd.DataFrame({
         "seg_id": [1, 2, 3],
         "ax": [0.00, 0.00, 0.05],
@@ -149,10 +154,11 @@ def test_candidate_segments_shuffle_join_path_matches_broadcast(spark):
     cols = ["pid", "rank", "seg_id", "dist_m", "t", "snap_lon", "snap_lat"]
     a = candidate_segments(
         spark.createDataFrame(pts), spark.createDataFrame(segs),
-        broadcast_segs=True, **kw).toPandas()
+        **kw).toPandas()
+    monkeypatch.setattr(SJ, "_BCAST_MAX_SEGS", 0)
     b = candidate_segments(
         spark.createDataFrame(pts), spark.createDataFrame(segs),
-        broadcast_segs=False, **kw).toPandas()
+        **kw).toPandas()
     a = a[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
     b = b[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)

@@ -61,11 +61,8 @@ def test_dim_not_divisible_raises(spark):
 
 def test_topk_query_gate_and_chunked_fallback(spark):
     """The driver-collect gate (max_query_rows) and its distributed
-    slice-broadcast fallback: strategy='broadcast' above the gate must
-    raise naming the fallback; 'chunked' (and 'auto' above the gate)
-    must reproduce the broadcast path bit-exactly."""
-    import pytest
-
+    slice-broadcast fallback: above the gate the hash-sliced path must
+    reproduce the broadcast path bit-exactly."""
     emb = _emb(spark)
     cent = pq_train(emb, iters=2)
     qs = emb.filter(F.col("vec_id") % 50 == 0)
@@ -74,15 +71,34 @@ def test_topk_query_gate_and_chunked_fallback(spark):
 
     base = sorted(map(tuple, pq_topk(emb, qs, cent, topk=3).collect()))
     chunk = sorted(map(tuple, pq_topk(
-        emb, qs, cent, topk=3, max_query_rows=3,
-        strategy="chunked").collect()))
-    auto = sorted(map(tuple, pq_topk(
         emb, qs, cent, topk=3, max_query_rows=3).collect()))
-    assert base == chunk == auto
+    assert base == chunk
 
-    with pytest.raises(ValueError, match="chunked"):
-        pq_topk(emb, qs, cent, topk=3, max_query_rows=3,
-                strategy="broadcast")
+
+def test_topk_sliced_path_destroys_its_broadcasts(spark, monkeypatch):
+    """Every broadcast a sliced pq_topk call creates (the codebook for
+    the encode, one ADC table per slice) is destroyed by the time the
+    call returns — the candidates are checkpointed, so none is needed
+    afterwards."""
+    from pyspark import SparkContext
+
+    emb = _emb(spark)
+    cent = pq_train(emb, iters=1)
+    qs = emb.filter(F.col("vec_id") % 50 == 0)
+    made = []
+    real = SparkContext.broadcast
+
+    def recording(self, value):
+        bc = real(self, value)
+        made.append(bc)
+        return bc
+
+    monkeypatch.setattr(SparkContext, "broadcast", recording)
+    out = pq_topk(emb, qs, cent, topk=3, max_query_rows=3)
+    monkeypatch.undo()
+    assert len(made) >= 3  # the codebook + at least two slices
+    assert [bc._jbroadcast.isValid() for bc in made] == [False] * len(made)
+    assert out.count() > 0
 
 
 def test_topk_empty_queries_and_duplicate_id_guard(spark):
@@ -91,19 +107,17 @@ def test_topk_empty_queries_and_duplicate_id_guard(spark):
 
     emb = _emb(spark)
     cent = pq_train(emb, iters=1)
-    # empty query set: empty result with the output schema, both paths
+    # empty query set: empty result with the output schema
     none = emb.filter(F.col("vec_id") < 0)
-    for strat in ("auto", "chunked"):
-        out = pq_topk(emb, none, cent, topk=3, strategy=strat)
-        assert out.count() == 0
-        assert [f.name for f in out.schema.fields] == [
-            "qid", "vec_id", "rank", "adc_dist"]
+    out = pq_topk(emb, none, cent, topk=3)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "qid", "vec_id", "rank", "adc_dist"]
     # duplicate ids pile into one hash slice past the 2x hard bound:
-    # the chunked path must refuse before collecting it
+    # the sliced path must refuse before collecting it
     one = emb.limit(1)
     dups = one
     for _ in range(7):
         dups = dups.unionByName(one)
     with pytest.raises(ValueError, match="non-distinct"):
-        pq_topk(emb, dups, cent, topk=3, max_query_rows=3,
-                strategy="chunked")
+        pq_topk(emb, dups, cent, topk=3, max_query_rows=3)

@@ -67,8 +67,10 @@ def test_segment_cells_degenerate_point():
 
 
 @pytest.mark.parametrize("zoom,radius", [(7, 120000.0), (9, 65000.0)])
-def test_snap_matches_brute_force(spark, zoom, radius):
-    from xutil_spark.operators.spatial_join import snap_to_segments
+def test_snap_matches_brute_force(spark, monkeypatch, zoom, radius):
+    from xutil_spark.operators import spatial_join as SJ
+
+    monkeypatch.setattr(SJ, "_SNAP_NP_MAX_SEGS", 0)  # the cell cascade
 
     rng = np.random.default_rng(int(zoom * 100 + radius % 97))
     n_pts, n_segs = 600, 40
@@ -83,8 +85,8 @@ def test_snap_matches_brute_force(spark, zoom, radius):
         {"seg_id": np.arange(n_segs), "ax": sa[:, 0], "ay": sa[:, 1],
          "bx": sb[:, 0], "by": sb[:, 1]}))
 
-    got = {r["pid"]: r for r in snap_to_segments(
-        pts, segs, radius_m=radius, zoom=zoom, strategy="cascade").collect()}
+    got = {r["pid"]: r for r in SJ.snap_to_segments(
+        pts, segs, radius_m=radius, zoom=zoom).collect()}
 
     dist, t = _snap_np(plon, plat, sa[:, 0], sa[:, 1], sb[:, 0], sb[:, 1])
     matched = 0
@@ -105,12 +107,14 @@ def test_snap_matches_brute_force(spark, zoom, radius):
     assert len(got) == matched
 
 
-def test_snap_escalation_agrees_with_single_pass(spark):
+def test_snap_escalation_agrees_with_single_pass(spark, monkeypatch):
     """Forced fine pass (z13 — guarantee ~2.4 km·cosφ, so plenty of
     points straggle to the coarse branch) must emit exactly the
     single-pass (fine_zoom=None) rows: the escalation is a pure
     execution strategy, invisible in the results."""
-    from xutil_spark.operators.spatial_join import snap_to_segments
+    from xutil_spark.operators import spatial_join as SJ
+
+    monkeypatch.setattr(SJ, "_SNAP_NP_MAX_SEGS", 0)  # the cell cascade
 
     rng = np.random.default_rng(404)
     n_pts, n_segs = 500, 30
@@ -124,10 +128,10 @@ def test_snap_escalation_agrees_with_single_pass(spark):
         {"seg_id": np.arange(n_segs), "ax": sa[:, 0], "ay": sa[:, 1],
          "bx": sb[:, 0], "by": sb[:, 1]}))
 
-    kw = dict(radius_m=65000.0, zoom=9, strategy="cascade")
-    single = {r["pid"]: r for r in snap_to_segments(
+    kw = dict(radius_m=65000.0, zoom=9)
+    single = {r["pid"]: r for r in SJ.snap_to_segments(
         pts, segs, fine_zoom=None, **kw).collect()}
-    esc = {r["pid"]: r for r in snap_to_segments(
+    esc = {r["pid"]: r for r in SJ.snap_to_segments(
         pts, segs, fine_zoom=13, **kw).collect()}
     assert set(esc) == set(single)
     for pid, r in esc.items():
@@ -154,10 +158,10 @@ def test_pick_snap_fine_zoom_budget(spark):
     assert pick_snap_fine_zoom(segs, 8, budget_rows=1) == 8
 
 
-def test_snap_tie_break_is_deterministic(spark):
+def test_snap_tie_break_is_deterministic(spark, monkeypatch):
     """Two segments at the exact same rounded distance → smaller seg_id
-    wins (mirrors the oracle's ORDER BY dist, seg_id)."""
-    from xutil_spark.operators.spatial_join import snap_to_segments
+    wins (mirrors the oracle's ORDER BY dist, seg_id) on both paths."""
+    from xutil_spark.operators import spatial_join as SJ
 
     pts = spark.createDataFrame(
         pd.DataFrame({"pid": [0], "lon": [10.0], "lat": [20.0]}))
@@ -167,18 +171,20 @@ def test_snap_tie_break_is_deterministic(spark):
         "ax": [10.2, 9.8], "ay": [19.0, 19.0],
         "bx": [10.2, 9.8], "by": [21.0, 21.0],
     }))
-    for strat in ("cascade", "np"):
-        out = snap_to_segments(pts, segs, radius_m=80000.0, zoom=7,
-                               strategy=strat).collect()
-        assert len(out) == 1 and out[0]["seg_id"] == 3, strat
-        assert out[0]["t"] == pytest.approx(0.5, abs=1e-6), strat
+    for gate in (0, SJ._SNAP_NP_MAX_SEGS):  # the cell cascade, numpy
+        monkeypatch.setattr(SJ, "_SNAP_NP_MAX_SEGS", gate)
+        out = SJ.snap_to_segments(pts, segs, radius_m=80000.0,
+                                  zoom=7).collect()
+        assert len(out) == 1 and out[0]["seg_id"] == 3, gate
+        assert out[0]["t"] == pytest.approx(0.5, abs=1e-6), gate
 
 
-def test_snap_np_equals_cascade(spark):
-    """The broadcast-numpy brute path (``auto``'s dim-scale pick) must
-    emit row-for-row what the cascade emits — same winners, same
-    rounded distances/positions — including inner-radius drops."""
-    from xutil_spark.operators.spatial_join import snap_to_segments
+def test_snap_np_equals_cascade(spark, monkeypatch):
+    """The broadcast-numpy brute path (the pick for a dim-scale
+    network) must emit row-for-row what the cascade emits — same
+    winners, same rounded distances/positions — including
+    inner-radius drops."""
+    from xutil_spark.operators import spatial_join as SJ
 
     rng = np.random.default_rng(2024)
     n_pts, n_segs = 700, 35
@@ -193,11 +199,13 @@ def test_snap_np_equals_cascade(spark):
          "bx": sb[:, 0], "by": sb[:, 1]}))
 
     kw = dict(radius_m=65000.0, zoom=9)
-    casc = {r["pid"]: r for r in snap_to_segments(
-        pts, segs, strategy="cascade", **kw).collect()}
-    # auto with a 35-row dim must route to the np path
-    fast = {r["pid"]: r for r in snap_to_segments(
-        pts, segs, strategy="auto", **kw).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(SJ, "_SNAP_NP_MAX_SEGS", 0)  # the cell cascade
+        casc = {r["pid"]: r for r in SJ.snap_to_segments(
+            pts, segs, **kw).collect()}
+    # a 35-row dim routes to the np path
+    fast = {r["pid"]: r for r in SJ.snap_to_segments(
+        pts, segs, **kw).collect()}
     assert set(fast) == set(casc)
     assert 30 <= len(fast) < n_pts  # both arms (matched + dropped) live
     for pid, r in fast.items():

@@ -92,7 +92,7 @@ def _brute_knn(points_pd, refs_pd, k):
 def test_knn_join_vs_brute_force(spark, points_df, points_pd):
     refs = synth.ref_points_table(spark, 250).cache()
     refs_pd = refs.toPandas()
-    got = SJ.knn_join(points_df, refs, k=3, zoom=8, strategy="grid").toPandas()
+    got = SJ._knn_join_grid(points_df, refs, k=3, zoom=8).toPandas()
     exp = _brute_knn(points_pd, refs_pd, 3)
     assert set(got["image_id"]) == set(exp.keys())
     for pid, grp in got.groupby("image_id"):
@@ -101,11 +101,11 @@ def test_knn_join_vs_brute_force(spark, points_df, points_pd):
 
 
 def test_knn_join_np_matches_brute_force(spark, points_df, points_pd):
-    """The shuffle-free numpy strategy (auto-dispatched for dim-sized
+    """The shuffle-free numpy path (knn_join's pick for dim-sized
     refs) agrees with brute force, including the tie order."""
     refs = synth.ref_points_table(spark, 250).cache()
     refs_pd = refs.toPandas()
-    got = SJ.knn_join(points_df, refs, k=3).toPandas()  # auto → np
+    got = SJ.knn_join(points_df, refs, k=3).toPandas()  # ≤ gate → np
     exp = _brute_knn(points_pd, refs_pd, 3)
     assert set(got["image_id"]) == set(exp.keys())
     for pid, grp in got.groupby("image_id"):
@@ -122,7 +122,7 @@ def test_knn_join_np_grid_index_vs_brute_force(spark):
     pts_pd = pts.toPandas()
     refs = synth.ref_points_table(spark, 3000).cache()
     refs_pd = refs.toPandas()
-    got = SJ.knn_join_np(pts, refs, k=4).toPandas()
+    got = SJ.knn_join(pts, refs, k=4).toPandas()
     exp = _brute_knn(pts_pd, refs_pd, 4)
     assert set(got["image_id"]) == set(exp.keys())
     for pid, grp in got.groupby("image_id"):
@@ -134,7 +134,7 @@ def test_knn_join_np_sparse_refs_stragglers(spark, points_df, points_pd):
     and take the brute-force straggler path; still exact."""
     refs = synth.ref_points_table(spark, 60).cache()
     refs_pd = refs.toPandas()
-    got = SJ.knn_join_np(points_df, refs, k=2).toPandas()
+    got = SJ.knn_join(points_df, refs, k=2).toPandas()
     exp = _brute_knn(points_pd, refs_pd, 2)
     for pid, grp in got.groupby("image_id"):
         assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
@@ -143,7 +143,7 @@ def test_knn_join_np_sparse_refs_stragglers(spark, points_df, points_pd):
 def test_knn_join_np_k_exceeds_refs(spark, points_df, points_pd):
     """k larger than the refs table → every ref returned, ranks 1..n."""
     refs = synth.ref_points_table(spark, 4).cache()
-    got = SJ.knn_join_np(points_df, refs, k=9).toPandas()
+    got = SJ.knn_join(points_df, refs, k=9).toPandas()
     assert len(got) == len(points_pd) * 4
     assert set(got["rank"]) == {1, 2, 3, 4}
 
@@ -153,7 +153,7 @@ def test_knn_join_sparse_refs_escalates_rings(spark, points_df, points_pd):
     escalation loop must still find the true k nearest for every point."""
     refs = synth.ref_points_table(spark, 12).cache()
     refs_pd = refs.toPandas()
-    got = SJ.knn_join(points_df, refs, k=2, zoom=8, strategy="grid").toPandas()
+    got = SJ._knn_join_grid(points_df, refs, k=2, zoom=8).toPandas()
     exp = _brute_knn(points_pd, refs_pd, 2)
     assert set(got["image_id"]) == set(exp.keys())
     mism = 0
@@ -180,7 +180,7 @@ def test_knn_join_grid_zoom1_no_wrap_duplicates(spark):
     top-k (regression: _explode_neighbors wrap collision)."""
     pts, pts_pd = _globe_points(spark, 80, 7, "image_id")
     refs, refs_pd = _globe_points(spark, 30, 11, "ref_id")
-    got = SJ.knn_join(pts, refs, k=3, zoom=1, strategy="grid").toPandas()
+    got = SJ._knn_join_grid(pts, refs, k=3, zoom=1).toPandas()
     dup = got.groupby(["image_id", "ref_id"]).size()
     assert (dup == 1).all(), dup[dup > 1]
     exp = _brute_knn(pts_pd, refs_pd, 3)
@@ -194,7 +194,7 @@ def test_knn_join_np_globe_spanning_refs(spark):
     equal brute force (regression: knn_searcher wrap duplicates)."""
     pts, pts_pd = _globe_points(spark, 120, 3, "image_id")
     refs, refs_pd = _globe_points(spark, 60, 5, "ref_id")
-    got = SJ.knn_join_np(pts, refs, k=4).toPandas()
+    got = SJ.knn_join(pts, refs, k=4).toPandas()
     dup = got.groupby(["image_id", "ref_id"]).size()
     assert (dup == 1).all()
     exp = _brute_knn(pts_pd, refs_pd, 4)
@@ -255,28 +255,9 @@ def test_salted_join_equals_plain_join(spark):
     assert hot.count() >= 3  # the 3 urban cells are detected as hot
 
 
-def test_knn_join_fused_matches_brute_force(spark, points_df, points_pd):
-    refs = synth.ref_points_table(spark, 250).cache()
-    refs_pd = refs.toPandas()
-    got = SJ.knn_join_fused(points_df, refs, k=3, zoom="auto").toPandas()
-    exp = _brute_knn(points_pd, refs_pd, 3)
-    assert set(got["image_id"]) == set(exp.keys())
-    for pid, grp in got.groupby("image_id"):
-        assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
-
-
-def test_knn_join_fused_sparse_refs(spark, points_df, points_pd):
-    refs = synth.ref_points_table(spark, 12).cache()
-    refs_pd = refs.toPandas()
-    got = SJ.knn_join_fused(points_df, refs, k=2, zoom="auto").toPandas()
-    exp = _brute_knn(points_pd, refs_pd, 2)
-    for pid, grp in got.groupby("image_id"):
-        assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
-
-
 def test_fused_pipeline_matches_composed(spark):
     """fused_image_tile_knn ≡ decode_stats → with_location →
-    point_in_tile_join → cell → knn_join_np, row for row."""
+    point_in_tile_join → cell → knn_join, row for row."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -288,7 +269,7 @@ def test_fused_pipeline_matches_composed(spark):
     tiles = synth.tiles_table(spark, zoom=10).cache()
     refs = synth.ref_points_table(spark, 300).cache()
 
-    composed = SJ.knn_join_np(
+    composed = SJ.knn_join(
         SJ.point_in_tile_join(
             synth.with_location(decode_stats(images)), tiles, zoom=10
         )
@@ -370,8 +351,44 @@ def test_knn_searcher_polar_wide_grid_matches_brute(spark):
     })
     refs = spark.createDataFrame(refs_pd)
     pts = spark.createDataFrame(pts_pd)
-    got = SJ.knn_join_np(pts, refs, k=k).toPandas()
+    got = SJ.knn_join(pts, refs, k=k).toPandas()
     exp = _brute_knn(pts_pd, refs_pd, k)
     assert set(got["image_id"]) == set(exp.keys())
     for pid, grp in got.groupby("image_id"):
         assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
+
+
+@pytest.mark.parametrize("op", ["knn_join", "snap_to_segments", "hmm_map_match"])
+def test_plan_build_runs_one_spark_job(spark, op):
+    """Building each operator against a dim-sized side launches ONE
+    Spark job: the gate probe and the dim collect are the same
+    ``limit(gate + 1).toPandas()`` (a count probe plus a collect cost
+    three)."""
+    from xutil_spark.operators.mapmatch import hmm_map_match
+
+    pts = spark.range(0, 200, 1, 4).select(
+        F.col("id").alias("pid"), (F.col("id") % 10).alias("track_id"),
+        F.col("id").alias("ts"),
+        (F.lit(100.0) + F.col("id") * 0.05).alias("lon"),
+        (F.lit(30.0) + (F.col("id") % 7) * 0.1).alias("lat"))
+    segs = spark.range(0, 40, 1, 4).select(
+        F.col("id").alias("seg_id"),
+        (F.lit(100.0) + F.col("id") * 0.25).alias("ax"),
+        F.lit(30.0).alias("ay"),
+        (F.lit(100.2) + F.col("id") * 0.25).alias("bx"),
+        F.lit(30.5).alias("by"))
+    refs = synth.ref_points_table(spark, 2000)
+    build = {
+        "knn_join": lambda: SJ.knn_join(pts, refs, k=3, point_id="pid"),
+        "snap_to_segments": lambda: SJ.snap_to_segments(
+            pts, segs, radius_m=50_000.0),
+        "hmm_map_match": lambda: hmm_map_match(pts, segs, radius_m=50_000.0),
+    }[op]
+    sc = spark.sparkContext
+    group = f"plan-build-{op}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -145,16 +145,16 @@ def main() -> None:
         "  checkpoint() when a checkpoint dir is configured (executor",
         "  loss mid-CC recovers on a real cluster; localCheckpoint only",
         "  in local mode).",
-        "- pq_top5's query-set driver collect is GATED since round 5",
-        "  (operators/pq.py pq_topk, max_query_rows default 64k): above",
-        "  the gate, strategy='auto' switches to the slice-broadcast",
-        "  fallback — queries hash-split (xxhash64 mod, no global sort)",
-        "  into gate-bounded slices, each slice's ADC tables broadcast",
-        "  against the once-persisted codes, global top-k window across",
-        "  slices; bit-identical output (pytest-pinned),",
-        "  strategy='broadcast' raises naming the fallback.  The former",
-        "  \"queries are dim-scale by contract\" docstring assumption is",
-        "  now enforced.",
+        "- pq_top5's query-set driver collect is GATED (operators/pq.py",
+        "  pq_topk, max_query_rows default 64k): one",
+        "  limit(max_query_rows + 1) collect is both the gate and the",
+        "  query set.  Above the gate the slice-broadcast path runs —",
+        "  queries hash-split (xxhash64 mod, no global sort) into",
+        "  gate-bounded slices, each slice's ADC tables broadcast against",
+        "  the once-persisted codes, global top-k window across slices;",
+        "  bit-identical output (pytest-pinned), and every slice",
+        "  broadcast is destroyed once the candidates are checkpointed.",
+        "  There is no strategy knob.",
     ]
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                        "PLANS.md")

@@ -208,8 +208,9 @@ FROM pts WHERE pid % 13 = 1
 
 
 def q_knn_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN (k=3) of derived points vs supplier refs via the grid
-    join with quadtree escalation — oracle is brute force."""
+    """Exact kNN (k=3) of derived points vs supplier refs via
+    ``knn_join`` (numpy grid index: the refs are dim-sized) — oracle is
+    brute force."""
     _utc(spark)
     from xutil_spark.operators.spatial_join import knn_join
 
@@ -217,7 +218,7 @@ def q_knn_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # means per distinct point on both sides (dup rows have equal coords)
     pts = _points(spark, sf_dir).select("pid", "lon", "lat").dropDuplicates(["pid"])
     refs = _refs(spark, sf_dir)
-    out = knn_join(pts, refs, k=3, zoom="auto", point_id="pid", ref_id="ref_id")
+    out = knn_join(pts, refs, k=3, point_id="pid", ref_id="ref_id")
     return out.select(
         "pid", "ref_id", "rank", F.round("dist_m", 3).alias("dist_m")
     )
@@ -934,7 +935,7 @@ def q_knn_images_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     img = with_location(images_table(spark, 5000, with_bytes=False))
     refs = ref_points_table(spark, 500)
-    out = knn_join(img.select("image_id", "lon", "lat"), refs, k=3, zoom=10)
+    out = knn_join(img.select("image_id", "lon", "lat"), refs, k=3)
     return out.select("image_id", "ref_id", "rank", F.round("dist_m", 3).alias("dist_m"))
 
 

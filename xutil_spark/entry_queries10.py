@@ -50,9 +50,10 @@ def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_snap_nearest_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map matching: every derived point snapped to its nearest chained
     supplier segment within 50 km (inner — unmatched points drop).
-    Engine: exact segment supercover × neighbor-ring cell equi-join +
-    closed-form clamped projection (all JVM columns); oracle: the same
-    projection over the exhaustive point × segment cross join."""
+    Engine: ``snap_to_segments`` — this dim-sized network takes the
+    numpy scorer, larger ones the supercover cell-join cascade, same
+    closed-form clamped projection on both; oracle: that projection
+    over the exhaustive point × segment cross join."""
     _utc(spark)
     from xutil_spark.operators.spatial_join import snap_to_segments
 

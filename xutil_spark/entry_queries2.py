@@ -297,8 +297,9 @@ FROM documents WHERE doc_id < 100
 
 
 def q_knn_category_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite: nearest supplier-nation per point (kNN k=1 via grid
-    join) then count per nation — join + window + agg end-to-end."""
+    """Composite: nearest supplier-nation per point (kNN k=1, the refs'
+    nation carried through) then count per nation — join + kNN + agg
+    end-to-end."""
     _utc(spark)
     from xutil_spark.operators.spatial_join import knn_join
 
@@ -307,7 +308,7 @@ def q_knn_category_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     refs = _refs(spark, sf_dir).join(
         s.select(F.col("s_suppkey").alias("ref_id"), "s_nationkey"), "ref_id"
     )
-    nn = knn_join(pts, refs, k=1, zoom="auto", point_id="pid", ref_id="ref_id")
+    nn = knn_join(pts, refs, k=1, point_id="pid", ref_id="ref_id")
     return nn.groupBy("s_nationkey").agg(F.count(F.lit(1)).alias("n_points"))
 
 

@@ -26,7 +26,7 @@ fused path is the high-throughput shape for the common
 decode→index→join→kNN pipeline, and a pytest pins fused ≡ composed.
 
 Reference lineage: tile assignment Wgs2Tile gis.go:262-267; location
-derivation FIXTURES.md §1; kNN strategy operators/spatial_join.py.
+derivation FIXTURES.md §1; kNN search operators/spatial_join.py.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ from pyspark.sql import types as T
 from xutil_spark.functions.native import X_SHIFT, Z_SHIFT
 from xutil_spark.kernels import codec as K_codec
 from xutil_spark.kernels.tiles import wgs2tile
-from xutil_spark.operators.spatial_join import _collect_refs, knn_searcher
+from xutil_spark.operators.spatial_join import _refs_arrays, knn_searcher
 
 _OUT_FIELDS = [
     T.StructField("image_id", T.StringType(), False),
@@ -85,7 +85,8 @@ def fused_image_tile_knn(
     t_cells = tiles_pd["cell"].to_numpy()[t_order]
     t_ids = tiles_pd["tile_id"].to_numpy()[t_order]
 
-    rid, rlon, rlat, _rextra, _extras = _collect_refs(refs, ref_id, "lon", "lat")
+    rid, rlon, rlat, _rextra, _extras = _refs_arrays(
+        refs.toPandas(), ref_id, "lon", "lat")
     search = knn_searcher(rlon, rlat, k)
 
     out_schema = T.StructType(

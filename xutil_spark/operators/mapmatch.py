@@ -28,14 +28,16 @@ With quantized inputs, float summation order is the only freedom left,
 and both the engine and any scalar replay add ``score + transition +
 emission`` left to right — so the decode is bit-reproducible.
 
-Engine shape: candidate generation is one broadcast supercover
-equi-join + a per-point top-K window (fact side: 1 cell encode + ring
-explode, 1 shuffle for the rank); the Viterbi is ONE shuffle keyed by
-track + a ``mapInPandas`` that packs every track in the partition
-into a single padded (tracks, steps, K) tensor and walks the step
-axis once with partition-wide elementwise ops — per-partition cost
-O(points · K²) numpy with no per-track pandas overhead, no Python in
-the candidate hot path.
+Engine shape: candidate generation is the numpy snap scorer for a
+dim-sized network (one ``mapInPandas``, no shuffle), else one
+supercover equi-join + a per-point top-K aggregation (fact side: 1
+cell encode + ring explode, 1 shuffle for the rank); the network's
+size picks, from one probe-and-collect.  The Viterbi is ONE shuffle
+keyed by track + a ``mapInPandas`` that packs every track in the
+partition into a single padded (tracks, steps, K) tensor and walks
+the step axis once with partition-wide elementwise ops —
+per-partition cost O(points · K²) numpy with no per-track pandas
+overhead.
 
 100-TB story: identical to the snap join's (the candidate stage IS the
 snap join minus the final min), plus one shuffle keyed by track id;
@@ -56,16 +58,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xutil_spark.operators.spatial_join import (
-    _explode_neighbors,
+    _collect_dim,
     _M_PER_DEG,
-    _ring_guarantee_m,
-    _segments_with_cells,
-    with_cell,
+    _ring_candidates,
+    _snap_candidates_np,
+    _snap_projection,
 )
 
-# largest segment count whose exploded supercover is still safely
-# broadcastable (~500k segs × ~3 cells × ~60 B ≈ 90 MB)
-_BCAST_MAX_SEGS = 500_000
+# segment tables at or below this many rows take the numpy candidate
+# scorer (immune to the cell join's long-segment candidate blow-up)
+_HMM_NP_MAX_SEGS = 16384
 
 MATCH_SCHEMA = T.StructType([
     T.StructField("track_id", T.LongType(), False),
@@ -94,53 +96,24 @@ def candidate_segments(
     by: str = "by",
     max_abs_lat: float = 60.0,
     extra_cols: tuple = (),
-    broadcast_segs: bool = True,
 ) -> DataFrame:
     """Top-``k`` segments within ``radius_m`` of each point, scored by
-    the snap projection: ``(point_id, [extra_cols...], rank, seg_id,
-    dist_m, t, snap_lon, snap_lat)``.  Exact: the ring is sized so the
-    static guarantee covers the radius (the snap coarse-pass bound).
-    ``extra_cols`` (e.g. track id / timestamp) pass through.
-
-    ``broadcast_segs=False`` switches the supercover join to a shuffle
-    join — required when the exploded segment×cell table is not
-    dim-sized (e.g. a 10^7-segment road network would blow the
-    broadcast limit); same knob and reasoning as
-    ``snap_to_segments``."""
-    ring = 1
-    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m * 1.05:
-        ring += 1
-        if ring > 64:
-            raise ValueError("radius too large for this zoom; lower the zoom")
-
-    segs = _segments_with_cells(segments, zoom, seg_id, ax, ay, bx, by)
-    pc = with_cell(points, zoom, lon, lat, out="_ccell")
-    seg_dim = F.broadcast(segs) if broadcast_segs else segs
-    cand = (
-        _explode_neighbors(pc, F.col("_ccell"), zoom, ring, out="_cncell")
-        .join(seg_dim, F.col("_cncell") == F.col("_scell"), "inner")
-    )
-    kc = F.lit(_M_PER_DEG)
-    kx = kc * F.cos(F.radians(F.col(lat)))
-    axm = (F.col("_sax") - F.col(lon)) * kx
-    aym = (F.col("_say") - F.col(lat)) * kc
-    bxm = (F.col("_sbx") - F.col(lon)) * kx
-    bym = (F.col("_sby") - F.col(lat)) * kc
-    ux = bxm - axm
-    uy = bym - aym
-    len2 = ux * ux + uy * uy
-    t = F.when(len2 == 0.0, F.lit(0.0)).otherwise(
-        F.least(F.lit(1.0), F.greatest(F.lit(0.0), -(axm * ux + aym * uy) / len2))
-    )
-    qx = axm + t * ux
-    qy = aym + t * uy
+    the snap projection: ``(point_id, [extra_cols...], lon, lat,
+    seg_id, dist_m, t, snap_lon, snap_lat, rank)``.  Exact: the ring is
+    sized so the static guarantee covers the radius (the snap
+    coarse-pass bound).  ``extra_cols`` (e.g. track id / timestamp)
+    pass through.  The supercover join broadcasts unless the network
+    is over ``_BCAST_MAX_SEGS`` segments (``_ring_candidates``)."""
+    cand = _ring_candidates(points, segments, radius_m, zoom, seg_id,
+                            lon, lat, ax, ay, bx, by, max_abs_lat)
+    t, dist, snap_lon, snap_lat = _snap_projection(lon, lat)
     scored = cand.select(
         point_id, *extra_cols, lon, lat,
         F.col("_sid").alias(seg_id),
-        F.round(F.sqrt(qx * qx + qy * qy), 3).alias("dist_m"),
+        F.round(dist, 3).alias("dist_m"),
         F.round(t, 6).alias("t"),
-        F.round(F.col(lon) + qx / kx, 6).alias("snap_lon"),
-        F.round(F.col(lat) + qy / kc, 6).alias("snap_lat"),
+        F.round(snap_lon, 6).alias("snap_lon"),
+        F.round(snap_lat, 6).alias("snap_lat"),
     ).filter(F.col("dist_m") <= F.lit(float(radius_m)))
     # ONE shuffle does dedup + top-K: the ring join can surface a
     # segment via several neighbor cells, but its scored struct is
@@ -170,140 +143,6 @@ def candidate_segments(
     )
 
 
-def candidate_segments_np(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    k: int = 3,
-    point_id: str = "pid",
-    seg_id: str = "seg_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    ax: str = "ax",
-    ay: str = "ay",
-    bx: str = "bx",
-    by: str = "by",
-    extra_cols: tuple = (),
-    pair_chunk: int = 524_288,
-) -> DataFrame:
-    """``candidate_segments`` against a **dim-sized** network with ZERO
-    shuffles — the ``snap_to_segments_np`` pattern with a top-K tail.
-
-    Why it exists: the cell path's candidate join multiplies (points ×
-    ring cells × segments-per-cell).  A network of LONG segments makes
-    segments-per-cell large (every random chord crosses many cells), so
-    a dim-scale-but-long-segment network can explode the join stream to
-    10⁸ rows while the network itself is a few-MB broadcast.  Here the
-    id-sorted segments ship once per worker via ``sc.broadcast`` and
-    the points stream through ONE ``mapInPandas``; per point the snap
-    projection scores every segment in cache-sized numpy chunks and a
-    STABLE argsort on the mm-rounded distance yields exactly the cell
-    path's (dist_m, seg_id) candidate order (ties fall back to array
-    position = ascending seg_id).  Exhaustive, so no ring guarantee is
-    needed; output rows/values are the cell path's bit-for-bit (pinned
-    by pytest).
-
-    Scale boundary: brute cost is points × segments — for dim-scale
-    networks only; real road networks (10^8 segments) keep the cell
-    path.  ``hmm_map_match(strategy="auto")`` gates on segment count.
-    """
-    import pandas as pd
-
-    from xutil_spark.kernels.rounding import round_half_away
-
-    seg_pd = (segments.select(seg_id, ax, ay, bx, by).toPandas()
-              .sort_values(seg_id, kind="stable"))
-    segs_np = (seg_pd[seg_id].to_numpy(),
-               seg_pd[ax].to_numpy(np.float64),
-               seg_pd[ay].to_numpy(np.float64),
-               seg_pd[bx].to_numpy(np.float64),
-               seg_pd[by].to_numpy(np.float64))
-    bc = points.sparkSession.sparkContext.broadcast(segs_np)
-
-    out_schema = T.StructType([
-        points.schema[point_id],
-        *[points.schema[c] for c in extra_cols],
-        points.schema[lon],
-        points.schema[lat],
-        T.StructField(seg_id, segments.schema[seg_id].dataType, True),
-        T.StructField("dist_m", T.DoubleType(), True),
-        T.StructField("t", T.DoubleType(), True),
-        T.StructField("snap_lon", T.DoubleType(), True),
-        T.StructField("snap_lat", T.DoubleType(), True),
-        T.StructField("rank", T.IntegerType(), True),
-    ])
-    kc = _M_PER_DEG
-    radius = float(radius_m)
-    topk = int(k)
-
-    def run(it):
-        sid, sax, say, sbx, sby = bc.value
-        ns = len(sid)
-        if ns == 0:
-            return
-        chunk = max(1, pair_chunk // ns)
-        for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            plon = pdf[lon].to_numpy(np.float64)
-            plat = pdf[lat].to_numpy(np.float64)
-            parts = []
-            for s in range(0, n, chunk):
-                e = min(n, s + chunk)
-                lo = plon[s:e, None]
-                la = plat[s:e, None]
-                kx = kc * np.cos(np.radians(la))
-                axm = (sax[None, :] - lo) * kx
-                aym = (say[None, :] - la) * kc
-                uxm = (sbx[None, :] - lo) * kx - axm
-                uym = (sby[None, :] - la) * kc - aym
-                len2 = uxm * uxm + uym * uym
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    t = np.clip(-(axm * uxm + aym * uym) / len2, 0.0, 1.0)
-                t = np.where(len2 == 0.0, 0.0, t)
-                qx = axm + t * uxm
-                qy = aym + t * uym
-                dist_r = round_half_away(np.sqrt(qx * qx + qy * qy), 3)
-                # stable sort on the ROUNDED distance = the cell path's
-                # (dist_m, seg_id) order, since columns are id-sorted
-                order = np.argsort(dist_r, axis=1, kind="stable")[:, :topk]
-                rows = np.arange(e - s)[:, None]
-                dk = dist_r[rows, order]
-                keep = dk <= radius              # (chunk, topk) mask
-                if not keep.any():
-                    continue
-                ri, rj = np.nonzero(keep)        # row, rank index
-                jj = order[ri, rj]
-                kxk = kx[ri, 0]
-                part = pd.DataFrame({
-                    point_id: pdf[point_id].to_numpy()[s:e][ri],
-                    lon: plon[s:e][ri],
-                    lat: plat[s:e][ri],
-                    seg_id: sid[jj],
-                    "dist_m": dk[ri, rj],
-                    "t": round_half_away(t[ri, jj], 6),
-                    "snap_lon": round_half_away(
-                        plon[s:e][ri] + qx[ri, jj] / kxk, 6),
-                    "snap_lat": round_half_away(
-                        plat[s:e][ri] + qy[ri, jj] / kc, 6),
-                    "rank": (rj + 1).astype(np.int32),
-                })
-                for c in extra_cols:
-                    part[c] = pdf[c].to_numpy()[s:e][ri]
-                parts.append(part[[point_id, *extra_cols, lon, lat, seg_id,
-                                   "dist_m", "t", "snap_lon", "snap_lat",
-                                   "rank"]])
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    src = points
-    par = points.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    return src.mapInPandas(run, out_schema)
-
-
 def hmm_map_match(
     points: DataFrame,
     segments: DataFrame,
@@ -323,9 +162,6 @@ def hmm_map_match(
     bx: str = "bx",
     by: str = "by",
     max_abs_lat: float = 60.0,
-    strategy: str = "auto",
-    np_max_segs: int = 16384,
-    broadcast_segs: bool | str = "auto",
 ) -> DataFrame:
     """Viterbi-matched segment per track point: ``(track_id, point_id,
     seg_id, dist_m, t, snap_lon, snap_lat)``.  Points with no candidate
@@ -333,43 +169,30 @@ def hmm_map_match(
     transition then spans the skipped point — Newson-Krumm's broken-
     track simplification).  Track/point ids must be integral.
 
-    ``strategy``: "auto" routes dim-scale networks (≤ ``np_max_segs``
-    segments) to the broadcast-numpy exhaustive candidate pass
-    (``candidate_segments_np`` — immune to the cell join's
-    long-segment candidate blow-up); larger networks take the cell
-    equi-join.  "np"/"cells" force."""
+    Candidates come from the snap scorer of the network's size, learned
+    by one probe-and-collect (``_collect_dim``): at most
+    ``_HMM_NP_MAX_SEGS`` segments take the broadcast-numpy exhaustive
+    pass (``_snap_candidates_np`` at k=K); larger networks take the
+    cell equi-join (``candidate_segments``).  Both emit the same
+    candidates bit for bit."""
     pts = points.select(
         F.col(track).alias("_trk"),
         F.col(point_id).cast("long").alias("_pid"),
         F.col(ts).cast("long").alias("_ep"),
         F.col(lon).alias(lon), F.col(lat).alias(lat),
     )
-    if strategy == "auto":
-        strategy = (
-            "np"
-            if segments.limit(np_max_segs + 1).count() <= np_max_segs
-            else "cells")
-    if strategy == "np":
-        cand = candidate_segments_np(
-            pts, segments, radius_m, k=k,
-            point_id="_pid", seg_id=seg_id, lon=lon, lat=lat,
-            ax=ax, ay=ay, bx=bx, by=by, extra_cols=("_trk", "_ep"),
-        )
+    seg_pd = _collect_dim(segments.select(seg_id, ax, ay, bx, by),
+                          _HMM_NP_MAX_SEGS)
+    if seg_pd is not None:
+        cand = _snap_candidates_np(
+            pts, segments, seg_pd, radius_m, k, "_pid", seg_id, lon, lat,
+            extra_cols=("_trk", "_ep"))
     else:
-        if broadcast_segs == "auto":
-            # broadcast only a provably dim-sized supercover: the
-            # exploded segment×cell table must fit the driver and every
-            # executor — a 10^7-segment network would blow the
-            # broadcast limit, so route it to the shuffle join
-            broadcast_segs = (
-                segments.limit(_BCAST_MAX_SEGS + 1).count()
-                <= _BCAST_MAX_SEGS)
         cand = candidate_segments(
             pts, segments, radius_m, k=k, zoom=zoom,
             point_id="_pid", seg_id=seg_id, lon=lon, lat=lat,
             ax=ax, ay=ay, bx=bx, by=by, max_abs_lat=max_abs_lat,
             extra_cols=("_trk", "_ep"),
-            broadcast_segs=bool(broadcast_segs),
         )
     sig2 = 2.0 * float(sigma_m) * float(sigma_m)
     beta = float(beta_m)

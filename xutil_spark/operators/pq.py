@@ -43,6 +43,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -127,8 +128,10 @@ def pq_train(
 def pq_encode(
     df: DataFrame, cent: np.ndarray, vec: str = "embedding",
     id_col: str = "vec_id", qscale: int = 1024,
-) -> DataFrame:
-    """(id, code array<int>) — one pass, codes are M small indices."""
+) -> tuple[DataFrame, Broadcast]:
+    """(id, code array<int>) — one pass, codes are M small indices —
+    and the codebook broadcast it reads, for a caller that materializes
+    the codes to destroy."""
     m, _, sub = cent.shape
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(cent)
@@ -146,16 +149,17 @@ def pq_encode(
                 "code": [[int(v) for v in row] for row in codes]})
 
     return df.select(id_col, vec).mapInPandas(
-        enc, f"{id_col} long, code array<int>")
+        enc, f"{id_col} long, code array<int>"), bc
 
 
 def _adc_candidates(
     codes: DataFrame, qrows: list, cent: np.ndarray, topk: int,
     id_col: str, qscale: int,
-) -> DataFrame:
+) -> tuple[DataFrame, Broadcast]:
     """Scan ``codes`` against one collected+broadcast query slice
     (list of (id, vector) rows) — per-partition integer ADC with a
-    batch-local (dist, vec_id) top-(k+1) cut."""
+    batch-local (dist, vec_id) top-(k+1) cut.  Returns the candidate
+    frame and its ADC-table broadcast."""
     m, k, sub = cent.shape
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qx = _quant(np.stack(
@@ -194,72 +198,53 @@ def _adc_candidates(
                     rows["adc_dist"].append(int(d[bi]))
             yield pd.DataFrame(rows)
 
-    return codes.mapInPandas(scan, "qid long, vec_id long, adc_dist long")
+    return codes.mapInPandas(scan, "qid long, vec_id long, adc_dist long"), bc
 
 
 def pq_topk(
     df: DataFrame, queries: DataFrame, cent: np.ndarray, topk: int = 5,
     vec: str = "embedding", id_col: str = "vec_id", qscale: int = 1024,
-    max_query_rows: int = 65536, strategy: str = "auto",
+    max_query_rows: int = 65536,
 ) -> DataFrame:
     """ADC top-k: for each query row, the ``topk`` nearest codes by
     integer asymmetric distance (self-matches excluded).
 
-    Strategies (the knn ``strategy="auto"`` convention):
+    The query set is collected with ``limit(max_query_rows + 1)`` — one
+    job that is both the driver-memory gate and the collect:
 
-    * ``"broadcast"`` — collect the whole query set to the driver and
-      broadcast its ADC tables; raises ``ValueError`` when the query
-      set exceeds ``max_query_rows`` (the gate that used to be only a
-      docstring assumption — a 10^8-row query table would OOM the
-      driver silently).
-    * ``"chunked"`` — the scale fallback: queries hash-split
-      (xxhash64 mod, NO global sort — an ntile window would pull the
-      whole query table through one task) into enough slices that the
-      expected slice size is 80% of the gate.  Slice sizes are then
-      VERIFIED with one aggregate (hash slicing only bounds them in
-      expectation — duplicate ids all land in one slice) and any
-      slice over 2× the gate raises before a collect can OOM the
-      driver.  Each slice is collected, broadcast, and scanned
-      against the once-encoded, persisted codes; candidates
-      checkpoint eagerly so the code cache can be unpersisted before
-      returning.  Exact same output — the per-slice candidate cut
-      uses the identical (dist, vec_id) tie-break, and the final
-      window reduces across slices.
-    * ``"auto"`` — ``broadcast`` iff the query count fits the gate,
-      else ``chunked``.
+    * at most ``max_query_rows`` rows — the queries, sorted by id on
+      the driver, broadcast their ADC tables in one scan;
+    * more — the scale path: queries hash-split (xxhash64 mod, NO
+      global sort — an ntile window would pull the whole query table
+      through one task) into enough slices that the expected slice size
+      is 80% of the gate.  Slice sizes are then VERIFIED with one
+      aggregate (hash slicing only bounds them in expectation —
+      duplicate ids all land in one slice) and any slice over 2× the
+      gate raises before a collect can OOM the driver.  Each slice is
+      collected, broadcast, and scanned against the once-encoded,
+      persisted codes; candidates checkpoint eagerly, then the code and
+      slice caches are unpersisted and every slice's broadcast is
+      destroyed before returning.  Exact same output — the per-slice
+      candidate cut uses the identical (dist, vec_id) tie-break, and
+      the final window reduces across slices.
 
     Query ids must be distinct (duplicate qids would merge their
-    candidate lists in the final per-qid window on ANY strategy).
+    candidate lists in the final per-qid window on either path).
     """
-    if strategy not in ("auto", "broadcast", "chunked"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy != "chunked":
-        # gate probe via limit, not a full count: deciding "over the
-        # gate?" only needs the first gate+1 rows, so the probe job
-        # stops early at 10^8-row query tables instead of scanning them
-        over = queries.limit(max_query_rows + 1).count() > max_query_rows
-        if strategy == "broadcast" and over:
-            raise ValueError(
-                f"query rows exceed max_query_rows={max_query_rows}; "
-                "use strategy='chunked' (or 'auto') — the distributed "
-                "slice-broadcast fallback")
-        strategy = "chunked" if over else "broadcast"
-
-    empty_schema = "qid long, vec_id long, rank int, adc_dist long"
-    codes = pq_encode(df, cent, vec, id_col, qscale)
-    if strategy == "broadcast":
-        q = queries.select(id_col, vec).orderBy(id_col).collect()
-        if not q:
-            return queries.sparkSession.createDataFrame([], empty_schema)
-        cand = _adc_candidates(codes, q, cent, topk, id_col, qscale)
+    q = queries.select(id_col, vec).limit(max_query_rows + 1).collect()
+    if not q:
+        return queries.sparkSession.createDataFrame(
+            [], "qid long, vec_id long, rank int, adc_dist long")
+    if len(q) <= max_query_rows:
+        q.sort(key=lambda r: r[0])
+        codes = pq_encode(df, cent, vec, id_col, qscale)[0]
+        cand = _adc_candidates(codes, q, cent, topk, id_col, qscale)[0]
     else:
         # hash-sliced, not ntile: a partitionBy-less window is itself
         # a one-task bottleneck at 10^8 queries.  Slice count targets
         # 80% of the gate per slice in expectation; xxhash64 keys are
         # deterministic, so re-runs slice identically.
         n_q = queries.count()
-        if n_q == 0:
-            return queries.sparkSession.createDataFrame([], empty_schema)
         per_slice = max(1, int(max_query_rows * 0.8))
         n_slices = max(2, -(-n_q // per_slice))
         # ONE pass over the query table: slice ids computed once and
@@ -281,23 +266,27 @@ def pq_topk(
             raise ValueError(
                 f"hash slices exceed 2x max_query_rows={max_query_rows}: "
                 f"{oversized} — query ids are likely non-distinct "
-                "(duplicate qids are unsupported on any strategy)")
+                "(duplicate qids are unsupported)")
+        codes, enc_bc = pq_encode(df, cent, vec, id_col, qscale)
         codes = codes.persist()
-        parts = []
+        parts, bcs = [], [enc_bc]
         for sl in sorted(sizes):
             q = (sliced.filter(F.col("_sl") == sl)
                  .select(id_col, vec).orderBy(id_col).collect())
             if q:
-                parts.append(
-                    _adc_candidates(codes, q, cent, topk, id_col, qscale))
+                part, bc = _adc_candidates(codes, q, cent, topk, id_col, qscale)
+                parts.append(part)
+                bcs.append(bc)
         cand = parts[0]
         for p in parts[1:]:
             cand = cand.unionByName(p)
         # materialize candidates (bounded: ≤ (topk+1)·partitions per
-        # query) so the code/slice caches don't leak past the call
+        # query) so the caches and broadcasts don't leak past the call
         cand = cand.localCheckpoint()
         codes.unpersist()
         sliced.unpersist()
+        for bc in bcs:
+            bc.destroy()
     w = Window.partitionBy("qid").orderBy("adc_dist", "vec_id")
     return (cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= topk)

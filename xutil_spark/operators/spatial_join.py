@@ -7,12 +7,20 @@ numpy-vectorized refinement UDFs where exact geometry is needed:
 * ``point_in_tile_join``   — pure equi-join on the packed cell id.
 * ``point_in_polygon_join``— filter-refine: polygon → covering cells
   (bbox from geo.go:298-321 semantics) → equi-join → exact ray-cast.
-* ``knn_join``             — grid join on neighbor rings with *provable*
-  completeness: rings escalate until the k-th distance is below the
-  guaranteed-covered radius.
+* ``knn_join``             — exact kNN: a shuffle-free numpy grid index
+  against dim-sized refs; above the gate, a grid join on neighbor
+  rings with *provable* completeness (rings escalate until the k-th
+  distance is below the guaranteed-covered radius).
 * ``distance_join``        — range variant (dist ≤ r) of the grid join.
+* ``snap_to_segments``     — point → nearest segment: one numpy scorer
+  against dim-sized networks, a zoom-cascade supercover join above.
 * ``salt_hot_cells``       — explicit skew handling: histogram the cell
   key, salt the heavy hitters, explode the dim side (north rule).
+
+There are no strategy knobs.  kNN, snap and map matching pick their
+path from the size of the dim side, learned by ONE probe-and-collect
+(``_collect_dim``: ``limit(gate+1).toPandas()``, a single Spark job)
+that also hands the numpy path its collected frame.
 
 Scale notes (100 TB / 10^12 rows): the fact side is only ever touched by
 narrow column expressions (cell encode is JVM-native, no Python) plus
@@ -131,9 +139,6 @@ def point_in_polygon_join(
 
 
 # ---------------------------------------------------------------------------
-
-_M_PER_DEG_LAT = 110574.0  # conservative meters per degree of latitude
-
 
 def _explode_neighbors(df: DataFrame, cell_col: Column, zoom: int, ring: int,
                        out: str = "_ncell") -> DataFrame:
@@ -268,72 +273,23 @@ def pick_knn_zoom(refs: DataFrame, k: int,
     return 1
 
 
-def knn_join_fused(
-    points: DataFrame,
-    refs: DataFrame,
-    k: int,
-    zoom: int | str = "auto",
-    point_id: str = "image_id",
-    ref_id: str = "ref_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    ref_lon: str = "lon",
-    ref_lat: str = "lat",
-) -> DataFrame:
-    """Exact kNN in TWO actions (vs the escalation loop's ~4/round):
+# refs at or below this many rows are dim-sized: knn_join collects them
+# once and searches them with the numpy grid index (knn_join_np)
+_KNN_NP_MAX_REFS = 200_000
 
-    one localCheckpoint of the input, then a single DAG =
-    ``grid-round top-k (per-point guarantee) ∪ brute-forced stragglers``.
-    The straggler side anti-joins the guaranteed ids and cross-joins the
-    broadcast refs — exact for any straggler count, no driver counts, no
-    per-round barriers.  The grid window's shuffle is reused between the
-    two branches (ReusedExchange), so the recompute is almost free.
 
-    Requires a broadcastable refs table (the straggler side is a
-    broadcast nested-loop join); for huge refs use ``knn_join``.
-    Preferred at high parallelism: serial driver time is O(1).
-    """
-    if zoom == "auto":
-        zoom = pick_knn_zoom(refs, k, ref_lon, ref_lat)
-    refs_c, extras = _refs_with_cell(refs, zoom, ref_id, ref_lon, ref_lat)
-    refs_dim = F.broadcast(refs_c)
-    pts = with_cell(points, zoom, lon, lat, out="_pcell").localCheckpoint()
-    out_cols = list(points.columns) + [ref_id] + extras + ["dist_m", "rank"]
-    w = Window.partitionBy(point_id).orderBy(
-        F.round(F.col("dist_m"), 3).asc(), F.col(ref_id).asc()
-    )
-    dist = native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat"))
-    kth = F.max(F.when(F.col("rank") == k, F.col("dist_m"))).over(
-        Window.partitionBy(point_id)
-    )
-    grid_topk = (
-        _explode_neighbors(pts, F.col("_pcell"), zoom, 1)
-        .join(refs_dim, F.col("_ncell") == F.col("_rcell"), "inner")
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("_kth", kth)
-    )
-    done = grid_topk.filter(
-        F.col("_kth") <= _ring_guarantee_expr(F.col(lat), zoom, 1)
-    ).select(*out_cols)
-    done_ids = grid_topk.filter(
-        F.col("_kth") <= _ring_guarantee_expr(F.col(lat), zoom, 1)
-    ).select(point_id)
-    stragglers = pts.join(done_ids.distinct(), on=point_id, how="left_anti")
-    brute_topk = (
-        stragglers.join(refs_dim, F.lit(True), "inner")
-        .withColumn("dist_m", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
-    )
-    return done.unionByName(brute_topk)
+def _collect_dim(dim: DataFrame, max_rows: int):
+    """Probe and collect a dim side in ONE Spark job (a count probe
+    plus ``toPandas()`` costs three): the first ``max_rows + 1`` rows
+    as pandas, or ``None`` when the dim is over the gate."""
+    pdf = dim.limit(max_rows + 1).toPandas()
+    return None if len(pdf) > max_rows else pdf
 
 
 def knn_join_np(
     points: DataFrame,
     refs: DataFrame,
+    ref_pd,
     k: int,
     point_id: str = "image_id",
     ref_id: str = "ref_id",
@@ -344,8 +300,9 @@ def knn_join_np(
 ) -> DataFrame:
     """Exact kNN against a **dim-sized** refs table with ZERO shuffles.
 
-    The refs collect to numpy arrays captured in the task closure
-    (broadcast semantics — a few MB shipped once per worker).  Inside
+    ``ref_pd`` is ``refs`` already collected (``knn_join``'s gate
+    probe); ``refs`` itself only supplies the output schema.  The refs
+    arrays ship once per worker via ``sc.broadcast``.  Inside
     each Arrow batch the search is a **numpy grid index**, not brute
     force: refs are pre-sorted by cell of a bbox-fitted nx×ny grid
     (density targeted at ~2k refs/cell — see ``knn_searcher``), each
@@ -357,8 +314,7 @@ def knn_join_np(
     haversine evals than brute force at 2k refs.
 
     No explode, no join, no window: the points side streams through
-    ``mapInPandas`` embarrassingly parallel, so this is both the fastest
-    AND the best-scaling strategy whenever refs fit a broadcast.
+    ``mapInPandas`` embarrassingly parallel.
 
     Tie order matches the grid/window path exactly: rank by
     ``(round(dist_m, 3), ref_id)`` via a strictly-ordered composite
@@ -368,7 +324,7 @@ def knn_join_np(
     """
     import numpy as np
 
-    rid, rlon, rlat, rextra, extras = _collect_refs(refs, ref_id, ref_lon, ref_lat)
+    rid, rlon, rlat, rextra, extras = _refs_arrays(ref_pd, ref_id, ref_lon, ref_lat)
     n_refs = len(rid)
     # explicit sc.broadcast instead of task-closure pickling: the refs
     # arrays ship to each executor ONCE (torrent), not once per task —
@@ -423,12 +379,12 @@ def knn_join_np(
     return src.mapInPandas(topk_batches, schema=out_schema)
 
 
-def _collect_refs(refs: DataFrame, ref_id: str, ref_lon: str, ref_lat: str):
-    """Collect a dim-sized refs table to numpy, id-sorted (tie order)."""
+def _refs_arrays(ref_pd, ref_id: str, ref_lon: str, ref_lat: str):
+    """A collected refs frame as numpy arrays, id-sorted (tie order)."""
     import numpy as np
 
-    extras = [c for c in refs.columns if c not in (ref_id, ref_lon, ref_lat)]
-    ref_pd = refs.toPandas().sort_values(ref_id, kind="stable")
+    extras = [c for c in ref_pd.columns if c not in (ref_id, ref_lon, ref_lat)]
+    ref_pd = ref_pd.sort_values(ref_id, kind="stable")
     rid = ref_pd[ref_id].to_numpy()
     rlon = ref_pd[ref_lon].to_numpy(np.float64)
     rlat = ref_pd[ref_lat].to_numpy(np.float64)
@@ -653,18 +609,39 @@ def knn_join(
     points: DataFrame,
     refs: DataFrame,
     k: int,
-    zoom: int | str = 12,
-    min_zoom: int = 0,
     point_id: str = "image_id",
     ref_id: str = "ref_id",
-    broadcast_refs: bool = True,
     lon: str = "lon",
     lat: str = "lat",
     ref_lon: str = "lon",
     ref_lat: str = "lat",
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Exact k-nearest-neighbor grid join with quadtree zoom escalation.
+    """Exact k-nearest-neighbor join.  Output: point columns + (ref_id,
+    the refs' other columns, dist_m, rank 1..k), ranked by (mm-rounded
+    haversine, ref_id).
+
+    The path follows the size of the refs, learned by one
+    probe-and-collect (``_collect_dim``): at most ``_KNN_NP_MAX_REFS``
+    rows run the shuffle-free numpy grid index (``knn_join_np``) on the
+    collected frame; larger refs run the quadtree escalation join
+    (``_knn_join_grid``) from the zoom ``pick_knn_zoom`` fits to them.
+    Both paths are exact with the same tie order.
+    """
+    ref_pd = _collect_dim(refs, _KNN_NP_MAX_REFS)
+    if ref_pd is not None:
+        return knn_join_np(points, refs, ref_pd, k, point_id, ref_id,
+                           lon, lat, ref_lon, ref_lat)
+    zoom = pick_knn_zoom(refs, k, ref_lon, ref_lat)
+    return _knn_join_grid(points, refs, k, zoom, point_id, ref_id,
+                          lon, lat, ref_lon, ref_lat)
+
+
+def _knn_join_grid(points: DataFrame, refs: DataFrame, k: int, zoom: int,
+                   point_id: str = "image_id", ref_id: str = "ref_id",
+                   lon: str = "lon", lat: str = "lat",
+                   ref_lon: str = "lon", ref_lat: str = "lat") -> DataFrame:
+    """Exact kNN grid join with quadtree zoom escalation (refs above
+    the numpy gate).
 
     Round r searches the 3×3 neighbor block at zoom ``zoom - r`` — the
     hierarchical cell id makes coarsening pure bit arithmetic, so each
@@ -677,34 +654,12 @@ def knn_join(
     ≤ the round's guaranteed-covered radius — provably equal to brute
     force.  At zoom 0 the block covers the whole world → termination and
     exactness are unconditional (≤ zoom+1 rounds).  ``remaining`` is
-    localCheckpoint'ed per round to keep the plan lineage flat.
-
-    Output: point columns + (ref_id, dist_m, rank 1..k).
-
-    ``strategy``: "auto" dispatches dim-sized refs (≤200k rows) to the
-    shuffle-free numpy path (``knn_join_np``), larger broadcastable refs
-    to the two-action fused plan (``knn_join_fused`` — no per-round
-    driver barriers); the escalation loop here serves non-broadcastable
-    refs and explicit ``strategy="grid"``.  "np"/"fused"/"grid" force.
+    localCheckpoint'ed per round to keep the plan lineage flat.  The
+    refs carry no broadcast hint: this path serves refs too large for
+    the numpy gate, so AQE picks each round's join from runtime sizes.
     """
-    if strategy == "auto":
-        if broadcast_refs and refs.count() <= 200_000:
-            strategy = "np"
-        elif broadcast_refs:
-            strategy = "fused"
-        else:
-            strategy = "grid"
-    if strategy == "np":
-        return knn_join_np(points, refs, k, point_id, ref_id,
-                           lon, lat, ref_lon, ref_lat)
-    if strategy == "fused":
-        return knn_join_fused(points, refs, k, zoom, point_id, ref_id,
-                              lon, lat, ref_lon, ref_lat)
-    if zoom == "auto":
-        zoom = pick_knn_zoom(refs, k, ref_lon, ref_lat)
-    brute_budget = 50_000_000  # straggler pairs worth one broadcast join
+    brute_budget = 50_000_000  # straggler pairs worth one brute-force join
     refs_c, extras = _refs_with_cell(refs, zoom, ref_id, ref_lon, ref_lat)
-    refs_dim = F.broadcast(refs_c) if broadcast_refs else refs_c
 
     pts = with_cell(points, zoom, lon, lat, out="_pcell")
 
@@ -720,18 +675,16 @@ def knn_join(
     w = Window.partitionBy(point_id).orderBy(
         F.round(F.col("dist_m"), 3).asc(), F.col(ref_id).asc()
     )
-    for zoom_r in range(zoom, min_zoom - 1, -1):
+    for zoom_r in range(zoom, -1, -1):
         if n_remaining == 0:
             break
-        # straggler cutoff: once remaining×refs fits one broadcast join,
-        # brute-force the tail exactly instead of walking zoom levels —
+        # straggler cutoff: once remaining×refs fits one join, brute-
+        # force the tail exactly instead of walking zoom levels —
         # collapses the long escalation tail into a single stage
         if n_refs is None:
             n_refs = refs_c.count()
-        if zoom_r == min_zoom or (
-            broadcast_refs and n_remaining * n_refs <= brute_budget
-        ):
-            cand = remaining.join(refs_dim, F.lit(True), "inner").withColumn(
+        if zoom_r == 0 or n_remaining * n_refs <= brute_budget:
+            cand = remaining.join(refs_c, F.lit(True), "inner").withColumn(
                 "dist_m",
                 native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat")),
             )
@@ -749,7 +702,7 @@ def knn_join(
                 1,
             )
             .join(
-                refs_dim,
+                refs_c,
                 F.col("_ncell") == native.cell_parent(F.col("_rcell"), zoom, zoom_r),
                 "inner",
             )
@@ -1118,15 +1071,41 @@ def _segments_with_cells(segments: DataFrame, zoom: int, seg_id: str,
     return src.mapInPandas(run, out_schema)
 
 
-def _snap_best(cand: DataFrame, point_id: str, seg_id: str,
-               lon: str, lat: str) -> DataFrame:
-    """Score candidate (point, segment) pairs with the closed-form
-    clamped equirectangular projection and keep each point's winner via
-    ONE ``min(struct(...))`` aggregation keyed by (dist rounded to mm,
-    seg_id) for a deterministic tie-break.  Pure column arithmetic —
-    codegen'd, no Python in the per-pair hot path.  No radius filter
-    here: callers need the unconditioned minimum for the per-point
-    guarantee test."""
+# largest segment count whose exploded supercover is still safely
+# broadcastable (~500k segs × ~3 cells × ~60 B ≈ 90 MB)
+_BCAST_MAX_SEGS = 500_000
+
+
+def _ring_candidates(points: DataFrame, segments: DataFrame,
+                     radius_m: float, zoom: int, seg_id: str, lon: str,
+                     lat: str, ax: str, ay: str, bx: str, by: str,
+                     max_abs_lat: float) -> DataFrame:
+    """(point, segment) candidate pairs of a snap cell path: each
+    point's ring of cells — sized so the static guarantee covers
+    ``radius_m`` with the 5% equirectangular margin — equi-joined to
+    the segments' exact supercover.  The supercover broadcasts only
+    when provably dim-sized: it must fit the driver and every executor,
+    so a network over ``_BCAST_MAX_SEGS`` segments (e.g. 10^7 roads)
+    takes the shuffle join instead."""
+    ring = 1
+    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m * 1.05:
+        ring += 1
+        if ring > 64:
+            raise ValueError("radius too large for this zoom; lower the zoom")
+    segs = _segments_with_cells(segments, zoom, seg_id, ax, ay, bx, by)
+    if segments.limit(_BCAST_MAX_SEGS + 1).count() <= _BCAST_MAX_SEGS:
+        segs = F.broadcast(segs)
+    pc = with_cell(points, zoom, lon, lat, out="_ccell")
+    return (_explode_neighbors(pc, F.col("_ccell"), zoom, ring, out="_cncell")
+            .join(segs, F.col("_cncell") == F.col("_scell"), "inner"))
+
+
+def _snap_projection(lon: str, lat: str) -> tuple[Column, Column, Column, Column]:
+    """``(t, dist_m, snap_lon, snap_lat)``, unrounded, of the closed-form
+    clamped equirectangular projection of the point ``(lon, lat)`` onto
+    the candidate segment ``(_sax, _say)–(_sbx, _sby)`` — the one
+    Catalyst form of the snap metric (pure column arithmetic,
+    codegen'd).  ``_snap_candidates_np`` is its numpy twin."""
     k = F.lit(_M_PER_DEG)
     kx = k * F.cos(F.radians(F.col(lat)))
     axm = (F.col("_sax") - F.col(lon)) * kx
@@ -1141,25 +1120,28 @@ def _snap_best(cand: DataFrame, point_id: str, seg_id: str,
     )
     qx = axm + t * ux
     qy = aym + t * uy
-    dist = F.sqrt(qx * qx + qy * qy)
-    scored = (
-        cand.withColumn("_t", t)
-        .withColumn("_dist", dist)
-        .withColumn("_snap_lon", F.col(lon) + (qx / kx))
-        .withColumn("_snap_lat", F.col(lat) + (qy / k))
-    )
-    return (
-        scored.groupBy(point_id)
-        .agg(F.min(F.struct(
-            F.round(F.col("_dist"), 3).alias("dist_m"),
-            F.col("_sid").alias(seg_id),
-            F.col(lon).alias(lon),
-            F.col(lat).alias(lat),
-            F.round(F.col("_t"), 6).alias("t"),
-            F.round(F.col("_snap_lon"), 6).alias("snap_lon"),
-            F.round(F.col("_snap_lat"), 6).alias("snap_lat"),
-        )).alias("_w"))
-    )
+    return (t, F.sqrt(qx * qx + qy * qy),
+            F.col(lon) + (qx / kx), F.col(lat) + (qy / k))
+
+
+def _snap_best(cand: DataFrame, point_id: str, seg_id: str,
+               lon: str, lat: str) -> DataFrame:
+    """Score candidate (point, segment) pairs with ``_snap_projection``
+    and keep each point's winner via ONE ``min(struct(...))``
+    aggregation keyed by (dist rounded to mm, seg_id) for a
+    deterministic tie-break.  No Python in the per-pair hot path.  No
+    radius filter here: callers need the unconditioned minimum for the
+    per-point guarantee test."""
+    t, dist, snap_lon, snap_lat = _snap_projection(lon, lat)
+    return cand.groupBy(point_id).agg(F.min(F.struct(
+        F.round(dist, 3).alias("dist_m"),
+        F.col("_sid").alias(seg_id),
+        F.col(lon).alias(lon),
+        F.col(lat).alias(lat),
+        F.round(t, 6).alias("t"),
+        F.round(snap_lon, 6).alias("snap_lon"),
+        F.round(snap_lat, 6).alias("snap_lat"),
+    )).alias("_w"))
 
 
 def _snap_emit(best: DataFrame, point_id: str, seg_id: str,
@@ -1211,97 +1193,85 @@ def pick_snap_fine_zoom(segments: DataFrame, coarse_zoom: int,
     return coarse_zoom
 
 
-def snap_to_segments_np(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    point_id: str = "pid",
-    seg_id: str = "seg_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    ax: str = "ax",
-    ay: str = "ay",
-    bx: str = "bx",
-    by: str = "by",
-    pair_chunk: int = 524_288,
-    spread_input: bool = True,
-) -> DataFrame:
-    """Exact snap against a **dim-sized** segment table with ZERO
-    shuffles — the ``knn_join_np`` pattern applied to map matching.
+# rows × segments scored per numpy chunk in _snap_candidates_np:
+# ≈ 4 MB per float64 temporary, cache-sized whatever the Arrow batch
+_SNAP_PAIR_CHUNK = 524_288
 
-    The segments collect to numpy arrays (id-sorted) and ship once per
-    worker via ``sc.broadcast``; the points side streams through ONE
-    ``mapInPandas``, scoring every (point, segment) pair with the same
-    clamped equirectangular projection as ``_snap_best`` in
-    cache-sized chunks (``pair_chunk`` pairs ≈ 4 MB per float64
-    temporary — the v3 lesson: work units sized to cache beat
-    batch-sized matrices).  No candidate pruning and therefore no ring
-    guarantee needed: exhaustive per point, exact by construction.
 
-    Winner semantics are ``_snap_best``'s exactly: min by
-    (round(dist, 3), seg_id) — segments are pre-sorted by id so the
-    first argmin occurrence IS the smallest seg_id among mm-ties —
-    then the inner radius filter on the ROUNDED distance.
+def _snap_candidates_np(points: DataFrame, segments: DataFrame, seg_pd,
+                        radius_m: float, k: int, point_id: str, seg_id: str,
+                        lon: str, lat: str, extra_cols: tuple = (),
+                        spread_input: bool = True) -> DataFrame:
+    """The numpy snap scorer: top-``k`` segments within ``radius_m`` of
+    each point against a **dim-sized** network with ZERO shuffles —
+    ``(point_id, [extra_cols...], lon, lat, seg_id, dist_m, t,
+    snap_lon, snap_lat, rank)``.  ``snap_to_segments`` is its k=1 case.
 
-    Scale boundary: brute cost is points × segments, so this path is
-    for dim-scale networks (≤ ~4k segments ≈ the bench shape, where it
-    replaces a 5-level cascade with one embarrassingly-parallel pass).
-    Real road networks (10^8 segments) take the cascade; the ``auto``
-    gate in ``snap_to_segments`` picks per input.
+    ``seg_pd`` is the collected network (columns seg_id, ax, ay, bx, by
+    in that order); ``segments`` only supplies the seg_id type.  The
+    id-sorted segments ship once per worker via ``sc.broadcast``; ONE
+    ``mapInPandas`` scores every (point, segment) pair with
+    ``_snap_projection``'s formula in cache-sized chunks — exhaustive,
+    so exact with no ring guarantee.  Rank order is the cell paths'
+    (round(dist, 3), seg_id) over the id-sorted columns: an ``argmin``
+    at k=1 (first minimum = smallest id), else a composite int64 key
+    (mm · n_segs + column) cut with ``argpartition`` — O(segments) per
+    row, no full sort — and only the k survivors sorted.  The radius
+    filter applies to the ROUNDED distance, as on the cell paths.
+
+    ``spread_input=False`` skips the small-scan rebalance and its
+    partition probe (which would force AQE to run an upstream shuffle
+    once extra) for callers that pre-spread the points themselves.
     """
-    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
     from xutil_spark.kernels.rounding import round_half_away
 
-    seg_pd = (segments.select(seg_id, ax, ay, bx, by).toPandas()
-              .sort_values(seg_id, kind="stable"))
-    sid0 = seg_pd[seg_id].to_numpy()
-    segs_np = (sid0,
-               seg_pd[ax].to_numpy(np.float64),
-               seg_pd[ay].to_numpy(np.float64),
-               seg_pd[bx].to_numpy(np.float64),
-               seg_pd[by].to_numpy(np.float64))
-    bc = points.sparkSession.sparkContext.broadcast(segs_np)
+    seg_pd = seg_pd.sort_values(seg_pd.columns[0], kind="stable")
+    coords = (seg_pd.iloc[:, j].to_numpy(np.float64) for j in range(1, 5))
+    bc = points.sparkSession.sparkContext.broadcast(
+        (seg_pd.iloc[:, 0].to_numpy(), *coords))
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType([
+    out_schema = T.StructType([
         points.schema[point_id],
-        StructField(seg_id, segments.schema[seg_id].dataType, True),
-        StructField(lon, DoubleType(), True),
-        StructField(lat, DoubleType(), True),
-        StructField("dist_m", DoubleType(), True),
-        StructField("t", DoubleType(), True),
-        StructField("snap_lon", DoubleType(), True),
-        StructField("snap_lat", DoubleType(), True),
+        *[points.schema[c] for c in extra_cols],
+        T.StructField(lon, T.DoubleType(), True),
+        T.StructField(lat, T.DoubleType(), True),
+        T.StructField(seg_id, segments.schema[seg_id].dataType, True),
+        T.StructField("dist_m", T.DoubleType(), True),
+        T.StructField("t", T.DoubleType(), True),
+        T.StructField("snap_lon", T.DoubleType(), True),
+        T.StructField("snap_lat", T.DoubleType(), True),
+        T.StructField("rank", T.IntegerType(), True),
     ])
-    k = _M_PER_DEG
+    kc = _M_PER_DEG
     radius = float(radius_m)
-    chunk = max(1, pair_chunk // max(1, len(sid0)))
 
     def run(it):
-        import pandas as pd
-
         sid, sax, say, sbx, sby = bc.value
-        if len(sid) == 0:
+        ns = len(sid)
+        if ns == 0:
             return
+        kk = min(int(k), ns)
+        col = np.arange(ns, dtype=np.int64)
+        chunk = max(1, _SNAP_PAIR_CHUNK // ns)
         for pdf in it:
             n = len(pdf)
             if n == 0:
                 continue
             plon = pdf[lon].to_numpy(np.float64)
             plat = pdf[lat].to_numpy(np.float64)
-            pids = pdf[point_id].to_numpy()
             parts = []
             for s in range(0, n, chunk):
                 e = min(n, s + chunk)
                 lo = plon[s:e, None]
                 la = plat[s:e, None]
-                kx = k * np.cos(np.radians(la))
+                kx = kc * np.cos(np.radians(la))
                 axm = (sax[None, :] - lo) * kx
-                aym = (say[None, :] - la) * k
+                aym = (say[None, :] - la) * kc
                 uxm = (sbx[None, :] - lo) * kx - axm
-                uym = (sby[None, :] - la) * k - aym
+                uym = (sby[None, :] - la) * kc - aym
                 len2 = uxm * uxm + uym * uym
                 with np.errstate(invalid="ignore", divide="ignore"):
                     t = np.clip(-(axm * uxm + aym * uym) / len2, 0.0, 1.0)
@@ -1309,40 +1279,48 @@ def snap_to_segments_np(
                 qx = axm + t * uxm
                 qy = aym + t * uym
                 dist_r = round_half_away(np.sqrt(qx * qx + qy * qy), 3)
-                rows = np.arange(e - s)
-                j = np.argmin(dist_r, axis=1)
-                db = dist_r[rows, j]
-                keep = db <= radius
+                if kk == 1:  # first minimum = smallest seg_id among ties
+                    order = np.argmin(dist_r, axis=1)[:, None]
+                else:
+                    key = np.rint(dist_r * 1000.0).astype(np.int64) * ns + col
+                    sel = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+                    order = np.take_along_axis(sel, np.argsort(
+                        np.take_along_axis(key, sel, axis=1), axis=1), axis=1)
+                rows = np.arange(e - s)[:, None]
+                dk = dist_r[rows, order]
+                keep = dk <= radius              # (chunk, kk) mask
                 if not keep.any():
                     continue
-                rk = rows[keep]
-                jk = j[keep]
-                kxk = kx[rk, 0]
+                ri, rj = np.nonzero(keep)        # row, rank index
+                jj = order[ri, rj]
+                kxk = kx[ri, 0]
                 parts.append(pd.DataFrame({
-                    point_id: pids[s:e][keep],
-                    seg_id: sid[jk],
-                    lon: plon[s:e][keep],
-                    lat: plat[s:e][keep],
-                    "dist_m": db[keep],
-                    "t": round_half_away(t[rk, jk], 6),
+                    point_id: pdf[point_id].to_numpy()[s:e][ri],
+                    **{c: pdf[c].to_numpy()[s:e][ri] for c in extra_cols},
+                    lon: plon[s:e][ri],
+                    lat: plat[s:e][ri],
+                    seg_id: sid[jj],
+                    "dist_m": dk[ri, rj],
+                    "t": round_half_away(t[ri, jj], 6),
                     "snap_lon": round_half_away(
-                        plon[s:e][keep] + qx[rk, jk] / kxk, 6),
+                        plon[s:e][ri] + qx[ri, jj] / kxk, 6),
                     "snap_lat": round_half_away(
-                        plat[s:e][keep] + qy[rk, jk] / k, 6),
+                        plat[s:e][ri] + qy[ri, jj] / kc, 6),
+                    "rank": (rj + 1).astype(np.int32),
                 }))
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
     src = points
     par = points.sparkSession.sparkContext.defaultParallelism
-    # the partition probe is free on scan-only inputs, but when the
-    # points carry an upstream shuffle (e.g. a dedup) it forces AQE to
-    # materialize that stage once extra just to count partitions —
-    # such callers pre-spread the points themselves and pass
-    # ``spread_input=False`` to skip the probe entirely
     if spread_input and src.rdd.getNumPartitions() < par:
         src = src.repartition(par)
     return src.mapInPandas(run, out_schema)
+
+
+# segment tables at or below this many rows snap through the numpy
+# scorer (points × segments brute force beats the zoom cascade there)
+_SNAP_NP_MAX_SEGS = 4096
 
 
 def snap_to_segments(
@@ -1358,19 +1336,23 @@ def snap_to_segments(
     ay: str = "ay",
     bx: str = "bx",
     by: str = "by",
-    broadcast_segs: bool = True,
     max_abs_lat: float = 60.0,
     fine_zoom: int | str | None = "auto",
-    strategy: str = "auto",
-    np_max_segs: int = 4096,
     spread_input: bool = True,
 ) -> DataFrame:
     """Snap each point to its nearest segment within ``radius_m`` — the
     map-matching primitive (point → road).  Inner semantics: points
     with no segment inside the radius are absent from the output.
+    Winner: min by (round(dist, 3), seg_id), then the radius filter on
+    the rounded distance.
 
-    Escalating zoom cascade in ONE fused DAG (the ``knn_join_fused``
-    pattern — one localCheckpoint, no per-round driver actions):
+    The path follows the size of the network, learned by one
+    probe-and-collect (``_collect_dim``): at most ``_SNAP_NP_MAX_SEGS``
+    segments run the numpy scorer at k=1 (``_snap_candidates_np`` — one
+    embarrassingly-parallel pass, no shuffle; ``spread_input`` is its
+    rebalance switch); larger networks run the escalating zoom cascade
+    below in ONE DAG (one localCheckpoint, no per-round driver
+    actions).  Both emit the same rows.
 
     1. **Fine levels** (``fine_zoom`` down to ``zoom``, step −3, the
        top auto-picked by ``pick_snap_fine_zoom`` so the finest
@@ -1389,38 +1371,32 @@ def snap_to_segments(
        segments but far fewer points reach them).
     2. **Coarse pass** — the original full-radius join (ring sized so
        the static guarantee ≥ 1.05 × radius; exactness is
-       grid-independent) — runs only on the final stragglers.
+       grid-independent) — runs only on the final stragglers.  Its
+       supercover dim broadcasts unless the network is over
+       ``_BCAST_MAX_SEGS`` segments (``_ring_candidates``).
 
     The static coarse guarantee is an envelope bound: callers whose
     data reaches beyond ``max_abs_lat`` must raise it (rings grow as
     1/cos).  ``fine_zoom=None`` (or ``"auto"`` finding no finer zoom
     within budget) degrades to the single coarse pass.
 
-    Returns: point_id, lon, lat, seg_id, dist_m (3 dp), t (position
+    Returns: point_id, seg_id, lon, lat, dist_m (3 dp), t (position
     along the segment in [0,1]), snap_lon, snap_lat.
 
     100-TB shape: fact side = 1 cell encode + ring-1 explode + 1
     broadcast join + 1 shuffle (per-point min); only stragglers (points
-    far from every road) pay the radius-sized ring explode.  Segment
-    dim broadcasts (or shuffles on cell when huge).  Skew: hot cells
-    fall under AQE skew-join; ``salt_hot_cells`` composes if needed.
+    far from every road) pay the radius-sized ring explode.  Skew: hot
+    cells fall under AQE skew-join; ``salt_hot_cells`` composes if
+    needed.
     """
-    if strategy not in ("auto", "np", "cascade"):
-        raise ValueError(f"unknown snap strategy {strategy!r}")
-    if strategy == "np" or (
-        strategy == "auto"
-        and segments.limit(np_max_segs + 1).count() <= np_max_segs
-    ):
-        return snap_to_segments_np(
-            points, segments, radius_m, point_id=point_id, seg_id=seg_id,
-            lon=lon, lat=lat, ax=ax, ay=ay, bx=bx, by=by,
-            spread_input=spread_input)
-
-    ring = 1
-    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m * 1.05:
-        ring += 1
-        if ring > 64:
-            raise ValueError("radius too large for this zoom; lower the zoom")
+    seg_pd = _collect_dim(segments.select(seg_id, ax, ay, bx, by),
+                          _SNAP_NP_MAX_SEGS)
+    if seg_pd is not None:
+        return _snap_candidates_np(
+            points, segments, seg_pd, radius_m, 1, point_id, seg_id,
+            lon, lat, spread_input=spread_input,
+        ).select(point_id, seg_id, lon, lat,
+                 "dist_m", "t", "snap_lon", "snap_lat")
 
     if fine_zoom == "auto":
         fine_zoom = pick_snap_fine_zoom(segments, zoom, ax, ay, bx, by)
@@ -1433,13 +1409,8 @@ def snap_to_segments(
         src = src.repartition(par)
 
     def coarse(pts_df: DataFrame) -> DataFrame:
-        segs = _segments_with_cells(segments, zoom, seg_id, ax, ay, bx, by)
-        dim = F.broadcast(segs) if broadcast_segs else segs
-        pc = with_cell(pts_df, zoom, lon, lat, out="_ccell")
-        cand = (
-            _explode_neighbors(pc, F.col("_ccell"), zoom, ring, out="_cncell")
-            .join(dim, F.col("_cncell") == F.col("_scell"), "inner")
-        )
+        cand = _ring_candidates(pts_df, segments, radius_m, zoom, seg_id,
+                                lon, lat, ax, ay, bx, by, max_abs_lat)
         return _snap_emit(_snap_best(cand, point_id, seg_id, lon, lat),
                           point_id, seg_id, lon, lat, radius_m)
 
