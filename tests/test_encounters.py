@@ -73,13 +73,16 @@ def test_encounter_join_matches_brute(spark, radius, window):
 
 
 def test_pick_encounter_zoom_monotone():
-    from xutil_spark.operators.encounters import pick_encounter_zoom
-    from xutil_spark.operators.spatial_join import _ring_guarantee_m
+    from xutil_spark.operators.spatial_join import (
+        _MAX_CELL_ZOOM,
+        _ring_guarantee_m,
+        pick_ring_zoom,
+    )
 
     for r in (500.0, 5_000.0, 100_000.0, 800_000.0):
-        z = pick_encounter_zoom(r)
+        z = pick_ring_zoom(r, 1, 60.0)
         assert _ring_guarantee_m(z, 1) >= r
-        if z < 30:
+        if z < _MAX_CELL_ZOOM:
             assert _ring_guarantee_m(z + 1, 1) < r
 
 

@@ -163,6 +163,77 @@ def test_knn_join_sparse_refs_escalates_rings(spark, points_df, points_pd):
     assert mism == 0
 
 
+def test_point_in_polygon_join_matches_brute_force(spark):
+    """The (point, polygon) set equals an all-pairs ray-cast — over
+    holes, multipolygons, null/empty wkt, points on cell edges, the
+    antimeridian, poleward of the tile limit and null coordinates — and
+    the polygons' other columns pass through unchanged."""
+    from pyspark.sql import types as T
+
+    zoom = 6
+    w, s, e, n = (float(v) for v in K_tiles.cell_bounds(
+        K_tiles.cell_pack(53, 24, zoom)))
+    poly_rows = [
+        (1, "square with hole", 7,
+         "POLYGON((100 20, 120 20, 120 40, 100 40, 100 20),"
+         " (105 25, 115 25, 115 35, 105 35, 105 25))"),
+        (2, None, None,
+         "MULTIPOLYGON(((-10 -10, 10 -10, 10 10, -10 10, -10 -10)),"
+         " ((170 50, 180 50, 180 60, 170 60, 170 50)))"),
+        (3, "cell", 9,
+         f"POLYGON(({w} {s}, {e} {s}, {e} {n}, {w} {n}, {w} {s}))"),
+        (4, "north polar", 11,
+         "POLYGON((-180 80, 180 80, 180 89.9, -180 89.9, -180 80))"),
+        (5, "south polar", 12,
+         "POLYGON((-180 -90, 180 -90, 180 -80, -180 -80, -180 -90))"),
+        (6, "null wkt", 1, None),
+        (7, "empty wkt", 2, ""),
+    ]
+    polys = spark.createDataFrame(poly_rows, T.StructType([
+        T.StructField("poly_id", T.IntegerType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("rank", T.LongType()),
+        T.StructField("wkt", T.StringType()),
+    ]))
+    rng = np.random.default_rng(21)
+    lon = list(rng.uniform(-180.0, 180.0, 3000)) + list(rng.uniform(95.0, 125.0, 1000))
+    lat = list(rng.uniform(-90.0, 89.9, 3000)) + list(rng.uniform(15.0, 45.0, 1000))
+    # the test cell's edges and corners, the cell edges inside polygon 1,
+    # the antimeridian, poleward of the tile limit, null coordinates
+    edge = [(w, s), (e, n), (w, n), (e, s), ((w + e) / 2, s), (w, (s + n) / 2)]
+    edge += [(-180.0 + 360.0 / 2 ** zoom * x, 22.0) for x in range(50, 54)]
+    edge += [(180.0, 55.0), (-180.0, 55.0), (180.0, 0.0), (-180.0, 0.0)]
+    edge += [(0.0, 85.06), (20.0, 86.0), (-20.0, 89.0), (0.0, 0.0)]
+    edge += [(0.0, -85.06), (40.0, -87.0), (-60.0, -89.5), (10.0, -90.0)]
+    edge += [(None, 10.0), (5.0, None), (None, None)]
+    pts_pd = pd.DataFrame({"image_id": range(len(lon) + len(edge)),
+                           "lon": lon + [p[0] for p in edge],
+                           "lat": lat + [p[1] for p in edge]})
+    edge_id = dict(zip(edge, range(len(lon), len(lon) + len(edge))))
+
+    out = SJ.point_in_polygon_join(spark.createDataFrame(pts_pd), polys, zoom=zoom)
+    assert out.columns == ["image_id", "lon", "lat", "poly_id", "name",
+                           "rank", "wkt"]
+    got = set(map(tuple, out.drop("lon", "lat", "wkt").toPandas()
+                  .astype(object).where(lambda d: d.notna(), None)
+                  .to_numpy()))
+
+    exp = set()
+    valid = pts_pd.dropna()
+    for pid, name, rank, wkt in poly_rows:
+        if wkt:
+            inside = K_geom.point_in_geo(valid["lon"], valid["lat"],
+                                         K_geom.from_wkt(wkt))
+            exp.update((i, pid, name, rank) for i in valid["image_id"][inside])
+    assert got == exp
+    assert {r[1] for r in got} == {1, 2, 3, 4, 5}
+    pairs = {r[:2] for r in got}
+    for pt in [(20.0, 86.0), (-20.0, 89.0)]:
+        assert (edge_id[pt], 4) in pairs, pt
+    for pt in [(40.0, -87.0), (-60.0, -89.5), (10.0, -90.0)]:
+        assert (edge_id[pt], 5) in pairs, pt
+
+
 def _globe_points(spark, n, seed, id_col, lon_spread=360.0):
     """Deterministic globe-spanning points (forces tiny zooms)."""
     rng = np.random.default_rng(seed)
@@ -202,40 +273,110 @@ def test_knn_join_np_globe_spanning_refs(spark):
         assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
 
 
+def _brute_pairs(pts_pd, refs_pd, radius):
+    """(point, ref) pairs within ``radius`` by brute-force haversine."""
+    rlon = refs_pd["lon"].to_numpy()
+    rlat = refs_pd["lat"].to_numpy()
+    rid = refs_pd["ref_id"].to_numpy()
+    out = set()
+    for p, lo, la in zip(pts_pd["image_id"], pts_pd["lon"], pts_pd["lat"]):
+        d = K_dist.point_dist_haversine(lo, la, rlon, rlat)
+        out.update((p, r) for r in rid[d <= radius])
+    return out
+
+
 def test_distance_join_low_zoom_wrap_no_duplicates(spark):
-    """zoom=2 with a ring spanning more than the whole x-axis: the dx
-    clamp must emit each cell once → no duplicate (point, ref) rows."""
+    """A ~2,000 km radius derives a zoom ≤ 2, whose ring spans more
+    than the whole x-axis: the dx clamp must emit each cell once → no
+    duplicate (point, ref) rows."""
     pts, pts_pd = _globe_points(spark, 60, 13, "image_id", lon_spread=120.0)
     refs, refs_pd = _globe_points(spark, 40, 17, "ref_id", lon_spread=120.0)
     radius = 2_000_000.0
-    got = SJ.distance_join(pts, refs, radius_m=radius, zoom=2).toPandas()
+    zoom, ring = SJ._range_zoom_ring(refs, radius, "lat")
+    assert zoom <= 2 and 2 * ring + 1 >= 2 ** zoom
+    got = SJ.distance_join(pts, refs, radius_m=radius).toPandas()
     assert got.duplicated(["image_id", "ref_id"]).sum() == 0
-    got_set = set(zip(got["image_id"], got["ref_id"]))
-    exp_set = set()
-    for _, p in pts_pd.iterrows():
-        d = K_dist.point_dist_haversine(
-            p["lon"], p["lat"], refs_pd["lon"].to_numpy(), refs_pd["lat"].to_numpy()
-        )
-        for rid in refs_pd.loc[d <= radius, "ref_id"]:
-            exp_set.add((p["image_id"], rid))
-    assert got_set == exp_set and len(exp_set) > 0
+    exp_set = _brute_pairs(pts_pd, refs_pd, radius)
+    assert set(zip(got["image_id"], got["ref_id"])) == exp_set
+    assert len(exp_set) > 0
 
 
 def test_distance_join_vs_brute_force(spark, points_df, points_pd):
     refs = synth.ref_points_table(spark, 150).cache()
     refs_pd = refs.toPandas()
     radius = 75000.0
-    got = SJ.distance_join(points_df, refs, radius_m=radius, zoom=8).toPandas()
-    got_set = set(zip(got["image_id"], got["ref_id"]))
-    exp_set = set()
-    for _, p in points_pd.iterrows():
-        d = K_dist.point_dist_haversine(
-            p["lon"], p["lat"], refs_pd["lon"].to_numpy(), refs_pd["lat"].to_numpy()
-        )
-        for rid in refs_pd.loc[d <= radius, "ref_id"]:
-            exp_set.add((p["image_id"], rid))
-    assert got_set == exp_set
+    got = SJ.distance_join(points_df, refs, radius_m=radius).toPandas()
+    exp_set = _brute_pairs(points_pd, refs_pd, radius)
+    assert set(zip(got["image_id"], got["ref_id"])) == exp_set
     assert len(exp_set) > 0
+
+
+def _box_points(spark, n, seed, id_col, lon_range, lat_range):
+    rng = np.random.default_rng(seed)
+    pdf = pd.DataFrame({
+        id_col: [f"{id_col[0]}{i}" for i in range(n)],
+        "lon": rng.uniform(*lon_range, n),
+        "lat": rng.uniform(*lat_range, n),
+    })
+    return spark.createDataFrame(pdf), pdf
+
+
+@pytest.mark.parametrize("radius", [5_000.0, 50_000.0, 500_000.0])
+def test_distance_join_radius_vs_brute_force(spark, radius):
+    """Exact at any radius: the zoom and ring derive from it.  The box
+    is sized to the radius so every case has thousands of pairs."""
+    half = 4.0 * radius / SJ._M_PER_DEG_HAV
+    lons = (10.0 - 1.4 * half, 10.0 + 1.4 * half)
+    lats = (40.0 - half, 40.0 + half)
+    pts, pts_pd = _box_points(spark, 1500, 3, "image_id", lons, lats)
+    refs, refs_pd = _box_points(spark, 200, 4, "ref_id", lons, lats)
+    got = SJ.distance_join(pts, refs, radius_m=radius).toPandas()
+    exp_set = _brute_pairs(pts_pd, refs_pd, radius)
+    assert set(zip(got["image_id"], got["ref_id"])) == exp_set
+    assert len(exp_set) > 1000
+
+
+@pytest.mark.parametrize("radius", [20_000.0, 50_000.0])
+def test_distance_join_polar_exact(spark, radius):
+    """Regression: a fixed zoom sized its ring for |lat| ≤ 60° and
+    silently dropped pairs near the poles (1,494 of the 5,744 pairs at
+    20 km and 10,393 of the 34,239 at 50 km here).  The zoom now derives from the
+    refs' latitude, so the pair set equals brute force."""
+    pts, pts_pd = _box_points(spark, 3000, 5, "image_id", (10.0, 30.0), (77.0, 83.0))
+    refs, refs_pd = _box_points(spark, 400, 6, "ref_id", (10.0, 30.0), (77.0, 83.0))
+    got = SJ.distance_join(pts, refs, radius_m=radius).toPandas()
+    exp_set = _brute_pairs(pts_pd, refs_pd, radius)
+    assert set(zip(got["image_id"], got["ref_id"])) == exp_set
+    assert len(exp_set) > 1000
+
+
+def test_distance_join_beyond_tile_limit_exact(spark):
+    """Points and refs poleward of the Web-Mercator limit (85.0511°) at
+    both poles, on the poles themselves, and refs on the antimeridian
+    at lon 180, still pair exactly."""
+    rng = np.random.default_rng(7)
+    poles = [(0.0, 90.0), (0.0, -90.0), (77.0, -90.0), (-150.0, -89.99)]
+    pts_pd = pd.DataFrame({
+        "image_id": [f"i{i}" for i in range(800 + len(poles))],
+        "lon": np.r_[rng.uniform(-180.0, 180.0, 800), [p[0] for p in poles]],
+        "lat": np.r_[rng.uniform(84.0, 89.9, 400), rng.uniform(-89.9, -84.0, 400),
+                     [p[1] for p in poles]],
+    })
+    pts = spark.createDataFrame(pts_pd)
+    refs_pd = pd.DataFrame({
+        "ref_id": [f"r{i}" for i in range(112)],
+        "lon": np.r_[np.full(10, 180.0), rng.uniform(-180.0, 180.0, 100), [-120.0, 30.0]],
+        "lat": np.r_[np.linspace(84.5, 89.5, 10), rng.uniform(84.0, 89.9, 50),
+                     rng.uniform(-89.9, -84.0, 50), [-90.0, 90.0]],
+    })
+    refs = spark.createDataFrame(refs_pd)
+    radius = 100_000.0
+    got = SJ.distance_join(pts, refs, radius_m=radius).toPandas()
+    exp_set = _brute_pairs(pts_pd, refs_pd, radius)
+    assert set(zip(got["image_id"], got["ref_id"])) == exp_set
+    assert len(exp_set) > 100
+    # the poles pair with each other's neighbours, south as well as north
+    assert {("i801", "r110"), ("i802", "r110"), ("i800", "r111")} <= exp_set
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -358,12 +499,13 @@ def test_knn_searcher_polar_wide_grid_matches_brute(spark):
         assert list(grp.sort_values("rank")["ref_id"]) == exp[pid], pid
 
 
-@pytest.mark.parametrize("op", ["knn_join", "snap_to_segments", "hmm_map_match"])
+@pytest.mark.parametrize("op", ["knn_join", "snap_to_segments", "hmm_map_match",
+                                "point_in_polygon_join", "distance_join"])
 def test_plan_build_runs_one_spark_job(spark, op):
     """Building each operator against a dim-sized side launches ONE
     Spark job: the gate probe and the dim collect are the same
     ``limit(gate + 1).toPandas()`` (a count probe plus a collect cost
-    three)."""
+    three); the range join's one job is its aggregate over the refs."""
     from xutil_spark.operators.mapmatch import hmm_map_match
 
     pts = spark.range(0, 200, 1, 4).select(
@@ -383,6 +525,10 @@ def test_plan_build_runs_one_spark_job(spark, op):
         "snap_to_segments": lambda: SJ.snap_to_segments(
             pts, segs, radius_m=50_000.0),
         "hmm_map_match": lambda: hmm_map_match(pts, segs, radius_m=50_000.0),
+        "point_in_polygon_join": lambda: SJ.point_in_polygon_join(
+            pts, synth.irregular_tiles_table(spark), zoom=8),
+        "distance_join": lambda: SJ.distance_join(
+            pts, refs, radius_m=50_000.0, point_id="pid"),
     }[op]
     sc = spark.sparkContext
     group = f"plan-build-{op}"

@@ -7,9 +7,9 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from xutil_spark.operators.spatial_join import pick_ring_zoom
 from xutil_spark.operators.trajsim import (
     hausdorff_join,
-    pick_hausdorff_zoom,
     scalar_hausdorff,
 )
 
@@ -64,7 +64,7 @@ def test_hausdorff_pair_across_cell_boundary(spark):
     # a fine zoom with ring-1 coverage must still pair them
     a, b = (99.9999, 40.0), (100.0001, 40.013)
     df = _tracks_df(spark, {7: [a], 8: [b]})
-    zoom = pick_hausdorff_zoom(2000.0)
+    zoom = pick_ring_zoom(2000.0, 1, 60.0)
     out = hausdorff_join(df, tau_m=2000.0, zoom=zoom, track="user_id").collect()
     assert len(out) == 1
     _, _, h = scalar_hausdorff([a], [b])
@@ -80,8 +80,8 @@ def test_hausdorff_tau_filters(spark):
 
 
 def test_pick_hausdorff_zoom_monotone():
-    z_small = pick_hausdorff_zoom(500.0)
-    z_large = pick_hausdorff_zoom(500_000.0)
+    z_small = pick_ring_zoom(500.0, 1, 60.0)
+    z_large = pick_ring_zoom(500_000.0, 1, 60.0)
     assert z_small > z_large
     from xutil_spark.operators.spatial_join import _ring_guarantee_m
     assert _ring_guarantee_m(z_small, 1) >= 500.0

@@ -243,7 +243,7 @@ def q_range_count_50km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = _points(spark, sf_dir).select("pid", "lon", "lat")
     refs = _refs(spark, sf_dir)
-    d = distance_join(pts, refs, radius_m=50000.0, zoom=8,
+    d = distance_join(pts, refs, radius_m=50000.0,
                       point_id="pid", ref_id="ref_id")
     return d.groupBy("pid").agg(F.count(F.lit(1)).alias("n_within"))
 

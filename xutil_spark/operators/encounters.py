@@ -11,9 +11,8 @@ joins (SURVEY §2.3).
 Engine shape — a **bucketed fact×fact self-join**, never a cross join:
 
 1. each event gets a packed cell id (zoom sized so a ring-1 block
-   provably covers ``radius_m``; same static envelope bound as
-   ``distance_join``) and an integer time bucket ``floor(epoch /
-   window_s)``;
+   provably covers ``radius_m`` for |lat| ≤ ``max_abs_lat``) and an
+   integer time bucket ``floor(epoch / window_s)``;
 2. the LEFT side explodes to the HALF-SPACE of its (2r+1)²×3
    space-time neighbor block — the lexicographically-positive offsets
    plus self (14 keys at ring 1).  |Δt| ≤ W ⇒ bucket diff ≤ 1 under
@@ -38,24 +37,15 @@ is at matched-pair cardinality.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xutil_spark.functions import native
-from xutil_spark.operators.spatial_join import _ring_guarantee_m, with_cell
-
-
-def pick_encounter_zoom(radius_m: float, max_abs_lat: float = 60.0,
-                        ring: int = 1) -> int:
-    """FINEST zoom whose ring-``ring`` static guarantee covers
-    ``radius_m`` (finer cells = fewer candidate pairs; one level too
-    fine would let a true pair straddle the block)."""
-    for z in range(30, -1, -1):
-        if _ring_guarantee_m(z, ring, max_abs_lat=max_abs_lat) >= radius_m:
-            return z
-    raise ValueError("radius too large for any zoom at this latitude bound")
+from xutil_spark.operators.spatial_join import (
+    _ring_guarantee_m,
+    pick_ring_zoom,
+    with_cell,
+)
 
 
 def encounter_join(
@@ -81,11 +71,11 @@ def encounter_join(
 
     ``zoom=None`` auto-picks the finest ring-1-covering zoom.  The
     static envelope bound assumes |lat| ≤ ``max_abs_lat`` — callers
-    with polar data must lower the zoom accordingly (same contract as
-    ``distance_join`` / ``snap_to_segments``).
+    with polar data must raise it (same contract as
+    ``snap_to_segments``).
     """
     if zoom is None:
-        zoom = pick_encounter_zoom(radius_m, max_abs_lat)
+        zoom = pick_ring_zoom(radius_m, 1, max_abs_lat)
     ring = 1
     while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m:
         ring += 1

@@ -11,7 +11,8 @@ numpy-vectorized refinement UDFs where exact geometry is needed:
   against dim-sized refs; above the gate, a grid join on neighbor
   rings with *provable* completeness (rings escalate until the k-th
   distance is below the guaranteed-covered radius).
-* ``distance_join``        — range variant (dist ≤ r) of the grid join.
+* ``distance_join``        — range variant (dist ≤ r) of the grid join,
+  exact at any latitude.
 * ``snap_to_segments``     — point → nearest segment: one numpy scorer
   against dim-sized networks, a zoom-cascade supercover join above.
 * ``salt_hot_cells``       — explicit skew handling: histogram the cell
@@ -20,7 +21,10 @@ numpy-vectorized refinement UDFs where exact geometry is needed:
 There are no strategy knobs.  kNN, snap and map matching pick their
 path from the size of the dim side, learned by ONE probe-and-collect
 (``_collect_dim``: ``limit(gate+1).toPandas()``, a single Spark job)
-that also hands the numpy path its collected frame.
+that also hands the numpy path its collected frame.  PiP collects its
+polygons once and builds their cell cover on the driver.  The range
+join derives its zoom from the radius and one top-1 pass over the
+refs' latitudes.
 
 Scale notes (100 TB / 10^12 rows): the fact side is only ever touched by
 narrow column expressions (cell encode is JVM-native, no Python) plus
@@ -32,6 +36,7 @@ cell histograms (bounded by distinct-cell count) and dim tables.
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import numpy as np
@@ -49,6 +54,34 @@ def with_cell(points: DataFrame, zoom: int, lon: str = "lon", lat: str = "lat",
               out: str = "cell") -> DataFrame:
     """Attach the packed cell id (JVM-native expression, codegen'd)."""
     return points.withColumn(out, native.cell(lon, lat, zoom))
+
+
+# the Web-Mercator tile limit, rounded down: every latitude below it
+# has its tile_y inside the tile rows
+_TILE_MAX_LAT = 85.0511
+
+
+def _grid_cell(lon: Column, lat: Column, zoom: int) -> Column:
+    """``native.cell`` defined at every coordinate: x wraps mod 2^zoom
+    (lon 180 is lon −180), and latitudes poleward of the tile limit
+    take the edge row (the raw y falls off the grid there, and at −90°
+    the Mercator log is undefined).  Null coordinates give a null cell.
+    The edge row keeps the ring guarantee: a point poleward of it is
+    only farther from every row beyond the ring."""
+    n = 2 ** zoom
+    y = (F.when(lat >= _TILE_MAX_LAT, F.lit(0).cast("long"))
+         .when(lat <= -_TILE_MAX_LAT, F.lit(n - 1).cast("long"))
+         .otherwise(native.tile_y(lat, zoom)))
+    return native.cell_from_xy(
+        F.pmod(native.tile_x(lon, zoom), F.lit(n).cast("long")), y, zoom)
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Rebalance a small scan to ``defaultParallelism`` partitions: a
+    scan with few splits would serialize the per-row work that follows
+    (a no-op once the scan already has enough splits)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
 
 def point_in_tile_join(
@@ -109,33 +142,48 @@ def point_in_polygon_join(
     zoom: int = 12,
     poly_id: str = "poly_id",
     wkt: str = "wkt",
-    broadcast_polys: bool = True,
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
     """Filter-refine point-in-polygon join.
 
-    Phase 1 (filter): polygons explode to their bbox covering cells at
-    ``zoom`` (coarse quadtree cover); points take the cell at the same
-    zoom; equi-join on cell — broadcastable, prunable, AQE-skew-safe.
-    Phase 2 (refine): exact even-odd ray-cast (numpy, batch-grouped by
-    polygon) removes bbox false positives.
+    Phase 1 (filter): the polygons are collected once and exploded on
+    the driver to their bbox covering cells at ``zoom``
+    (``K_geom.covering_cells``, a coarse quadtree cover), then
+    broadcast; points take their cell at the same zoom (``_grid_cell``,
+    defined at every coordinate) and equi-join on it.  Phase 2
+    (refine): exact even-odd ray-cast (numpy, batch-grouped by polygon)
+    removes bbox false positives.  Rows with a null or empty ``wkt``
+    cover no cells and match nothing.
 
     Zoom picks the filter selectivity: higher zoom → more dim rows,
-    fewer refine candidates.  For 100 TB the dim explosion is bounded by
-    (polygon bbox area / tile area) × n_polygons.
+    fewer refine candidates.  The broadcast cover holds (polygon bbox
+    area / tile area) rows per polygon; polygon sets too large for the
+    driver take ``clipped_pip_join``.
     """
-    from xutil_spark.functions import geo_udfs
-
-    cover = polygons.withColumn(
-        "cell",
-        F.explode(geo_udfs.wkt_covering_cells(F.col(wkt), F.lit(zoom))),
-    )
-    pts = with_cell(points, zoom, lon, lat)
-    dim = F.broadcast(cover) if broadcast_polys else cover
+    dim = F.broadcast(_driver_cover(polygons, zoom, wkt))
+    pts = points.withColumn("cell", _grid_cell(F.col(lon), F.col(lat), zoom))
     cand = pts.join(dim, on="cell", how="inner")
     refine = _pip_refine_udf()
     return cand.filter(refine(F.col(lon), F.col(lat), F.col(wkt))).drop("cell")
+
+
+def _driver_cover(polygons: DataFrame, zoom: int, wkt: str) -> DataFrame:
+    """``polygons`` collected (one Spark job) and exploded to one row
+    per covering cell at ``zoom``: its schema plus ``cell``."""
+    from pyspark.sql import types as T
+
+    from xutil_spark.kernels import geometry as K_geom
+
+    poly_pd = polygons.toPandas()
+    cells = [K_geom.covering_cells(K_geom.from_wkt(w), zoom)
+             if isinstance(w, str) and w else [] for w in poly_pd[wkt]]
+    rows = np.repeat(np.arange(len(cells)), [len(c) for c in cells])
+    cover = poly_pd.iloc[rows].reset_index(drop=True)
+    cover["cell"] = np.fromiter(itertools.chain.from_iterable(cells), np.int64)
+    schema = T.StructType(polygons.schema.fields
+                          + [T.StructField("cell", T.LongType(), False)])
+    return polygons.sparkSession.createDataFrame(cover, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -187,25 +235,26 @@ _R_HAV = 6371000.0  # sphere radius shared with the haversine kernels
 _KNN_CELL_TARGET_K = 2.0
 
 
-def _refs_with_cell(refs: DataFrame, zoom: int, ref_id: str, ref_lon: str,
-                    ref_lat: str) -> tuple[DataFrame, list[str]]:
+def _refs_with_cell(refs: DataFrame, cell_fn, zoom: int, ref_id: str,
+                    ref_lon: str, ref_lat: str) -> tuple[DataFrame, list[str]]:
     """Refs dim prepared for a grid join: coords renamed to private
-    names, cell attached, every OTHER column (payload like category /
-    nation) carried through so kNN outputs can be aggregated without a
-    re-join."""
+    names, cell ``_rcell`` = ``cell_fn(lon, lat, zoom)`` attached, every
+    OTHER column (payload like category / nation) carried through so
+    kNN outputs can be aggregated without a re-join."""
     extras = [c for c in refs.columns if c not in (ref_id, ref_lon, ref_lat)]
     sel = (
         [F.col(ref_id)]
         + [F.col(c) for c in extras]
         + [F.col(ref_lon).alias("_rlon"), F.col(ref_lat).alias("_rlat")]
     )
-    return with_cell(refs.select(*sel), zoom, "_rlon", "_rlat", out="_rcell"), extras
+    return refs.select(*sel).withColumn(
+        "_rcell", cell_fn(F.col("_rlon"), F.col("_rlat"), zoom)), extras
 
 
 def _ring_guarantee_m(zoom: int, ring: int, max_abs_lat: float = 60.0) -> float:
     """Static lower bound on the distance from any point in the center
-    cell to the nearest *unsearched* cell beyond ``ring`` (used by
-    distance_join's ring sizing).  Conservative (worst latitude).
+    cell to the nearest *unsearched* cell beyond ``ring``, for points
+    with |lat| ≤ ``max_abs_lat`` (the worst latitude of that band).
     The longitude direction uses the exact cross-track minimum
     R·asin(cosφ·sin(Δλ)) rather than the linear Δλ·cosφ·m/deg form —
     the linear bound exceeds the true haversine minimum once
@@ -221,6 +270,22 @@ def _ring_guarantee_m(zoom: int, ring: int, max_abs_lat: float = 60.0) -> float:
     phi_far = min(max_abs_lat + (ring + 1) * span_deg, 85.06)
     gy = ring * span_deg * _M_PER_DEG_HAV * math.cos(math.radians(phi_far))
     return 0.5 * min(gx, gy)
+
+
+# finest zoom a packed cell id holds: x and y get 29 bits each
+_MAX_CELL_ZOOM = 29
+
+
+def pick_ring_zoom(radius_m: float, ring: int, max_abs_lat: float) -> int:
+    """FINEST zoom whose ring-``ring`` static guarantee covers
+    ``radius_m`` for points with |lat| ≤ ``max_abs_lat`` (finer cells =
+    fewer candidate pairs; one level too fine would let a true pair
+    straddle the searched block).  Zoom 1 always qualifies: its block
+    covers every cell."""
+    for z in range(_MAX_CELL_ZOOM, 1, -1):
+        if _ring_guarantee_m(z, ring, max_abs_lat=max_abs_lat) >= radius_m:
+            return z
+    return 1
 
 
 def _ring_guarantee_expr(lat_col: Column, zoom: int, ring: int = 1) -> Column:
@@ -369,14 +434,8 @@ def knn_join_np(
             yield pd.DataFrame(data)
 
     # a small-file scan yields few splits and would cap the search
-    # parallelism (measured 8 tasks on 32 cores → 2× wall); one cheap
-    # rebalance of the (narrow) points projection fixes it.  At cluster
-    # scale the scan already has enough splits and this is a no-op.
-    src = points
-    par = points.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    return src.mapInPandas(topk_batches, schema=out_schema)
+    # parallelism (measured 8 tasks on 32 cores → 2× wall)
+    return _spread(points).mapInPandas(topk_batches, schema=out_schema)
 
 
 def _refs_arrays(ref_pd, ref_id: str, ref_lon: str, ref_lat: str):
@@ -659,7 +718,7 @@ def _knn_join_grid(points: DataFrame, refs: DataFrame, k: int, zoom: int,
     the numpy gate, so AQE picks each round's join from runtime sizes.
     """
     brute_budget = 50_000_000  # straggler pairs worth one brute-force join
-    refs_c, extras = _refs_with_cell(refs, zoom, ref_id, ref_lon, ref_lat)
+    refs_c, extras = _refs_with_cell(refs, native.cell, zoom, ref_id, ref_lon, ref_lat)
 
     pts = with_cell(points, zoom, lon, lat, out="_pcell")
 
@@ -738,11 +797,37 @@ def _knn_join_grid(points: DataFrame, refs: DataFrame, k: int, zoom: int,
     return out
 
 
+# ring distance_join sizes its zoom for: a sweep over rings 1–6 at 5,
+# 50 and 500 km radii (local[4], 4 vCPUs) found ring 3 at or near the
+# fastest every time
+_RANGE_RING = 3
+
+
+def _range_zoom_ring(refs: DataFrame, radius_m: float,
+                     ref_lat: str) -> tuple[int, int]:
+    """``(zoom, ring)`` for ``distance_join`` from ONE pass over the
+    refs.  The meridional arc lower-bounds haversine, so a point more
+    than ``radius_m`` of latitude from every ref has no pair: the ring
+    guarantee need only hold up to |lat| ≤ max|ref lat| + radius.  The
+    zoom is the finest whose ring-``_RANGE_RING`` guarantee covers the
+    radius there; the ring is then sized at that zoom."""
+    # top-1 rather than F.max: a take-ordered is one Spark job, a global
+    # aggregate under AQE is two (its shuffle map stage runs apart)
+    a = F.abs(F.col(ref_lat)).alias("a")
+    top = refs.select(a).orderBy(F.col("a").desc()).limit(1).collect()
+    lat_top = top[0][0] if top else None
+    max_abs_lat = min((lat_top or 0.0) + radius_m / _M_PER_DEG_HAV, 90.0)
+    zoom = pick_ring_zoom(radius_m, _RANGE_RING, max_abs_lat)
+    ring = 1
+    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m:
+        ring += 1
+    return zoom, ring
+
+
 def distance_join(
     points: DataFrame,
     refs: DataFrame,
     radius_m: float,
-    zoom: int = 12,
     point_id: str = "image_id",
     ref_id: str = "ref_id",
     broadcast_refs: bool = True,
@@ -751,26 +836,21 @@ def distance_join(
     ref_lon: str = "lon",
     ref_lat: str = "lat",
 ) -> DataFrame:
-    """All (point, ref) pairs with haversine ≤ radius_m.
+    """All (point, ref) pairs with haversine ≤ radius_m, exact at any
+    latitude.
 
-    Ring radius derives from the radius: cells within
-    ``ceil(radius / ring_guarantee(1))`` rings are provably sufficient.
+    The plan comes from the radius and the refs (``_range_zoom_ring``):
+    points explode to the ring of neighbor cells that provably holds
+    every ref within the radius, equi-join the refs on cell
+    (``_grid_cell``, defined at every coordinate), and keep the pairs
+    whose JVM-native haversine (``dist_m``) is ≤ radius_m.
     """
-    ring = 1
-    while _ring_guarantee_m(zoom, ring) < radius_m:
-        ring += 1
-        if ring > 64:
-            raise ValueError("radius too large for this zoom; lower the zoom")
-    refs_c, _extras = _refs_with_cell(refs, zoom, ref_id, ref_lon, ref_lat)
+    zoom, ring = _range_zoom_ring(refs, radius_m, ref_lat)
+    refs_c, _extras = _refs_with_cell(refs, _grid_cell, zoom, ref_id, ref_lon, ref_lat)
     refs_dim = F.broadcast(refs_c) if broadcast_refs else refs_c
-    # the (2r+1)²-way explode inherits the scan's split count; a small
-    # scan (few splits) would serialize the join — rebalance first
-    # (no-op when the scan already has ≥ defaultParallelism splits)
-    src = points
-    par = points.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    pts = with_cell(src, zoom, lon, lat, out="_pcell")
+    # the (2r+1)²-way explode inherits the scan's split count
+    pts = _spread(points).withColumn(
+        "_pcell", _grid_cell(F.col(lon), F.col(lat), zoom))
     return (
         _explode_neighbors(pts, F.col("_pcell"), zoom, ring)
         .join(refs_dim, F.col("_ncell") == F.col("_rcell"), "inner")
@@ -1041,9 +1121,7 @@ def _segments_with_cells(segments: DataFrame, zoom: int, seg_id: str,
     )
     # road tables often arrive in 1-2 partitions; the per-segment python
     # cover loop is the cost, so spread it before exploding
-    par = segments.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = _spread(src)
 
     def run(batches):
         for b in batches:
@@ -1311,10 +1389,7 @@ def _snap_candidates_np(points: DataFrame, segments: DataFrame, seg_pd,
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    src = points
-    par = points.sparkSession.sparkContext.defaultParallelism
-    if spread_input and src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = _spread(points) if spread_input else points
     return src.mapInPandas(run, out_schema)
 
 
@@ -1403,10 +1478,7 @@ def snap_to_segments(
         if fine_zoom <= zoom:
             fine_zoom = None
 
-    src = points
-    par = points.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = _spread(points)
 
     def coarse(pts_df: DataFrame) -> DataFrame:
         cand = _ring_candidates(pts_df, segments, radius_m, zoom, seg_id,

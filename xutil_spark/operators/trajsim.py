@@ -63,6 +63,7 @@ from xutil_spark.functions import native
 from xutil_spark.operators.spatial_join import (
     _M_PER_DEG,
     _ring_guarantee_m,
+    pick_ring_zoom,
     with_cell,
 )
 
@@ -73,16 +74,6 @@ HAUSDORFF_SCHEMA = T.StructType([
     T.StructField("h_ba_m", T.DoubleType(), False),
     T.StructField("hausdorff_m", T.DoubleType(), False),
 ])
-
-
-def pick_hausdorff_zoom(tau_m: float, max_abs_lat: float = 60.0) -> int:
-    """FINEST zoom whose ring-1 static guarantee covers ``tau_m``
-    (finer cells = fewer candidate pairs; one level too fine would let
-    a qualifying pair straddle the neighbor block)."""
-    for z in range(30, -1, -1):
-        if _ring_guarantee_m(z, 1, max_abs_lat=max_abs_lat) >= tau_m:
-            return z
-    raise ValueError("tau too large for any zoom at this latitude bound")
 
 
 def _candidate_pairs(cells: DataFrame, zoom: int) -> DataFrame:
@@ -216,7 +207,7 @@ def hausdorff_join(
     metric above; ``hausdorff_m = max(h_ab, h_ba)``.  ``zoom=None``
     auto-picks the finest ring-1-covering zoom.  The static envelope
     bound assumes |lat| ≤ ``max_abs_lat`` — same contract as
-    ``encounter_join`` / ``distance_join``.
+    ``encounter_join``.
 
     Completeness: Hausdorff ≤ τ implies SOME cross-track point pair is
     within τ (any a∈A and its nearest b), so every qualifying pair
@@ -224,7 +215,7 @@ def hausdorff_join(
     pair to the prefilter.
     """
     if zoom is None:
-        zoom = pick_hausdorff_zoom(tau_m, max_abs_lat)
+        zoom = pick_ring_zoom(tau_m, 1, max_abs_lat)
     if _ring_guarantee_m(zoom, 1, max_abs_lat=max_abs_lat) < tau_m:
         raise ValueError("ring-1 guarantee below tau at this zoom: lower the zoom")
 
@@ -377,7 +368,7 @@ def frechet_join(
     bounded when tracks are bounded (resample/simplify upstream).
     """
     if zoom is None:
-        zoom = pick_hausdorff_zoom(tau_m, max_abs_lat)
+        zoom = pick_ring_zoom(tau_m, 1, max_abs_lat)
     if _ring_guarantee_m(zoom, 1, max_abs_lat=max_abs_lat) < tau_m:
         raise ValueError("ring-1 guarantee below tau at this zoom: lower the zoom")
     order_cols = [ts] + ([tiebreak] if tiebreak else [])
@@ -583,7 +574,7 @@ def dtw_join(
     to cover **2·τ** and never loses a qualifying pair.
     """
     if zoom is None:
-        zoom = pick_hausdorff_zoom(2.0 * tau_norm_m, max_abs_lat)
+        zoom = pick_ring_zoom(2.0 * tau_norm_m, 1, max_abs_lat)
     if _ring_guarantee_m(zoom, 1, max_abs_lat=max_abs_lat) < 2.0 * tau_norm_m:
         raise ValueError("ring-1 guarantee below 2*tau at this zoom: "
                          "lower the zoom")
