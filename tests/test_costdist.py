@@ -55,17 +55,37 @@ def test_sources_outside_cells_ignored(spark):
     assert d == {(0, 0): 0, (1, 0): 5000}
 
 
-def test_distributed_path_matches_gated(spark):
+def test_distributed_path_matches_gated(spark, monkeypatch):
+    """The distributed rounds reproduce the dense driver solve on a
+    serpentine grid whose shortest path (34 hops from the source) is
+    longer than two derived budgets of max(8, w + h) = 16 rounds, so
+    the fixed-point probe must carry the solve across >= 3 budgets."""
     import numpy as np
 
+    from xutil_spark.operators import costdist, dedup
+
+    w, h = 9, 7
     rng = np.random.default_rng(5)
+    # corridors on even rows; each odd row is a wall with one gap, at
+    # alternating ends
     rows = [(x, y, int(rng.integers(1, 9)))
-            for x in range(7) for y in range(6)
-            if (x * 3 + y * 5) % 7 != 0]
-    srcs = [(0, 0), (6, 5)]
-    gated = _solve(spark, rows, srcs)
-    dist = _solve(spark, rows, srcs, gate_cells=0, budget=4)
-    assert gated == dist and len(gated) > 10
+            for y in range(h) for x in range(w)
+            if y % 2 == 0 or x == (w - 1 if y % 4 == 1 else 0)]
+    gated = _solve(spark, rows, [(0, 0)])
+    calls = []
+    real = dedup._ckpt
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(costdist, "_GATE_CELLS", 0)
+    monkeypatch.setattr(dedup, "_ckpt", counting)
+    dist = _solve(spark, rows, [(0, 0)])
+    assert gated == dist and len(gated) == len(rows)
+    budget = max(8, w + h)
+    rounds = len(calls) - 2  # the edge and source checkpoints
+    assert rounds % budget == 0 and rounds // budget >= 3
 
 
 def _paths(spark, rows, srcs, tgts, **kw):
@@ -102,11 +122,14 @@ def test_path_routes_around_wall(spark):
     assert len(cells) >= 4  # forced detour through the open row
 
 
-def test_unreachable_target_silent_and_gate_raises(spark):
+def test_unreachable_target_silent_and_gate_raises(spark, monkeypatch):
     import pytest as _pt
+
+    from xutil_spark.operators import costdist
 
     rows = [(0, 0, 1), (9, 9, 1)]
     p = _paths(spark, rows, [(0, 0)], [(9, 9)])
     assert p == {}
+    monkeypatch.setattr(costdist, "_GATE_CELLS", 1)
     with _pt.raises(ValueError):
-        _paths(spark, rows, [(0, 0)], [(9, 9)], gate_cells=1)
+        _paths(spark, rows, [(0, 0)], [(9, 9)])

@@ -192,9 +192,24 @@ def test_embedding_near_dup_exact_bruteforce(spark):
     assert set(zip(got["a"], got["b"])) == {(0, 4)}
 
 
-def test_ngram_jaccard_broadcast_paths_equal(spark):
+def _jaccard_both_paths(df, pairs, monkeypatch):
+    """ngram_jaccard_pairs on the broadcast verify path and on the
+    shuffle join path, each forced by monkeypatching the byte gate; the
+    plan is checked to be the forced one."""
+    out = []
+    for max_bytes, verify in ((float("inf"), True), (0, False)):
+        monkeypatch.setattr(D, "_SETS_BROADCAST_MAX_BYTES", max_bytes)
+        res = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None)
+        plan = res._jdf.queryExecution().analyzed().toString()
+        assert ("MapInPandas" in plan) == verify
+        out.append(res.toPandas())
+    return out
+
+
+def test_ngram_jaccard_broadcast_paths_equal(spark, monkeypatch):
     """The vectorized broadcast verify (CSR + group searchsorted) must
-    return exactly the join path's rows — same pairs, same jaccard."""
+    return exactly the join path's rows — same pairs, same jaccard.
+    Each path is forced through the byte gate."""
     pdf = pd.DataFrame({
         "doc_id": range(8),
         "text": [f"the quick brown fox jumps over dog {i % 3}" for i in range(8)],
@@ -203,10 +218,7 @@ def test_ngram_jaccard_broadcast_paths_equal(spark):
     pairs = spark.createDataFrame(
         pd.DataFrame({"a": [0, 0, 1, 2, 5], "b": [3, 6, 4, 5, 7]})
     )
-    fast = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None,
-                                 broadcast_sets=True).toPandas()
-    slow = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None,
-                                 broadcast_sets=False).toPandas()
+    fast, slow = _jaccard_both_paths(df, pairs, monkeypatch)
     f = fast.sort_values(["a", "b"]).reset_index(drop=True)
     s = slow.sort_values(["a", "b"]).reset_index(drop=True)
     assert f["a"].tolist() == s["a"].tolist()
@@ -214,7 +226,7 @@ def test_ngram_jaccard_broadcast_paths_equal(spark):
     assert np.allclose(f["jaccard"], s["jaccard"])
 
 
-def test_ngram_jaccard_missing_pair_ids_drop(spark):
+def test_ngram_jaccard_missing_pair_ids_drop(spark, monkeypatch):
     """ADVICE regression: candidate pairs referencing a doc id ABSENT
     from the doc table must DROP in the broadcast verify path (matching
     the shuffle path's inner join) — not IndexError on ids beyond the
@@ -229,17 +241,14 @@ def test_ngram_jaccard_missing_pair_ids_drop(spark):
         "a": [0, 0, 1, 99],   # 1 absent (interior), 99 absent (beyond max)
         "b": [2, 3, 2, 4],    # 3 absent
     }))
-    fast = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None,
-                                 broadcast_sets=True).toPandas()
-    slow = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None,
-                                 broadcast_sets=False).toPandas()
+    fast, slow = _jaccard_both_paths(df, pairs, monkeypatch)
     assert sorted(zip(fast["a"], fast["b"])) == [(0, 2)]
     assert sorted(zip(slow["a"], slow["b"])) == [(0, 2)]
     assert np.allclose(fast["jaccard"], slow["jaccard"])
 
 
 def test_ngram_jaccard_auto_gate_is_byte_based(spark):
-    """broadcast_sets="auto" must pick the SHUFFLE path when the
+    """ngram_jaccard_pairs must pick the SHUFFLE path when the
     estimated set-block bytes (rows × avg text length × 8) exceed
     100 MB, even at a tiny row count — the gate is bytes, not rows."""
     import pandas as _pd
@@ -252,15 +261,14 @@ def test_ngram_jaccard_auto_gate_is_byte_based(spark):
     pairs = spark.createDataFrame(_pd.DataFrame({"a": [0], "b": [1]}))
 
     def plan_of(df):
-        out = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None,
-                                    broadcast_sets="auto")
+        out = D.ngram_jaccard_pairs(df, pairs, k=4, threshold=None)
         return out._jdf.queryExecution().analyzed().toString()
 
     assert "MapInPandas" in plan_of(small)      # dim-sized → broadcast verify
     assert "MapInPandas" not in plan_of(big)    # byte gate → shuffle join
 
 
-def test_connected_components_vs_networkless_oracle(spark):
+def test_connected_components_vs_networkless_oracle(spark, monkeypatch):
     """CC over hand-built edges: chains, cliques, self-pairs, and a
     long path — BOTH strategies (driver union-find under the edge
     gate; iterative pointer jumping forced with gate=0) must produce
@@ -277,24 +285,34 @@ def test_connected_components_vs_networkless_oracle(spark):
     }
     got_uf = D.connected_components(spark.createDataFrame(edges)).toPandas()
     assert dict(zip(got_uf["id"], got_uf["cluster_id"])) == expect
-    got_it = D.connected_components(
-        spark.createDataFrame(edges), driver_edge_gate=0
-    ).toPandas()
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGE_GATE", 0)
+    got_it = D.connected_components(spark.createDataFrame(edges)).toPandas()
     assert dict(zip(got_it["id"], got_it["cluster_id"])) == expect
 
 
-def test_connected_components_long_chain_log_rounds(spark):
+def test_connected_components_long_chain_log_rounds(spark, monkeypatch):
     """The ITERATIVE path (gate=0) must label a 64-node PATH within
     O(log D) rounds with NO per-round driver count: the fixed round
-    budget is ⌈log₂(64)⌉+1 = 7 plus one fixed-point check, and
-    max_iters=12 would be nowhere near enough for plain O(diameter)
+    budget is ⌈log₂(64)⌉+1 = 7 plus one fixed-point check, and 12
+    rounds would be nowhere near enough for plain O(diameter)
     min-label propagation (63 rounds), so this pins the jump step AND
-    the budget-based termination."""
+    the budget-based termination.  Label rounds are counted through
+    ``_ckpt``, which materializes each round's labels."""
+    calls = []
+    real = D._ckpt
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGE_GATE", 0)
+    monkeypatch.setattr(D, "_ckpt", counting)
     edges = pd.DataFrame({"a": list(range(63)), "b": list(range(1, 64))})
-    got = D.connected_components(spark.createDataFrame(edges),
-                                 max_iters=12, driver_edge_gate=0).toPandas()
+    got = D.connected_components(spark.createDataFrame(edges)).toPandas()
     assert len(got) == 64
     assert set(got["cluster_id"]) == {0}
+    rounds = len(calls) - 3  # the edge, both-direction and seed-label checkpoints
+    assert 1 <= rounds <= 12
 
 
 def test_dedup_by_clusters_keeps_min_per_component(spark):

@@ -3,6 +3,7 @@
 import numpy as np
 from pyspark.sql import functions as F
 
+from xutil_spark.operators import pq
 from xutil_spark.operators.pq import pq_topk, pq_train
 
 
@@ -59,8 +60,8 @@ def test_dim_not_divisible_raises(spark):
         pq_train(df, m=8)
 
 
-def test_topk_query_gate_and_chunked_fallback(spark):
-    """The driver-collect gate (max_query_rows) and its distributed
+def test_topk_query_gate_and_chunked_fallback(spark, monkeypatch):
+    """The driver-collect gate (_MAX_QUERY_ROWS) and its distributed
     slice-broadcast fallback: above the gate the hash-sliced path must
     reproduce the broadcast path bit-exactly."""
     emb = _emb(spark)
@@ -70,8 +71,8 @@ def test_topk_query_gate_and_chunked_fallback(spark):
     assert nq > 3  # the tiny gate below must actually force slicing
 
     base = sorted(map(tuple, pq_topk(emb, qs, cent, topk=3).collect()))
-    chunk = sorted(map(tuple, pq_topk(
-        emb, qs, cent, topk=3, max_query_rows=3).collect()))
+    monkeypatch.setattr(pq, "_MAX_QUERY_ROWS", 3)
+    chunk = sorted(map(tuple, pq_topk(emb, qs, cent, topk=3).collect()))
     assert base == chunk
 
 
@@ -93,15 +94,16 @@ def test_topk_sliced_path_destroys_its_broadcasts(spark, monkeypatch):
         made.append(bc)
         return bc
 
+    monkeypatch.setattr(pq, "_MAX_QUERY_ROWS", 3)
     monkeypatch.setattr(SparkContext, "broadcast", recording)
-    out = pq_topk(emb, qs, cent, topk=3, max_query_rows=3)
+    out = pq_topk(emb, qs, cent, topk=3)
     monkeypatch.undo()
     assert len(made) >= 3  # the codebook + at least two slices
     assert [bc._jbroadcast.isValid() for bc in made] == [False] * len(made)
     assert out.count() > 0
 
 
-def test_topk_empty_queries_and_duplicate_id_guard(spark):
+def test_topk_empty_queries_and_duplicate_id_guard(spark, monkeypatch):
     import pytest
     from pyspark.sql import functions as F
 
@@ -119,5 +121,6 @@ def test_topk_empty_queries_and_duplicate_id_guard(spark):
     dups = one
     for _ in range(7):
         dups = dups.unionByName(one)
+    monkeypatch.setattr(pq, "_MAX_QUERY_ROWS", 3)
     with pytest.raises(ValueError, match="non-distinct"):
-        pq_topk(emb, dups, cent, topk=3, max_query_rows=3)
+        pq_topk(emb, dups, cent, topk=3)

@@ -119,19 +119,6 @@ def test_bigram_lm_scores_hand_computed(spark):
     assert 2 not in out
 
 
-def test_bigram_lm_no_broadcast_path_matches(spark):
-    from xutil_spark.operators.textops import bigram_lm_scores
-
-    docs = spark.createDataFrame([
-        Row(doc_id=i, text=" ".join(
-            f"w{(i * 7 + j * 3) % 5}" for j in range(10)))
-        for i in range(20)
-    ])
-    a = {tuple(r) for r in bigram_lm_scores(docs, broadcast_vocab=True).collect()}
-    b = {tuple(r) for r in bigram_lm_scores(docs, broadcast_vocab=False).collect()}
-    assert a == b and len(a) == 20
-
-
 # ---------------------------------------------------- color entropy
 
 

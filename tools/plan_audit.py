@@ -146,8 +146,8 @@ def main() -> None:
         "  loss mid-CC recovers on a real cluster; localCheckpoint only",
         "  in local mode).",
         "- pq_top5's query-set driver collect is GATED (operators/pq.py",
-        "  pq_topk, max_query_rows default 64k): one",
-        "  limit(max_query_rows + 1) collect is both the gate and the",
+        "  pq_topk, private _MAX_QUERY_ROWS = 64k): one",
+        "  limit(_MAX_QUERY_ROWS + 1) collect is both the gate and the",
         "  query set.  Above the gate the slice-broadcast path runs —",
         "  queries hash-split (xxhash64 mod, no global sort) into",
         "  gate-bounded slices, each slice's ADC tables broadcast against",

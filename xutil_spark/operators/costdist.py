@@ -22,18 +22,20 @@ Scale shape (10^9+ cells)
 -------------------------
 Two strategies, one semantics (the jaccard/CC dual-path convention):
 
-- **gated** (extent area ≤ ``gate_cells``): one driver-side vectorized
-  Bellman-Ford over the dense (H, W) int64 grid — 8 shifted-array min
-  updates per round, fixpoint in O(path-hops) rounds, microseconds at
-  analysis scale.  The collect is bounded by the gate.
+- **gated** (extent area ≤ ``_GATE_CELLS``, 4 M cells): one
+  driver-side vectorized Bellman-Ford over the dense (H, W) int64 grid
+  — 8 shifted-array min updates per round, fixpoint in O(path-hops)
+  rounds, microseconds at analysis scale.  The collect is bounded by
+  the gate.
 - **distributed**: edges materialize once (8-offset explode + one
   equi-join back to the cell table), then budgeted rounds of
   join-relax-min — each round ONE shuffle at cell cardinality, a
   ``localCheckpoint`` to truncate lineage, and one monotone fixpoint
   probe (Σ dist is a strictly decreasing integer; equal sums ⇒
-  converged) per ``budget`` rounds instead of per round (the hardened
-  CC pattern).  Rounds grow with the optimal path's hop count — the
-  honest cost of propagation on a weighted grid.
+  converged) per budget of ``max(8, w + h)`` rounds instead of per
+  round (the hardened CC pattern).  Rounds grow with the optimal
+  path's hop count — the honest cost of propagation on a weighted
+  grid.
 """
 
 from __future__ import annotations
@@ -44,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _INF = np.int64(2**62)
+# extents of at most this many cells (w·h) solve as one dense driver grid
+_GATE_CELLS = 4_000_000
 _OFFS = [(-1, -1, 1414), (-1, 0, 1000), (-1, 1, 1414),
          (0, -1, 1000), (0, 1, 1000),
          (1, -1, 1414), (1, 0, 1000), (1, 1, 1414)]
@@ -86,8 +90,6 @@ def cost_distance(
     x: str = "cx",
     y: str = "cy",
     cost: str = "cost",
-    gate_cells: int = 4_000_000,
-    budget: int | None = None,
 ) -> DataFrame:
     """Minimum accumulated cost from the source set to every reachable
     cell.  ``cells``: (x, y, cost) with positive integer costs — absent
@@ -107,7 +109,7 @@ def cost_distance(
     w = int(ext["x1"]) - int(ext["x0"]) + 1
     h = int(ext["y1"]) - int(ext["y0"]) + 1
 
-    if w * h <= gate_cells:
+    if w * h <= _GATE_CELLS:
         cp = cells.select(x, y, cost).toPandas()
         sp = sources.select(x, y).toPandas()
         cg = np.full((h, w), -1, dtype=np.int64)
@@ -156,7 +158,7 @@ def cost_distance(
             .select("_x", "_y", F.lit(0).cast("long").alias("_d"))
             .distinct())
     dist = _ckpt(dist)
-    rounds = budget or max(8, w + h)
+    rounds = max(8, w + h)
     total = None
     while True:
         for _ in range(rounds):
@@ -213,7 +215,6 @@ def least_cost_paths(
     x: str = "cx",
     y: str = "cy",
     cost: str = "cost",
-    gate_cells: int = 4_000_000,
 ) -> DataFrame:
     """The optimal route behind ``cost_distance``: for each reachable
     target cell, the ordered cell sequence back to the nearest source
@@ -242,9 +243,9 @@ def least_cost_paths(
         return spark.createDataFrame([], schema)
     w = int(ext["x1"]) - int(ext["x0"]) + 1
     h = int(ext["y1"]) - int(ext["y0"]) + 1
-    if w * h > gate_cells:
+    if w * h > _GATE_CELLS:
         raise ValueError(
-            f"extent {w}x{h} exceeds gate_cells={gate_cells}: solve the "
+            f"extent {w}x{h} exceeds _GATE_CELLS={_GATE_CELLS}: solve the "
             "surface with cost_distance and re-run per-target on a "
             "corridor bbox (see docstring)")
     x0, y0 = int(ext["x0"]), int(ext["y0"])

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xutil_spark.plans.layout import spread
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one row per distinct text (min id wins — deterministic)."""
@@ -82,13 +84,8 @@ def minhash_signatures(
     shingles), as in the set-based definition."""
     n = bands * rows
     n_md5 = (n + 3) // 4
-    # the digest work is ~k·(n/4) md5s per input row — a small-file scan
-    # (one task) would serialize it, so spread the rows first; at scale
-    # the scan already has enough splits and this is a cheap rebalance
-    par = df.sparkSession.sparkContext.defaultParallelism
-    src = df.select(F.col(id_col), F.col(text_col))
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    # the digest work is ~k·(n/4) md5s per input row
+    src = spread(df.select(F.col(id_col), F.col(text_col)))
     ex = src.select(F.col(id_col), F.explode(shingles(text_col, k)).alias("_s"))
     digs = [F.md5(F.concat(F.lit(f"{j}|"), F.col("_s"))) for j in range(n_md5)]
     vals = [F.substring(digs[i // 4], 1 + 8 * (i % 4), 8) for i in range(n)]
@@ -126,38 +123,42 @@ def minhash_lsh_pairs(
     )
 
 
+# ngram_jaccard_pairs broadcasts the per-doc set table only when it is
+# provably dim-sized: at most this many docs and this many estimated bytes
+_SETS_BROADCAST_MAX_ROWS = 1_000_000
+_SETS_BROADCAST_MAX_BYTES = 100 * 1024 * 1024
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, pairs: DataFrame, text_col: str = "text",
     id_col: str = "doc_id", k: int = 8, threshold: float = 0.7,
-    broadcast_sets: bool | str = "auto",
 ) -> DataFrame:
     """Exact Jaccard over char-k-shingle SETS for the candidate pairs.
 
     The shingle sets are carried as DISTINCT xxhash64 values (8 bytes vs
     ~30 per string shingle — the hash is engine-internal, the Jaccard
     value is identical to the string-set version absent 64-bit
-    collisions).  ``broadcast_sets``: True broadcasts the per-doc set
-    table so the — much larger — candidate-pair table never shuffles;
-    False uses a shuffle (sort-merge) join, the only safe plan when the
-    doc table itself is fact-sized (10^12 docs would OOM a broadcast);
-    "auto" broadcasts only when the set block is provably dim-sized
-    BY BYTES: rows × avg-shingle-count × 8 ≤ 100 MB (shingle count ≤
-    text length, so one cheap count+avg(length) agg bounds it above —
-    a row-only gate would let 1M docs × ~300 hashes ≈ 2.4 GB through
-    the driver).  |A∪B| = |A| + |B| − |A∩B| saves the second array
-    traversal."""
-    if broadcast_sets == "auto":
-        st = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.length(text_col)).alias("alen"),
-        ).first()
-        est_bytes = (st["n"] or 0) * float(st["alen"] or 0.0) * 8
-        broadcast_sets = (st["n"] or 0) <= 1_000_000 and est_bytes <= 100 * 1024 * 1024
+    collisions).  The path comes from the doc table's size: when the
+    set block is provably dim-sized BY BYTES (≤ 1 M docs and rows ×
+    avg-shingle-count × 8 ≤ 100 MB; shingle count ≤ text length, so one
+    cheap count+avg(length) agg bounds it above — a row-only gate would
+    let 1M docs × ~300 hashes ≈ 2.4 GB through the driver), the per-doc
+    set table is broadcast so the — much larger — candidate-pair table
+    never shuffles; otherwise a shuffle (sort-merge) join, the only
+    safe plan when the doc table itself is fact-sized (10^12 docs would
+    OOM a broadcast).  |A∪B| = |A| + |B| − |A∩B| saves the second
+    array traversal."""
+    st = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.avg(F.length(text_col)).alias("alen"),
+    ).first()
+    n_docs = st["n"] or 0
+    est_bytes = n_docs * float(st["alen"] or 0.0) * 8
     hashed = F.array_distinct(
         F.expr(f"transform({_shingles_sql(text_col, k)}, s -> xxhash64(s))")
     )
     sets = df.select(F.col(id_col), hashed.alias("_set"))
-    if broadcast_sets:
+    if n_docs <= _SETS_BROADCAST_MAX_ROWS and est_bytes <= _SETS_BROADCAST_MAX_BYTES:
         return _jaccard_verify_np(sets, pairs, id_col, threshold)
     sa = sets.select(F.col(id_col).alias("a"), F.col("_set").alias("_sa"))
     sb = sets.select(F.col(id_col).alias("b"), F.col("_set").alias("_sb"))
@@ -280,7 +281,7 @@ def _unionfind_driver(spark, edges_pd: pd.DataFrame, id_type: str) -> DataFrame:
     """Driver-side union-find over a dim-scale edge list (path-halving
     find, union-by-min so the root IS the smallest member).  One pass
     over the edges + one find per node — O(E α(E)); used only below the
-    byte gate in ``connected_components``."""
+    edge gate in ``connected_components``."""
     parent: dict = {}
 
     def find(x):
@@ -314,9 +315,12 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def connected_components(
-    pairs: DataFrame, max_iters: int = 50, driver_edge_gate: int = 2_000_000,
-) -> DataFrame:
+# connected_components runs driver union-find at or below this many
+# distinct edges (≈ 32 MB of int64 pairs)
+_CC_DRIVER_EDGE_GATE = 2_000_000
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Duplicate-CLUSTER resolution: connected components over the
     near-dup pair edges → ``(id, cluster_id)`` where cluster_id is the
     smallest member id of the component (the canonical survivor).
@@ -324,7 +328,7 @@ def connected_components(
     Two strategies behind one API (same result, pytest-pinned):
 
     * **driver union-find** when the (deduped) edge list is dim-scale
-      (≤ ``driver_edge_gate`` edges ≈ 32 MB of int64 pairs — the same
+      (≤ 2 M edges ≈ 32 MB of int64 pairs — the same
       byte-gating idea as the jaccard-verify broadcast path): collect
       once, path-halving union-find, one createDataFrame back.  Near-dup
       edge sets are almost always dim-scale even for huge corpora
@@ -340,11 +344,14 @@ def connected_components(
       O(diameter) rounds; the jump step halves label-chain length every
       round → O(log diameter) for any graph shape.
 
-    Iterative termination (cluster-hardened, round 4): rounds run in
-    fixed budgets of ⌈log₂(n_nodes)⌉ + 1 — the pointer-jumping bound —
-    with NO per-round driver count; after each budget ONE fixed-point
-    check runs (any edge whose endpoints disagree?) and the loop exits
-    when none do.  Labels materialize per round via ``_ckpt``: reliable
+    Iterative termination: rounds run in fixed budgets of
+    ⌈log₂(n_nodes)⌉ + 1 — the pointer-jumping bound — with NO per-round
+    driver count; after each budget ONE fixed-point check runs (any
+    edge whose endpoints disagree?) and the loop exits when none do.
+    There is no round cap, so the labels returned are always the
+    converged ones; the loop still terminates, because labels only
+    decrease and any crossing edge lowers one of them in the next
+    round.  Labels materialize per round via ``_ckpt``: reliable
     ``checkpoint()`` when a checkpoint dir is set (executor loss mid-CC
     recovers instead of killing a 10^12-edge job), else localCheckpoint.
 
@@ -361,8 +368,8 @@ def connected_components(
     # larger than the data is a full scan), and exactly gate+1 rows —
     # dropped, never used — when it does not; the old count() + full
     # toPandas() pair cost two extra passes over the edge lineage
-    head = und.limit(driver_edge_gate + 1).toPandas()
-    if len(head) <= driver_edge_gate:
+    head = und.limit(_CC_DRIVER_EDGE_GATE + 1).toPandas()
+    if len(head) <= _CC_DRIVER_EDGE_GATE:
         return _unionfind_driver(
             spark, head.rename(columns={"a": "src", "b": "dst"}), id_type
         )
@@ -379,9 +386,8 @@ def connected_components(
     )
     n_nodes = labels.count()
     budget = max(1, math.ceil(math.log2(max(2, n_nodes))) + 1)
-    rounds = 0
-    while rounds < max_iters:
-        for _ in range(min(budget, max_iters - rounds)):
+    while True:
+        for _ in range(budget):
             # 1. propagate: min over self + neighbor labels (pre-aggregated
             #    map-side before the join output shuffles)
             nbr_min = (
@@ -407,7 +413,6 @@ def connected_components(
                     .alias("cluster_id"),
                 )
             )
-            rounds += 1
         # fixed point ⇔ no edge crosses two labels (labels only
         # decrease, so agreement on every edge means per-component min)
         lab_s = labels.select(F.col("id").alias("src"),

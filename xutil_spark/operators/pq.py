@@ -201,18 +201,21 @@ def _adc_candidates(
     return codes.mapInPandas(scan, "qid long, vec_id long, adc_dist long"), bc
 
 
+# pq_topk collects at most this many query rows on the driver at once
+_MAX_QUERY_ROWS = 65536
+
+
 def pq_topk(
     df: DataFrame, queries: DataFrame, cent: np.ndarray, topk: int = 5,
     vec: str = "embedding", id_col: str = "vec_id", qscale: int = 1024,
-    max_query_rows: int = 65536,
 ) -> DataFrame:
     """ADC top-k: for each query row, the ``topk`` nearest codes by
     integer asymmetric distance (self-matches excluded).
 
-    The query set is collected with ``limit(max_query_rows + 1)`` — one
-    job that is both the driver-memory gate and the collect:
+    The query set is collected with ``limit(_MAX_QUERY_ROWS + 1)`` (64 k
+    rows) — one job that is both the driver-memory gate and the collect:
 
-    * at most ``max_query_rows`` rows — the queries, sorted by id on
+    * at most ``_MAX_QUERY_ROWS`` rows — the queries, sorted by id on
       the driver, broadcast their ADC tables in one scan;
     * more — the scale path: queries hash-split (xxhash64 mod, NO
       global sort — an ntile window would pull the whole query table
@@ -231,11 +234,11 @@ def pq_topk(
     Query ids must be distinct (duplicate qids would merge their
     candidate lists in the final per-qid window on either path).
     """
-    q = queries.select(id_col, vec).limit(max_query_rows + 1).collect()
+    q = queries.select(id_col, vec).limit(_MAX_QUERY_ROWS + 1).collect()
     if not q:
         return queries.sparkSession.createDataFrame(
             [], "qid long, vec_id long, rank int, adc_dist long")
-    if len(q) <= max_query_rows:
+    if len(q) <= _MAX_QUERY_ROWS:
         q.sort(key=lambda r: r[0])
         codes = pq_encode(df, cent, vec, id_col, qscale)[0]
         cand = _adc_candidates(codes, q, cent, topk, id_col, qscale)[0]
@@ -245,7 +248,7 @@ def pq_topk(
         # 80% of the gate per slice in expectation; xxhash64 keys are
         # deterministic, so re-runs slice identically.
         n_q = queries.count()
-        per_slice = max(1, int(max_query_rows * 0.8))
+        per_slice = max(1, int(_MAX_QUERY_ROWS * 0.8))
         n_slices = max(2, -(-n_q // per_slice))
         # ONE pass over the query table: slice ids computed once and
         # persisted, so the per-slice collects below filter the cached
@@ -260,11 +263,11 @@ def pq_topk(
                  sliced.groupBy("_sl").agg(F.count("*").alias("n"))
                  .collect()}
         oversized = {sl: n for sl, n in sizes.items()
-                     if n > 2 * max_query_rows}
+                     if n > 2 * _MAX_QUERY_ROWS}
         if oversized:
             sliced.unpersist()
             raise ValueError(
-                f"hash slices exceed 2x max_query_rows={max_query_rows}: "
+                f"hash slices exceed 2x _MAX_QUERY_ROWS={_MAX_QUERY_ROWS}: "
                 f"{oversized} — query ids are likely non-distinct "
                 "(duplicate qids are unsupported)")
         codes, enc_bc = pq_encode(df, cent, vec, id_col, qscale)

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from xutil_spark.plans.layout import spread
+
 
 def _dot(a, b) -> Column:
     return F.aggregate(
@@ -53,20 +55,16 @@ def cosine_topk_brute(
     c_id: str = "vec_id",
     q_vec: str = "embedding",
     c_vec: str = "embedding",
-    broadcast_corpus: bool = True,
 ) -> DataFrame:
-    """Exact top-k by cosine: broadcast the corpus (or the queries —
-    whichever is the small side) and rank per query.
+    """Exact top-k by cosine: broadcast the corpus and rank per query.
+    The ``q_id != nn_id`` join is a non-equi join, so the broadcast
+    corpus is what keeps it a broadcast nested-loop join.
 
     Output: (q_id, c_id aliased nn_id, score, rank)."""
-    q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("_qv"))
-    # a single-split embeddings scan would serialize the q×corpus dot
-    # products — spread the query side first (no-op on real clusters)
-    par = queries.sparkSession.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < par:
-        q = q.repartition(par)
-    c = corpus.select(F.col(c_id).alias("nn_id"), F.col(c_vec).alias("_cv"))
-    c = F.broadcast(c) if broadcast_corpus else c
+    # spread the query side so a small scan does not serialize the
+    # q×corpus dot products
+    q = spread(queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("_qv")))
+    c = F.broadcast(corpus.select(F.col(c_id).alias("nn_id"), F.col(c_vec).alias("_cv")))
     scored = (
         q.join(c, F.col("q_id") != F.col("nn_id"), "inner")
         .withColumn("score", F.round(cosine_score(F.col("_qv"), F.col("_cv")), 6))

@@ -46,6 +46,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from xutil_spark.functions import native
+from xutil_spark.plans.layout import spread
 
 # ---------------------------------------------------------------------------
 
@@ -76,20 +77,11 @@ def _grid_cell(lon: Column, lat: Column, zoom: int) -> Column:
         F.pmod(native.tile_x(lon, zoom), F.lit(n).cast("long")), y, zoom)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Rebalance a small scan to ``defaultParallelism`` partitions: a
-    scan with few splits would serialize the per-row work that follows
-    (a no-op once the scan already has enough splits)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
-
-
 def point_in_tile_join(
     points: DataFrame,
     tiles: DataFrame,
     zoom: int,
     how: str = "inner",
-    broadcast_tiles: bool = True,
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
@@ -99,10 +91,10 @@ def point_in_tile_join(
     expression.  Tile containment IS cell equality (both sides use the
     same floor semantics, gis.go:262-267), so no refinement is needed —
     output rows match the reference's ``Wgs2Tile`` assignments exactly.
+    The tile dim is always broadcast.
     """
     pts = with_cell(points, zoom, lon, lat)
-    dim = F.broadcast(tiles) if broadcast_tiles else tiles
-    return pts.join(dim, on="cell", how=how)
+    return pts.join(F.broadcast(tiles), on="cell", how=how)
 
 
 # ---------------------------------------------------------------------------
@@ -315,9 +307,12 @@ def _ring_guarantee_expr(lat_col: Column, zoom: int, ring: int = 1) -> Column:
     return F.least(gx, gy)
 
 
+# the finest zoom the kNN and snap zoom pickers try
+_PICK_MAX_ZOOM = 14
+
+
 def pick_knn_zoom(refs: DataFrame, k: int,
-                  ref_lon: str = "lon", ref_lat: str = "lat",
-                  max_zoom: int = 14) -> int:
+                  ref_lon: str = "lon", ref_lat: str = "lat") -> int:
     """Choose the starting zoom so a 3×3 block holds ~2k refs on
     average: one tiny aggregation on the (dim-sized) refs table.  Too
     fine a grid wastes escalation rounds; too coarse floods the window
@@ -330,7 +325,7 @@ def pick_knn_zoom(refs: DataFrame, k: int,
     n = max(int(row["n"]), 1)
     dlon = max(float(row["lo2"]) - float(row["lo1"]), 1e-6)
     dlat = max(float(row["la2"]) - float(row["la1"]), 1e-6)
-    for z in range(max_zoom, 0, -1):
+    for z in range(_PICK_MAX_ZOOM, 0, -1):
         tiles_x = max(dlon / (360.0 / 2 ** z), 1.0)
         tiles_y = max(dlat / (360.0 / 2 ** z), 1.0)  # ~lat span below 60°
         if 9.0 * n / (tiles_x * tiles_y) >= 2.0 * k:
@@ -435,7 +430,7 @@ def knn_join_np(
 
     # a small-file scan yields few splits and would cap the search
     # parallelism (measured 8 tasks on 32 cores → 2× wall)
-    return _spread(points).mapInPandas(topk_batches, schema=out_schema)
+    return spread(points).mapInPandas(topk_batches, schema=out_schema)
 
 
 def _refs_arrays(ref_pd, ref_id: str, ref_lon: str, ref_lat: str):
@@ -830,7 +825,6 @@ def distance_join(
     radius_m: float,
     point_id: str = "image_id",
     ref_id: str = "ref_id",
-    broadcast_refs: bool = True,
     lon: str = "lon",
     lat: str = "lat",
     ref_lon: str = "lon",
@@ -843,17 +837,17 @@ def distance_join(
     points explode to the ring of neighbor cells that provably holds
     every ref within the radius, equi-join the refs on cell
     (``_grid_cell``, defined at every coordinate), and keep the pairs
-    whose JVM-native haversine (``dist_m``) is ≤ radius_m.
+    whose JVM-native haversine (``dist_m``) is ≤ radius_m.  The refs
+    are always broadcast.
     """
     zoom, ring = _range_zoom_ring(refs, radius_m, ref_lat)
     refs_c, _extras = _refs_with_cell(refs, _grid_cell, zoom, ref_id, ref_lon, ref_lat)
-    refs_dim = F.broadcast(refs_c) if broadcast_refs else refs_c
     # the (2r+1)²-way explode inherits the scan's split count
-    pts = _spread(points).withColumn(
+    pts = spread(points).withColumn(
         "_pcell", _grid_cell(F.col(lon), F.col(lat), zoom))
     return (
         _explode_neighbors(pts, F.col("_pcell"), zoom, ring)
-        .join(refs_dim, F.col("_ncell") == F.col("_rcell"), "inner")
+        .join(F.broadcast(refs_c), F.col("_ncell") == F.col("_rcell"), "inner")
         .withColumn(
             "dist_m",
             native.haversine_m(F.col(lon), F.col(lat), F.col("_rlon"), F.col("_rlat")),
@@ -1050,7 +1044,6 @@ def clipped_pip_join(
     zoom: int = 12,
     poly_id: str = "poly_id",
     wkt: str = "wkt",
-    broadcast_polys: bool = True,
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
@@ -1061,12 +1054,12 @@ def clipped_pip_join(
     points, and refine is O(fragment edges).  Prefer this over the
     plain cover when polygons are complex (many vertices) or much
     larger than a tile; the plain path wins for small simple polygons
-    where clipping overhead dominates.
+    where clipping overhead dominates.  The fragment dim is always
+    broadcast.
     """
     frags = clip_polygons_to_cells(polygons, zoom, wkt=wkt)
     pts = with_cell(points, zoom, lon, lat)
-    dim = F.broadcast(frags) if broadcast_polys else frags
-    cand = pts.join(dim, on="cell", how="inner")
+    cand = pts.join(F.broadcast(frags), on="cell", how="inner")
     refine = _pip_refine_udf()
     return (
         cand.filter(refine(F.col(lon), F.col(lat), F.col("frag_wkt")))
@@ -1121,7 +1114,7 @@ def _segments_with_cells(segments: DataFrame, zoom: int, seg_id: str,
     )
     # road tables often arrive in 1-2 partitions; the per-segment python
     # cover loop is the cost, so spread it before exploding
-    src = _spread(src)
+    src = spread(src)
 
     def run(batches):
         for b in batches:
@@ -1242,8 +1235,7 @@ def _snap_emit(best: DataFrame, point_id: str, seg_id: str,
 def pick_snap_fine_zoom(segments: DataFrame, coarse_zoom: int,
                         ax: str = "ax", ay: str = "ay",
                         bx: str = "bx", by: str = "by",
-                        budget_rows: int = 750_000,
-                        max_fine_zoom: int = 14) -> int:
+                        budget_rows: int = 750_000) -> int:
     """Choose the fine-pass zoom for the escalated snap join: the
     FINEST zoom whose estimated supercover row count stays within
     ``budget_rows`` (the fine dim is broadcast, so it must stay
@@ -1265,7 +1257,7 @@ def pick_snap_fine_zoom(segments: DataFrame, coarse_zoom: int,
     ).collect()[0]
     s = float(row["s"] or 0.0)
     n = int(row["n"] or 0)
-    for z in range(max_fine_zoom, coarse_zoom, -1):
+    for z in range(_PICK_MAX_ZOOM, coarse_zoom, -1):
         if s / (360.0 / 2 ** z) + n <= budget_rows:
             return z
     return coarse_zoom
@@ -1389,7 +1381,7 @@ def _snap_candidates_np(points: DataFrame, segments: DataFrame, seg_pd,
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    src = _spread(points) if spread_input else points
+    src = spread(points) if spread_input else points
     return src.mapInPandas(run, out_schema)
 
 
@@ -1478,7 +1470,7 @@ def snap_to_segments(
         if fine_zoom <= zoom:
             fine_zoom = None
 
-    src = _spread(points)
+    src = spread(points)
 
     def coarse(pts_df: DataFrame) -> DataFrame:
         cand = _ring_candidates(pts_df, segments, radius_m, zoom, seg_id,

@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from xutil_spark.plans.layout import spread
+
 # tiny per-language stopword lists for the n-gram/stopword heuristic —
 # deliberately small and fixed so the oracle SQL can embed them verbatim
 LANG_STOPWORDS = {
@@ -333,7 +335,6 @@ def decontaminate(
     n: int = 13,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag every training document sharing
     at least one word-level ``n``-gram with a benchmark/eval corpus
@@ -345,27 +346,17 @@ def decontaminate(
 
     Scale shape (10^12-doc training fact vs ~1e3-1e6-doc benchmark):
     the benchmark side reduces to a DISTINCT n-gram-hash dim —
-    dim-sized next to the fact — and is broadcast, so the fact side
-    never shuffles for the probe; n-grams are carried as xxhash64
+    dim-sized next to the fact — and is always broadcast, so the fact
+    side never shuffles for the probe; n-grams are carried as xxhash64
     values (8 bytes vs ~100-char strings) and the per-doc hit count is
-    one map-side-combined aggregation on ``id``.  For benchmark dims
-    past broadcast range, set ``broadcast_benchmark=False`` for a
-    shuffle (sort-merge) join on the hash."""
-    bench = (
+    one map-side-combined aggregation on ``id``."""
+    bench = F.broadcast(
         benchmark.select(F.explode(word_ngrams(text_col, n)).alias("_g"))
         .select(F.xxhash64("_g").alias("_h"))
         .distinct()
     )
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    # the n-gram build is ~dl array slices + hashes per row — a small-
-    # file scan (one split) would serialize it; at scale the scan
-    # already has enough splits and this is a no-op
-    src = docs
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    grams = src.select(
+    # the n-gram build is ~dl array slices + hashes per row
+    grams = spread(docs).select(
         F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("_g")
     ).select(F.col(id_col), F.xxhash64("_g").alias("_h"))
     hits = (
@@ -389,7 +380,6 @@ def bigram_pmi(
     min_count: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Pointwise mutual information of adjacent token pairs across the
     corpus (Church & Hanks 1990): PMI(x,y) = ln((c_xy/M) / ((c_x/N)·
@@ -401,18 +391,10 @@ def bigram_pmi(
 
     Scale shape: two map-side-combined counts (unigrams, bigrams) —
     each one shuffle at vocab/bigram-vocab cardinality, dim-sized next
-    to a 10^12-doc fact; the unigram dim joins back broadcast, and the
-    two corpus totals ride along as 1-row broadcast frames.  No
-    fact-sized shuffle anywhere.  ``broadcast_vocab=False`` drops the
-    broadcast hints for web-crawl vocabularies too large to ship to
-    every executor: the two unigram joins become shuffles at
-    bigram-table cardinality and AQE still promotes them back to
-    broadcast when the measured dim is small."""
-    src = docs
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    toks = src.select(tokens(text_col).alias("_t"))
+    to a 10^12-doc fact; the unigram dim always joins back broadcast,
+    and the two corpus totals ride along as 1-row broadcast frames.  No
+    fact-sized shuffle anywhere."""
+    toks = spread(docs).select(tokens(text_col).alias("_t"))
     uni = (
         toks.select(F.explode("_t").alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))
@@ -440,15 +422,13 @@ def bigram_pmi(
     # before the min_count output filter
     m_big = big.agg(F.sum("n_pair").alias("_m"))
     big = big.filter(F.col("n_pair") >= min_count)
-    u1 = uni.select(F.col("w").alias("w1"), F.col("c_w").alias("_c1"))
-    u2 = uni.select(F.col("w").alias("w2"), F.col("c_w").alias("_c2"))
+    u1 = F.broadcast(uni.select(F.col("w").alias("w1"), F.col("c_w").alias("_c1")))
+    u2 = F.broadcast(uni.select(F.col("w").alias("w2"), F.col("c_w").alias("_c2")))
     # mirror the oracle token-for-token: ln((n_pair / m) / ((c1 / n) * (c2 / n)))
     pmi = F.log(
         (F.col("n_pair") / F.col("_m"))
         / ((F.col("_c1") / F.col("_n")) * (F.col("_c2") / F.col("_n")))
     )
-    if broadcast_vocab:
-        u1, u2 = F.broadcast(u1), F.broadcast(u2)
     return (
         big.join(u1, "w1")
         .join(u2, "w2")
@@ -466,7 +446,6 @@ def token_kl_drift(
     docs: DataFrame,
     slice_col: str = "source",
     text_col: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Per-slice token-distribution drift: KL(P_slice ‖ P_corpus) =
     Σ_w (c_sw/n_s)·ln((c_sw/n_s)/(c_w/n)) over the slice's vocabulary —
@@ -480,12 +459,8 @@ def token_kl_drift(
     Scale shape: the only fact-sized stage is the explode feeding the
     (slice, word) count, and partial (map-side) aggregation collapses
     it to |slices|×vocab partial rows before the one shuffle; corpus
-    and per-slice totals reduce from that dim table, join back
-    broadcast, and the grand total rides as a 1-row broadcast frame.
-    ``broadcast_vocab=False`` unhints the corpus-histogram join for
-    vocabularies too large to broadcast (web-crawl scale): it becomes
-    a shuffle at |slices|×vocab cardinality, with AQE free to promote
-    it back when the measured dim is small."""
+    and per-slice totals reduce from that dim table, always join back
+    broadcast, and the grand total rides as a 1-row broadcast frame."""
     toks = docs.select(
         F.col(slice_col), F.explode(tokens(text_col)).alias("w")
     )
@@ -498,10 +473,8 @@ def token_kl_drift(
     term = (F.col("c_sw") / F.col("n_s")) * F.log(
         (F.col("c_sw") / F.col("n_s")) / (F.col("c_w") / F.col("_n"))
     )
-    if broadcast_vocab:
-        corpus = F.broadcast(corpus)
     return (
-        cw.join(corpus, "w")
+        cw.join(F.broadcast(corpus), "w")
         .join(F.broadcast(ns), slice_col)
         .crossJoin(F.broadcast(n_tot))
         .groupBy(slice_col, "n_s")
@@ -540,14 +513,8 @@ def bm25_scores(
         # F.filter — bind the term via a real closure instead
         return lambda x: x == F.lit(term)
 
-    # tokenization + per-term filters are interpreted higher-order
-    # exprs — spread a small-file scan (one split would serialize it;
-    # no-op at scale where the scan has enough splits)
-    src = docs
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    per_doc = src.select(
+    # tokenization + per-term filters are interpreted higher-order exprs
+    per_doc = spread(docs).select(
         F.col(id_col),
         F.size(toks).alias("_dl"),
         *[
@@ -588,7 +555,6 @@ def bigram_lm_scores(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Per-document add-one-smoothed bigram language-model score — the
     classic perplexity-style quality filter for training-data curation
@@ -610,17 +576,11 @@ def bigram_lm_scores(
     Scale shape: two map-side-combined counts (per-doc bigram usage at
     (doc, w1, w2) cardinality; global bigram counts reduced FROM that —
     the fact table is read once), one unigram count, and a join of the
-    per-doc usage against the two model dims — broadcast by default,
-    ``broadcast_vocab=False`` for web-crawl vocabularies (AQE still
-    promotes the joins back to broadcast when the measured dim is
-    small).  V and nothing else rides along as a 1-row broadcast
-    frame.  Docs with < 2 tokens have no bigrams and drop out.
+    per-doc usage against the two model dims, always broadcast.  V and
+    nothing else rides along as a 1-row broadcast frame.  Docs with < 2
+    tokens have no bigrams and drop out.
     """
-    src = docs
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    toks = src.select(F.col(id_col), tokens(text_col).alias("_t"))
+    toks = spread(docs).select(F.col(id_col), tokens(text_col).alias("_t"))
     uni = (
         toks.select(F.explode("_t").alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))
@@ -647,10 +607,8 @@ def bigram_lm_scores(
         .select(id_col, "_b.w1", "_b.w2")
         .groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("m"))
     )
-    big = usage.groupBy("w1", "w2").agg(F.sum("m").alias("n_pair"))
-    u1 = uni.select(F.col("w").alias("w1"), F.col("c_w").alias("_c1"))
-    if broadcast_vocab:
-        big, u1 = F.broadcast(big), F.broadcast(u1)
+    big = F.broadcast(usage.groupBy("w1", "w2").agg(F.sum("m").alias("n_pair")))
+    u1 = F.broadcast(uni.select(F.col("w").alias("w1"), F.col("c_w").alias("_c1")))
     # mirror the oracle token-for-token:
     #   ln(CAST(n_pair + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE))
     lp = F.log(
@@ -709,11 +667,8 @@ def dup_token_spans(
     aggregation map-side-combines to the duplicated-hash dim, which is
     tiny by Zipf.  No joins, no Python.
     """
-    # the span build is ~dl slices + md5s per row — a small-file scan
-    # (one split) would serialize it; no-op at scale
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    # the span build is ~dl slices + md5s per row
+    docs = spread(docs)
     toks, spans = _span_hashes(text_col, n)
     ex = docs.select(
         F.col(id_col), F.posexplode(spans).alias("pos", "span_hash"))
@@ -750,9 +705,7 @@ def dup_span_coverage(
     """
     from pyspark.sql.window import Window
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    docs = spread(docs)
     toks, spans = _span_hashes(text_col, n)
     base = docs.select(
         F.col(id_col), F.size(toks).alias("n_tokens"),

@@ -21,6 +21,9 @@ Readers then filter with ``geohash_bits(lon, lat, p) BETWEEN lo AND
 hi`` (or a cell-prefix range): the pushed predicate reaches the scan
 and skips files wholesale — `.explain` shows PushedFilters on the key
 column.
+
+``spread`` is the read-side companion: it rebalances a small scan
+before per-row work, so a file with few splits does not serialize it.
 """
 
 from __future__ import annotations
@@ -44,3 +47,11 @@ def cluster_spatially(
     keyed = df.withColumn(key_col, geohash_bits(lon_col, lat_col, precision))
     parts = num_files or df.sparkSession.sparkContext.defaultParallelism
     return keyed.repartitionByRange(parts, key_col).sortWithinPartitions(key_col)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Rebalance a small scan to ``defaultParallelism`` partitions: a
+    scan with few splits would serialize the per-row work that follows
+    (a no-op once the scan already has enough splits)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if df.rdd.getNumPartitions() < par else df

@@ -71,24 +71,23 @@ RESIZE_SCHEMA = T.StructType([
 def resize(images: DataFrame, out_w: int, out_h: int, out_fmt: str = "raw") -> DataFrame:
     """Nearest-neighbor resize (pure numpy indexing) → re-encode.
     Demonstrates the decode → transform → encode pipeline shape used by
-    any multimodal featurizer."""
+    any multimodal featurizer.  Decode and resample run per shape group
+    of the batch (``kernels.codec.decode_batch``); only the encode is
+    per image."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = None
         for b in batches:
-            rows = {k: [] for k in ("image_id", "caption", "w", "h", "fmt", "bytes")}
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-                yi = (np.arange(out_h) * r.h // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * r.w // out_w).astype(np.int64)
-                rs = px[yi][:, xi]
-                rows["image_id"].append(r.image_id)
-                rows["caption"].append(r.caption)
-                rows["w"].append(out_w)
-                rows["h"].append(out_h)
-                rows["fmt"].append(out_fmt)
-                rows["bytes"].append(K_codec.encode_image(rs, out_fmt))
-            yield pd.DataFrame(rows)
+            enc = [None] * len(b)
+            for pos, px in K_codec.decode_batch(b["bytes"], b["w"], b["h"], b["fmt"]):
+                h, w = px.shape[1:3]
+                rs = px[:, np.arange(out_h) * h // out_h][:, :, np.arange(out_w) * w // out_w]
+                for i, img in zip(pos.tolist(), rs):
+                    enc[i] = K_codec.encode_image(img, out_fmt)
+            yield pd.DataFrame({
+                "image_id": b["image_id"].to_numpy(),
+                "caption": b["caption"].to_numpy(),
+                "w": out_w, "h": out_h, "fmt": out_fmt, "bytes": enc,
+            })
 
     return images.mapInPandas(run, schema=RESIZE_SCHEMA)
 
@@ -224,7 +223,9 @@ def tile_mosaic(
     post-shuffle partitions by BYTES, and mosaic groups are tiny in
     bytes but heavy in Python decode work, so byte-based coalescing
     starves the render of cores (measured 3.4s → 1.3s at 1,200
-    images / 32 cores)."""
+    images / 32 cores).  Each tile's images decode per shape group
+    (``kernels.codec.decode_batch``), and their means come from exact
+    integer channel sums."""
     from xutil_spark.functions import native
     from xutil_spark.kernels import tiles as K_tiles
 
@@ -240,10 +241,13 @@ def tile_mosaic(
         lon = pdf["lon"].to_numpy(np.float64)
         lat = pdf["lat"].to_numpy(np.float64)
         _, _, px, py = K_tiles.tile_image(lon, lat, zoom, deg)
-        for i, r in enumerate(pdf.itertuples(index=False)):
-            pix = K_codec.decode_image(bytes(r.bytes), int(r.w), int(r.h), r.fmt)
-            mean = pix.reshape(-1, 3).mean(axis=0).astype(np.uint8)
-            canvas[int(py[i]) % deg, int(px[i]) % deg] = mean
+        # sum / pixel count in float64 is what numpy's integer mean gives
+        mean = np.zeros((len(pdf), 3), dtype=np.uint8)
+        for pos, pix in K_codec.decode_batch(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]):
+            npx = pix.shape[1] * pix.shape[2]
+            mean[pos] = (K_codec._channel_sums(pix) / npx).astype(np.uint8)
+        for y, x, m in zip((py % deg).tolist(), (px % deg).tolist(), mean):
+            canvas[y, x] = m
         return pd.DataFrame({
             "cell": [cell], "zoom": [zoom], "n_images": [len(pdf)],
             "deg": [deg], "fmt": [out_fmt],
@@ -286,45 +290,52 @@ def augment(images: DataFrame, id_col: str = "image_id",
     2×2; nearest indexing yi = Y·(h/2)//h = Y//2).
 
     100-TB shape: ONE mapInPandas over the fact table, no shuffle, no
-    dim; batch cost is O(pixels).  Emits (id, op, w, h, fmt, bytes).
+    dim; batch cost is O(pixels).  Decode and the op run per shape
+    group of the batch (``kernels.codec.decode_batch``), one stacked
+    numpy op per (group, op); only the encode is per image.  Emits
+    (id, op, w, h, fmt, bytes).
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = {k: [] for k in ("image_id", "op", "w", "h", "fmt",
-                                    "bytes")}
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w),
-                                          int(r.h), r.fmt)
-                h, w = px.shape[0], px.shape[1]
-                # deterministic op from the id bytes (FNV-1a 64, cheap
-                # scalar, mirrors nothing engine-side — any stable hash
-                # works; the oracle replays it independently)
-                op = AUGMENT_OPS[_fnv1a64(str(getattr(r, id_col))) % 4]
-                if op == "hflip":
-                    out = px[:, ::-1]
-                elif op == "vflip":
-                    out = px[::-1, :]
-                elif op == "rot90":
-                    # clockwise: out[y, x] = px[h-1-x, y]; dims swap
-                    out = np.rot90(px, k=-1)
-                else:  # crop2x
-                    y0, x0 = h // 4, w // 4
-                    ch, cw = h // 2, w // 2
-                    crop = px[y0:y0 + ch, x0:x0 + cw]
-                    # nearest-resize back to h×w; arange//2 would index
-                    # row ch (out of bounds) when h is odd — the
-                    # *(ch)//h form reduces to //2 for even dims
-                    out = crop[np.arange(h) * ch // h][:, np.arange(w) * cw // w]
-                oh, ow = out.shape[0], out.shape[1]
-                rows["image_id"].append(getattr(r, id_col))
-                rows["op"].append(op)
-                rows["w"].append(ow)
-                rows["h"].append(oh)
-                rows["fmt"].append(out_fmt)
-                rows["bytes"].append(
-                    K_codec.encode_image(np.ascontiguousarray(out), out_fmt))
-            yield pd.DataFrame(rows)
+            ids = b[id_col].to_numpy()
+            # deterministic op from the id bytes (FNV-1a 64, cheap
+            # scalar, mirrors nothing engine-side — any stable hash
+            # works; the oracle replays it independently)
+            ops = np.array([_fnv1a64(str(v)) % 4 for v in ids], dtype=np.int64)
+            enc = [None] * len(b)
+            ow = np.zeros(len(b), dtype=np.int64)
+            oh = np.zeros(len(b), dtype=np.int64)
+            for pos, px in K_codec.decode_batch(b["bytes"], b["w"], b["h"], b["fmt"]):
+                h, w = px.shape[1:3]
+                for k, op in enumerate(AUGMENT_OPS):
+                    m = ops[pos] == k
+                    if not m.any():
+                        continue
+                    sel, grp = pos[m], px[m]
+                    if op == "hflip":
+                        out = grp[:, :, ::-1]
+                    elif op == "vflip":
+                        out = grp[:, ::-1]
+                    elif op == "rot90":
+                        # clockwise: out[y, x] = px[h-1-x, y]; dims swap
+                        out = np.rot90(grp, k=-1, axes=(1, 2))
+                    else:  # crop2x
+                        y0, x0 = h // 4, w // 4
+                        ch, cw = h // 2, w // 2
+                        crop = grp[:, y0:y0 + ch, x0:x0 + cw]
+                        # nearest-resize back to h×w; arange//2 would
+                        # index row ch (out of bounds) when h is odd —
+                        # the *(ch)//h form reduces to //2 for even dims
+                        out = crop[:, np.arange(h) * ch // h][:, :, np.arange(w) * cw // w]
+                    oh[sel], ow[sel] = out.shape[1], out.shape[2]
+                    for i, img in zip(sel.tolist(), out):
+                        enc[i] = K_codec.encode_image(np.ascontiguousarray(img), out_fmt)
+            yield pd.DataFrame({
+                "image_id": ids,
+                "op": [AUGMENT_OPS[k] for k in ops.tolist()],
+                "w": ow, "h": oh, "fmt": out_fmt, "bytes": enc,
+            })
 
     return images.mapInPandas(run, schema=AUGMENT_SCHEMA)
 
@@ -384,34 +395,30 @@ def blob_stats(images: DataFrame, thresh: int = 128,
     output is exact integer arithmetic and a scanline union-find
     replay agrees digit-for-digit.
 
-    The decode is per row (inherent for variable-size blobs); labeling
-    is per image over ≤ a few thousand pixels — one mapInPandas, no
-    shuffle."""
+    Decode, gray and mask run per shape group of the batch
+    (``kernels.codec.decode_batch``); labeling is per image over ≤ a
+    few thousand pixels — one mapInPandas, no shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = {k: [] for k in (id_col, "n_blobs", "max_blob_px",
-                                    "cx_q", "cy_q", "mask_px")}
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(bytes(r.bytes), int(r.w),
-                                          int(r.h), r.fmt)
-                g = (px.astype(np.int64) @ np.array([299, 587, 114])) // 1000
-                mask = g >= thresh
-                blobs = blob_label(mask)
-                rows[id_col].append(getattr(r, id_col))
-                rows["mask_px"].append(int(mask.sum()))
-                rows["n_blobs"].append(len(blobs))
-                if blobs:
-                    best = max(blobs, key=lambda t: (t[0], (-t[1], -t[2])))
-                    n, _, _, sx, sy = best
-                    rows["max_blob_px"].append(n)
-                    rows["cx_q"].append(sx * 10000 // n)
-                    rows["cy_q"].append(sy * 10000 // n)
-                else:
-                    rows["max_blob_px"].append(0)
-                    rows["cx_q"].append(-1)
-                    rows["cy_q"].append(-1)
-            yield pd.DataFrame(rows)
+            n = len(b)
+            cols = {k: np.zeros(n, dtype=np.int64) for k in (
+                "n_blobs", "max_blob_px", "cx_q", "cy_q", "mask_px")}
+            for pos, px in K_codec.decode_batch(b["bytes"], b["w"], b["h"], b["fmt"]):
+                masks = (px.astype(np.int64) @ _LUMA) // 1000 >= thresh
+                cols["mask_px"][pos] = masks.sum(axis=(1, 2))
+                for i, mask in zip(pos.tolist(), masks):
+                    blobs = blob_label(mask)
+                    cols["n_blobs"][i] = len(blobs)
+                    if blobs:
+                        best = max(blobs, key=lambda t: (t[0], (-t[1], -t[2])))
+                        n_px, _, _, sx, sy = best
+                        cols["max_blob_px"][i] = n_px
+                        cols["cx_q"][i] = sx * 10000 // n_px
+                        cols["cy_q"][i] = sy * 10000 // n_px
+                    else:
+                        cols["cx_q"][i] = cols["cy_q"][i] = -1
+            yield pd.DataFrame({id_col: b[id_col].to_numpy(), **cols})
 
     return images.mapInPandas(
         run, f"{id_col} string, n_blobs int, max_blob_px int, "
