@@ -538,3 +538,208 @@ def test_plan_build_runs_one_spark_job(spark, op):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+# ---------------------------------------------------------------------------
+# knn_searcher property test: brute force and the previous kernel
+# ---------------------------------------------------------------------------
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+
+def _ref_knn_searcher(rlon, rlat, k: int):
+    """The previous ``knn_searcher``: per-unique-cell ``searchsorted``
+    block ranges and one global ``lexsort`` over the pair list.  Kept
+    as the reference the offset-table/argpartition kernel must equal
+    bit for bit, row order included."""
+    import math
+
+    n_refs = len(rlon)
+    kk = min(k, n_refs)
+    rad = math.pi / 180.0
+    two_r = 2.0 * 6371000.0
+    rcos = np.cos(np.asarray(rlat, dtype=np.float64) * rad)
+    use_grid = n_refs >= 16 * kk
+    if use_grid:
+        lon0, lat0 = float(rlon.min()), float(rlat.min())
+        dlon_span = max(float(rlon.max()) - lon0, 1e-9)
+        dlat_span = max(float(rlat.max()) - lat0, 1e-9)
+        use_grid = dlon_span <= 180.0
+    if use_grid:
+        target_cells = n_refs / max(SJ._KNN_CELL_TARGET_K * kk, 8.0)
+        nx = max(1, int(round(math.sqrt(target_cells * dlon_span / dlat_span))))
+        ny = max(1, int(round(target_cells / nx)))
+        span_x, span_y = dlon_span / nx, dlat_span / ny
+        rcx = np.clip(((rlon - lon0) / span_x).astype(np.int64), 0, nx - 1)
+        rcy = np.clip(((rlat - lat0) / span_y).astype(np.int64), 0, ny - 1)
+        rcell = rcx * ny + rcy
+        rorder = np.argsort(rcell, kind="stable")
+        rcell_s = rcell[rorder]
+
+    def hav(pi, ri, plon, plat, pcos):
+        dlat = (rlat[ri] - plat[pi]) * rad
+        dlon = (rlon[ri] - plon[pi]) * rad
+        a = (np.sin(dlat / 2) * np.sin(dlat / 2)
+             + np.sin(dlon / 2) * np.sin(dlon / 2) * pcos[pi] * rcos[ri])
+        return two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
+
+    def topk_grid(plon, plat, pcos):
+        b = len(plon)
+        px = np.clip(((plon - lon0) / span_x).astype(np.int64), 0, nx - 1)
+        py = np.clip(((plat - lat0) / span_y).astype(np.int64), 0, ny - 1)
+        ucell, uinv = np.unique(px * ny + py, return_inverse=True)
+        un = len(ucell)
+        ux, uy = ucell // ny, ucell % ny
+        los = np.empty((un, 9), dtype=np.int64)
+        his = np.empty((un, 9), dtype=np.int64)
+        col = 0
+        for dx in (-1, 0, 1):
+            mx = ux + dx
+            okx = (mx >= 0) & (mx < nx)
+            for dy in (-1, 0, 1):
+                my = uy + dy
+                ncell = np.where(okx & (my >= 0) & (my < ny), mx * ny + my, -1)
+                los[:, col] = np.searchsorted(rcell_s, ncell, side="left")
+                his[:, col] = np.searchsorted(rcell_s, ncell, side="right")
+                col += 1
+        lens = (his - los).ravel()
+        blk_cnt = lens.reshape(un, 9).sum(axis=1)
+        tot = int(lens.sum())
+        if tot == 0:
+            return None, np.ones(b, dtype=bool)
+        seg0 = np.concatenate(([0], np.cumsum(lens)))[:-1]
+        rflat = np.repeat(los.ravel(), lens) + (np.arange(tot) - np.repeat(seg0, lens))
+        ucum = np.concatenate(([0], np.cumsum(blk_cnt)))
+        porder = np.argsort(uinv, kind="stable")
+        b_per_pt = blk_cnt[uinv[porder]]
+        n_pairs = int(b_per_pt.sum())
+        pair_pt = np.repeat(porder, b_per_pt)
+        pcum = np.concatenate(([0], np.cumsum(b_per_pt)))[:-1]
+        pair_off = np.arange(n_pairs) - np.repeat(pcum, b_per_pt)
+        pair_ref = rorder[rflat[np.repeat(ucum[uinv[porder]], b_per_pt) + pair_off]]
+        d = hav(pair_pt, pair_ref, plon, plat, pcos)
+        key = np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs + pair_ref
+        o = np.lexsort((key, pair_pt))
+        spt, sref, sd = pair_pt[o], pair_ref[o], d[o]
+        first = np.empty(n_pairs, dtype=bool)
+        first[0] = True
+        first[1:] = spt[1:] != spt[:-1]
+        seg_id = np.cumsum(first) - 1
+        seg_start = np.flatnonzero(first)
+        pos = np.arange(n_pairs) - seg_start[seg_id]
+        cnt = np.zeros(b, dtype=np.int64)
+        cnt[spt[seg_start]] = np.diff(np.concatenate((seg_start, [n_pairs])))
+        kth_d = np.full(b, np.inf)
+        at_k = pos == (kk - 1)
+        kth_d[spt[at_k]] = sd[at_k]
+        gx = SJ._R_HAV * np.arcsin(np.cos(plat * rad) * math.sin(min(span_x, 90.0) * rad))
+        resolved = (cnt >= kk) & (kth_d <= np.minimum(gx, SJ._M_PER_DEG_HAV * span_y))
+        take = (pos < kk) & resolved[spt]
+        return (spt[take], sref[take], sd[take]), ~resolved
+
+    def brute(plon, plat, pcos):
+        dlat = (rlat[None, :] - plat[:, None]) * rad
+        dlon = (rlon[None, :] - plon[:, None]) * rad
+        a = (np.sin(dlat / 2) * np.sin(dlat / 2)
+             + np.sin(dlon / 2) * np.sin(dlon / 2) * pcos[:, None] * rcos[None, :])
+        d = two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
+        key = (np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs
+               + np.arange(n_refs, dtype=np.int64)[None, :])
+        sel = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+        order = np.argsort(np.take_along_axis(key, sel, axis=1), axis=1, kind="stable")
+        idx = np.take_along_axis(sel, order, axis=1)
+        rows = np.repeat(np.arange(len(plon)), kk)
+        return rows, idx.ravel(), d[rows, idx.ravel()]
+
+    def chunk(plon, plat):
+        pcos = np.cos(plat * rad)
+        ranks = np.arange(1, kk + 1)
+        if not use_grid:
+            rows, ridx, d = brute(plon, plat, pcos)
+            return rows, ridx, d, np.tile(ranks, len(plon))
+        parts = []
+        grid_out, straggler = topk_grid(plon, plat, pcos)
+        if grid_out is not None and len(grid_out[0]):
+            gp, gr, gd = grid_out
+            parts.append((gp, gr, gd, np.tile(ranks, len(gp) // kk)))
+        sidx = np.flatnonzero(straggler)
+        if len(sidx):
+            rows, ridx, d = brute(plon[sidx], plat[sidx], pcos[sidx])
+            parts.append((sidx[rows], ridx, d, np.tile(ranks, len(sidx))))
+        return tuple(np.concatenate(cols) for cols in zip(*parts))
+
+    def search(plon, plat):
+        parts = []
+        for s in range(0, len(plon), 1024):
+            rows, ridx, d, rank = chunk(plon[s:s + 1024], plat[s:s + 1024])
+            parts.append((rows + s, ridx, d, rank))
+        return tuple(np.concatenate(cols) for cols in zip(*parts))
+
+    return search
+
+
+def _fitted_edges(rlon, rlat, k):
+    """The lon and lat cell edges of the grid ``knn_searcher`` fits."""
+    kk = min(k, len(rlon))
+    lon0, lat0 = float(rlon.min()), float(rlat.min())
+    sx = max(float(rlon.max()) - lon0, 1e-9)
+    sy = max(float(rlat.max()) - lat0, 1e-9)
+    cells = len(rlon) / max(SJ._KNN_CELL_TARGET_K * kk, 8.0)
+    nx = max(1, int(round(np.sqrt(cells * sx / sy))))
+    ny = max(1, int(round(cells / nx)))
+    return lon0 + np.arange(nx + 1) * (sx / nx), lat0 + np.arange(ny + 1) * (sy / ny)
+
+
+@st.composite
+def _knn_cases(draw):
+    k = draw(st.integers(1, 8))
+    n = draw(st.one_of(st.sampled_from([16 * k - 1, 16 * k, 16 * k + 1]),
+                       st.integers(1, 600)))
+    seed = draw(st.integers(0, 2**32 - 1))
+    wide = draw(st.booleans())  # > 180° of longitude: the brute path
+    rng = np.random.default_rng(seed)
+    w = 340.0 if wide else draw(st.sampled_from([0.01, 1.0, 20.0]))
+    rlon = np.round(rng.uniform(-w / 2, w / 2, n), 3)
+    rlat = np.round(rng.uniform(-40.0, 60.0, n) * min(w, 100.0) / 100.0, 3)
+    if draw(st.booleans()):  # a tight cluster: skewed candidate counts per point
+        hot = rng.integers(0, n, n // 2)
+        rlon[hot] = np.round(rlon[0] + rng.normal(0.0, w * 1e-3, len(hot)), 6)
+        rlat[hot] = np.round(rlat[0] + rng.normal(0.0, w * 1e-3, len(hot)), 6)
+    dup, to = rng.integers(0, n, (2, n // 4))  # duplicated refs: equal-distance ties
+    rlon[to], rlat[to] = rlon[dup], rlat[dup]
+    ex, ey = _fitted_edges(rlon, rlat, k)
+    plon = np.concatenate([
+        rng.uniform(rlon.min() - 1, rlon.max() + 1, 200),
+        np.repeat(ex, len(ey)), rlon.min() + np.zeros(3), rlon.max() + np.zeros(3),
+        rlon[:20], rlon[0] + np.zeros(20)])
+    plat = np.concatenate([
+        rng.uniform(rlat.min() - 1, rlat.max() + 1, 200),
+        np.tile(ey, len(ex)), np.array([rlat.min(), rlat.max(), 0.0]),
+        np.array([rlat.min(), rlat.max(), 0.0]), rlat[:20], rlat[0] + np.zeros(20)])
+    return rlon, rlat, plon, plat, k
+
+
+@settings(max_examples=150, deadline=None)
+@given(_knn_cases())
+def test_knn_searcher_matches_brute_and_previous_kernel(case):
+    """Exact top-k ordered by (mm-rounded distance, ref index) for
+    duplicated refs, points on fitted-cell and bbox edges, ref counts
+    around the 16·k grid threshold and antimeridian-wide refs; and
+    bit-identical to the previous kernel, row order included."""
+    rlon, rlat, plon, plat, k = case
+    got = SJ.knn_searcher(rlon, rlat, k)(plon, plat)
+    old = _ref_knn_searcher(rlon, rlat, k)(plon, plat)
+    for g, o in zip(got, old):
+        assert g.dtype == o.dtype
+        np.testing.assert_array_equal(g, o)
+    rows, ridx, d, rank = got
+    kk = min(k, len(rlon))
+    o = np.lexsort((rank, rows))
+    rows, ridx, d, rank = rows[o], ridx[o], d[o], rank[o]
+    np.testing.assert_array_equal(rows, np.repeat(np.arange(len(plon)), kk))
+    np.testing.assert_array_equal(rank, np.tile(np.arange(1, kk + 1), len(plon)))
+    for p in range(len(plon)):
+        bd = K_dist.point_dist_haversine(plon[p], plat[p], rlon, rlat)
+        want = np.lexsort((np.arange(len(rlon)), np.round(bd, 3)))[:kk]
+        np.testing.assert_array_equal(ridx[p * kk:(p + 1) * kk], want)
+        np.testing.assert_allclose(d[p * kk:(p + 1) * kk], bd[want], rtol=1e-12, atol=1e-6)

@@ -19,3 +19,7 @@ Layers
 """
 
 __version__ = "0.1.0"
+
+from xutil_spark import _runtime  # noqa: E402
+
+_runtime.install()

@@ -222,8 +222,10 @@ _R_HAV = 6371000.0  # sphere radius shared with the haversine kernels
 # fitted-grid density target: ~this×k refs per cell (3×3 block ≈ 9×
 # this×k candidates per point).  Lower = fewer haversine pairs but more
 # ring-guarantee stragglers falling to m×R brute force; 2.0 measured
-# best on 2k-ref/800k-point shapes (sweep in round-4 notes), exactness
-# is grid-independent (guarantee + straggler pass).
+# best on 2k-ref/800k-point shapes, and re-swept with the argpartition
+# top-k on the 2k-ref bench shape (k=3): 1.0 / 1.5 / 2.0 / 3.0 gave
+# 10.1 / 9.3 / 9.4 / 10.9 µs per point.  Exactness is grid-independent
+# (guarantee + straggler pass).
 _KNN_CELL_TARGET_K = 2.0
 
 
@@ -365,10 +367,11 @@ def knn_join_np(
     arrays ship once per worker via ``sc.broadcast``.  Inside
     each Arrow batch the search is a **numpy grid index**, not brute
     force: refs are pre-sorted by cell of a bbox-fitted nx×ny grid
-    (density targeted at ~2k refs/cell — see ``knn_searcher``), each
-    point gathers the candidates of its 3×3 neighbor block via
-    ``searchsorted`` range expansion (no Python loops), distances run
-    over the flat candidate pair list, and a per-point guarantee — k-th
+    (density targeted at about 2·k refs per cell — see
+    ``knn_searcher``), each point gathers the candidates of its 3×3
+    neighbor block from a dense per-cell offset table (no Python
+    loops), distances run over the flat candidate pair list, top-k is
+    a per-point ``argpartition``, and a per-point guarantee — k-th
     distance ≤ the block's covered radius — proves exactness; the rare
     stragglers fall back to a vectorized brute-force pass.  ~100× fewer
     haversine evals than brute force at 2k refs.
@@ -454,18 +457,20 @@ def knn_searcher(rlon, rlat, k: int):
     with flat int/float arrays — reusable both by ``knn_join_np`` and
     by fused whole-pipeline operators (operators/fused.py).
 
-    Round-4 index: a bbox-FITTED nx×ny grid replaces power-of-2 slippy
-    tiles.  The tile version could only step candidate density in 4×
-    jumps, so the "≥ 3k refs per cell" rule routinely landed ~4× over
-    target (measured 264 candidates/point at the 2k-ref bench shape
-    where ~30 satisfies the ring guarantee); fitting nx·ny to
-    n_refs / max(3k, 8) over the refs' own bounding box hits the
-    target density exactly — ~3× fewer haversine pairs, same exact
-    output (the ring-1 guarantee + straggler brute force make the
-    result independent of the grid).  Ref-side trig is precomputed
-    once per searcher, point-side cos once per chunk (they were being
-    recomputed per PAIR).  Refs spanning >180° of longitude fall back
-    to brute force (the fitted grid does not wrap the antimeridian)."""
+    Index: a bbox-FITTED nx×ny grid with nx·ny = n_refs /
+    max(_KNN_CELL_TARGET_K·k, 8) over the refs' own bounding box, so
+    candidate density hits the target exactly (power-of-2 slippy tiles
+    step it in 4× jumps: 264 candidates/point measured at the 2k-ref
+    bench shape where ~30 satisfy the ring guarantee).  Refs are sorted
+    by cell and a dense ``cell_start[nx·ny + 1]`` offset table maps a
+    cell to its slice — a direct-mapped lookup, not a binary probe.
+    Top-k needs no global sort: each point's candidate keys go into one
+    row of a padded points × candidates matrix, ``argpartition`` keeps
+    k per row and only those k are sorted.  The ring-1 guarantee +
+    straggler brute force make the result independent of the grid.
+    Ref-side trig is precomputed once per searcher, point-side cos once
+    per chunk.  Refs spanning >180° of longitude fall back to brute
+    force (the fitted grid does not wrap the antimeridian)."""
     import numpy as np
 
     n_refs = len(rlon)
@@ -493,79 +498,72 @@ def knn_searcher(rlon, rlat, k: int):
         rcy = np.clip(((rlat - lat0) / span_y).astype(np.int64), 0, ny - 1)
         rcell = rcx * ny + rcy
         rorder = np.argsort(rcell, kind="stable")  # id order within a cell
-        rcell_s = rcell[rorder]
+        rlon_s, rlat_s, rcos_s = rlon[rorder], rlat[rorder], rcos[rorder]
+        cell_start = np.concatenate(
+            ([0], np.cumsum(np.bincount(rcell, minlength=nx * ny))))
+        blk_dx = np.repeat(np.arange(-1, 2), 3)  # the 3×3 block offsets
+        blk_dy = np.tile(np.arange(-1, 2), 3)
 
-    def hav_pairs(pi, ri, plon, plat, pcos):
-        """Haversine over (point-idx, ref-idx) pair arrays; trig for
-        both endpoints pre-computed (same float64 expression order as
-        the original per-pair form — cos values are identical doubles,
-        so distances are bit-identical)."""
-        dlat = (rlat[ri] - plat[pi]) * rad
-        dlon = (rlon[ri] - plon[pi]) * rad
-        a = (
-            np.sin(dlat / 2) * np.sin(dlat / 2)
-            + np.sin(dlon / 2) * np.sin(dlon / 2) * pcos[pi] * rcos[ri]
-        )
+    def hav_pairs(ri, plon, plat, pcos):
+        """Haversine from points to refs ``ri`` (cell-sorted positions),
+        the point arrays already one entry per pair; trig for both
+        endpoints pre-computed and each half-angle sine taken once
+        (``s * s`` is ``sin(x) * sin(x)`` — the same float64 expression
+        order as the per-pair form, so distances are bit-identical)."""
+        dlat = (rlat_s[ri] - plat) * rad
+        dlon = (rlon_s[ri] - plon) * rad
+        s_lat = np.sin(dlat / 2)
+        s_lon = np.sin(dlon / 2)
+        a = s_lat * s_lat + s_lon * s_lon * pcos * rcos_s[ri]
         return two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
 
     def topk_grid(plon, plat, pcos):
-        """Returns (resolved_out, straggler_mask)."""
+        """Returns ((pt_rows, ref_idx, dist_m) of the resolved points,
+        straggler_mask)."""
         b = len(plon)
         px = np.clip(((plon - lon0) / span_x).astype(np.int64), 0, nx - 1)
         py = np.clip(((plat - lat0) / span_y).astype(np.int64), 0, ny - 1)
-        pcell = px * ny + py
-        ucell, uinv = np.unique(pcell, return_inverse=True)
-        un = len(ucell)
-        ux, uy = ucell // ny, ucell % ny
-        # 3×3 block ranges into the cell-sorted refs (both axes clip —
-        # the fitted grid has no wrap, so no duplicate candidates)
-        los = np.empty((un, 9), dtype=np.int64)
-        his = np.empty((un, 9), dtype=np.int64)
-        col = 0
-        for dx in (-1, 0, 1):
-            mx = ux + dx
-            okx = (mx >= 0) & (mx < nx)
-            for dy in (-1, 0, 1):
-                my = uy + dy
-                ok = okx & (my >= 0) & (my < ny)
-                ncell = np.where(ok, mx * ny + my, -1)
-                los[:, col] = np.searchsorted(rcell_s, ncell, side="left")
-                his[:, col] = np.searchsorted(rcell_s, ncell, side="right")
-                col += 1
-        lens = (his - los).ravel()
-        blk_cnt = lens.reshape(un, 9).sum(axis=1)
-        # CSR-expand the (lo, hi) ranges into flat sorted-ref indices,
-        # grouped contiguously per unique cell
-        tot = int(lens.sum())
+        # each point's 3×3 block as 9 [lo, lo + len) slices of the
+        # cell-sorted refs (both axes clip — the fitted grid has no
+        # wrap, so no duplicate candidates)
+        mx = px[:, None] + blk_dx
+        my = py[:, None] + blk_dy
+        ok = (mx >= 0) & (mx < nx) & (my >= 0) & (my < ny)
+        ncell = np.where(ok, mx * ny + my, 0)
+        los = cell_start[ncell]
+        lens = np.where(ok, cell_start[ncell + 1] - los, 0)
+        cnt = lens.sum(axis=1)
+        tot = int(cnt.sum())
         if tot == 0:
             return None, np.ones(b, dtype=bool)
-        seg0 = np.concatenate(([0], np.cumsum(lens)))[:-1]
-        rflat = np.repeat(los.ravel(), lens) + (np.arange(tot) - np.repeat(seg0, lens))
-        ucum = np.concatenate(([0], np.cumsum(blk_cnt)))
-        # pair list: points grouped by cell × their block's candidates
-        porder = np.argsort(uinv, kind="stable")
-        b_per_pt = blk_cnt[uinv[porder]]
-        n_pairs = int(b_per_pt.sum())
-        pair_pt = np.repeat(porder, b_per_pt)
-        pcum = np.concatenate(([0], np.cumsum(b_per_pt)))[:-1]
-        pair_off = np.arange(n_pairs) - np.repeat(pcum, b_per_pt)
-        pair_ref = rorder[rflat[np.repeat(ucum[uinv[porder]], b_per_pt) + pair_off]]
-        d = hav_pairs(pair_pt, pair_ref, plon, plat, pcos)
+        # CSR-expand the slices into one point-major pair list
+        lens = lens.ravel()
+        rflat = np.repeat(los.ravel() - (np.cumsum(lens) - lens), lens) + np.arange(tot)
+        pair_ref = rorder[rflat]
+        d = hav_pairs(rflat, np.repeat(plon, cnt), np.repeat(plat, cnt), np.repeat(pcos, cnt))
         key = np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs + pair_ref
-        o = np.lexsort((key, pair_pt))
-        spt, sref, sd = pair_pt[o], pair_ref[o], d[o]
-        first = np.empty(n_pairs, dtype=bool)
-        first[0] = True
-        first[1:] = spt[1:] != spt[:-1]
-        seg_id = np.cumsum(first) - 1
-        seg_start = np.flatnonzero(first)
-        pos = np.arange(n_pairs) - seg_start[seg_id]
-        cnt = np.zeros(b, dtype=np.int64)
-        cnt_seg = np.diff(np.concatenate((seg_start, [n_pairs])))
-        cnt[spt[seg_start]] = cnt_seg
-        kth_d = np.full(b, np.inf)
-        at_k = pos == (kk - 1)
-        kth_d[spt[at_k]] = sd[at_k]
+        # top-kk per point: each point's keys fill one row of a padded
+        # matrix (pad = int64 max, after every real key), argpartition
+        # keeps kk per row, and only those kk are sorted.  Rows go in
+        # width bands so that skewed candidate counts pad at most ~2×.
+        row0 = np.cumsum(cnt) - cnt
+        full = cnt >= kk
+        top = np.zeros((b, kk), dtype=np.int64)  # pair index of the kk nearest
+        todo = np.flatnonzero(full)
+        while len(todo):
+            c = cnt[todo]
+            w = int(c.max())
+            band = c * 2 > w
+            if len(todo) * w <= 4 * int(c.sum()):
+                band[:] = True  # one matrix for all: padding ≤ 4× the keys
+            rows, c, todo = todo[band], c[band], todo[~band]
+            col = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
+            m = np.full((len(rows), w), np.iinfo(np.int64).max)
+            m[np.repeat(np.arange(len(rows)), c), col] = key[np.repeat(row0[rows], c) + col]
+            part = np.argpartition(m, kk - 1, axis=1)[:, :kk]
+            order = np.argsort(np.take_along_axis(m, part, axis=1), axis=1)
+            top[rows] = row0[rows, None] + np.take_along_axis(part, order, axis=1)
+        kth_d = np.where(full, d[top[:, kk - 1]], np.inf)
         # ring-1 guarantee: every unsearched ref is ≥ one cell span
         # away in lon OR lat.  lat: d ≥ R·span_y (meridional arc is a
         # true lower bound on haversine).  lon: the linear
@@ -578,9 +576,9 @@ def knn_searcher(rlon, rlat, k: int):
         sx = math.sin(min(span_x, 90.0) * rad)
         gx = _R_HAV * np.arcsin(np.cos(plat * rad) * sx)
         guarantee = np.minimum(gx, _M_PER_DEG_HAV * span_y)
-        resolved = (cnt >= kk) & (kth_d <= guarantee)
-        take = (pos < kk) & resolved[spt]
-        return (spt[take], sref[take], sd[take]), ~resolved
+        resolved = full & (kth_d <= guarantee)
+        take = top[resolved].ravel()
+        return (np.repeat(np.flatnonzero(resolved), kk), pair_ref[take], d[take]), ~resolved
 
     def brute(plon, plat, pcos):
         """Vectorized brute-force top-k for m stragglers (m×R)."""
@@ -609,30 +607,16 @@ def knn_searcher(rlon, rlat, k: int):
             return z, z, np.empty(0), z
         pcos = np.cos(plat * rad)
         if not use_grid:
-            rows, ridx, d = brute(plon, plat, pcos)
-            return rows, ridx, d, np.tile(np.arange(1, kk + 1), len(plon))
-        parts = []
-        grid_out, straggler = topk_grid(plon, plat, pcos)
-        if grid_out is not None and len(grid_out[0]):
-            gp, gr, gd = grid_out
-            # pos within segment restarts at each point → rank
-            newseg = np.empty(len(gp), dtype=bool)
-            newseg[0] = True
-            newseg[1:] = gp[1:] != gp[:-1]
-            seg_first = np.flatnonzero(newseg)
-            seg_ids = np.cumsum(newseg) - 1
-            rank = np.arange(len(gp)) - seg_first[seg_ids] + 1
-            parts.append((gp, gr, gd, rank))
-        sidx = np.flatnonzero(straggler)
-        if len(sidx):
-            rows, ridx, d = brute(plon[sidx], plat[sidx], pcos[sidx])
-            parts.append(
-                (sidx[rows], ridx, d, np.tile(np.arange(1, kk + 1), len(sidx)))
-            )
-        if not parts:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, np.empty(0), z
-        return tuple(np.concatenate(cols) for cols in zip(*parts))
+            parts = [brute(plon, plat, pcos)]
+        else:
+            grid_out, straggler = topk_grid(plon, plat, pcos)
+            parts = [grid_out] if grid_out is not None else []
+            sidx = np.flatnonzero(straggler)
+            if len(sidx):
+                rows, ridx, d = brute(plon[sidx], plat[sidx], pcos[sidx])
+                parts.append((sidx[rows], ridx, d))
+        rows, ridx, d = (np.concatenate(cols) for cols in zip(*parts))
+        return rows, ridx, d, np.tile(np.arange(1, kk + 1), len(rows) // kk)
 
     # Point-chunked driver: the grid pass builds a pair list (points ×
     # 3×3-block candidates) and the straggler pass an m×R distance
