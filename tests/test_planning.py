@@ -9,6 +9,8 @@ import ast
 import pathlib
 import re
 
+import pytest
+
 import xutil_spark.operators
 
 _KNOB = re.compile(
@@ -46,8 +48,9 @@ def test_guard_sees_a_planning_option():
 
 def test_dim_sides_broadcast_by_hint(spark):
     """With size-based broadcasting off, only a broadcast hint can plan
-    a broadcast join: every operator below still broadcasts its dim
-    side (the build side is always the right, dim, input)."""
+    a broadcast join: every operator below that joins still broadcasts
+    its dim side (the build side is always the right, dim, input); a
+    dim-sized range join runs as one numpy pass and joins nothing."""
     import pandas as pd
 
     from xutil_spark.operators import similarity as S
@@ -66,12 +69,20 @@ def test_dim_sides_broadcast_by_hint(spark):
         {"doc_id": [1, 2], "source": ["a", "b"],
          "text": ["a b c d e f g h i j k l m n", "x y z a b"]}))
     bhj, bnlj = "BroadcastHashJoin BuildRight", "BroadcastNestedLoopJoin BuildRight"
+
+    def above_gate():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(SJ, "_KNN_NP_MAX_REFS", 0)
+            return SJ.distance_join(pts, refs, 5000.0)
+
     expect = {
         "point_in_tile_join": (
             lambda: SJ.point_in_tile_join(
                 pts, SJ.with_cell(refs, 10).select("cell", "ref_id"), 10),
             [bhj]),
-        "distance_join": (lambda: SJ.distance_join(pts, refs, 5000.0), [bhj]),
+        # dim-sized refs take the numpy pass: no join at all
+        "distance_join": (lambda: SJ.distance_join(pts, refs, 5000.0), []),
+        "distance_join above the refs gate": (above_gate, [bhj]),
         "clipped_pip_join": (lambda: SJ.clipped_pip_join(pts, polys, zoom=10), [bhj]),
         "cosine_topk_brute": (lambda: S.cosine_topk_brute(emb, emb, k=2), [bnlj]),
         # the sort-merge join is the left join back to every doc

@@ -505,7 +505,7 @@ def test_plan_build_runs_one_spark_job(spark, op):
     """Building each operator against a dim-sized side launches ONE
     Spark job: the gate probe and the dim collect are the same
     ``limit(gate + 1).toPandas()`` (a count probe plus a collect cost
-    three); the range join's one job is its aggregate over the refs."""
+    three); PiP's one job collects its polygons."""
     from xutil_spark.operators.mapmatch import hmm_map_match
 
     pts = spark.range(0, 200, 1, 4).select(
@@ -743,3 +743,278 @@ def test_knn_searcher_matches_brute_and_previous_kernel(case):
         want = np.lexsort((np.arange(len(rlon)), np.round(bd, 3)))[:kk]
         np.testing.assert_array_equal(ridx[p * kk:(p + 1) * kk], want)
         np.testing.assert_allclose(d[p * kk:(p + 1) * kk], bd[want], rtol=1e-12, atol=1e-6)
+
+
+# ---------------------------------------------------------------------------
+# the dim probe, column collisions, and the numpy range and PiP kernels
+# ---------------------------------------------------------------------------
+
+
+def test_collect_dim_is_one_single_stage_job(spark):
+    """The probe-and-collect of a cached dim runs as one job of one
+    stage (a bare ``limit`` under Arrow ``toPandas`` plans a shuffle to
+    one partition first: two stages); cached or not, it is one job,
+    keeps its row bound, and returns ``None`` only above the gate."""
+    sc = spark.sparkContext
+
+    def collect(dim, max_rows, group):
+        sc.setJobGroup(group, group)
+        try:
+            return SJ._collect_dim(dim, max_rows)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    uncached = synth.ref_points_table(spark, 2000)
+    dim = synth.ref_points_table(spark, 2000).cache()
+    dim.count()
+    pdf = collect(dim, 2000, "collect-dim")
+    jobs = sc.statusTracker().getJobIdsForGroup("collect-dim")
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    assert len(pdf) == 2000 and list(pdf.columns) == dim.columns
+    want = sorted(r.ref_id for r in dim.select("ref_id").collect())
+    assert sorted(pdf["ref_id"]) == want
+    assert sorted(collect(uncached, 2000, "collect-uncached")["ref_id"]) == want
+    assert len(sc.statusTracker().getJobIdsForGroup("collect-uncached")) == 1
+    for d in (dim, uncached):
+        assert SJ._collect_dim(d, 1999) is None
+        assert SJ._collect_dim(d, 0) is None
+    assert len(SJ._collect_dim(dim.limit(0), 0)) == 0
+    dim.unpersist()
+
+
+@pytest.mark.parametrize("path", ["numpy", "join"])
+def test_colliding_column_names_raise_at_plan_time(spark, monkeypatch, path):
+    """A ref or polygon column named like a point column (case aside)
+    is one ``ValueError`` naming it, before any Spark job, on every
+    path — not a worker failure, an ambiguous reference or a duplicated
+    output column."""
+    if path == "join":
+        monkeypatch.setattr(SJ, "_KNN_NP_MAX_REFS", 0)
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"image_id": ["a"], "lon": [116.3], "lat": [39.9], "caption": ["x"]}))
+    refs = spark.createDataFrame(pd.DataFrame(
+        {"ref_id": [1], "lon": [116.3], "lat": [39.9], "Caption": ["y"]}))
+    with pytest.raises(ValueError, match="'Caption'"):
+        SJ.knn_join(pts, refs, k=1)
+    with pytest.raises(ValueError, match="'Caption'"):
+        SJ.distance_join(pts, refs, 1000.0)
+    with pytest.raises(ValueError, match="'image_id'"):
+        SJ.distance_join(pts, refs.withColumnRenamed("ref_id", "image_id"), 1000.0,
+                         ref_id="image_id")
+    with pytest.raises(ValueError, match="'dist_m'"):
+        SJ.knn_join(pts.withColumn("dist_m", F.lit(0.0)), refs.drop("Caption"), k=1)
+    polys = spark.createDataFrame(pd.DataFrame(
+        {"poly_id": [1], "caption": ["z"],
+         "wkt": ["POLYGON((116 39,117 39,117 41,116 41,116 39))"]}))
+    with pytest.raises(ValueError, match="'caption'"):
+        SJ.point_in_polygon_join(pts, polys, zoom=8)
+    # distinct names still join, the refs' payload carried through
+    got = SJ.distance_join(pts, refs.withColumnRenamed("Caption", "label"), 1000.0)
+    assert got.columns == ["image_id", "lon", "lat", "caption", "ref_id", "label", "dist_m"]
+    assert [tuple(r) for r in got.select("caption", "label", "dist_m").collect()] == [
+        ("x", "y", 0.0)]
+
+
+def _hav_reference(plon, plat, rlon, rlat):
+    """Haversine (meters) of every point to every ref, (points, refs),
+    in ``native.haversine_m``'s float64 operation order."""
+    rad = np.pi / 180.0
+    plon, plat = np.asarray(plon)[:, None], np.asarray(plat)[:, None]
+    rlon, rlat = np.asarray(rlon)[None, :], np.asarray(rlat)[None, :]
+    dlat = (rlat - plat) * rad
+    dlon = (rlon - plon) * rad
+    a = (np.sin(dlat / 2) * np.sin(dlat / 2)
+         + np.sin(dlon / 2) * np.sin(dlon / 2) * np.cos(plat * rad) * np.cos(rlat * rad))
+    return 2.0 * 6371000.0 * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
+
+
+@st.composite
+def _range_cases(draw):
+    n = draw(st.one_of(st.sampled_from([15, 16, 17]), st.integers(1, 600)))
+    radius = draw(st.sampled_from([0.0, 1.0, 50_000.0, 2.1e7]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    shape = draw(st.sampled_from(["box", "polar", "antimeridian", "east_edge", "wide"]))
+    if shape == "box":
+        w = draw(st.sampled_from([0.01, 1.0, 20.0]))
+        rlon = rng.uniform(100.0, 100.0 + w, n)
+        rlat = rng.uniform(30.0, 30.0 + w / 2, n)
+    elif shape == "polar":  # past the tile limit, up to the poles
+        rlon = rng.uniform(-60.0, 60.0, n)
+        rlat = rng.choice([-1.0, 1.0], n) * rng.uniform(84.0, 90.0, n)
+        rlat[: n // 10] = np.sign(rlat[: n // 10]) * 90.0
+    elif shape == "antimeridian":  # both sides of ±180, under 180° wide
+        rlon = np.where(rng.random(n) < 0.5, rng.uniform(175.0, 180.0, n),
+                        rng.uniform(-180.0, -175.0, n))
+        rlat = rng.uniform(-10.0, 10.0, n)
+    elif shape == "east_edge":  # up to lon 180, points across it
+        rlon = 180.0 - rng.uniform(0.0, draw(st.sampled_from([0.5, 5.0])), n)
+        rlat = rng.uniform(-10.0, 10.0, n)
+    else:  # over 180° of longitude: the brute path
+        rlon = rng.uniform(-170.0, 170.0, n)
+        rlat = rng.uniform(-60.0, 60.0, n)
+    dup, to = rng.integers(0, n, (2, n // 4))  # duplicated refs
+    rlon[to], rlat[to] = rlon[dup], rlat[dup]
+    if n > 2 and draw(st.booleans()):  # null / NaN ref coordinates
+        rlon[0], rlat[1] = np.nan, np.nan
+    m = 300
+    plon = np.concatenate([
+        rng.uniform(np.nanmin(rlon) - 2, np.nanmax(rlon) + 2, m),
+        rng.uniform(-180.0, 180.0, 50), rlon[:20],
+        rlon[:20] + rng.normal(0.0, 1e-5, len(rlon[:20])),
+        [180.0, -180.0, 0.0, 0.0, 179.9999, np.nan, 10.0, np.nan]])
+    plat = np.concatenate([
+        rng.uniform(np.nanmin(rlat) - 2, np.nanmax(rlat) + 2, m),
+        rng.uniform(-90.0, 90.0, 50), rlat[:20],
+        rlat[:20] + rng.normal(0.0, 1e-5, len(rlat[:20])),
+        [0.0, 0.0, 90.0, -90.0, 85.0512, 5.0, np.nan, np.nan]])
+    if shape == "east_edge":  # wrap past 180 to the far side of the antimeridian
+        plon = np.where(plon > 180.0, plon - 360.0, plon)
+    return rlon, rlat, np.clip(plon, -180, 180), np.clip(plat, -90, 90), radius
+
+
+@settings(max_examples=150, deadline=None)
+@given(_range_cases())
+def test_range_searcher_matches_brute_force(case):
+    """Every (point, ref) pair within the radius and nothing else, with
+    ``dist_m`` bit-equal to an all-pairs haversine: refs around the
+    grid threshold, radii 0, 1 m, 50 km and over half the
+    circumference, points and refs past the tile limit and at the
+    poles, refs across the antimeridian and over 180° wide, duplicated
+    refs, NaN coordinates."""
+    rlon, rlat, plon, plat, radius = case
+    rows, ridx, d = SJ.range_searcher(rlon, rlat, radius)(plon, plat)
+    with np.errstate(invalid="ignore"):
+        bd = _hav_reference(plon, plat, rlon, rlat)
+        want = np.argwhere(bd <= radius)
+    got = np.stack([rows, ridx], axis=1)
+    assert len(set(map(tuple, got))) == len(got)
+    o = np.lexsort((ridx, rows))
+    np.testing.assert_array_equal(got[o], want)
+    np.testing.assert_array_equal(d[o], bd[want[:, 0], want[:, 1]])
+
+
+@pytest.mark.parametrize("radius", [50_000.0, 300_000.0])
+def test_range_searcher_across_the_antimeridian(radius):
+    """Refs up to lon 180 pair with points just past it (lon −180…):
+    a point takes its cell unwrapped toward the refs."""
+    rng = np.random.default_rng(1)
+    rlon, rlat = 180.0 - rng.uniform(0.0, 5.0, 300), rng.uniform(-10.0, 10.0, 300)
+    plon, plat = rng.uniform(178.0, 182.0, 400), rng.uniform(-10.0, 10.0, 400)
+    plon = np.where(plon > 180.0, plon - 360.0, plon)
+    rows, ridx, d = SJ.range_searcher(rlon, rlat, radius)(plon, plat)
+    bd = _hav_reference(plon, plat, rlon, rlat)
+    want = np.argwhere(bd <= radius)
+    assert (plon[want[:, 0]] < 0).sum() > 10
+    o = np.lexsort((ridx, rows))
+    np.testing.assert_array_equal(np.stack([rows, ridx], axis=1)[o], want)
+    np.testing.assert_array_equal(d[o], bd[want[:, 0], want[:, 1]])
+
+
+_POLY_SHAPES = ["star", "star_hole", "multi", "null", "empty"]
+
+
+@st.composite
+def _pip_cases(draw):
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    zoom = draw(st.integers(1, 12))
+    cx0, cy0 = rng.uniform(-170.0, 170.0), rng.uniform(-80.0, 80.0)
+    size = draw(st.sampled_from([0.01, 0.5, 5.0]))
+
+    def ring(cx, cy, r, k):
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, k))
+        rr = r * rng.uniform(0.4, 1.0, k)
+        xs = np.clip(cx + rr * np.cos(ang), -179.9, 179.9)
+        ys = np.clip(cy + rr * np.sin(ang), -89.9, 89.9)
+        pts = [f"{x!r} {y!r}" for x, y in zip(xs, ys)]
+        return "(" + ", ".join(pts + pts[:1]) + ")"
+
+    wkts = []
+    for _ in range(draw(st.integers(1, 8))):
+        # overlapping polygons around one centre
+        cx, cy = cx0 + rng.normal(0, size / 2), cy0 + rng.normal(0, size / 2)
+        kind = draw(st.sampled_from(_POLY_SHAPES))
+        if kind == "star":
+            wkts.append(f"POLYGON({ring(cx, cy, size, int(rng.integers(3, 12)))})")
+        elif kind == "star_hole":
+            wkts.append(f"POLYGON({ring(cx, cy, size, 8)}, {ring(cx, cy, size / 4, 6)})")
+        elif kind == "multi":
+            wkts.append(f"MULTIPOLYGON(({ring(cx, cy, size, 6)}),"
+                        f" ({ring(cx + 3 * size, cy, size, 5)}))")
+        else:
+            wkts.append(None if kind == "null" else "")
+    m = 400
+    plon = np.r_[rng.uniform(cx0 - 3 * size, cx0 + 5 * size, m), [180.0, -180.0, np.nan, 0.0]]
+    plat = np.r_[rng.uniform(cy0 - 3 * size, cy0 + 3 * size, m), [0.0, 90.0, 0.0, np.nan]]
+    return wkts, zoom, plon, plat
+
+
+@settings(max_examples=100, deadline=None)
+@given(_pip_cases())
+def test_pip_matcher_matches_brute_force(case):
+    """The cover lookup never drops a hit: the (point, polygon) set
+    equals a ray cast of every point against every polygon, over
+    holes, multipolygons, overlapping polygons, null and empty WKT,
+    NaN coordinates and zooms 1–12."""
+    wkts, zoom, plon, plat = case
+    cells, poly = SJ._pip_cover(wkts, zoom)
+    assert (np.diff(cells) >= 0).all()
+    rows, pi = SJ.pip_matcher(cells, poly, wkts, zoom)(plon, plat)
+    got = set(zip(rows.tolist(), pi.tolist()))
+    assert len(got) == len(rows)
+    ok = np.flatnonzero(np.isfinite(plon) & np.isfinite(plat))
+    want = set()
+    for j, w in enumerate(wkts):
+        if w:
+            inside = K_geom.point_in_geo(plon[ok], plat[ok], K_geom.from_wkt(w))
+            want.update((int(i), j) for i in ok[inside])
+    assert got == want
+
+
+def test_np_grid_cell_matches_jvm_grid_cell(spark):
+    """``_np_grid_cell`` is ``_grid_cell``: x wraps (lon 180 is lon
+    −180), poleward rows clamp, at zooms 0–12."""
+    rng = np.random.default_rng(5)
+    lon = np.r_[rng.uniform(-180.0, 180.0, 500), [180.0, -180.0, 0.0, 10.0, -10.0]]
+    lat = np.r_[rng.uniform(-90.0, 90.0, 500), [0.0, 0.0, 90.0, -90.0, 85.0511]]
+    df = spark.createDataFrame(pd.DataFrame({"i": range(len(lon)), "lon": lon, "lat": lat}))
+    for zoom in (0, 1, 5, 12):
+        got = (df.select("i", SJ._grid_cell(F.col("lon"), F.col("lat"), zoom).alias("c"))
+               .toPandas().sort_values("i")["c"].to_numpy(np.int64))
+        np.testing.assert_array_equal(SJ._np_grid_cell(lon, lat, zoom), got)
+
+
+@pytest.mark.parametrize("case", ["china_50km", "globe_2000km", "polar_100km"])
+def test_distance_join_numpy_path_matches_join_path(spark, monkeypatch, case):
+    """Either side of the refs gate, the same rows: equal (point, ref)
+    sets and columns, ``dist_m`` within 1e-9 relative (Java's and
+    glibc's trig may round apart in the last ulp).  The globe case
+    derives zoom ≤ 2 above the gate (the explode's dx clamp)."""
+    rng = np.random.default_rng(11)
+    if case == "china_50km":
+        radius, n = 50_000.0, 300
+        lon, lat = rng.uniform(73.5, 134.5, 3000), rng.uniform(18.2, 53.5, 3000)
+    elif case == "globe_2000km":
+        radius, n = 2_000_000.0, 40
+        lon, lat = rng.uniform(-60.0, 60.0, 600), rng.uniform(-60.0, 60.0, 600)
+    else:
+        radius, n = 100_000.0, 200
+        lon, lat = rng.uniform(-180.0, 180.0, 2000), rng.uniform(80.0, 90.0, 2000)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"p{i}" for i in range(len(lon) - n)],
+        "lon": lon[n:], "lat": lat[n:]}))
+    refs = spark.createDataFrame(pd.DataFrame({
+        "ref_id": [f"r{i}" for i in range(n)], "lon": lon[:n], "lat": lat[:n],
+        "category": [f"c{i % 7}" for i in range(n)]}))
+
+    def run(gate):
+        monkeypatch.setattr(SJ, "_KNN_NP_MAX_REFS", gate)
+        out = SJ.distance_join(pts, refs, radius)
+        return out.columns, out.toPandas().sort_values(["image_id", "ref_id"]).reset_index(drop=True)
+
+    cols_np, got = run(n)
+    cols_jvm, want = run(n - 1)
+    assert cols_np == cols_jvm == ["image_id", "lon", "lat", "ref_id", "category", "dist_m"]
+    assert len(want) > 100
+    pd.testing.assert_frame_equal(got.drop(columns="dist_m"), want.drop(columns="dist_m"))
+    np.testing.assert_allclose(got["dist_m"], want["dist_m"], rtol=1e-9, atol=0)

@@ -1,35 +1,39 @@
 """Spatial join strategies — the engine's heart (SURVEY §2.3, §4.2).
 
-All joins reduce to **cell-id equi-joins** that Catalyst/AQE can plan
-(broadcast / shuffled-hash / sort-merge + AQE skew splitting), with
-numpy-vectorized refinement UDFs where exact geometry is needed:
+Each join takes one of two shapes, picked from the size of its dim side:
+a dim that fits the driver is collected once and searched inside ONE
+``mapInPandas`` pass of numpy kernels over the points (no shuffle, no
+join); a larger dim runs a **cell-id equi-join** that Catalyst/AQE can
+plan (broadcast / shuffled-hash / sort-merge + AQE skew splitting).
 
 * ``point_in_tile_join``   — pure equi-join on the packed cell id.
 * ``point_in_polygon_join``— filter-refine: polygon → covering cells
-  (bbox from geo.go:298-321 semantics) → equi-join → exact ray-cast.
+  (bbox from geo.go:298-321 semantics) → sorted cover probed per point
+  → exact ray-cast, all in one numpy pass.
 * ``knn_join``             — exact kNN: a shuffle-free numpy grid index
   against dim-sized refs; above the gate, a grid join on neighbor
   rings with *provable* completeness (rings escalate until the k-th
   distance is below the guaranteed-covered radius).
-* ``distance_join``        — range variant (dist ≤ r) of the grid join,
-  exact at any latitude.
+* ``distance_join``        — range variant (dist ≤ r): the same numpy
+  grid index with radius-sized cells against dim-sized refs, a
+  neighbor-ring equi-join above; exact at any latitude.
 * ``snap_to_segments``     — point → nearest segment: one numpy scorer
   against dim-sized networks, a zoom-cascade supercover join above.
 * ``salt_hot_cells``       — explicit skew handling: histogram the cell
   key, salt the heavy hitters, explode the dim side (north rule).
 
-There are no strategy knobs.  kNN, snap and map matching pick their
-path from the size of the dim side, learned by ONE probe-and-collect
-(``_collect_dim``: ``limit(gate+1).toPandas()``, a single Spark job)
-that also hands the numpy path its collected frame.  PiP collects its
-polygons once and builds their cell cover on the driver.  The range
-join derives its zoom from the radius and one top-1 pass over the
-refs' latitudes.
+There are no strategy knobs.  kNN, range, snap and map matching pick
+their path from the size of the dim side, learned by ONE
+probe-and-collect (``_collect_dim``: ``limit(gate+1).toPandas()``, a
+single Spark job, one stage when the dim is cached) that also hands the
+numpy path its collected frame.  PiP collects its polygons once and builds
+their cell cover on the driver.
 
 Scale notes (100 TB / 10^12 rows): the fact side is only ever touched by
-narrow column expressions (cell encode is JVM-native, no Python) plus
-ONE shuffle per join on the cell key; dim sides (tiles/polygons/refs)
-broadcast when small.  Skew is handled by AQE plus explicit salting for
+narrow column expressions or one embarrassingly parallel Python pass
+against a dim shipped once per executor (``sc.broadcast``); above the
+gates, ONE shuffle per join on the cell key, with dim sides broadcast
+when small.  Skew is handled by AQE plus explicit salting for
 pathological urban cells.  No driver-side collect of fact data — only
 cell histograms (bounded by distinct-cell count) and dim tables.
 """
@@ -137,45 +141,134 @@ def point_in_polygon_join(
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
-    """Filter-refine point-in-polygon join.
+    """Filter-refine point-in-polygon join.  Output: point columns +
+    polygon columns, one row per (point, containing polygon).
 
-    Phase 1 (filter): the polygons are collected once and exploded on
-    the driver to their bbox covering cells at ``zoom``
-    (``K_geom.covering_cells``, a coarse quadtree cover), then
-    broadcast; points take their cell at the same zoom (``_grid_cell``,
-    defined at every coordinate) and equi-join on it.  Phase 2
-    (refine): exact even-odd ray-cast (numpy, batch-grouped by polygon)
-    removes bbox false positives.  Rows with a null or empty ``wkt``
-    cover no cells and match nothing.
+    The polygons are collected once (one Spark job) and their bbox
+    covering cells at ``zoom`` (``K_geom.covering_cells``, a coarse
+    quadtree cover) become one sorted int64 cell array with each
+    cell's polygon index, shipped once per executor.  ONE
+    ``mapInPandas`` pass over the points then filters and refines per
+    Arrow batch (``pip_matcher``): each point's cell (``_grid_cell``'s
+    rules, defined at every coordinate) is looked up in the cover with
+    ``searchsorted``, and the hits are ray-cast exactly (even-odd,
+    numpy, grouped by polygon).  No join, no shuffle.  Rows with a
+    null or empty ``wkt`` cover no cells and match nothing; points
+    with a null or NaN coordinate match nothing.
 
-    Zoom picks the filter selectivity: higher zoom → more dim rows,
-    fewer refine candidates.  The broadcast cover holds (polygon bbox
-    area / tile area) rows per polygon; polygon sets too large for the
-    driver take ``clipped_pip_join``.
+    Zoom picks the filter selectivity: higher zoom → more cover cells,
+    fewer ray-cast candidates.  The cover holds (polygon bbox area /
+    tile area) cells per polygon; polygon sets too large for the
+    driver take ``clipped_pip_join``.  A polygon column named like a
+    point column raises ``ValueError``.
     """
-    dim = F.broadcast(_driver_cover(polygons, zoom, wkt))
-    pts = points.withColumn("cell", _grid_cell(F.col(lon), F.col(lat), zoom))
-    cand = pts.join(dim, on="cell", how="inner")
-    refine = _pip_refine_udf()
-    return cand.filter(refine(F.col(lon), F.col(lat), F.col(wkt))).drop("cell")
-
-
-def _driver_cover(polygons: DataFrame, zoom: int, wkt: str) -> DataFrame:
-    """``polygons`` collected (one Spark job) and exploded to one row
-    per covering cell at ``zoom``: its schema plus ``cell``."""
-    from pyspark.sql import types as T
-
-    from xutil_spark.kernels import geometry as K_geom
+    import pandas as pd
+    from pyspark.sql.types import StructType
 
     poly_pd = polygons.toPandas()
-    cells = [K_geom.covering_cells(K_geom.from_wkt(w), zoom)
-             if isinstance(w, str) and w else [] for w in poly_pd[wkt]]
-    rows = np.repeat(np.arange(len(cells)), [len(c) for c in cells])
-    cover = poly_pd.iloc[rows].reset_index(drop=True)
-    cover["cell"] = np.fromiter(itertools.chain.from_iterable(cells), np.int64)
-    schema = T.StructType(polygons.schema.fields
-                          + [T.StructField("cell", T.LongType(), False)])
-    return polygons.sparkSession.createDataFrame(cover, schema)
+    _check_names(points, poly_pd.columns)
+    wkts = [w if isinstance(w, str) else None for w in poly_pd[wkt]]
+    cells, poly = _pip_cover(wkts, zoom)
+    cols = {c: poly_pd[c].to_numpy() for c in poly_pd.columns}
+    bc = points.sparkSession.sparkContext.broadcast((cells, poly, wkts, cols))
+
+    def pip_batches(it):
+        cells_b, poly_b, wkts_b, cols_b = bc.value
+        match = pip_matcher(cells_b, poly_b, wkts_b, zoom)
+        for pdf in it:
+            rows, pi = match(pdf[lon].to_numpy(np.float64),
+                             pdf[lat].to_numpy(np.float64))
+            if len(rows):
+                yield pd.DataFrame(_gather(pdf, rows, cols_b, pi))
+
+    schema = StructType(points.schema.fields + polygons.schema.fields)
+    return points.mapInPandas(pip_batches, schema=schema)
+
+
+def _gather(pdf, rows, dim_cols: dict, dim_idx) -> dict:
+    """Output columns of a numpy join pass: the point rows ``rows`` of
+    ``pdf`` beside the dim rows ``dim_idx`` of ``dim_cols``.  A
+    column-wise numpy gather: ``pdf.iloc[rows]`` fancy-indexes the whole
+    frame through pandas (measured ~3× slower at ~1M output rows)."""
+    data = {c: pdf[c].to_numpy()[rows] for c in pdf.columns}
+    for c, v in dim_cols.items():
+        data[c] = v[dim_idx]
+    return data
+
+
+def _pip_cover(wkts, zoom: int):
+    """``(cells, poly_idx)``: every polygon's bbox covering cells at
+    ``zoom``, sorted by cell (stable, so polygon order within a cell),
+    with the index of the polygon each one covers.  ``None`` or empty
+    WKT covers nothing."""
+    from xutil_spark.kernels import geometry as K_geom
+
+    cover = [K_geom.covering_cells(K_geom.from_wkt(w), zoom) if w else []
+             for w in wkts]
+    poly = np.repeat(np.arange(len(cover), dtype=np.int64),
+                     [len(c) for c in cover])
+    cells = np.fromiter(itertools.chain.from_iterable(cover), np.int64, len(poly))
+    order = np.argsort(cells, kind="stable")
+    return cells[order], poly[order]
+
+
+def _np_grid_cell(lon, lat, zoom: int):
+    """``_grid_cell`` in numpy for finite coordinates: x wraps mod
+    2^zoom and latitudes poleward of the tile limit take the edge row.
+    The cell math is ``K_tiles.wgs2tile``'s, as in ``covering_cells``."""
+    from xutil_spark.kernels import tiles as K_tiles
+
+    n = 1 << zoom
+    with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
+        x, y = K_tiles.wgs2tile(lon, lat, zoom)
+    y = np.where(lat >= _TILE_MAX_LAT, 0, np.where(lat <= -_TILE_MAX_LAT, n - 1, y))
+    return K_tiles.cell_pack(np.mod(x, n), y, zoom)
+
+
+def _csr(lo, n):
+    """Positions ``lo[i] .. lo[i] + n[i] - 1`` for every i, concatenated
+    in order: the CSR expansion of slices into one flat index list."""
+    return np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(int(n.sum()))
+
+
+def pip_matcher(cells, poly, wkts, zoom: int):
+    """Build the in-worker PiP match function over a polygon cover
+    (``_pip_cover``'s sorted ``cells`` with their ``poly`` indexes) and
+    the polygons' WKT.
+
+    Returns ``match(plon, plat) -> (pt_rows, poly_idx)``: every (point,
+    polygon) pair with the point inside the polygon by the even-odd ray
+    cast (``K_geom.point_in_geo``).  A point's candidates are the cover
+    entries of its cell (two ``searchsorted`` probes); the candidates
+    are ray-cast grouped by polygon, and each polygon is parsed once per
+    matcher, on first use.  Points with a non-finite coordinate match
+    nothing."""
+    from xutil_spark.kernels import geometry as K_geom
+
+    geoms: dict = {}
+
+    def match(plon, plat):
+        pts = np.flatnonzero(np.isfinite(plon) & np.isfinite(plat))
+        cell = _np_grid_cell(plon[pts], plat[pts], zoom)
+        lo = np.searchsorted(cells, cell, side="left")
+        n = np.searchsorted(cells, cell, side="right") - lo
+        rows = np.repeat(pts, n)
+        pi = poly[_csr(lo, n)]
+        if len(pi) == 0:
+            return rows, pi
+        order = np.argsort(pi, kind="stable")
+        rows, pi = rows[order], pi[order]
+        keep = np.zeros(len(pi), dtype=bool)
+        bounds = np.flatnonzero(np.diff(pi)) + 1
+        for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(pi)]):
+            j = int(pi[s])
+            if j not in geoms:
+                geoms[j] = K_geom.from_wkt(wkts[j])
+            r = rows[s:e]
+            keep[s:e] = K_geom.point_in_geo(plon[r], plat[r], geoms[j])
+        return rows[keep], pi[keep]
+
+    return match
 
 
 # ---------------------------------------------------------------------------
@@ -343,9 +436,34 @@ _KNN_NP_MAX_REFS = 200_000
 def _collect_dim(dim: DataFrame, max_rows: int):
     """Probe and collect a dim side in ONE Spark job (a count probe
     plus ``toPandas()`` costs three): the first ``max_rows + 1`` rows
-    as pandas, or ``None`` when the dim is over the gate."""
+    as pandas, or ``None`` when the dim is over the gate.
+
+    A cached dim goes through ``coalesce(1)``, which makes that job one
+    stage: a bare ``limit`` under Arrow ``toPandas`` plans a shuffle to
+    one partition first (2 stages; measured 134 → 91 ms on a cached
+    2k-row dim, local[4]).  The one task reads the partitions in turn
+    and stops at ``max_rows + 1``.  An uncached dim keeps the bare
+    ``limit``: its single task would also run the dim's own plan
+    serially (measured 729 → 1,344 ms on a 200k-row dim generated by a
+    Python stage)."""
+    lvl = dim.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        dim = dim.coalesce(1)
     pdf = dim.limit(max_rows + 1).toPandas()
     return None if len(pdf) > max_rows else pdf
+
+
+def _check_names(points: DataFrame, added) -> None:
+    """Raise when a column a join appends to the point rows shares its
+    name (case-insensitively, as Spark resolves names) with a point
+    column: the output would carry two columns of that name, or one
+    would silently overwrite the other."""
+    have = {c.lower() for c in points.columns}
+    clash = [c for c in added if c.lower() in have]
+    if clash:
+        raise ValueError(
+            f"column {clash[0]!r} is both a point column and a column the "
+            f"join adds from the dim side; rename one of them")
 
 
 def knn_join_np(
@@ -393,40 +511,27 @@ def knn_join_np(
     # arrays ship to each executor ONCE (torrent), not once per task —
     # at 200k refs × thousands of tasks that is the difference between
     # MBs and GBs over the wire
-    bc = points.sparkSession.sparkContext.broadcast((rid, rlon, rlat, rextra))
+    bc = points.sparkSession.sparkContext.broadcast(
+        (rlon, rlat, {ref_id: rid, **rextra}))
 
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+    from pyspark.sql.types import IntegerType, StructField
 
-    out_schema = StructType(
-        list(points.schema.fields)
-        + [StructField(ref_id, refs.schema[ref_id].dataType, True)]
-        + [StructField(c, refs.schema[c].dataType, True) for c in extras]
-        + [
-            StructField("dist_m", DoubleType(), True),
-            StructField("rank", IntegerType(), False),
-        ]
-    )
+    out_schema = _ref_join_schema(points, refs, ref_id, extras)
+    out_schema.add(StructField("rank", IntegerType(), False))
 
     def topk_batches(it):
         import pandas as pd
 
-        rid_b, rlon_b, rlat_b, rextra_b = bc.value
+        rlon_b, rlat_b, cols_b = bc.value
         # index build (argsort + cell encode) is O(refs log refs) numpy,
         # amortized once per task over all its Arrow batches
         search = knn_searcher(rlon_b, rlat_b, k)
         for pdf in it:
             if len(pdf) == 0 or n_refs == 0:
                 continue
-            plon = pdf[lon].to_numpy(np.float64)
-            plat = pdf[lat].to_numpy(np.float64)
-            rows, ridx, d, rank = search(plon, plat)
-            # column-wise numpy gather: pdf.iloc[rows] fancy-indexes the
-            # whole frame through pandas (measured ~3× slower at ~1M
-            # output rows than per-column take on the numpy arrays)
-            data = {c: pdf[c].to_numpy()[rows] for c in pdf.columns}
-            data[ref_id] = rid_b[ridx]
-            for c in extras:
-                data[c] = rextra_b[c][ridx]
+            rows, ridx, d, rank = search(pdf[lon].to_numpy(np.float64),
+                                         pdf[lat].to_numpy(np.float64))
+            data = _gather(pdf, rows, cols_b, ridx)
             data["dist_m"] = d
             data["rank"] = rank
             yield pd.DataFrame(data)
@@ -434,6 +539,30 @@ def knn_join_np(
     # a small-file scan yields few splits and would cap the search
     # parallelism (measured 8 tasks on 32 cores → 2× wall)
     return spread(points).mapInPandas(topk_batches, schema=out_schema)
+
+
+def _ref_join_schema(points: DataFrame, refs: DataFrame, ref_id: str,
+                     extras: list[str]):
+    """Output schema of a numpy ref join: point columns, ``ref_id``, the
+    refs' other columns, ``dist_m``."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    return StructType(
+        list(points.schema.fields)
+        + [StructField(ref_id, refs.schema[ref_id].dataType, True)]
+        + [StructField(c, refs.schema[c].dataType, True) for c in extras]
+        + [StructField("dist_m", DoubleType(), True)]
+    )
+
+
+def _ref_extras(points: DataFrame, refs: DataFrame, ref_id: str, ref_lon: str,
+                ref_lat: str, added: list[str]) -> list[str]:
+    """The refs' payload columns (all but id and coordinates), checked
+    with ``ref_id`` and the join's own ``added`` columns against the
+    point columns (``_check_names``)."""
+    extras = [c for c in refs.columns if c not in (ref_id, ref_lon, ref_lat)]
+    _check_names(points, [ref_id, *extras, *added])
+    return extras
 
 
 def _refs_arrays(ref_pd, ref_id: str, ref_lon: str, ref_lat: str):
@@ -449,6 +578,71 @@ def _refs_arrays(ref_pd, ref_id: str, ref_lon: str, ref_lat: str):
     return rid, rlon, rlat, rextra, extras
 
 
+def _hav(rlat, rlon, rcos, plat, plon, pcos):
+    """Haversine in meters, elementwise over broadcastable arrays, from
+    points to refs whose cosines of latitude are already taken; each
+    half-angle sine is taken once (``s * s`` is ``sin(x) * sin(x)``).
+    The float64 operation order is ``native.haversine_m``'s, so the
+    numpy joins agree with the JVM paths to the last ulp of the trig."""
+    rad = math.pi / 180.0
+    s_lat = np.sin((rlat - plat) * rad / 2)
+    s_lon = np.sin((rlon - plon) * rad / 2)
+    a = s_lat * s_lat + s_lon * s_lon * pcos * rcos
+    return 2.0 * _R_HAV * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
+
+
+class _RefGrid:
+    """Refs bucketed on an nx×ny grid of equal lon × lat cells fitted
+    to their bounding box (it does not wrap the antimeridian), sorted
+    by cell (``order``, id order within a cell), with a dense
+    ``cell_start[nx·ny + 1]`` offset table: cell c holds the sorted
+    positions ``cell_start[c]:cell_start[c + 1]`` — a direct-mapped
+    lookup, not a binary probe."""
+
+    def __init__(self, rlon, rlat, target_cells: float,
+                 min_span_x: float = 0.0, min_span_y: float = 0.0):
+        """About ``target_cells`` cells over the refs' bbox, as square
+        (in degrees) as it allows; fewer along an axis when its cells
+        would be narrower than ``min_span_*`` degrees."""
+        self.lon0, self.lat0 = float(rlon.min()), float(rlat.min())
+        self.dlon_span = max(float(rlon.max()) - self.lon0, 1e-9)
+        dlat_span = max(float(rlat.max()) - self.lat0, 1e-9)
+        nx = max(1, int(round(math.sqrt(target_cells * self.dlon_span / dlat_span))))
+        ny = max(1, int(round(target_cells / nx)))
+        if min_span_x > 0.0:
+            nx = max(1, min(nx, int(self.dlon_span / min_span_x)))
+        if min_span_y > 0.0:
+            ny = max(1, min(ny, int(dlat_span / min_span_y)))
+        self.nx, self.ny = nx, ny
+        self.span_x, self.span_y = self.dlon_span / nx, dlat_span / ny
+        rcx, rcy = self._xy(rlon, rlat)
+        rcell = rcx * ny + rcy
+        self.order = np.argsort(rcell, kind="stable")
+        self.cell_start = np.concatenate(
+            ([0], np.cumsum(np.bincount(rcell, minlength=nx * ny))))
+
+    def _xy(self, lon, lat):
+        """Cell column and row of each coordinate, clipped onto the grid."""
+        return (np.clip(((lon - self.lon0) / self.span_x).astype(np.int64), 0, self.nx - 1),
+                np.clip(((lat - self.lat0) / self.span_y).astype(np.int64), 0, self.ny - 1))
+
+    _BLK_DX = np.repeat(np.arange(-1, 2), 3)  # the 3×3 block offsets
+    _BLK_DY = np.tile(np.arange(-1, 2), 3)
+
+    def block(self, plon, plat):
+        """Each point's 3×3 neighbor block as 9 ``[lo, lo + len)``
+        slices of the cell-sorted refs: ``(los, lens)``, (points, 9)
+        each.  Both axes clip (the fitted grid has no wrap), so a ref
+        appears at most once per point."""
+        px, py = self._xy(plon, plat)
+        mx = px[:, None] + self._BLK_DX
+        my = py[:, None] + self._BLK_DY
+        ok = (mx >= 0) & (mx < self.nx) & (my >= 0) & (my < self.ny)
+        ncell = np.where(ok, mx * self.ny + my, 0)
+        los = self.cell_start[ncell]
+        return los, np.where(ok, self.cell_start[ncell + 1] - los, 0)
+
+
 def knn_searcher(rlon, rlat, k: int):
     """Build the in-worker exact-kNN search function over a collected
     refs array (the numpy grid index described in ``knn_join_np``).
@@ -457,90 +651,45 @@ def knn_searcher(rlon, rlat, k: int):
     with flat int/float arrays — reusable both by ``knn_join_np`` and
     by fused whole-pipeline operators (operators/fused.py).
 
-    Index: a bbox-FITTED nx×ny grid with nx·ny = n_refs /
-    max(_KNN_CELL_TARGET_K·k, 8) over the refs' own bounding box, so
-    candidate density hits the target exactly (power-of-2 slippy tiles
-    step it in 4× jumps: 264 candidates/point measured at the 2k-ref
-    bench shape where ~30 satisfy the ring guarantee).  Refs are sorted
-    by cell and a dense ``cell_start[nx·ny + 1]`` offset table maps a
-    cell to its slice — a direct-mapped lookup, not a binary probe.
-    Top-k needs no global sort: each point's candidate keys go into one
-    row of a padded points × candidates matrix, ``argpartition`` keeps
-    k per row and only those k are sorted.  The ring-1 guarantee +
-    straggler brute force make the result independent of the grid.
-    Ref-side trig is precomputed once per searcher, point-side cos once
-    per chunk.  Refs spanning >180° of longitude fall back to brute
-    force (the fitted grid does not wrap the antimeridian)."""
+    Index: a ``_RefGrid`` with nx·ny = n_refs / max(_KNN_CELL_TARGET_K·k,
+    8) over the refs' own bounding box, so candidate density hits the
+    target exactly (power-of-2 slippy tiles step it in 4× jumps: 264
+    candidates/point measured at the 2k-ref bench shape where ~30
+    satisfy the ring guarantee).  Top-k needs no global sort: each
+    point's candidate keys go into one row of a padded points ×
+    candidates matrix, ``argpartition`` keeps k per row and only those
+    k are sorted.  The ring-1 guarantee + straggler brute force make
+    the result independent of the grid.  Ref-side trig is precomputed
+    once per searcher, point-side cos once per chunk.  Refs spanning
+    >180° of longitude fall back to brute force (the fitted grid does
+    not wrap the antimeridian)."""
     import numpy as np
 
     n_refs = len(rlon)
     kk = min(k, n_refs)
     rad = math.pi / 180.0
-    two_r = 2.0 * 6371000.0
-    rlat_rad = np.asarray(rlat, dtype=np.float64) * rad
-    rcos = np.cos(rlat_rad)
+    rcos = np.cos(np.asarray(rlat, dtype=np.float64) * rad)
 
     # grid fit (pure numpy on the collected dim — no Spark job)
-    use_grid = n_refs >= 16 * kk
-    if use_grid:
-        lon0, lat0 = float(rlon.min()), float(rlat.min())
-        dlon_span = max(float(rlon.max()) - lon0, 1e-9)
-        dlat_span = max(float(rlat.max()) - lat0, 1e-9)
-        if dlon_span > 180.0:
-            use_grid = False  # antimeridian-spanning refs: brute force
-    if use_grid:
-        target_cells = n_refs / max(_KNN_CELL_TARGET_K * kk, 8.0)
-        nx = max(1, int(round(math.sqrt(target_cells * dlon_span / dlat_span))))
-        ny = max(1, int(round(target_cells / nx)))
-        span_x = dlon_span / nx
-        span_y = dlat_span / ny
-        rcx = np.clip(((rlon - lon0) / span_x).astype(np.int64), 0, nx - 1)
-        rcy = np.clip(((rlat - lat0) / span_y).astype(np.int64), 0, ny - 1)
-        rcell = rcx * ny + rcy
-        rorder = np.argsort(rcell, kind="stable")  # id order within a cell
+    grid = None
+    if n_refs >= 16 * kk and float(rlon.max()) - float(rlon.min()) <= 180.0:
+        grid = _RefGrid(rlon, rlat, n_refs / max(_KNN_CELL_TARGET_K * kk, 8.0))
+        rorder = grid.order
         rlon_s, rlat_s, rcos_s = rlon[rorder], rlat[rorder], rcos[rorder]
-        cell_start = np.concatenate(
-            ([0], np.cumsum(np.bincount(rcell, minlength=nx * ny))))
-        blk_dx = np.repeat(np.arange(-1, 2), 3)  # the 3×3 block offsets
-        blk_dy = np.tile(np.arange(-1, 2), 3)
-
-    def hav_pairs(ri, plon, plat, pcos):
-        """Haversine from points to refs ``ri`` (cell-sorted positions),
-        the point arrays already one entry per pair; trig for both
-        endpoints pre-computed and each half-angle sine taken once
-        (``s * s`` is ``sin(x) * sin(x)`` — the same float64 expression
-        order as the per-pair form, so distances are bit-identical)."""
-        dlat = (rlat_s[ri] - plat) * rad
-        dlon = (rlon_s[ri] - plon) * rad
-        s_lat = np.sin(dlat / 2)
-        s_lon = np.sin(dlon / 2)
-        a = s_lat * s_lat + s_lon * s_lon * pcos * rcos_s[ri]
-        return two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
 
     def topk_grid(plon, plat, pcos):
         """Returns ((pt_rows, ref_idx, dist_m) of the resolved points,
         straggler_mask)."""
         b = len(plon)
-        px = np.clip(((plon - lon0) / span_x).astype(np.int64), 0, nx - 1)
-        py = np.clip(((plat - lat0) / span_y).astype(np.int64), 0, ny - 1)
-        # each point's 3×3 block as 9 [lo, lo + len) slices of the
-        # cell-sorted refs (both axes clip — the fitted grid has no
-        # wrap, so no duplicate candidates)
-        mx = px[:, None] + blk_dx
-        my = py[:, None] + blk_dy
-        ok = (mx >= 0) & (mx < nx) & (my >= 0) & (my < ny)
-        ncell = np.where(ok, mx * ny + my, 0)
-        los = cell_start[ncell]
-        lens = np.where(ok, cell_start[ncell + 1] - los, 0)
+        los, lens = grid.block(plon, plat)
         cnt = lens.sum(axis=1)
-        tot = int(cnt.sum())
-        if tot == 0:
+        if int(cnt.sum()) == 0:
             return None, np.ones(b, dtype=bool)
-        # CSR-expand the slices into one point-major pair list
-        lens = lens.ravel()
-        rflat = np.repeat(los.ravel() - (np.cumsum(lens) - lens), lens) + np.arange(tot)
+        # the block slices as one point-major pair list
+        rflat = _csr(los.ravel(), lens.ravel())
         pair_ref = rorder[rflat]
-        d = hav_pairs(rflat, np.repeat(plon, cnt), np.repeat(plat, cnt), np.repeat(pcos, cnt))
+        d = _hav(rlat_s[rflat], rlon_s[rflat], rcos_s[rflat],
+                 np.repeat(plat, cnt), np.repeat(plon, cnt), np.repeat(pcos, cnt))
         key = np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs + pair_ref
         # top-kk per point: each point's keys fill one row of a padded
         # matrix (pad = int64 max, after every real key), argpartition
@@ -573,23 +722,17 @@ def knn_searcher(rlon, rlat, k: int):
         # point to the meridian band Δλ ≥ span_x — the cross-track
         # R·asin(cosφ·sin(Δλ)), flat beyond Δλ=90° where the nearest
         # unsearched point is the pole.
-        sx = math.sin(min(span_x, 90.0) * rad)
+        sx = math.sin(min(grid.span_x, 90.0) * rad)
         gx = _R_HAV * np.arcsin(np.cos(plat * rad) * sx)
-        guarantee = np.minimum(gx, _M_PER_DEG_HAV * span_y)
+        guarantee = np.minimum(gx, _M_PER_DEG_HAV * grid.span_y)
         resolved = full & (kth_d <= guarantee)
         take = top[resolved].ravel()
         return (np.repeat(np.flatnonzero(resolved), kk), pair_ref[take], d[take]), ~resolved
 
     def brute(plon, plat, pcos):
         """Vectorized brute-force top-k for m stragglers (m×R)."""
-        dlat = (rlat[None, :] - plat[:, None]) * rad
-        dlon = (rlon[None, :] - plon[:, None]) * rad
-        a = (
-            np.sin(dlat / 2) * np.sin(dlat / 2)
-            + np.sin(dlon / 2) * np.sin(dlon / 2)
-            * pcos[:, None] * rcos[None, :]
-        )
-        d = two_r * np.arctan2(np.sqrt(a), np.sqrt(1.0 - a))
+        d = _hav(rlat[None, :], rlon[None, :], rcos[None, :],
+                 plat[:, None], plon[:, None], pcos[:, None])
         key = (
             np.rint(np.round(d, 3) * 1000.0).astype(np.int64) * n_refs
             + np.arange(n_refs, dtype=np.int64)[None, :]
@@ -606,7 +749,7 @@ def knn_searcher(rlon, rlat, k: int):
             z = np.empty(0, dtype=np.int64)
             return z, z, np.empty(0), z
         pcos = np.cos(plat * rad)
-        if not use_grid:
+        if grid is None:
             parts = [brute(plon, plat, pcos)]
         else:
             grid_out, straggler = topk_grid(plon, plat, pcos)
@@ -643,6 +786,126 @@ def knn_searcher(rlon, rlat, k: int):
     return search
 
 
+# candidate pairs scored per numpy chunk by the range and snap
+# kernels: ≈ 4 MB per float64 temporary, cache-sized whatever the
+# Arrow batch or the radius
+_PAIR_CHUNK = 524_288
+
+# relative slack between the range kernel's geometric bounds and the
+# float64 arithmetic that computes its cells and distances: a bound
+# must clear the radius by this much before it decides a point
+_RANGE_SLACK = 1e-6
+
+# fitted cells per ref the range grid aims at when the radius allows
+# cells that small
+_RANGE_CELLS_PER_REF = 1.0
+
+
+def range_searcher(rlon, rlat, radius_m: float):
+    """Build the in-worker exact range search over a collected refs
+    array: ``search(plon, plat) -> (pt_rows, ref_idx, dist_m)``, every
+    (point, ref) pair with haversine ≤ ``radius_m`` (``_hav``, the
+    float64 operation order of ``knn_searcher`` and the JVM path).
+
+    Index: a ``_RefGrid`` over the refs' bbox of about
+    ``_RANGE_CELLS_PER_REF``·n_refs cells, each no smaller than the
+    radius needs — radius/m-per-degree of latitude, and of longitude
+    the span whose cross-track distance R·asin(cosφ·sin(span)) covers
+    the radius at the farthest latitude a pair can have (max |ref lat|
+    + the radius).  Cells may be larger, so nx·ny stays O(n_refs)
+    whatever the radius.  A point's pairs then all lie in its 3×3
+    block whenever the radius is within its ring-1 guarantee (the
+    bound ``knn_searcher`` uses; an axis of at most 2 cells is covered
+    whole); points farther in latitude than the radius from every ref
+    have no pair; any other point is scored against all refs.  Points
+    are unwrapped toward the bbox centre before their cell is taken
+    (distances use the given longitudes), and refs spanning more than
+    180° of longitude are all brute force, as in kNN.  Work is chunked
+    by candidate pairs (``_PAIR_CHUNK``), so a wide radius against a
+    large dim keeps its temporaries bounded.  Null or NaN coordinates,
+    on either side, match nothing."""
+    rlon = np.asarray(rlon, dtype=np.float64)
+    rlat = np.asarray(rlat, dtype=np.float64)
+    radius = float(radius_m)
+    rad = math.pi / 180.0
+    live = np.flatnonzero(np.isfinite(rlon) & np.isfinite(rlat))
+    vlon, vlat = rlon[live], rlat[live]
+    vcos = np.cos(vlat * rad)
+    n = len(live)
+    z = np.empty(0, dtype=np.int64)
+    if n == 0 or not radius >= 0.0:
+        return lambda plon, plat: (z, z, np.empty(0))
+    reach = radius * (1.0 + _RANGE_SLACK)
+    lat_lo, lat_hi = float(vlat.min()), float(vlat.max())
+
+    grid = None
+    if n > 16 and float(vlon.max()) - float(vlon.min()) <= 180.0:
+        need = radius * (1.0 + 2.0 * _RANGE_SLACK)
+        span_y = need / _M_PER_DEG_HAV
+        lat_far = min(max(-lat_lo, lat_hi) + span_y, 90.0)
+        s = math.sin(min(need / _R_HAV, math.pi / 2)) / math.cos(math.radians(lat_far))
+        span_x = math.degrees(math.asin(s)) if s < 1.0 else math.inf
+        grid = _RefGrid(vlon, vlat, _RANGE_CELLS_PER_REF * n, span_x, span_y)
+        ref_of = live[grid.order]
+        slon, slat, scos = vlon[grid.order], vlat[grid.order], vcos[grid.order]
+        lon_mid = grid.lon0 + grid.dlon_span / 2.0
+        sx = math.sin(min(grid.span_x, 90.0) * rad)
+        gy = math.inf if grid.ny <= 2 else _M_PER_DEG_HAV * grid.span_y
+
+    def guaranteed(plat):
+        """Whether each point's 3×3 block provably holds every ref
+        within the radius (an axis of ≤ 2 cells is searched whole)."""
+        if grid.nx <= 2:
+            return np.full(len(plat), gy >= reach)
+        gx = _R_HAV * np.arcsin(np.cos(plat * rad) * sx)
+        return np.minimum(gx, gy) >= reach
+
+    def grid_pass(plon, plat, idx, out):
+        ulon = plon[idx] - 360.0 * np.round((plon[idx] - lon_mid) / 360.0)
+        los, lens = grid.block(ulon, plat[idx])
+        cnt = lens.sum(axis=1)
+        end = np.cumsum(cnt)
+        pcos = np.cos(plat[idx] * rad)
+        s = 0
+        while s < len(idx):
+            e = max(int(np.searchsorted(end, end[s] - cnt[s] + _PAIR_CHUNK, "right")), s + 1)
+            rflat = _csr(los[s:e].ravel(), lens[s:e].ravel())
+            rows = np.repeat(np.arange(s, e), cnt[s:e])
+            d = _hav(slat[rflat], slon[rflat], scos[rflat],
+                     plat[idx[rows]], plon[idx[rows]], pcos[rows])
+            keep = d <= radius
+            out.append((idx[rows[keep]], ref_of[rflat[keep]], d[keep]))
+            s = e
+
+    def brute_pass(plon, plat, idx, out):
+        step = max(1, _PAIR_CHUNK // n)
+        for s in range(0, len(idx), step):
+            q = idx[s:s + step]
+            d = _hav(vlat[None, :], vlon[None, :], vcos[None, :], plat[q, None],
+                     plon[q, None], np.cos(plat[q] * rad)[:, None])
+            i, j = np.nonzero(d <= radius)
+            out.append((q[i], live[j], d[i, j]))
+
+    def search(plon, plat):
+        """(pt_rows, ref_idx, dist_m) for the batch — exact."""
+        plon = np.asarray(plon, dtype=np.float64)
+        plat = np.asarray(plat, dtype=np.float64)
+        idx = np.flatnonzero(np.isfinite(plon) & np.isfinite(plat))
+        # the meridional arc lower-bounds haversine
+        py = plat[idx]
+        idx = idx[((py - lat_hi) * _M_PER_DEG_HAV <= reach)
+                  & ((lat_lo - py) * _M_PER_DEG_HAV <= reach)]
+        out = [(z, z, np.empty(0))]
+        if grid is not None:
+            ok = guaranteed(plat[idx])
+            grid_pass(plon, plat, idx[ok], out)
+            idx = idx[~ok]
+        brute_pass(plon, plat, idx, out)
+        return tuple(np.concatenate(cols) for cols in zip(*out))
+
+    return search
+
+
 def knn_join(
     points: DataFrame,
     refs: DataFrame,
@@ -663,8 +926,10 @@ def knn_join(
     rows run the shuffle-free numpy grid index (``knn_join_np``) on the
     collected frame; larger refs run the quadtree escalation join
     (``_knn_join_grid``) from the zoom ``pick_knn_zoom`` fits to them.
-    Both paths are exact with the same tie order.
+    Both paths are exact with the same tie order.  A ref column named
+    like a point column raises ``ValueError`` on both.
     """
+    _ref_extras(points, refs, ref_id, ref_lon, ref_lat, ["dist_m", "rank"])
     ref_pd = _collect_dim(refs, _KNN_NP_MAX_REFS)
     if ref_pd is not None:
         return knn_join_np(points, refs, ref_pd, k, point_id, ref_id,
@@ -815,15 +1080,50 @@ def distance_join(
     ref_lat: str = "lat",
 ) -> DataFrame:
     """All (point, ref) pairs with haversine ≤ radius_m, exact at any
-    latitude.
+    latitude.  Output: point columns + (ref_id, the refs' other
+    columns, dist_m).
 
-    The plan comes from the radius and the refs (``_range_zoom_ring``):
-    points explode to the ring of neighbor cells that provably holds
-    every ref within the radius, equi-join the refs on cell
-    (``_grid_cell``, defined at every coordinate), and keep the pairs
-    whose JVM-native haversine (``dist_m``) is ≤ radius_m.  The refs
-    are always broadcast.
+    The path follows the size of the refs, learned by the probe-and-
+    collect ``knn_join`` uses (``_collect_dim``, the same gate).  At
+    most ``_KNN_NP_MAX_REFS`` refs ship once per executor and ONE
+    ``mapInPandas`` pass runs ``range_searcher`` per Arrow batch: a
+    grid fitted to the refs with cells no smaller than the radius
+    needs, each point's 3×3 block scored with ``knn_searcher``'s
+    haversine, and brute force for the points the block cannot prove
+    complete — no explode, no join, no shuffle.  Larger refs take the
+    equi-join: the zoom comes from the radius and the refs
+    (``_range_zoom_ring``), points explode to the ring of neighbor
+    cells that provably holds every ref within the radius, equi-join
+    the broadcast refs on cell (``_grid_cell``, defined at every
+    coordinate), and keep the pairs whose JVM-native haversine is ≤
+    radius_m.  Both paths give the same pairs; ``dist_m`` agrees to the
+    last ulp of the trig (numpy and the JVM round some sines apart).
+    Null or NaN coordinates match nothing.  A ref column named like a
+    point column raises ``ValueError``.
     """
+    extras = _ref_extras(points, refs, ref_id, ref_lon, ref_lat, ["dist_m"])
+    ref_pd = _collect_dim(refs, _KNN_NP_MAX_REFS)
+    if ref_pd is not None:
+        import pandas as pd
+
+        rid, rlon, rlat, rextra, _ = _refs_arrays(ref_pd, ref_id, ref_lon, ref_lat)
+        bc = points.sparkSession.sparkContext.broadcast(
+            (rlon, rlat, {ref_id: rid, **rextra}))
+
+        def range_batches(it):
+            rlon_b, rlat_b, cols_b = bc.value
+            search = range_searcher(rlon_b, rlat_b, radius_m)
+            for pdf in it:
+                rows, ridx, d = search(pdf[lon].to_numpy(np.float64),
+                                       pdf[lat].to_numpy(np.float64))
+                if len(rows):
+                    data = _gather(pdf, rows, cols_b, ridx)
+                    data["dist_m"] = d
+                    yield pd.DataFrame(data)
+
+        return spread(points).mapInPandas(
+            range_batches, schema=_ref_join_schema(points, refs, ref_id, extras))
+
     zoom, ring = _range_zoom_ring(refs, radius_m, ref_lat)
     refs_c, _extras = _refs_with_cell(refs, _grid_cell, zoom, ref_id, ref_lon, ref_lat)
     # the (2r+1)²-way explode inherits the scan's split count
@@ -1247,11 +1547,6 @@ def pick_snap_fine_zoom(segments: DataFrame, coarse_zoom: int,
     return coarse_zoom
 
 
-# rows × segments scored per numpy chunk in _snap_candidates_np:
-# ≈ 4 MB per float64 temporary, cache-sized whatever the Arrow batch
-_SNAP_PAIR_CHUNK = 524_288
-
-
 def _snap_candidates_np(points: DataFrame, segments: DataFrame, seg_pd,
                         radius_m: float, k: int, point_id: str, seg_id: str,
                         lon: str, lat: str, extra_cols: tuple = (),
@@ -1309,7 +1604,7 @@ def _snap_candidates_np(points: DataFrame, segments: DataFrame, seg_pd,
             return
         kk = min(int(k), ns)
         col = np.arange(ns, dtype=np.int64)
-        chunk = max(1, _SNAP_PAIR_CHUNK // ns)
+        chunk = max(1, _PAIR_CHUNK // ns)
         for pdf in it:
             n = len(pdf)
             if n == 0:

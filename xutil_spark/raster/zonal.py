@@ -7,16 +7,18 @@ xutil's gis.go stops at tile/coordinate math).
 
 Stage shape (the 100-TB story):
 
-1. ``pixel_sums`` — ONE ``mapInPandas`` projection decodes each image
-   (kernels/codec.py, numpy+zlib) and reduces it to integer channel
-   sums + a pixel count.  Zero shuffle; pixels never re-materialize
+1. ``pixel_sums`` — ONE ``mapInPandas`` projection decodes each Arrow
+   batch grouped by format and shape (``codec.decode_batch``,
+   numpy+zlib) and reduces every image to integer channel sums + a
+   pixel count.  Zero shuffle; pixels never re-materialize
    downstream, so the shuffled row is ~40 bytes regardless of image
    size.
 2. zone assignment — the filter-refine point-in-polygon join
-   (operators/spatial_join.py:96): zones explode to bbox cover cells
-   and broadcast; the fact equi-joins on its cell; the exact even-odd
-   ray-cast refines.  Fact-side cost: one broadcast hash join, no
-   shuffle.
+   (operators/spatial_join.point_in_polygon_join): the zones' bbox
+   cover cells ship once per executor as one sorted array; each fact
+   row's cell is looked up in it and the exact even-odd ray-cast
+   refines, in one ``mapInPandas`` pass.  Fact-side cost: that pass,
+   no join, no shuffle.
 3. per-zone reduce — ``groupBy(zone_id)`` with map-side combine: the
    only shuffle carries partial (count, 4×int64-sum) rows at
    n_partitions × n_zones cardinality.
@@ -56,19 +58,15 @@ def pixel_sums(images: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            sums = {k: [] for k in ("sum_r", "sum_g", "sum_b", "n_px")}
-            for r in b.itertuples(index=False):
-                px = K_codec.decode_image(
-                    bytes(r.bytes), int(r.w), int(r.h), r.fmt
-                ).astype(np.int64)
-                s = px.reshape(-1, 3).sum(axis=0)
-                sums["sum_r"].append(int(s[0]))
-                sums["sum_g"].append(int(s[1]))
-                sums["sum_b"].append(int(s[2]))
-                sums["n_px"].append(int(r.w) * int(r.h))
+            # one grouped decode per batch: images of one format and
+            # shape decode together, and their sums are one integer
+            # reduction (exact, as the per-image int64 sum)
+            sums = np.zeros((len(b), 3), dtype=np.int64)
+            for pos, px in K_codec.decode_batch(b["bytes"], b["w"], b["h"], b["fmt"]):
+                sums[pos] = K_codec._channel_sums(px)
             out = b[keep_names].reset_index(drop=True)
-            for k, v in sums.items():
-                out[k] = v
+            out["sum_r"], out["sum_g"], out["sum_b"] = sums.T
+            out["n_px"] = b["w"].to_numpy(np.int64) * b["h"].to_numpy(np.int64)
             yield out
 
     return images.mapInPandas(run, schema=schema)
