@@ -70,7 +70,7 @@ def test_streaming_geofence_two_microbatches(spark, tmp_path):
         .option("checkpointLocation", chk)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (r["user_id"], r["event_id"], r["kind"], r["fence_id"])
         for r in spark.read.parquet(sink).collect()

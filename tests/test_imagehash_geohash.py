@@ -451,24 +451,3 @@ def test_phash_perceptual_invariance():
     other = pixels_for(7)[:, ::-1]  # different scene, mirrored
     ho = _phash_scalar(other)
     assert bin((h0 ^ ho) & ((1 << 64) - 1)).count("1") >= 20
-
-
-def test_images_table_dup_cluster(spark):
-    """dup_cluster=k: first k rows are byte-identical prints of row 0
-    (unique ids), rows >= k and the default path are untouched."""
-    from xutil_spark.data.synth import images_table
-
-    base = {r.image_id: r for r in images_table(spark, 12).collect()}
-    dup = {r.image_id: r for r in
-           images_table(spark, 12, dup_cluster=5).collect()}
-    assert set(base) == set(dup) and len(dup) == 12
-    r0 = base["img000000000000"]
-    for i in range(12):
-        rid = f"img{i:012d}"
-        if i < 5:
-            assert bytes(dup[rid].bytes) == bytes(r0.bytes)
-            assert dup[rid].phash == r0.phash
-            assert dup[rid].caption == r0.caption
-        else:
-            assert bytes(dup[rid].bytes) == bytes(base[rid].bytes)
-            assert dup[rid].phash == base[rid].phash

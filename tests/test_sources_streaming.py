@@ -92,7 +92,7 @@ def test_streaming_cell_counts(spark, tmp_path):
         agg.writeStream.format("memory").queryName("cellcounts")
         .outputMode("complete").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.sql("SELECT * FROM cellcounts").toPandas()
     # batch equivalent
     exp = streaming_cell_counts(batch_df, zoom=10, window="10 minutes")
@@ -305,7 +305,7 @@ def test_streaming_first_seen_dedup(spark, tmp_path):
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", chk)
              .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run_once()
     got1 = spark.read.parquet(sink).toPandas()

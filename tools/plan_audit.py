@@ -93,7 +93,7 @@ def main() -> None:
     from xutil_spark.contract import QUERIES
     from xutil_spark.session import get_session
 
-    spark = get_session(master="local[8]", app_name="plan_audit")
+    spark = get_session(app_name="plan_audit")
     # AQE wraps the un-executed plan in AdaptiveSparkPlan, hiding the
     # codegen span ids; the audit inspects the static plan, so turn it
     # off here (runtime keeps AQE on everywhere else)

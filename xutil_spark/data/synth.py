@@ -107,40 +107,29 @@ def images_table(
     skew: bool = False,
     partitions: int | None = None,
     with_bytes: bool = True,
-    dup_cluster: int = 0,
 ) -> DataFrame:
-    """Distributed deterministic images table (input_hint schema).
-
-    ``dup_cluster=k`` makes the first k rows byte-identical copies of
-    row 0 (same pixels, same phash, unique image_id) — one giant
-    perceptual-print clique, the dedup skew stress the bench's skew
-    stage uses.  ``dup_cluster=0`` (default) is byte-identical to the
-    pre-parameter generator."""
+    """Distributed deterministic images table (input_hint schema)."""
     parts = partitions or max(spark.sparkContext.defaultParallelism, 4)
     base = spark.range(0, n, 1, parts)
     sk = bool(skew)
     wb = bool(with_bytes)
-    dup = int(dup_cluster)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             idx = b["id"].to_numpy(np.int64)
-            # content key: rows below dup_cluster all render row 0's
-            # pixels/caption/phash (ids stay unique)
-            key = np.where(idx < dup, 0, idx) if dup else idx
-            ph = phash_for(key, skew=sk)
+            ph = phash_for(idx, skew=sk)
             rows = {
                 "image_id": [f"img{int(i):012d}" for i in idx],
-                "w": [_W_CYCLE[int(i) % 3] for i in key],
-                "h": [_H_CYCLE[int(i) % 3] for i in key],
-                "fmt": [_FMT_CYCLE[int(i) % 2] for i in key],
-                "caption": [caption_for(int(i)) for i in key],
+                "w": [_W_CYCLE[int(i) % 3] for i in idx],
+                "h": [_H_CYCLE[int(i) % 3] for i in idx],
+                "fmt": [_FMT_CYCLE[int(i) % 2] for i in idx],
+                "caption": [caption_for(int(i)) for i in idx],
                 "phash": ph,
             }
             if wb:
                 rows["bytes"] = [
                     K_codec.encode_image(pixels_for(int(i)), _FMT_CYCLE[int(i) % 2])
-                    for i in key
+                    for i in idx
                 ]
             else:
                 rows["bytes"] = [b""] * len(idx)

@@ -28,7 +28,8 @@ def get_session(
         if SparkConf().contains("spark.master"):
             master = SparkConf().get("spark.master")
         else:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+            # one task thread per CPU this process may run on
+            cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
             master = f"local[{cpus}]"
     n_threads = master.split("[")[-1].rstrip("]") if "[" in master else "4"
     try:
