@@ -37,25 +37,57 @@ def _brute(pdf, radius_m, window_s):
     return out
 
 
-@pytest.mark.parametrize("radius,window", [(100_000.0, 86_400),
-                                           (40_000.0, 3_600)])
-def test_encounter_join_matches_brute(spark, radius, window):
+def _polar_events(rng, n, lat_lo, lat_hi):
+    """Events spread over a ~250 km-wide band near the pole, one user
+    of 40 each, over 14 days."""
+    return pd.DataFrame({
+        "event_id": np.arange(n),
+        "user_id": rng.integers(0, 40, n),
+        "lon": rng.uniform(10, 32, n),
+        "lat": rng.uniform(lat_lo, lat_hi, n),
+        "ep": rng.integers(1_700_000_000, 1_700_000_000 + 14 * 86_400, n),
+    })
+
+
+@pytest.mark.parametrize("radius,window,shape", [
+    pytest.param(100_000.0, 86_400, "mid", id="100000.0-86400"),
+    pytest.param(40_000.0, 3_600, "mid", id="40000.0-3600"),
+    # the zoom must follow the events' latitude, not a fixed envelope
+    (20_000.0, 14 * 86_400, "polar"),
+    (100_000.0, 14 * 86_400, "polar"),
+    # plus rows beyond the tile limit (±85.0511°) at both poles
+    (20_000.0, 14 * 86_400, "poles"),
+])
+def test_encounter_join_matches_brute(spark, radius, window, shape):
     from xutil_spark.operators.encounters import encounter_join
 
     rng = np.random.default_rng(int(radius) % 9973)
     n = 900
-    pdf = pd.DataFrame({
-        "event_id": np.arange(n),
-        "user_id": rng.integers(0, 40, n),
-        # clustered so pairs actually happen: 6 hotspots + noise
-        "lon": np.concatenate([
-            rng.normal(rng.uniform(75, 130), 0.6, n // 2),
-            rng.uniform(73, 134, n - n // 2)]),
-        "lat": np.concatenate([
-            rng.normal(rng.uniform(20, 50), 0.5, n // 2),
-            rng.uniform(18, 53, n - n // 2)]),
-        "ep": rng.integers(1_700_000_000, 1_700_000_000 + 14 * 86_400, n),
-    })
+    if shape == "mid":
+        pdf = pd.DataFrame({
+            "event_id": np.arange(n),
+            "user_id": rng.integers(0, 40, n),
+            # clustered so pairs actually happen: 6 hotspots + noise
+            "lon": np.concatenate([
+                rng.normal(rng.uniform(75, 130), 0.6, n // 2),
+                rng.uniform(73, 134, n - n // 2)]),
+            "lat": np.concatenate([
+                rng.normal(rng.uniform(20, 50), 0.5, n // 2),
+                rng.uniform(18, 53, n - n // 2)]),
+            "ep": rng.integers(1_700_000_000,
+                               1_700_000_000 + 14 * 86_400, n),
+        })
+    elif radius < 50_000.0:
+        pdf = _polar_events(rng, 400, 83.0, 85.0)
+    else:
+        pdf = _polar_events(rng, n, 78.0, 84.0)
+    if shape == "poles":
+        north = _polar_events(rng, 60, 85.0511, 90.0)
+        south = _polar_events(rng, 60, -90.0, -85.0511)
+        south.loc[:2, "lat"] = -90.0
+        north.loc[:2, "lat"] = 90.0
+        pdf = pd.concat([pdf, north, south], ignore_index=True)
+        pdf["event_id"] = np.arange(len(pdf))
     from pyspark.sql import functions as F
     sdf = spark.createDataFrame(pdf).withColumn(
         "ts", F.timestamp_seconds(F.col("ep")))
@@ -76,11 +108,11 @@ def test_pick_encounter_zoom_monotone():
     from xutil_spark.operators.spatial_join import (
         _MAX_CELL_ZOOM,
         _ring_guarantee_m,
-        pick_ring_zoom,
+        _pick_ring_zoom,
     )
 
     for r in (500.0, 5_000.0, 100_000.0, 800_000.0):
-        z = pick_ring_zoom(r, 1, 60.0)
+        z = _pick_ring_zoom(r, 1, 60.0)
         assert _ring_guarantee_m(z, 1) >= r
         if z < _MAX_CELL_ZOOM:
             assert _ring_guarantee_m(z + 1, 1) < r

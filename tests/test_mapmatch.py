@@ -1,5 +1,6 @@
 """HMM map matching: Viterbi behavior + scalar-replay parity."""
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -25,7 +26,7 @@ _PTS = pd.DataFrame({
 
 def _match(spark, pts, segs, **kw):
     args = dict(radius_m=5_000.0, sigma_m=2_000.0, beta_m=50.0, k=2,
-                zoom=8, track="track_id", point_id="pid", ts="ts")
+                track="track_id", point_id="pid", ts="ts")
     args.update(kw)
     return hmm_map_match(
         spark.createDataFrame(pts), spark.createDataFrame(segs), **args
@@ -47,7 +48,7 @@ def test_viterbi_does_not_zigzag(spark):
 def test_greedy_baseline_would_zigzag(spark):
     cand = candidate_segments(
         spark.createDataFrame(_PTS), spark.createDataFrame(_SEGS),
-        radius_m=5_000.0, k=1, zoom=8, point_id="pid",
+        radius_m=5_000.0, k=1, point_id="pid",
     ).toPandas().sort_values("pid")
     assert cand["seg_id"].tolist() == [1, 2, 1, 2, 1, 2]
 
@@ -76,7 +77,7 @@ def test_matches_scalar_replay(spark):
 def test_candidates_ranked_and_capped(spark):
     cand = candidate_segments(
         spark.createDataFrame(_PTS), spark.createDataFrame(_SEGS),
-        radius_m=5_000.0, k=2, zoom=8, point_id="pid",
+        radius_m=5_000.0, k=2, point_id="pid",
     ).toPandas()
     per = cand.groupby("pid")
     for pid, g in per:
@@ -113,13 +114,44 @@ def test_candidates_np_matches_cells_path(spark):
     })
     a = candidate_segments(
         spark.createDataFrame(pts), spark.createDataFrame(segs),
-        radius_m=4_000.0, k=3, point_id="pid", zoom=10).toPandas()
+        radius_m=4_000.0, k=3, point_id="pid").toPandas()
     b = _snap_candidates_np(
         spark.createDataFrame(pts), spark.createDataFrame(segs), segs,
         4_000.0, 3, "pid", "seg_id", "lon", "lat").toPandas()
     cols = ["pid", "rank", "seg_id", "dist_m", "t", "snap_lon", "snap_lat"]
     a = a[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
     b = b[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_candidates_cells_path_exact_near_the_pole(spark):
+    """At 82–84.5°N the cell path's ring must still cover the radius:
+    its candidates equal the exhaustive numpy scorer's, ranks and
+    values included."""
+    from xutil_spark.operators.spatial_join import _snap_candidates_np
+
+    rng = np.random.default_rng(84)
+    n_pts, n_segs = 3000, 25
+    lo, hi = [10.0, 82.0], [40.0, 84.5]
+    sa = rng.uniform(lo, hi, (n_segs, 2))
+    sb = np.clip(sa + rng.uniform(-3, 3, (n_segs, 2)), lo, hi)
+    segs = pd.DataFrame({
+        "seg_id": np.arange(n_segs), "ax": sa[:, 0], "ay": sa[:, 1],
+        "bx": sb[:, 0], "by": sb[:, 1]})
+    pts = pd.DataFrame({
+        "pid": np.arange(n_pts),
+        "lon": rng.uniform(10.0, 40.0, n_pts),
+        "lat": rng.uniform(82.0, 84.5, n_pts)})
+    a = candidate_segments(
+        spark.createDataFrame(pts), spark.createDataFrame(segs),
+        radius_m=30_000.0, k=3, point_id="pid").toPandas()
+    b = _snap_candidates_np(
+        spark.createDataFrame(pts), spark.createDataFrame(segs), segs,
+        30_000.0, 3, "pid", "seg_id", "lon", "lat").toPandas()
+    cols = ["pid", "rank", "seg_id", "dist_m", "t", "snap_lon", "snap_lat"]
+    a = a[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
+    b = b[cols].sort_values(["pid", "rank"]).reset_index(drop=True)
+    assert b["pid"].nunique() > 1000  # the shape actually matches
     pd.testing.assert_frame_equal(a, b)
 
 
@@ -150,7 +182,7 @@ def test_candidate_segments_shuffle_join_path_matches_broadcast(
         "lon": [0.004 * i - 0.03 for i in range(25)],
         "lat": [0.002 * ((i * 5) % 7) - 0.006 for i in range(25)],
     })
-    kw = dict(radius_m=4_000.0, k=2, point_id="pid", zoom=10)
+    kw = dict(radius_m=4_000.0, k=2, point_id="pid")
     cols = ["pid", "rank", "seg_id", "dist_m", "t", "snap_lon", "snap_lat"]
     a = candidate_segments(
         spark.createDataFrame(pts), spark.createDataFrame(segs),

@@ -1,9 +1,11 @@
 """Operators plan from the data they see, not from user flags.
 
 No public operator takes a defaulted planning option (a broadcast hint,
-a strategy switch, a size gate, an iteration cap or a round budget):
-thresholds that pick a path are private module constants, and dim
-sides are always broadcast by hint."""
+a strategy switch, a size gate, an iteration cap, a round or row
+budget, or a latitude envelope / fine zoom for a ring cover):
+thresholds that pick a path are private module constants, ring covers
+size their grid from the data, and dim sides are always broadcast by
+hint."""
 
 import ast
 import pathlib
@@ -14,7 +16,8 @@ import pytest
 import xutil_spark.operators
 
 _KNOB = re.compile(
-    r"^(broadcast_.*|strategy|(.*_)?gate(_.*)?|max_iters|max_query_rows|budget)$")
+    r"^(broadcast_.*|strategy|(.*_)?gate(_.*)?|max_iters|max_query_rows"
+    r"|budget(_.*)?|max_abs_lat|fine_zoom)$")
 
 
 def _options(fn: ast.FunctionDef):
@@ -40,10 +43,12 @@ def test_no_planning_options_on_public_operators():
 
 def test_guard_sees_a_planning_option():
     src = ("def op(df, k=5, broadcast_dim=True, gate_cells=9, aggregate=1, *,\n"
-           "       driver_edge_gate=2, max_iters=50, budget):\n    pass\n")
+           "       driver_edge_gate=2, max_iters=50, budget, budget_rows=9,\n"
+           "       max_abs_lat=60.0, fine_zoom='auto', zoom=8):\n    pass\n")
     fn = ast.parse(src).body[0]
     assert [p.arg for p in _options(fn) if _KNOB.match(p.arg)] == [
-        "broadcast_dim", "gate_cells", "driver_edge_gate", "max_iters"]
+        "broadcast_dim", "gate_cells", "driver_edge_gate", "max_iters",
+        "budget_rows", "max_abs_lat", "fine_zoom"]
 
 
 def test_dim_sides_broadcast_by_hint(spark):

@@ -66,18 +66,25 @@ def test_segment_cells_degenerate_point():
     assert c.shape == (1,) and c[0] == cell_encode(10.0, 20.0, 9)
 
 
-@pytest.mark.parametrize("zoom,radius", [(7, 120000.0), (9, 65000.0)])
-def test_snap_matches_brute_force(spark, monkeypatch, zoom, radius):
+@pytest.mark.parametrize("radius,lat_lo,lat_hi,seed", [
+    pytest.param(120000.0, 5.0, 55.0, 711, id="120000.0"),
+    pytest.param(65000.0, 5.0, 55.0, 910, id="65000.0"),
+    # the zoom and ring must follow the segments' latitude
+    pytest.param(30000.0, 80.0, 84.5, 107, id="30000.0-polar"),
+])
+def test_snap_matches_brute_force(spark, monkeypatch, radius, lat_lo,
+                                  lat_hi, seed):
     from xutil_spark.operators import spatial_join as SJ
 
     monkeypatch.setattr(SJ, "_SNAP_NP_MAX_SEGS", 0)  # the cell cascade
 
-    rng = np.random.default_rng(int(zoom * 100 + radius % 97))
+    rng = np.random.default_rng(seed)
     n_pts, n_segs = 600, 40
+    lo, hi = [60, lat_lo], [120, lat_hi]
     plon = rng.uniform(60, 120, n_pts)
-    plat = rng.uniform(5, 55, n_pts)
-    sa = rng.uniform([60, 5], [120, 55], (n_segs, 2))
-    sb = np.clip(sa + rng.uniform(-8, 8, (n_segs, 2)), [60, 5], [120, 55])
+    plat = rng.uniform(lat_lo, lat_hi, n_pts)
+    sa = rng.uniform(lo, hi, (n_segs, 2))
+    sb = np.clip(sa + rng.uniform(-8, 8, (n_segs, 2)), lo, hi)
 
     pts = spark.createDataFrame(pd.DataFrame(
         {"pid": np.arange(n_pts), "lon": plon, "lat": plat}))
@@ -86,7 +93,7 @@ def test_snap_matches_brute_force(spark, monkeypatch, zoom, radius):
          "bx": sb[:, 0], "by": sb[:, 1]}))
 
     got = {r["pid"]: r for r in SJ.snap_to_segments(
-        pts, segs, radius_m=radius, zoom=zoom).collect()}
+        pts, segs, radius_m=radius).collect()}
 
     dist, t = _snap_np(plon, plat, sa[:, 0], sa[:, 1], sb[:, 0], sb[:, 1])
     matched = 0
@@ -108,10 +115,11 @@ def test_snap_matches_brute_force(spark, monkeypatch, zoom, radius):
 
 
 def test_snap_escalation_agrees_with_single_pass(spark, monkeypatch):
-    """Forced fine pass (z13 — guarantee ~2.4 km·cosφ, so plenty of
-    points straggle to the coarse branch) must emit exactly the
-    single-pass (fine_zoom=None) rows: the escalation is a pure
-    execution strategy, invisible in the results."""
+    """The fine passes (z14 down, an unbounded budget — guarantee
+    ~1.2 km·cosφ at z14, so plenty of points straggle to the coarse
+    branch) must emit exactly the single-pass rows (a zero budget): the
+    escalation is a pure execution strategy, invisible in the
+    results."""
     from xutil_spark.operators import spatial_join as SJ
 
     monkeypatch.setattr(SJ, "_SNAP_NP_MAX_SEGS", 0)  # the cell cascade
@@ -128,34 +136,38 @@ def test_snap_escalation_agrees_with_single_pass(spark, monkeypatch):
         {"seg_id": np.arange(n_segs), "ax": sa[:, 0], "ay": sa[:, 1],
          "bx": sb[:, 0], "by": sb[:, 1]}))
 
-    kw = dict(radius_m=65000.0, zoom=9)
+    monkeypatch.setattr(SJ, "_SNAP_FINE_BUDGET_ROWS", 0)
     single = {r["pid"]: r for r in SJ.snap_to_segments(
-        pts, segs, fine_zoom=None, **kw).collect()}
+        pts, segs, radius_m=65000.0).collect()}
+    monkeypatch.setattr(SJ, "_SNAP_FINE_BUDGET_ROWS", 10 ** 9)
     esc = {r["pid"]: r for r in SJ.snap_to_segments(
-        pts, segs, fine_zoom=13, **kw).collect()}
+        pts, segs, radius_m=65000.0).collect()}
     assert set(esc) == set(single)
     for pid, r in esc.items():
         s = single[pid]
         assert (r["seg_id"], r["dist_m"], r["t"]) == \
             (s["seg_id"], s["dist_m"], s["t"]), pid
-    # sparse roads at z13: the coarse straggler branch must be live
+    # sparse roads at z14: the coarse straggler branch must be live
     dist, _ = _snap_np(plon, plat, sa[:, 0], sa[:, 1], sb[:, 0], sb[:, 1])
     assert (dist.min(axis=1) > 2400.0).sum() > 50
 
 
-def test_pick_snap_fine_zoom_budget(spark):
-    from xutil_spark.operators.spatial_join import pick_snap_fine_zoom
+def test_pick_snap_fine_zoom_budget(spark, monkeypatch):
+    from xutil_spark.operators import spatial_join as SJ
 
     segs = spark.createDataFrame(pd.DataFrame({
         "seg_id": [0, 1], "ax": [0.0, 10.0], "ay": [0.0, 10.0],
         "bx": [9.0, 19.0], "by": [0.0, 10.0],
     }))
     # Σ(|Δlon|+|Δlat|) = 18 + 2 segments → rows(z) ≈ 18·2^z/360 + 2
-    assert pick_snap_fine_zoom(segs, 8, budget_rows=10 ** 9) == 14
+    monkeypatch.setattr(SJ, "_SNAP_FINE_BUDGET_ROWS", 10 ** 9)
+    assert SJ.pick_snap_fine_zoom(segs, 8) == 14
     # budget 100 → need 18·2^z/360 + 2 ≤ 100 → 2^z ≤ 1960 → z = 10
-    assert pick_snap_fine_zoom(segs, 8, budget_rows=100) == 10
+    monkeypatch.setattr(SJ, "_SNAP_FINE_BUDGET_ROWS", 100)
+    assert SJ.pick_snap_fine_zoom(segs, 8) == 10
     # nothing finer than coarse fits → coarse (caller disables escalation)
-    assert pick_snap_fine_zoom(segs, 8, budget_rows=1) == 8
+    monkeypatch.setattr(SJ, "_SNAP_FINE_BUDGET_ROWS", 1)
+    assert SJ.pick_snap_fine_zoom(segs, 8) == 8
 
 
 def test_snap_tie_break_is_deterministic(spark, monkeypatch):
@@ -173,8 +185,7 @@ def test_snap_tie_break_is_deterministic(spark, monkeypatch):
     }))
     for gate in (0, SJ._SNAP_NP_MAX_SEGS):  # the cell cascade, numpy
         monkeypatch.setattr(SJ, "_SNAP_NP_MAX_SEGS", gate)
-        out = SJ.snap_to_segments(pts, segs, radius_m=80000.0,
-                                  zoom=7).collect()
+        out = SJ.snap_to_segments(pts, segs, radius_m=80000.0).collect()
         assert len(out) == 1 and out[0]["seg_id"] == 3, gate
         assert out[0]["t"] == pytest.approx(0.5, abs=1e-6), gate
 
@@ -198,7 +209,7 @@ def test_snap_np_equals_cascade(spark, monkeypatch):
         {"seg_id": np.arange(n_segs), "ax": sa[:, 0], "ay": sa[:, 1],
          "bx": sb[:, 0], "by": sb[:, 1]}))
 
-    kw = dict(radius_m=65000.0, zoom=9)
+    kw = dict(radius_m=65000.0)
     with monkeypatch.context() as m:
         m.setattr(SJ, "_SNAP_NP_MAX_SEGS", 0)  # the cell cascade
         casc = {r["pid"]: r for r in SJ.snap_to_segments(

@@ -292,7 +292,8 @@ def test_distance_join_low_zoom_wrap_no_duplicates(spark):
     pts, pts_pd = _globe_points(spark, 60, 13, "image_id", lon_spread=120.0)
     refs, refs_pd = _globe_points(spark, 40, 17, "ref_id", lon_spread=120.0)
     radius = 2_000_000.0
-    zoom, ring = SJ._range_zoom_ring(refs, radius, "lat")
+    zoom, ring, _ = SJ._zoom_ring(refs, ["lat"], radius, radius,
+                                  SJ._RANGE_RING)
     assert zoom <= 2 and 2 * ring + 1 >= 2 ** zoom
     got = SJ.distance_join(pts, refs, radius_m=radius).toPandas()
     assert got.duplicated(["image_id", "ref_id"]).sum() == 0
@@ -500,13 +501,19 @@ def test_knn_searcher_polar_wide_grid_matches_brute(spark):
 
 
 @pytest.mark.parametrize("op", ["knn_join", "snap_to_segments", "hmm_map_match",
-                                "point_in_polygon_join", "distance_join"])
+                                "point_in_polygon_join", "distance_join",
+                                "encounter_join", "hausdorff_join",
+                                "candidate_segments"])
 def test_plan_build_runs_one_spark_job(spark, op):
     """Building each operator against a dim-sized side launches ONE
     Spark job: the gate probe and the dim collect are the same
     ``limit(gate + 1).toPandas()`` (a count probe plus a collect cost
-    three); PiP's one job collects its polygons."""
-    from xutil_spark.operators.mapmatch import hmm_map_match
+    three); PiP's one job collects its polygons.  The ring-cover joins'
+    one job is ``_zoom_ring``'s top-1 |lat| (with the row count that
+    decides ``candidate_segments``' broadcast observed on the way)."""
+    from xutil_spark.operators.encounters import encounter_join
+    from xutil_spark.operators.mapmatch import candidate_segments, hmm_map_match
+    from xutil_spark.operators.trajsim import hausdorff_join
 
     pts = spark.range(0, 200, 1, 4).select(
         F.col("id").alias("pid"), (F.col("id") % 10).alias("track_id"),
@@ -529,6 +536,13 @@ def test_plan_build_runs_one_spark_job(spark, op):
             pts, synth.irregular_tiles_table(spark), zoom=8),
         "distance_join": lambda: SJ.distance_join(
             pts, refs, radius_m=50_000.0, point_id="pid"),
+        "encounter_join": lambda: encounter_join(
+            pts, radius_m=50_000.0, window_s=600, entity="track_id",
+            event_id="pid"),
+        "hausdorff_join": lambda: hausdorff_join(
+            pts, tau_m=50_000.0, track="track_id"),
+        "candidate_segments": lambda: candidate_segments(
+            pts, segs, radius_m=50_000.0),
     }[op]
     sc = spark.sparkContext
     group = f"plan-build-{op}"

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from xutil_spark.operators.spatial_join import pick_ring_zoom
+from xutil_spark.operators.spatial_join import _pick_ring_zoom
 from xutil_spark.operators.trajsim import (
     hausdorff_join,
     scalar_hausdorff,
@@ -61,14 +61,41 @@ def test_hausdorff_matches_scalar_replay(spark):
 
 def test_hausdorff_pair_across_cell_boundary(spark):
     # two single-point tracks ~1.1 km apart straddling a z15 cell edge;
-    # a fine zoom with ring-1 coverage must still pair them
+    # the derived fine zoom with ring-1 coverage must still pair them
     a, b = (99.9999, 40.0), (100.0001, 40.013)
     df = _tracks_df(spark, {7: [a], 8: [b]})
-    zoom = pick_ring_zoom(2000.0, 1, 60.0)
-    out = hausdorff_join(df, tau_m=2000.0, zoom=zoom, track="user_id").collect()
+    out = hausdorff_join(df, tau_m=2000.0, track="user_id").collect()
     assert len(out) == 1
     _, _, h = scalar_hausdorff([a], [b])
     assert out[0].hausdorff_m == h
+
+
+def test_hausdorff_polar_matches_scalar_replay(spark):
+    """400 tracks at 83–85°N, τ = 20 km: the cell block is sized from
+    the points' own latitude, so no pair within τ is lost."""
+    import numpy as np
+
+    rng = np.random.default_rng(85)
+    tracks = {}
+    for t in range(400):
+        n = 1 + t % 3
+        c = rng.uniform([10.0, 83.0], [32.0, 85.0])
+        pts = c + rng.normal(0.0, [0.05, 0.01], (n, 2))
+        tracks[t] = [(float(lo), float(la)) for lo, la in pts]
+    tau = 20_000.0
+    got = {
+        (r.track_a, r.track_b): (r.h_ab_m, r.h_ba_m, r.hausdorff_m)
+        for r in hausdorff_join(_tracks_df(spark, tracks), tau_m=tau,
+                                track="user_id").collect()
+    }
+    want = {}
+    for a in range(400):
+        for b in range(a + 1, 400):
+            h_ab, h_ba, h = scalar_hausdorff(tracks[a], tracks[b])
+            if h <= tau:
+                want[(a, b)] = (h_ab, h_ba, h)
+    assert len(want) > 300  # the shape actually pairs tracks
+    assert got == want
 
 
 def test_hausdorff_tau_filters(spark):
@@ -80,8 +107,8 @@ def test_hausdorff_tau_filters(spark):
 
 
 def test_pick_hausdorff_zoom_monotone():
-    z_small = pick_ring_zoom(500.0, 1, 60.0)
-    z_large = pick_ring_zoom(500_000.0, 1, 60.0)
+    z_small = _pick_ring_zoom(500.0, 1, 60.0)
+    z_large = _pick_ring_zoom(500_000.0, 1, 60.0)
     assert z_small > z_large
     from xutil_spark.operators.spatial_join import _ring_guarantee_m
     assert _ring_guarantee_m(z_small, 1) >= 500.0

@@ -23,7 +23,6 @@ from xutil_spark.entry_queries import (
 )
 
 _SNAP_RADIUS_M = 50000.0
-_SNAP_ZOOM = 8
 # π/180 × 6371000 — MUST equal spatial_join._M_PER_DEG (pinned in tests)
 _K = "111194.92664455873"
 
@@ -66,7 +65,7 @@ def q_snap_nearest_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
            .repartition(par, "pid").dropDuplicates(["pid"]))
     segs = _segments(spark, sf_dir)
     out = snap_to_segments(
-        pts, segs, radius_m=_SNAP_RADIUS_M, zoom=_SNAP_ZOOM,
+        pts, segs, radius_m=_SNAP_RADIUS_M,
         point_id="pid", seg_id="seg_id", by="by2", spread_input=False,
     )
     return out.select("pid", "seg_id", "dist_m", "t", "snap_lon", "snap_lat")

@@ -32,8 +32,9 @@ def q_encounters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Who met whom: user pairs with ≥1 event pair within 100 km and
     6 h, with encounter counts and the closest approach.  Engine:
     bucketed (cell, time-bucket) self equi-join, ring-1 cover at the
-    auto-picked zoom (z6 for 100 km under the 60° envelope), exact
-    JVM-native haversine refine — zero Python, no cross join."""
+    zoom derived from the radius and the events' max |lat| (z6 for
+    100 km here), exact JVM-native haversine refine — zero Python, no
+    cross join."""
     _utc(spark)
     from xutil_spark.operators.encounters import encounter_join
 

@@ -28,7 +28,6 @@ _MM_RADIUS_M = 50_000.0
 _MM_SIGMA_M = 25_000.0
 _MM_BETA_M = 10_000.0
 _MM_K = 3
-_MM_ZOOM = 8
 _MM_USER_MOD = 5  # user subset: user_id % 5 == 0
 
 _K_M = 111194.92664455873  # π/180 × 6371000, = spatial_join._M_PER_DEG
@@ -50,7 +49,7 @@ def q_hmm_match_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = _segments(spark, sf_dir)
     return hmm_map_match(
         ev, segs, radius_m=_MM_RADIUS_M, sigma_m=_MM_SIGMA_M,
-        beta_m=_MM_BETA_M, k=_MM_K, zoom=_MM_ZOOM,
+        beta_m=_MM_BETA_M, k=_MM_K,
         track="user_id", point_id="event_id", ts="ts", by="by2",
     )
 

@@ -829,14 +829,6 @@ _CD_W, _CD_H = 24, 16
 _CD_HOLE = 9  # cells with (gx*7 + gy*13) % 9 == 0 are obstacles
 
 
-def _cd_cells_sql() -> str:
-    return f"""
-SELECT (event_id * 2654435761 % 1048576) * {_CD_W} // 1048576 AS gx,
-       (event_id * 1597334677 % 1048576) * {_CD_H} // 1048576 AS gy
-FROM events
-"""
-
-
 def q_cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-cost-path distance surface (operators/costdist.py): event
     density builds an integer cost raster over a {_CD_W}×{_CD_H} hash

@@ -68,10 +68,6 @@ def cell_y(cell_col) -> Column:
     return _c(cell_col).bitwiseAND(F.lit(XY_MASK).cast("long"))
 
 
-def cell_z(cell_col) -> Column:
-    return F.shiftright(_c(cell_col), Z_SHIFT)
-
-
 def cell_parent(cell_col, child_z: int, parent_z: int) -> Column:
     """Quadtree ancestor via bit arithmetic — no geometry re-encode.
 
@@ -149,10 +145,3 @@ def long2ip(v) -> Column:
         F.shiftright(c, 8).bitwiseAND(F.lit(255).cast("long")).cast("string"),
         c.bitwiseAND(F.lit(255).cast("long")).cast("string"),
     )
-
-
-def week_trunc_sunday(ts) -> Column:
-    """Sunday-start week truncation (time.go:23-24 quirk; Spark's
-    date_trunc('week') is Monday-ISO)."""
-    d = F.to_date(_c(ts))
-    return F.date_sub(d, F.dayofweek(d) - F.lit(1))

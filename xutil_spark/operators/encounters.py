@@ -10,12 +10,12 @@ joins (SURVEY §2.3).
 
 Engine shape — a **bucketed fact×fact self-join**, never a cross join:
 
-1. each event gets a packed cell id (zoom sized so a ring-1 block
-   provably covers ``radius_m`` for |lat| ≤ ``max_abs_lat``) and an
+1. each event gets a packed cell id (zoom sized from the events' own
+   max |lat| so a ring-1 block provably covers ``radius_m``) and an
    integer time bucket ``floor(epoch / window_s)``;
-2. the LEFT side explodes to the HALF-SPACE of its (2r+1)²×3
+2. the LEFT side explodes to the HALF-SPACE of its 3×3×3
    space-time neighbor block — the lexicographically-positive offsets
-   plus self (14 keys at ring 1).  |Δt| ≤ W ⇒ bucket diff ≤ 1 under
+   plus self (14 keys).  |Δt| ≤ W ⇒ bucket diff ≤ 1 under
    floor division, so every true pair is covered; cross-key pairs are
    generated from exactly one side (the mirror offset is not in the
    set) and same-key pairs dedup by entity order — no distinct pass,
@@ -29,10 +29,10 @@ Engine shape — a **bucketed fact×fact self-join**, never a cross join:
    haversine ≤ R — zero Python anywhere;
 5. per-pair aggregation at encounter cardinality.
 
-100-TB story: the fact table is touched by one narrow projection +
-one shuffle on (cell, bucket); the 3·(2r+1)² explode multiplies only
-the join KEY stream, not payload width.  Everything after the filter
-is at matched-pair cardinality.
+100-TB story: the fact table is touched by one top-1 |lat| pass, one
+narrow projection and one shuffle on (cell, bucket); the 14-key
+explode multiplies only the join KEY stream, not payload width.
+Everything after the filter is at matched-pair cardinality.
 """
 
 from __future__ import annotations
@@ -41,24 +41,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xutil_spark.functions import native
-from xutil_spark.operators.spatial_join import (
-    _ring_guarantee_m,
-    pick_ring_zoom,
-    with_cell,
-)
+from xutil_spark.operators.spatial_join import _M_PER_DEG, _grid_cell, _zoom_ring
 
 
 def encounter_join(
     events: DataFrame,
     radius_m: float,
     window_s: int,
-    zoom: int | None = None,
     entity: str = "user_id",
     event_id: str = "event_id",
     ts: str = "ts",
     lon: str = "lon",
     lat: str = "lat",
-    max_abs_lat: float = 60.0,
 ) -> DataFrame:
     """Entity pairs with ≥1 encounter: ``(entity_a, entity_b,
     n_encounters, min_dist_m)``, ``entity_a < entity_b``, min distance
@@ -69,20 +63,17 @@ def encounter_join(
     ``window_s`` (epochs in floor-seconds).  Each unordered event pair
     counts once.
 
-    ``zoom=None`` auto-picks the finest ring-1-covering zoom.  The
-    static envelope bound assumes |lat| ≤ ``max_abs_lat`` — callers
-    with polar data must raise it (same contract as
-    ``snap_to_segments``).
+    The zoom is the finest whose ring-1 block covers ``radius_m`` up to
+    the events' max |lat| (``_zoom_ring``, one Spark job), so the join
+    is exact at any latitude.
     """
-    if zoom is None:
-        zoom = pick_ring_zoom(radius_m, 1, max_abs_lat)
-    ring = 1
-    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m:
-        ring += 1
-        if ring > 64:
-            raise ValueError("radius too large for this zoom; lower the zoom")
-
-    ev = with_cell(events, zoom, lon, lat).select(
+    zoom, _, _ = _zoom_ring(events, [lat], radius_m, 0.0, 1)
+    n_axis = 2 ** zoom
+    # at zoom 1 the block holds both columns, and x wraps (+1 ≡ −1):
+    # key on the row alone so no cross-key pair is generated twice
+    wide = n_axis < 3
+    x_lon = F.lit(0.0) if wide else F.col(lon)
+    ev = events.select(
         F.col(event_id).alias("_eid"),
         F.col(entity).alias("_ent"),
         F.col(ts).cast("long").alias("_ep"),
@@ -92,25 +83,20 @@ def encounter_join(
         # coverage argument needs floor semantics for negative epochs
         F.floor(F.col(ts).cast("long") / F.lit(float(window_s)))
         .cast("long").alias("_bkt"),
-        "cell",
+        _grid_cell(x_lon, F.col(lat), zoom).alias("cell"),
     )
 
-    # HALF-SPACE explode: of the full (2r+1)²×3 neighbor block only the
+    # HALF-SPACE explode: of the full 3×3×3 neighbor block only the
     # lexicographically-positive offsets + self ship — each unordered
     # cross-key pair is then generated from exactly ONE side (the other
     # side's mirror offset is not in the set), and same-key pairs
     # deduplicate by entity order.  Halves the exploded join-key stream
-    # vs the naive both-sides block (27 → 14 keys at ring 1) — at
-    # 10^12 events that is half the shuffle.  Mirror-collision guard:
-    # x wraps mod 2^zoom, so +dx ≡ −dx when the block spans the whole
-    # axis, which would double-emit cross-key pairs.
-    n_axis = 2 ** zoom
-    if 2 * ring + 1 > n_axis:
-        raise ValueError("neighbor block spans the x axis: raise the zoom")
+    # vs the naive both-sides block (27 → 14 keys) — at 10^12 events
+    # that is half the shuffle.
     offs = [
         (dx, dy, db)
-        for dx in range(-ring, ring + 1)
-        for dy in range(-ring, ring + 1)
+        for dx in ((0,) if wide else (-1, 0, 1))
+        for dy in (-1, 0, 1)
         for db in (-1, 0, 1)
         if (dx, dy, db) >= (0, 0, 0)
     ]
@@ -149,8 +135,6 @@ def encounter_join(
     # guard can never drop a true pair; it spares the 10-trig
     # haversine on the bulk of the candidate stream (ring cells span
     # several degrees of latitude at coarse zooms)
-    from xutil_spark.operators.spatial_join import _M_PER_DEG
-
     pairs = (
         left.join(right, on=["_jcell", "_jbkt"], how="inner")
         .filter(

@@ -61,6 +61,7 @@ from xutil_spark.operators.spatial_join import (
     _collect_dim,
     _M_PER_DEG,
     _ring_candidates,
+    _ring_cover,
     _snap_candidates_np,
     _snap_projection,
 )
@@ -85,7 +86,6 @@ def candidate_segments(
     segments: DataFrame,
     radius_m: float,
     k: int = 3,
-    zoom: int = 8,
     point_id: str = "pid",
     seg_id: str = "seg_id",
     lon: str = "lon",
@@ -94,18 +94,19 @@ def candidate_segments(
     ay: str = "ay",
     bx: str = "bx",
     by: str = "by",
-    max_abs_lat: float = 60.0,
     extra_cols: tuple = (),
 ) -> DataFrame:
     """Top-``k`` segments within ``radius_m`` of each point, scored by
     the snap projection: ``(point_id, [extra_cols...], lon, lat,
-    seg_id, dist_m, t, snap_lon, snap_lat, rank)``.  Exact: the ring is
-    sized so the static guarantee covers the radius (the snap
-    coarse-pass bound).  ``extra_cols`` (e.g. track id / timestamp)
-    pass through.  The supercover join broadcasts unless the network
-    is over ``_BCAST_MAX_SEGS`` segments (``_ring_candidates``)."""
-    cand = _ring_candidates(points, segments, radius_m, zoom, seg_id,
-                            lon, lat, ax, ay, bx, by, max_abs_lat)
+    seg_id, dist_m, t, snap_lon, snap_lat, rank)``.  Exact at any
+    latitude: the zoom and ring come from the radius and the segments'
+    max |lat| (``_ring_cover``, one Spark job — the snap coarse-pass
+    bound).  ``extra_cols`` (e.g. track id / timestamp) pass through.
+    The supercover join broadcasts unless the network is over
+    ``_BCAST_MAX_SEGS`` segments (``_ring_candidates``)."""
+    cand = _ring_candidates(points, segments,
+                            _ring_cover(segments, radius_m, ay, by), seg_id,
+                            lon, lat, ax, ay, bx, by)
     t, dist, snap_lon, snap_lat = _snap_projection(lon, lat)
     scored = cand.select(
         point_id, *extra_cols, lon, lat,
@@ -150,7 +151,6 @@ def hmm_map_match(
     sigma_m: float = 25_000.0,
     beta_m: float = 10_000.0,
     k: int = 3,
-    zoom: int = 8,
     track: str = "track_id",
     point_id: str = "pid",
     ts: str = "ts",
@@ -161,7 +161,6 @@ def hmm_map_match(
     ay: str = "ay",
     bx: str = "bx",
     by: str = "by",
-    max_abs_lat: float = 60.0,
 ) -> DataFrame:
     """Viterbi-matched segment per track point: ``(track_id, point_id,
     seg_id, dist_m, t, snap_lon, snap_lat)``.  Points with no candidate
@@ -189,10 +188,9 @@ def hmm_map_match(
             extra_cols=("_trk", "_ep"))
     else:
         cand = candidate_segments(
-            pts, segments, radius_m, k=k, zoom=zoom,
+            pts, segments, radius_m, k=k,
             point_id="_pid", seg_id=seg_id, lon=lon, lat=lat,
-            ax=ax, ay=ay, bx=bx, by=by, max_abs_lat=max_abs_lat,
-            extra_cols=("_trk", "_ep"),
+            ax=ax, ay=ay, bx=bx, by=by, extra_cols=("_trk", "_ep"),
         )
     sig2 = 2.0 * float(sigma_m) * float(sigma_m)
     beta = float(beta_m)

@@ -363,7 +363,7 @@ def _ring_guarantee_m(zoom: int, ring: int, max_abs_lat: float = 60.0) -> float:
 _MAX_CELL_ZOOM = 29
 
 
-def pick_ring_zoom(radius_m: float, ring: int, max_abs_lat: float) -> int:
+def _pick_ring_zoom(radius_m: float, ring: int, max_abs_lat: float) -> int:
     """FINEST zoom whose ring-``ring`` static guarantee covers
     ``radius_m`` for points with |lat| ≤ ``max_abs_lat`` (finer cells =
     fewer candidate pairs; one level too fine would let a true pair
@@ -373,6 +373,36 @@ def pick_ring_zoom(radius_m: float, ring: int, max_abs_lat: float) -> int:
         if _ring_guarantee_m(z, ring, max_abs_lat=max_abs_lat) >= radius_m:
             return z
     return 1
+
+
+def _zoom_ring(df: DataFrame, lat_cols: list[str], radius_m: float,
+               pad_m: float, ring: int) -> tuple[int, int, int]:
+    """``(zoom, ring, rows)`` for a ring-cover join over ``df`` from ONE
+    Spark job: the top-1 |lat| over ``lat_cols`` (NaN skipped), with
+    the row count observed on the way.  The meridional arc lower-bounds
+    haversine, so the guarantee need only hold up to |lat| ≤ that top
+    + ``pad_m`` of latitude: ``pad_m`` is 0 when both ends of every
+    pair are rows of ``df``, and the radius when the other end must lie
+    within it of a ``df`` row.  The zoom is the finest whose
+    ring-``ring`` guarantee covers ``radius_m`` there; the ring is then
+    sized at that zoom."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    absl = [F.abs(F.col(c)) for c in lat_cols]
+    a = (absl[0] if len(absl) == 1 else F.greatest(*absl)).alias("a")
+    # top-1 rather than F.max: a take-ordered is one Spark job, a global
+    # aggregate under AQE is two (its shuffle map stage runs apart)
+    top = (df.observe(obs, F.count(F.lit(1)).alias("n")).select(a)
+           .filter(~F.isnan("a")).orderBy(F.col("a").desc()).limit(1)
+           .collect())
+    lat_top = top[0][0] if top else None
+    max_abs_lat = min((lat_top or 0.0) + pad_m / _M_PER_DEG_HAV, 90.0)
+    zoom = _pick_ring_zoom(radius_m, ring, max_abs_lat)
+    ring = 1
+    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m:
+        ring += 1
+    return zoom, ring, int(obs.get["n"])
 
 
 def _ring_guarantee_expr(lat_col: Column, zoom: int, ring: int = 1) -> Column:
@@ -1041,31 +1071,11 @@ def _knn_join_grid(points: DataFrame, refs: DataFrame, k: int, zoom: int,
     return out
 
 
-# ring distance_join sizes its zoom for: a sweep over rings 1–6 at 5,
-# 50 and 500 km radii (local[4], 4 vCPUs) found ring 3 at or near the
-# fastest every time
+# ring distance_join and the snap / HMM cell paths size their zoom
+# for: a sweep of distance_join over rings 1–6 at 5, 50 and 500 km
+# radii (local[4], 4 vCPUs) found ring 3 at or near the fastest every
+# time
 _RANGE_RING = 3
-
-
-def _range_zoom_ring(refs: DataFrame, radius_m: float,
-                     ref_lat: str) -> tuple[int, int]:
-    """``(zoom, ring)`` for ``distance_join`` from ONE pass over the
-    refs.  The meridional arc lower-bounds haversine, so a point more
-    than ``radius_m`` of latitude from every ref has no pair: the ring
-    guarantee need only hold up to |lat| ≤ max|ref lat| + radius.  The
-    zoom is the finest whose ring-``_RANGE_RING`` guarantee covers the
-    radius there; the ring is then sized at that zoom."""
-    # top-1 rather than F.max: a take-ordered is one Spark job, a global
-    # aggregate under AQE is two (its shuffle map stage runs apart)
-    a = F.abs(F.col(ref_lat)).alias("a")
-    top = refs.select(a).orderBy(F.col("a").desc()).limit(1).collect()
-    lat_top = top[0][0] if top else None
-    max_abs_lat = min((lat_top or 0.0) + radius_m / _M_PER_DEG_HAV, 90.0)
-    zoom = pick_ring_zoom(radius_m, _RANGE_RING, max_abs_lat)
-    ring = 1
-    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m:
-        ring += 1
-    return zoom, ring
 
 
 def distance_join(
@@ -1092,7 +1102,7 @@ def distance_join(
     haversine, and brute force for the points the block cannot prove
     complete — no explode, no join, no shuffle.  Larger refs take the
     equi-join: the zoom comes from the radius and the refs
-    (``_range_zoom_ring``), points explode to the ring of neighbor
+    (``_zoom_ring``), points explode to the ring of neighbor
     cells that provably holds every ref within the radius, equi-join
     the broadcast refs on cell (``_grid_cell``, defined at every
     coordinate), and keep the pairs whose JVM-native haversine is ≤
@@ -1124,7 +1134,7 @@ def distance_join(
         return spread(points).mapInPandas(
             range_batches, schema=_ref_join_schema(points, refs, ref_id, extras))
 
-    zoom, ring = _range_zoom_ring(refs, radius_m, ref_lat)
+    zoom, ring, _ = _zoom_ring(refs, [ref_lat], radius_m, radius_m, _RANGE_RING)
     refs_c, _extras = _refs_with_cell(refs, _grid_cell, zoom, ref_id, ref_lon, ref_lat)
     # the (2r+1)²-way explode inherits the scan's split count
     pts = spread(points).withColumn(
@@ -1431,26 +1441,31 @@ def _segments_with_cells(segments: DataFrame, zoom: int, seg_id: str,
 _BCAST_MAX_SEGS = 500_000
 
 
+def _ring_cover(segments: DataFrame, radius_m: float, ay: str,
+                by: str) -> tuple[int, int, int]:
+    """``(zoom, ring, rows)`` of a snap cell path (``_zoom_ring`` over
+    the segments): the ring guarantee covers ``radius_m`` with the 5%
+    equirectangular margin up to max(|ay|, |by|) + the radius — a
+    point beyond that is more than the radius of latitude from every
+    segment, so it has no match to lose."""
+    return _zoom_ring(segments, [ay, by], radius_m * 1.05, radius_m,
+                      _RANGE_RING)
+
+
 def _ring_candidates(points: DataFrame, segments: DataFrame,
-                     radius_m: float, zoom: int, seg_id: str, lon: str,
-                     lat: str, ax: str, ay: str, bx: str, by: str,
-                     max_abs_lat: float) -> DataFrame:
+                     cover: tuple[int, int, int], seg_id: str, lon: str,
+                     lat: str, ax: str, ay: str, bx: str, by: str) -> DataFrame:
     """(point, segment) candidate pairs of a snap cell path: each
-    point's ring of cells — sized so the static guarantee covers
-    ``radius_m`` with the 5% equirectangular margin — equi-joined to
-    the segments' exact supercover.  The supercover broadcasts only
-    when provably dim-sized: it must fit the driver and every executor,
-    so a network over ``_BCAST_MAX_SEGS`` segments (e.g. 10^7 roads)
-    takes the shuffle join instead."""
-    ring = 1
-    while _ring_guarantee_m(zoom, ring, max_abs_lat=max_abs_lat) < radius_m * 1.05:
-        ring += 1
-        if ring > 64:
-            raise ValueError("radius too large for this zoom; lower the zoom")
+    point's ring of cells at the ``cover`` from ``_ring_cover``
+    equi-joined to the segments' exact supercover.  The supercover
+    broadcasts only when provably dim-sized: it must fit the driver and
+    every executor, so a network over ``_BCAST_MAX_SEGS`` segments
+    (e.g. 10^7 roads) takes the shuffle join instead."""
+    zoom, ring, n_segs = cover
     segs = _segments_with_cells(segments, zoom, seg_id, ax, ay, bx, by)
-    if segments.limit(_BCAST_MAX_SEGS + 1).count() <= _BCAST_MAX_SEGS:
+    if n_segs <= _BCAST_MAX_SEGS:
         segs = F.broadcast(segs)
-    pc = with_cell(points, zoom, lon, lat, out="_ccell")
+    pc = points.withColumn("_ccell", _grid_cell(F.col(lon), F.col(lat), zoom))
     return (_explode_neighbors(pc, F.col("_ccell"), zoom, ring, out="_cncell")
             .join(segs, F.col("_cncell") == F.col("_scell"), "inner"))
 
@@ -1516,25 +1531,26 @@ def _snap_emit(best: DataFrame, point_id: str, seg_id: str,
     )
 
 
+# the fine snap levels' supercover row budget (the fine dim is
+# broadcast, so it must stay dim-scale).  Measured at sf0.1, 457k
+# points × 875 long segments: the fine dim's build-and-broadcast cost
+# grows linearly with its row count while the extra points resolved by
+# one more zoom level saturate — a ~1.35M-row z13 first level ran
+# 14.6s against 11.4s for the ~680k-row z12 one, identical output.
+# 750k keeps the first level at the measured knee (~35 MB broadcast).
+_SNAP_FINE_BUDGET_ROWS = 750_000
+
+
 def pick_snap_fine_zoom(segments: DataFrame, coarse_zoom: int,
                         ax: str = "ax", ay: str = "ay",
-                        bx: str = "bx", by: str = "by",
-                        budget_rows: int = 750_000) -> int:
+                        bx: str = "bx", by: str = "by") -> int:
     """Choose the fine-pass zoom for the escalated snap join: the
     FINEST zoom whose estimated supercover row count stays within
-    ``budget_rows`` (the fine dim is broadcast, so it must stay
-    dim-scale).  Supercover size per segment ≈ |Δx_tiles| + |Δy_tiles|
-    + 1, so the total is (Σ(|Δlon|+|Δlat|)) / tile_span + n — ONE tiny
-    aggregation over the (dim-scale) segment table.  Returns
-    ``coarse_zoom`` when even one level finer would blow the budget
-    (caller then skips escalation).
-
-    Budget calibration (measured at sf0.1, 457k points × 875 long
-    segments): the fine dim's build-and-broadcast cost grows linearly
-    with its row count while the extra points resolved by one more
-    zoom level saturate — a ~1.35M-row z13 first level ran 14.6s
-    against 11.4s for the ~680k-row z12 one, identical output.  750k
-    keeps the first level at the measured knee (~35 MB broadcast)."""
+    ``_SNAP_FINE_BUDGET_ROWS``.  Supercover size per segment ≈
+    |Δx_tiles| + |Δy_tiles| + 1, so the total is (Σ(|Δlon|+|Δlat|)) /
+    tile_span + n — ONE tiny aggregation over the (dim-scale) segment
+    table.  Returns ``coarse_zoom`` when even one level finer would
+    blow the budget (caller then skips escalation)."""
     row = segments.agg(
         F.sum(F.abs(F.col(ax) - F.col(bx)) + F.abs(F.col(ay) - F.col(by))).alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -1542,7 +1558,7 @@ def pick_snap_fine_zoom(segments: DataFrame, coarse_zoom: int,
     s = float(row["s"] or 0.0)
     n = int(row["n"] or 0)
     for z in range(_PICK_MAX_ZOOM, coarse_zoom, -1):
-        if s / (360.0 / 2 ** z) + n <= budget_rows:
+        if s / (360.0 / 2 ** z) + n <= _SNAP_FINE_BUDGET_ROWS:
             return z
     return coarse_zoom
 
@@ -1673,7 +1689,6 @@ def snap_to_segments(
     points: DataFrame,
     segments: DataFrame,
     radius_m: float,
-    zoom: int = 8,
     point_id: str = "pid",
     seg_id: str = "seg_id",
     lon: str = "lon",
@@ -1682,8 +1697,6 @@ def snap_to_segments(
     ay: str = "ay",
     bx: str = "bx",
     by: str = "by",
-    max_abs_lat: float = 60.0,
-    fine_zoom: int | str | None = "auto",
     spread_input: bool = True,
 ) -> DataFrame:
     """Snap each point to its nearest segment within ``radius_m`` — the
@@ -1700,10 +1713,10 @@ def snap_to_segments(
     below in ONE DAG (one localCheckpoint, no per-round driver
     actions).  Both emit the same rows.
 
-    1. **Fine levels** (``fine_zoom`` down to ``zoom``, step −3, the
-       top auto-picked by ``pick_snap_fine_zoom`` so the finest
-       supercover dim stays broadcast-sized): at each level, segments
-       explode to their exact supercover cells and the still-unresolved
+    1. **Fine levels** (from the top picked by ``pick_snap_fine_zoom``,
+       so the finest supercover dim stays broadcast-sized, down to the
+       coarse zoom, step −3): at each level, segments explode to
+       their exact supercover cells and the still-unresolved
        points search only their ring-1 block (9 cells).  A point's
        winner is FINAL when its distance ≤ per-point ring guarantee
        / 1.05: any segment not touching the block has every point in
@@ -1715,16 +1728,15 @@ def snap_to_segments(
        radius ×8, so the unresolved tail shrinks geometrically while
        candidate fan-in stays ~constant (coarser cells hold more
        segments but far fewer points reach them).
-    2. **Coarse pass** — the original full-radius join (ring sized so
-       the static guarantee ≥ 1.05 × radius; exactness is
-       grid-independent) — runs only on the final stragglers.  Its
-       supercover dim broadcasts unless the network is over
-       ``_BCAST_MAX_SEGS`` segments (``_ring_candidates``).
+    2. **Coarse pass** — the full-radius join at the zoom and ring
+       ``_ring_cover`` derives from the radius and the segments' max
+       |lat| (static guarantee ≥ 1.05 × radius for every point that
+       can match) — runs only on the final stragglers.  Its supercover
+       dim broadcasts unless the network is over ``_BCAST_MAX_SEGS``
+       segments (``_ring_candidates``).
 
-    The static coarse guarantee is an envelope bound: callers whose
-    data reaches beyond ``max_abs_lat`` must raise it (rings grow as
-    1/cos).  ``fine_zoom=None`` (or ``"auto"`` finding no finer zoom
-    within budget) degrades to the single coarse pass.
+    When no zoom finer than the coarse one fits the budget, the
+    coarse pass runs alone.
 
     Returns: point_id, seg_id, lon, lat, dist_m (3 dp), t (position
     along the segment in [0,1]), snap_lon, snap_lat.
@@ -1744,28 +1756,27 @@ def snap_to_segments(
         ).select(point_id, seg_id, lon, lat,
                  "dist_m", "t", "snap_lon", "snap_lat")
 
-    if fine_zoom == "auto":
-        fine_zoom = pick_snap_fine_zoom(segments, zoom, ax, ay, bx, by)
-        if fine_zoom <= zoom:
-            fine_zoom = None
-
+    cover = _ring_cover(segments, radius_m, ay, by)
+    zoom = cover[0]
+    fine_zoom = pick_snap_fine_zoom(segments, zoom, ax, ay, bx, by)
     src = spread(points)
 
     def coarse(pts_df: DataFrame) -> DataFrame:
-        cand = _ring_candidates(pts_df, segments, radius_m, zoom, seg_id,
-                                lon, lat, ax, ay, bx, by, max_abs_lat)
+        cand = _ring_candidates(pts_df, segments, cover, seg_id,
+                                lon, lat, ax, ay, bx, by)
         return _snap_emit(_snap_best(cand, point_id, seg_id, lon, lat),
                           point_id, seg_id, lon, lat, radius_m)
 
-    if fine_zoom is None:
+    if fine_zoom <= zoom:
         return coarse(src)
 
     remaining = src.localCheckpoint()
     out = None
-    for fz in range(int(fine_zoom), zoom, -3):
+    for fz in range(fine_zoom, zoom, -3):
         segs_z = _segments_with_cells(segments, fz, seg_id, ax, ay, bx, by)
+        pcell = _grid_cell(F.col(lon), F.col(lat), fz)
         cand = (
-            _explode_neighbors(with_cell(remaining, fz, lon, lat, out="_pcell"),
+            _explode_neighbors(remaining.withColumn("_pcell", pcell),
                                F.col("_pcell"), fz, 1)
             .join(F.broadcast(segs_z), F.col("_ncell") == F.col("_scell"), "inner")
         )

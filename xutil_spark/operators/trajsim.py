@@ -22,8 +22,8 @@ Engine shape — a **cell-blocked track×track join**, never a cross
 join:
 
 1. each (track, cell) pair ships once (distinct over the track's
-   points at a zoom whose ring-1 static envelope covers ``tau_m`` —
-   same bound as ``encounter_join``);
+   points at the zoom whose ring-1 block covers ``tau_m`` up to the
+   points' own max |lat| — same picker as ``encounter_join``);
 2. the LEFT side explodes to the HALF-SPACE of its (2r+1)² neighbor
    block (lexicographically-positive offsets + self, 5 keys at ring
    1): every pair with ANY cross-track point pair within ``tau_m`` —
@@ -39,13 +39,14 @@ join:
    axis=1))``, symmetric Hausdorff = max of both directions; exact
    filter ≤ ``tau_m``.
 
-100-TB story: the fact table is touched by one narrow projection and
-one distinct shuffle at (track, cell) cardinality; candidate pruning
-is proportional to spatial co-location at the τ-matched zoom (dense
-datasets pick finer zooms), and per-pair cost is |A|·|B| vectorized —
-bounded when tracks are bounded (resample_tracks / douglas_peucker
-upstream cap |A|).  When ``tau_m`` approaches the data extent every
-pair is a candidate — that is inherent to the metric, not the plan.
+100-TB story: the fact table is touched by one top-1 |lat| pass, one
+narrow projection and one distinct shuffle at (track, cell)
+cardinality; candidate pruning is proportional to spatial co-location
+at the τ-matched zoom (dense datasets pick finer zooms), and per-pair
+cost is |A|·|B| vectorized — bounded when tracks are bounded
+(resample_tracks / douglas_peucker upstream cap |A|).  When ``tau_m``
+approaches the data extent every pair is a candidate — that is inherent
+to the metric, not the plan.
 """
 
 from __future__ import annotations
@@ -60,12 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xutil_spark.functions import native
-from xutil_spark.operators.spatial_join import (
-    _M_PER_DEG,
-    _ring_guarantee_m,
-    pick_ring_zoom,
-    with_cell,
-)
+from xutil_spark.operators.spatial_join import _M_PER_DEG, _grid_cell, _zoom_ring
 
 HAUSDORFF_SCHEMA = T.StructType([
     T.StructField("track_a", T.LongType(), False),
@@ -87,7 +83,7 @@ def _candidate_pairs(cells: DataFrame, zoom: int) -> DataFrame:
     ``zoom``.
 
     At zoom ≤ 1 the 3-cell block wraps the x axis — a τ at planetary
-    scale, where blocking cannot prune anything anyway — so the
+    scale or points at a pole, where blocking prunes little — so the
     fallback is the honest all-pairs id self-join at TRACK (not point)
     cardinality."""
     n_axis = 2 ** zoom
@@ -162,6 +158,45 @@ def _pair_arrays(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
     )
 
 
+def _similarity_pairs(points: DataFrame, cover_m: float, track: str,
+                      lon: str, lat: str,
+                      order_cols: list[str] | None = None) -> DataFrame:
+    """The plan the similarity joins share, up to the pair kernel:
+    ``_pair_arrays`` rows for every candidate track pair.  The zoom is
+    the finest whose ring-1 block covers ``cover_m`` up to the points'
+    max |lat| (``_zoom_ring``, one Spark job), so no pair with a
+    cross-track point pair within ``cover_m`` is lost at any latitude.
+    With ``order_cols`` each track's arrays follow (order_cols, lon,
+    lat) — ``sort_array`` on the structs pins the sequence even under
+    duplicate keys; without, they come in collect order."""
+    zoom, _, _ = _zoom_ring(points, [lat], cover_m, 0.0, 1)
+    cols = [F.col(track).cast("long").alias("_trk"),
+            F.col(lon).alias("_lon"), F.col(lat).alias("_lat")]
+    if order_cols:
+        cols.append(F.struct(*[F.col(c) for c in order_cols]).alias("_ord"))
+    pts = points.select(*cols)
+    cells = pts.select(
+        "_trk", _grid_cell(F.col("_lon"), F.col("_lat"), zoom).alias("cell"),
+    ).distinct()
+    if order_cols:
+        arrs = (
+            pts.groupBy("_trk")
+            .agg(F.array_sort(F.collect_list(F.struct(
+                F.col("_ord"), F.col("_lon"), F.col("_lat")))).alias("_a"))
+            .select(
+                "_trk",
+                F.transform("_a", lambda s: s["_lon"]).alias("lons"),
+                F.transform("_a", lambda s: s["_lat"]).alias("lats"),
+            )
+        )
+    else:
+        arrs = pts.groupBy("_trk").agg(
+            F.collect_list("_lon").alias("lons"),
+            F.collect_list("_lat").alias("lats"),
+        )
+    return _pair_arrays(_candidate_pairs(cells, zoom), arrs)
+
+
 def _pair_hausdorff_udf(tau_m: float):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -193,47 +228,23 @@ def _pair_hausdorff_udf(tau_m: float):
 def hausdorff_join(
     points: DataFrame,
     tau_m: float,
-    zoom: int | None = None,
     track: str = "user_id",
     lon: str = "lon",
     lat: str = "lat",
-    max_abs_lat: float = 60.0,
 ) -> DataFrame:
     """Track pairs with symmetric Hausdorff ≤ ``tau_m``: ``(track_a,
     track_b, h_ab_m, h_ba_m, hausdorff_m)``, ``track_a < track_b``,
     meters rounded to mm.
 
     ``h(A→B) = max_{a∈A} min_{b∈B} d(a, b)`` under the equirectangular
-    metric above; ``hausdorff_m = max(h_ab, h_ba)``.  ``zoom=None``
-    auto-picks the finest ring-1-covering zoom.  The static envelope
-    bound assumes |lat| ≤ ``max_abs_lat`` — same contract as
-    ``encounter_join``.
+    metric above; ``hausdorff_m = max(h_ab, h_ba)``.
 
     Completeness: Hausdorff ≤ τ implies SOME cross-track point pair is
     within τ (any a∈A and its nearest b), so every qualifying pair
     meets in the neighbor block — the exact filter never loses a true
     pair to the prefilter.
     """
-    if zoom is None:
-        zoom = pick_ring_zoom(tau_m, 1, max_abs_lat)
-    if _ring_guarantee_m(zoom, 1, max_abs_lat=max_abs_lat) < tau_m:
-        raise ValueError("ring-1 guarantee below tau at this zoom: lower the zoom")
-
-    pts = points.select(
-        F.col(track).cast("long").alias("_trk"),
-        F.col(lon).alias("_lon"),
-        F.col(lat).alias("_lat"),
-    )
-    cells = (
-        with_cell(pts, zoom, "_lon", "_lat")
-        .select("_trk", "cell").distinct()
-    )
-    pairs = _candidate_pairs(cells, zoom)
-    arrs = pts.groupBy("_trk").agg(
-        F.collect_list("_lon").alias("lons"),
-        F.collect_list("_lat").alias("lats"),
-    )
-    return _pair_arrays(pairs, arrs).mapInPandas(
+    return _similarity_pairs(points, tau_m, track, lon, lat).mapInPandas(
         _pair_hausdorff_udf(float(tau_m)), schema=HAUSDORFF_SCHEMA)
 
 
@@ -336,13 +347,11 @@ def _pair_frechet_udf(tau_m: float, cell_budget: int = 3_000_000):
 def frechet_join(
     points: DataFrame,
     tau_m: float,
-    zoom: int | None = None,
     track: str = "user_id",
     ts: str = "ts",
     lon: str = "lon",
     lat: str = "lat",
     tiebreak: str | None = None,
-    max_abs_lat: float = 60.0,
 ) -> DataFrame:
     """ORDER-AWARE trajectory similarity join: track pairs whose
     discrete Fréchet distance ≤ ``tau_m`` — ``(track_a, track_b,
@@ -367,35 +376,9 @@ def frechet_join(
     Per-pair cost is O(|A|·|B|) with the inner loop per B-column —
     bounded when tracks are bounded (resample/simplify upstream).
     """
-    if zoom is None:
-        zoom = pick_ring_zoom(tau_m, 1, max_abs_lat)
-    if _ring_guarantee_m(zoom, 1, max_abs_lat=max_abs_lat) < tau_m:
-        raise ValueError("ring-1 guarantee below tau at this zoom: lower the zoom")
     order_cols = [ts] + ([tiebreak] if tiebreak else [])
-    pts = points.select(
-        F.col(track).cast("long").alias("_trk"),
-        F.col(lon).alias("_lon"),
-        F.col(lat).alias("_lat"),
-        F.struct(*[F.col(c) for c in order_cols]).alias("_ord"),
-    )
-    cells = (
-        with_cell(pts, zoom, "_lon", "_lat")
-        .select("_trk", "cell").distinct()
-    )
-    pairs = _candidate_pairs(cells, zoom)
-    # ordered point arrays: sort_array on (order key, lon, lat) structs
-    # pins the sequence deterministically even under duplicate keys
-    arrs = (
-        pts.groupBy("_trk")
-        .agg(F.array_sort(F.collect_list(F.struct(
-            F.col("_ord"), F.col("_lon"), F.col("_lat")))).alias("_a"))
-        .select(
-            "_trk",
-            F.transform("_a", lambda s: s["_lon"]).alias("lons"),
-            F.transform("_a", lambda s: s["_lat"]).alias("lats"),
-        )
-    )
-    return _pair_arrays(pairs, arrs).mapInPandas(
+    return _similarity_pairs(points, tau_m, track, lon, lat,
+                             order_cols).mapInPandas(
         _pair_frechet_udf(float(tau_m)), schema=FRECHET_SCHEMA)
 
 
@@ -428,13 +411,11 @@ def co_route_clusters(
     points: DataFrame,
     tau_m: float,
     metric: str = "hausdorff",
-    zoom: int | None = None,
     track: str = "user_id",
     ts: str = "ts",
     lon: str = "lon",
     lat: str = "lat",
     tiebreak: str | None = None,
-    max_abs_lat: float = 60.0,
 ) -> DataFrame:
     """Co-route clustering: connected components over the τ-similarity
     graph — ``(id, cluster_id)`` with cluster_id the smallest member
@@ -451,11 +432,9 @@ def co_route_clusters(
     union-find gate almost always applies.
     """
     if metric == "hausdorff":
-        pairs = hausdorff_join(points, tau_m, zoom, track, lon, lat,
-                               max_abs_lat)
+        pairs = hausdorff_join(points, tau_m, track, lon, lat)
     elif metric == "frechet":
-        pairs = frechet_join(points, tau_m, zoom, track, ts, lon, lat,
-                             tiebreak, max_abs_lat)
+        pairs = frechet_join(points, tau_m, track, ts, lon, lat, tiebreak)
     else:
         raise ValueError("metric must be 'hausdorff' or 'frechet'")
     from xutil_spark.operators.dedup import connected_components
@@ -550,13 +529,11 @@ def _pair_dtw_udf(tau_norm_m: float, cell_budget: int = 3_000_000):
 def dtw_join(
     points: DataFrame,
     tau_norm_m: float,
-    zoom: int | None = None,
     track: str = "user_id",
     ts: str = "ts",
     lon: str = "lon",
     lat: str = "lat",
     tiebreak: str | None = None,
-    max_abs_lat: float = 60.0,
 ) -> DataFrame:
     """Dynamic-time-warping trajectory join: track pairs whose
     LENGTH-NORMALIZED DTW cost ≤ ``tau_norm_m`` meters — ``(track_a,
@@ -573,34 +550,9 @@ def dtw_join(
     distance, so ``dtw_norm ≥ min_pair / 2`` — the cell block is sized
     to cover **2·τ** and never loses a qualifying pair.
     """
-    if zoom is None:
-        zoom = pick_ring_zoom(2.0 * tau_norm_m, 1, max_abs_lat)
-    if _ring_guarantee_m(zoom, 1, max_abs_lat=max_abs_lat) < 2.0 * tau_norm_m:
-        raise ValueError("ring-1 guarantee below 2*tau at this zoom: "
-                         "lower the zoom")
     order_cols = [ts] + ([tiebreak] if tiebreak else [])
-    pts = points.select(
-        F.col(track).cast("long").alias("_trk"),
-        F.col(lon).alias("_lon"),
-        F.col(lat).alias("_lat"),
-        F.struct(*[F.col(c) for c in order_cols]).alias("_ord"),
-    )
-    cells = (
-        with_cell(pts, zoom, "_lon", "_lat")
-        .select("_trk", "cell").distinct()
-    )
-    pairs = _candidate_pairs(cells, zoom)
-    arrs = (
-        pts.groupBy("_trk")
-        .agg(F.array_sort(F.collect_list(F.struct(
-            F.col("_ord"), F.col("_lon"), F.col("_lat")))).alias("_a"))
-        .select(
-            "_trk",
-            F.transform("_a", lambda s: s["_lon"]).alias("lons"),
-            F.transform("_a", lambda s: s["_lat"]).alias("lats"),
-        )
-    )
-    return _pair_arrays(pairs, arrs).mapInPandas(
+    return _similarity_pairs(points, 2.0 * tau_norm_m, track, lon, lat,
+                             order_cols).mapInPandas(
         _pair_dtw_udf(float(tau_norm_m)), schema=DTW_SCHEMA)
 
 

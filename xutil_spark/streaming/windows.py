@@ -10,7 +10,7 @@ resumability requirement is served by the batch snapshot layer
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xutil_spark.functions import native
@@ -41,20 +41,4 @@ def streaming_cell_counts(
             F.col("win.end").alias("window_end"),
             "cell", "n_events",
         )
-    )
-
-
-def rate_demo_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Demo source: rate stream → deterministic synthetic locations
-    (same splitmix-derived China-bbox rule as the images table)."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    return rate.select(
-        F.col("timestamp").alias("ts"),
-        (F.lit(73.5) + F.pmod(F.col("value") * 2654435761, F.lit(1048576)).cast("double")
-         / 1048576.0 * 61.0).alias("lon"),
-        (F.lit(18.2) + F.pmod(F.col("value") * 1597334677, F.lit(1048576)).cast("double")
-         / 1048576.0 * 35.3).alias("lat"),
-        F.col("value").alias("event_id"),
     )
